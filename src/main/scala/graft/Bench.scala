@@ -74,18 +74,6 @@ object Bench {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     }
-    // SPARK_GRAFT_ROCKSDB=1 → RocksDB state store provider + changelog
-    // checkpointing for every streaming entry (diagnosis only, like
-    // NOBCAST): the round-14 verdict asks whether the streaming tier's
-    // per-trigger commit cost drops under RocksDB; this flag measures
-    // that A/B without touching any query. The gate path never sets it.
-    if (sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1")) {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      spark.conf.set("spark.sql.streaming.stateStore.rocksdb" +
-        ".changelogCheckpointing.enabled", "true")
-    }
 
     def short(k: String): String = k.takeWhile(_ != '_')
     def fmt(v: Double): String = "%.2f".format(v)

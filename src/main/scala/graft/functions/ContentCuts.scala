@@ -49,9 +49,13 @@ object ContentCuts {
     * a/b/c seed at 0 (so positions 1-3 hash with zero-padding, and the
     * pos >= 4 guard keeps them out anyway), boundary positions are
     * 1-based code-point ordinals, the total length is appended, and a
-    * final-position duplicate collapses (array_distinct). */
+    * final-position duplicate collapses (array_distinct). Strings are
+    * not validated outside parquet (`CAST(binary AS STRING)`), so a
+    * multi-byte sequence may be cut short at the end: it decodes from
+    * the bytes present as one position, as `length` counts it. */
   def cuts(text: UTF8String, modulus: Int): ArrayData = {
     val bytes = text.getBytes
+    def cont(k: Int): Int = if (k < bytes.length) bytes(k) & 0x3f else 0
     val out = new java.util.ArrayList[Integer]()
     var a = 0; var b = 0; var c = 0
     var pos = 0
@@ -61,13 +65,12 @@ object ContentCuts {
       var cp = 0
       if (b0 < 0x80) { cp = b0; i += 1 }
       else if (b0 < 0xe0) {
-        cp = ((b0 & 0x1f) << 6) | (bytes(i + 1) & 0x3f); i += 2
+        cp = ((b0 & 0x1f) << 6) | cont(i + 1); i += 2
       } else if (b0 < 0xf0) {
-        cp = ((b0 & 0x0f) << 12) | ((bytes(i + 1) & 0x3f) << 6) |
-          (bytes(i + 2) & 0x3f); i += 3
+        cp = ((b0 & 0x0f) << 12) | (cont(i + 1) << 6) | cont(i + 2); i += 3
       } else {
-        cp = ((b0 & 0x07) << 18) | ((bytes(i + 1) & 0x3f) << 12) |
-          ((bytes(i + 2) & 0x3f) << 6) | (bytes(i + 3) & 0x3f); i += 4
+        cp = ((b0 & 0x07) << 18) | (cont(i + 1) << 12) |
+          (cont(i + 2) << 6) | cont(i + 3); i += 4
       }
       pos += 1
       if (pos >= 4 && (a * 29791 + b * 961 + c * 31 + cp) % modulus == 0)

@@ -18,25 +18,17 @@ import graft.ops.{Dedup, GraphOps, Layout, Privacy, Profile, PublicSuffix, Simil
   */
 object PipelineOps {
 
-  // Per-JVM warehouse dirs for the SQL-catalog entries: a catalog
-  // NAME is initialized once per session with its warehouse conf, so
-  // re-runs (bench warmup + two timed passes) must resolve the SAME
-  // directory the cached catalog instance points at — a fresh temp
-  // dir per run would leave path-based assertions (snapshotInfo on
-  // the table dir) staring at an empty directory. Entries stay
-  // idempotent via DROP TABLE IF EXISTS + CREATE.
-  private lazy val sql2Warehouse: String =
-    java.nio.file.Files.createTempDirectory("graft-sql2-wh").toString
-  private lazy val sql3Warehouse: String =
-    java.nio.file.Files.createTempDirectory("graft-sql3-wh").toString
-  private lazy val sql4Warehouse: String =
-    java.nio.file.Files.createTempDirectory("graft-sql4-wh").toString
-  private lazy val sql5Warehouse: String =
-    java.nio.file.Files.createTempDirectory("graft-sql5-wh").toString
-  private lazy val sql6Warehouse: String =
-    java.nio.file.Files.createTempDirectory("graft-sql6-wh").toString
-  private lazy val sql7Warehouse: String =
-    java.nio.file.Files.createTempDirectory("graft-sql7-wh").toString
+  /** [[QueryDef.views]] for the SQL-catalog entries: `f` gets a run's
+    * session carrying the graft catalog `catalog` over the run's own
+    * warehouse, and that warehouse's path. */
+  private def catalogEntry(name: String, catalog: String, oracle: String)(
+      f: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)
+      : QueryDef =
+    QueryDef.views(name, oracle) { spark =>
+      StreamRun(spark, name.takeWhile(_ != '_')) { run =>
+        f(run.catalogSession(catalog), run.path("wh"))
+      }
+    }
 
   /** qc1's trained classifier: micro-unit coefficients over the corpus
     * vocabulary (positive = quality evidence). ONE definition feeds both
@@ -3142,8 +3134,7 @@ object PipelineOps {
         |ORDER BY snapshot_id""".stripMargin) { spark =>
       val docs = spark.table("documents").select(col("doc_id"),
         col("lang"), col("n_chars").cast("bigint").as("n_chars"))
-      val t = java.nio.file.Files.createTempDirectory("graft-tt1")
-        .toString
+      val t = StreamRun.dir(spark, "tt1")
       val s1 = Layout.commitSnapshot(
         docs.filter(col("doc_id") % 2 === 0)
           .repartitionByRange(2, col("doc_id")), t)
@@ -3183,8 +3174,7 @@ object PipelineOps {
         |ORDER BY doc_id""".stripMargin) { spark =>
       val docs = spark.table("documents").select(col("doc_id"),
         col("lang"), col("n_chars").cast("bigint").as("n_chars"))
-      val t = java.nio.file.Files.createTempDirectory("graft-tt2")
-        .toString
+      val t = StreamRun.dir(spark, "tt2")
       Layout.commitSnapshot(docs.repartitionByRange(3, col("doc_id")), t)
       val changes =
         docs.filter(col("doc_id") % 10 === 0)
@@ -3219,8 +3209,7 @@ object PipelineOps {
         |ORDER BY doc_id""".stripMargin) { spark =>
       val docs = spark.table("documents").select(col("doc_id"),
         col("lang"), col("n_chars").cast("bigint").as("n_chars"))
-      val t = java.nio.file.Files.createTempDirectory("graft-tt3")
-        .toString
+      val t = StreamRun.dir(spark, "tt3")
       Layout.commitSnapshot(docs.repartitionByRange(3, col("doc_id")), t)
       val changes =
         docs.filter(col("doc_id") % 10 === 0)
@@ -3257,8 +3246,7 @@ object PipelineOps {
         |ORDER BY doc_id""".stripMargin) { spark =>
       val docs = spark.table("documents").select(col("doc_id"),
         col("lang"), col("n_chars").cast("bigint").as("n_chars"))
-      val t = java.nio.file.Files.createTempDirectory("graft-tt4")
-        .toString
+      val t = StreamRun.dir(spark, "tt4")
       Layout.commitSnapshot(
         docs.repartitionByRange(5, col("doc_id")), t,
         statsCol = "doc_id")
@@ -3284,8 +3272,7 @@ object PipelineOps {
         |ORDER BY doc_id""".stripMargin) { spark =>
       val docs = spark.table("documents").select(col("doc_id"),
         col("lang"), col("n_chars").cast("bigint").as("n_chars"))
-      val t = java.nio.file.Files.createTempDirectory("graft-tt5")
-        .toString
+      val t = StreamRun.dir(spark, "tt5")
       (0 to 2).foreach { k =>
         Layout.appendSnapshot(docs.filter(col("doc_id") % 3 === k), t,
           tag = s"part-$k")
@@ -3316,8 +3303,7 @@ object PipelineOps {
         |ORDER BY doc_id""".stripMargin) { spark =>
       val docs = spark.table("documents").select(col("doc_id"),
         col("lang"), col("n_chars").cast("bigint").as("n_chars"))
-      val t = java.nio.file.Files.createTempDirectory("graft-tt6")
-        .toString
+      val t = StreamRun.dir(spark, "tt6")
       val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
       try {
         import scala.jdk.CollectionConverters._
@@ -3361,8 +3347,7 @@ object PipelineOps {
         |ORDER BY doc_id""".stripMargin) { spark =>
       val docs = spark.table("documents").select(col("doc_id"),
         col("lang"), col("n_chars").cast("bigint").as("n_chars"))
-      val t = java.nio.file.Files.createTempDirectory("graft-tt7")
-        .toString
+      val t = StreamRun.dir(spark, "tt7")
       Layout.commitSnapshot(
         docs.filter(col("doc_id") % 2 === 0), t)       // id 1
       Layout.appendSnapshot(
@@ -3406,8 +3391,7 @@ object PipelineOps {
         |ORDER BY doc_id""".stripMargin) { spark =>
       val docs = spark.table("documents").select(col("doc_id"),
         col("lang"), col("n_chars").cast("bigint").as("n_chars"))
-      val t = java.nio.file.Files.createTempDirectory("graft-tt8")
-        .toString
+      val t = StreamRun.dir(spark, "tt8")
       (0 to 3).foreach { k =>
         Layout.appendSnapshot(
           docs.filter(col("doc_id") % 4 === k).repartition(2), t)
@@ -3451,8 +3435,7 @@ object PipelineOps {
         |ORDER BY doc_id""".stripMargin) { spark =>
       val docs = spark.table("documents").select(col("doc_id"),
         col("lang"), col("n_chars").cast("bigint").as("n_chars"))
-      val t = java.nio.file.Files.createTempDirectory("graft-tt9")
-        .toString
+      val t = StreamRun.dir(spark, "tt9")
       Layout.appendSnapshot(
         docs.filter(col("doc_id") % 2 === 0)
           .select("doc_id", "n_chars"), t)
@@ -3494,8 +3477,7 @@ object PipelineOps {
         |ORDER BY doc_id""".stripMargin) { spark =>
       val docs = spark.table("documents").select(col("doc_id"),
         col("lang"), col("n_chars").cast("bigint").as("n_chars"))
-      val t = java.nio.file.Files.createTempDirectory("graft-tt10")
-        .toString
+      val t = StreamRun.dir(spark, "tt10")
       val maxId = docs.agg(max("doc_id")).head().getLong(0)
       val (b1, b2) = (maxId / 3, 2 * maxId / 3)
       Layout.appendSnapshot(docs.filter(col("doc_id") < b1)
@@ -3531,8 +3513,7 @@ object PipelineOps {
         |FROM documents""".stripMargin) { spark =>
       val docs = spark.table("documents").select(col("doc_id"),
         col("n_chars").cast("bigint").as("n_chars"))
-      val t = java.nio.file.Files.createTempDirectory("graft-tt11")
-        .toString
+      val t = StreamRun.dir(spark, "tt11")
       Layout.appendSnapshot(docs.filter(col("doc_id") % 2 === 0)
         .repartition(2), t, statsCol = "doc_id")
       Layout.appendSnapshot(docs.filter(col("doc_id") % 2 === 1)
@@ -3563,8 +3544,7 @@ object PipelineOps {
         |ORDER BY doc_id""".stripMargin) { spark =>
       val docs = spark.table("documents").select(col("doc_id"),
         col("lang"), col("n_chars").cast("bigint").as("n_chars"))
-      val t = java.nio.file.Files.createTempDirectory("graft-tt12")
-        .toString
+      val t = StreamRun.dir(spark, "tt12")
       Layout.commitSnapshot(docs.repartitionByRange(3, col("doc_id")), t)
       val changes =
         docs.filter(col("doc_id") % 10 === 0)
@@ -3593,22 +3573,15 @@ object PipelineOps {
     // the VERSION AS OF 2 aggregate (evens only — so as-of resolution
     // through the catalog must pin the right manifest) and the
     // VERSION AS OF 1 row count (the empty schema commit readable as
-    // a table). DROP-then-CREATE makes the entry idempotent under
-    // bench re-runs; the catalog instance (and its warehouse) is
-    // cached per session by name.
-    QueryDef.views("sql2_catalog_ddl",
+    // a table). Each run gets its own session, catalog and warehouse
+    // ([[StreamRun.catalogSession]]), so bench re-runs start empty.
+    catalogEntry("sql2_catalog_ddl", "gsql2",
       """SELECT d.doc_id, d.lang, CAST(d.n_chars AS BIGINT) AS n_chars,
         |  (SELECT CAST(sum(n_chars) AS BIGINT) FROM documents
         |   WHERE doc_id % 2 = 0) AS even_chars,
         |  (SELECT CAST(0 AS BIGINT)) AS v1_rows
         |FROM documents d
-        |ORDER BY doc_id""".stripMargin) { spark =>
-      val wh = sql2Warehouse
-      spark.conf.set("spark.sql.catalog.gsql2",
-        "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.gsql2.warehouse", wh)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gsql2.db")
-      spark.sql("DROP TABLE IF EXISTS gsql2.db.docs")
+        |ORDER BY doc_id""".stripMargin) { (spark, wh) =>
       spark.sql(
         """CREATE TABLE gsql2.db.docs
           |  (doc_id BIGINT, lang STRING, n_chars BIGINT)
@@ -3643,7 +3616,7 @@ object PipelineOps {
     // on the full post-merge table WITH files_rewritten=1 /
     // files_carried=2 pinned in the hash — if group filtering ever
     // stops engaging, the counts flip to 3/0 and the hash breaks.
-    QueryDef.views("sql3_merge_into",
+    catalogEntry("sql3_merge_into", "gsql3",
       """WITH b AS (SELECT max(doc_id) // 3 AS b1 FROM documents)
         |SELECT doc_id, lang, n_chars,
         |  (SELECT CAST(1 AS BIGINT)) AS files_rewritten,
@@ -3658,13 +3631,7 @@ object PipelineOps {
         |  UNION ALL
         |  SELECT doc_id + 1000000, lang, CAST(n_chars AS BIGINT)
         |  FROM documents, b WHERE doc_id < b.b1 AND doc_id % 10 = 2)
-        |ORDER BY doc_id""".stripMargin) { spark =>
-      val wh = sql3Warehouse
-      spark.conf.set("spark.sql.catalog.gsql3",
-        "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.gsql3.warehouse", wh)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gsql3.db")
-      spark.sql("DROP TABLE IF EXISTS gsql3.db.docs")
+        |ORDER BY doc_id""".stripMargin) { (spark, wh) =>
       spark.sql(
         """CREATE TABLE gsql3.db.docs
           |  (doc_id BIGINT, lang STRING, n_chars BIGINT)
@@ -3722,20 +3689,14 @@ object PipelineOps {
     // cell from the raw table; a procedure that stops running, a
     // metadata table that drifts from the manifests, or an optimize
     // that loses a row all break the hash.
-    QueryDef.views("sql4_procedures",
+    catalogEntry("sql4_procedures", "gsql4",
       """SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars,
         |  (SELECT CAST(4 AS BIGINT)) AS files_before,
         |  (SELECT CAST(2 AS BIGINT)) AS files_after,
         |  (SELECT CAST(6 AS BIGINT)) AS n_snapshots,
         |  (SELECT CAST(6 AS BIGINT)) AS optimize_returned
         |FROM documents
-        |ORDER BY doc_id""".stripMargin) { spark =>
-      val wh = sql4Warehouse
-      spark.conf.set("spark.sql.catalog.gsql4",
-        "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.gsql4.warehouse", wh)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gsql4.db")
-      spark.sql("DROP TABLE IF EXISTS gsql4.db.docs")
+        |ORDER BY doc_id""".stripMargin) { (spark, wh) =>
       spark.sql(
         """CREATE TABLE gsql4.db.docs
           |  (doc_id BIGINT, lang STRING, n_chars BIGINT)
@@ -3779,7 +3740,7 @@ object PipelineOps {
     // relation is graded row-exact — old files must read under the
     // new name and the wide type, the dropped column's values must
     // never resurface.
-    QueryDef.views("sql5_schema_evolution",
+    catalogEntry("sql5_schema_evolution", "gsql5",
       """SELECT doc_id, language, n_chars,
         |  (SELECT CAST(1 AS BIGINT)) AS alters_metadata_only
         |FROM (
@@ -3790,13 +3751,7 @@ object PipelineOps {
         |  SELECT doc_id + 1000000, lang,
         |         CAST(n_chars + 7 AS BIGINT)
         |  FROM documents)
-        |ORDER BY doc_id""".stripMargin) { spark =>
-      val wh = sql5Warehouse
-      spark.conf.set("spark.sql.catalog.gsql5",
-        "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.gsql5.warehouse", wh)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gsql5.db")
-      spark.sql("DROP TABLE IF EXISTS gsql5.db.docs")
+        |ORDER BY doc_id""".stripMargin) { (spark, wh) =>
       spark.sql(
         """CREATE TABLE gsql5.db.docs
           |  (doc_id BIGINT, lang STRING, n_chars INT, junk INT)
@@ -3838,7 +3793,7 @@ object PipelineOps {
     // identically: if the sink stops requesting its geometry, the
     // chunk inserts stop being range-disjoint single files and the
     // counts flip.
-    QueryDef.views("sql6_unhinted_insert",
+    catalogEntry("sql6_unhinted_insert", "gsql6",
       """WITH b AS (SELECT max(doc_id) // 3 AS b1 FROM documents)
         |SELECT doc_id, lang, n_chars,
         |  (SELECT CAST(1 AS BIGINT)) AS files_rewritten,
@@ -3853,13 +3808,7 @@ object PipelineOps {
         |  UNION ALL
         |  SELECT doc_id + 1000000, lang, CAST(n_chars AS BIGINT)
         |  FROM documents, b WHERE doc_id < b.b1 AND doc_id % 10 = 2)
-        |ORDER BY doc_id""".stripMargin) { spark =>
-      val wh = sql6Warehouse
-      spark.conf.set("spark.sql.catalog.gsql6",
-        "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.gsql6.warehouse", wh)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gsql6.db")
-      spark.sql("DROP TABLE IF EXISTS gsql6.db.docs")
+        |ORDER BY doc_id""".stripMargin) { (spark, wh) =>
       spark.sql(
         """CREATE TABLE gsql6.db.docs
           |  (doc_id BIGINT, lang STRING, n_chars BIGINT)
@@ -3919,7 +3868,7 @@ object PipelineOps {
     // the integral index as epoch days, decimals as unscaled cents
     // (Layout.DecRange); timestamps surface as whole-second strings
     // per the oracle-parity rules.
-    QueryDef.views("sql7_typed_columns",
+    catalogEntry("sql7_typed_columns", "gsql7",
       """WITH b AS (SELECT max(doc_id) // 3 AS b1 FROM documents),
         |     k AS (SELECT doc_id AS id FROM documents)
         |SELECT id, DATE '2020-01-01' + CAST(id AS INT) AS d,
@@ -3940,13 +3889,7 @@ object PipelineOps {
         |  UNION ALL
         |  SELECT id + 1000000, CAST(-25000000 AS BIGINT) FROM k, b
         |  WHERE id < b.b1 AND id % 10 = 2)
-        |ORDER BY id""".stripMargin) { spark =>
-      val wh = sql7Warehouse
-      spark.conf.set("spark.sql.catalog.gsql7",
-        "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.gsql7.warehouse", wh)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gsql7.db")
-      spark.sql("DROP TABLE IF EXISTS gsql7.db.t")
+        |ORDER BY id""".stripMargin) { (spark, wh) =>
       spark.sql(
         """CREATE TABLE gsql7.db.t
           |  (id BIGINT, d DATE, ts TIMESTAMP, price DECIMAL(12,2))
@@ -4053,8 +3996,7 @@ object PipelineOps {
         |ORDER BY doc_id""".stripMargin) { spark =>
       val docs = spark.table("documents").select(col("doc_id"),
         col("lang"), col("n_chars").cast("bigint").as("n_chars"))
-      val t = java.nio.file.Files.createTempDirectory("graft-tt13")
-        .toString
+      val t = StreamRun.dir(spark, "tt13")
       val maxId = docs.agg(max("doc_id")).head().getLong(0)
       val (b1, b2) = (maxId / 3, 2 * maxId / 3)
       Layout.appendSnapshot(docs.filter(col("doc_id") < b1)
@@ -4106,8 +4048,7 @@ object PipelineOps {
         |ORDER BY doc_id""".stripMargin) { spark =>
       val docs = spark.table("documents").select(col("doc_id"),
         col("lang"), col("n_chars").cast("bigint").as("n_chars"))
-      val t = java.nio.file.Files.createTempDirectory("graft-tt14")
-        .toString
+      val t = StreamRun.dir(spark, "tt14")
       docs.write.format("graft-snapshot").partitionBy("lang")
         .option("statsCol", "doc_id").mode("append").save(t)
       val minLang = docs.agg(min("lang")).head().getString(0)
@@ -4147,8 +4088,7 @@ object PipelineOps {
         |ORDER BY doc_id""".stripMargin) { spark =>
       val docs = spark.table("documents").select(col("doc_id"),
         col("lang"), col("n_chars").cast("bigint").as("n_chars"))
-      val t = java.nio.file.Files.createTempDirectory("graft-tt15")
-        .toString
+      val t = StreamRun.dir(spark, "tt15")
       val mm = docs.agg(min("n_chars"), max("n_chars")).head()
       val (lo, hi) = (mm.getLong(0), mm.getLong(1))
       val (t1, t2) = (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
@@ -4193,14 +4133,12 @@ object PipelineOps {
       val d = spark.table("documents").select(col("doc_id"),
         (col("doc_id") % 32).as("a"),
         ((col("doc_id") / 32).cast("long") % 32).as("b"))
-      val t = java.nio.file.Files.createTempDirectory("graft-tt16")
-        .toString
+      val t = StreamRun.dir(spark, "tt16")
       val n = d.count()
       Layout.appendSnapshot(d.repartition(8), t, statsCol = "a,b")
       Layout.optimizeSnapshot(spark, t,
         targetRowsPerFile = (n + 7) / 8, zorderBy = Seq("a", "b"))
-      val t2 = java.nio.file.Files.createTempDirectory("graft-tt16s")
-        .toString
+      val t2 = StreamRun.dir(spark, "tt16s")
       Layout.appendSnapshot(
         d.repartitionByRange(8, col("a")).sortWithinPartitions("a"),
         t2, statsCol = "a,b")
@@ -4260,8 +4198,7 @@ object PipelineOps {
         concat(lit("doc-"),
           lpad(col("doc_id").cast("string"), 8, "0")).as("key"),
         col("lang"), col("n_chars").cast("bigint").as("n_chars"))
-      val t = java.nio.file.Files.createTempDirectory("graft-tt17")
-        .toString
+      val t = StreamRun.dir(spark, "tt17")
       val maxId = docs.agg(max("doc_id")).head().getLong(0)
       val (b1, b2) = (maxId / 3, 2 * maxId / 3)
       def chunk(cond: org.apache.spark.sql.Column) =
@@ -4340,8 +4277,7 @@ object PipelineOps {
         |ORDER BY doc_id""".stripMargin) { spark =>
       val docs = spark.table("documents").select(col("doc_id"),
         col("lang"), col("n_chars").cast("bigint").as("n_chars"))
-      val t = java.nio.file.Files.createTempDirectory("graft-tt18")
-        .toString
+      val t = StreamRun.dir(spark, "tt18")
       Layout.appendSnapshot(docs.coalesce(1), t, statsCol = "doc_id")
       val changes =
         docs.filter(col("doc_id") % 100 === 0)
@@ -4401,8 +4337,7 @@ object PipelineOps {
         |ORDER BY doc_id""".stripMargin) { spark =>
       val docs = spark.table("documents").select(col("doc_id"),
         col("lang"), col("n_chars").cast("bigint").as("n_chars"))
-      val t = java.nio.file.Files.createTempDirectory("graft-tt21")
-        .toString
+      val t = StreamRun.dir(spark, "tt21")
       Layout.appendSnapshot(docs.coalesce(1), t, statsCol = "doc_id")
       val baseFiles = Layout.snapshotInfo(spark, t, 1).get.files.toSet
       Layout.deleteWhere(spark, t, "doc_id % 50 = 0",
@@ -4462,8 +4397,7 @@ object PipelineOps {
       val docs = spark.table("documents").select(col("doc_id"),
         expr("CAST(doc_id * 0.25 AS DECIMAL(12,2))").as("price"),
         col("lang"), col("n_chars").cast("bigint").as("n_chars"))
-      val t = java.nio.file.Files.createTempDirectory("graft-tt19")
-        .toString
+      val t = StreamRun.dir(spark, "tt19")
       val maxId = docs.agg(max("doc_id")).head().getLong(0)
       val (b1, b2) = (maxId / 3, 2 * maxId / 3)
       def chunk(cond: org.apache.spark.sql.Column) =
@@ -4557,8 +4491,7 @@ object PipelineOps {
         when(col("doc_id") >= b2, lit(null).cast("long"))
           .otherwise(col("doc_id")).as("k"),
         col("lang"), col("n_chars").cast("bigint").as("n_chars"))
-      val t = java.nio.file.Files.createTempDirectory("graft-tt20")
-        .toString
+      val t = StreamRun.dir(spark, "tt20")
       def chunk(cond: org.apache.spark.sql.Column) =
         docs.filter(cond).coalesce(1)
       Layout.appendSnapshot(chunk(col("doc_id") < b1), t,
@@ -5883,19 +5816,9 @@ object PipelineOps {
     // archives come from the crawler).
     QueryDef("st16_stream_crawl_ingest", (spark, dir) => {
       import spark.implicits._
-      import java.nio.file.{Files, Paths}
       graft.Tables.registerAll(spark, dir)
-      def fp(f: java.io.File): Long =
-        if (f.isDirectory)
-          f.listFiles().sortBy(_.getName).map(fp).foldLeft(17L)(31 * _ + _)
-        else 31L * f.length() + f.lastModified()
-      val key = dir.replaceAll("[^A-Za-z0-9.]", "_") + "-st16v1-" +
-        java.lang.Long.toHexString(
-          fp(new java.io.File(s"$dir/documents.parquet")))
-      val run = Paths.get(sys.props("java.io.tmpdir"),
-        s"graft-st16-fixture-$key")
-      if (!Files.exists(run.resolve("chunk-2.warc"))) {
-        Files.createDirectories(run)
+      val fix = StreamRun.fixture(spark, "st16", "st16v1", dir, "documents") {
+          run =>
         val staged = spark.table("documents").select(col("doc_id"),
           concat(lit("https://"),
             when(col("doc_id") % 4 === 0, "blocked.example")
@@ -5914,45 +5837,41 @@ object PipelineOps {
           val txt = recs.filter(pmod(col("doc_id"), lit(3)) === k)
             .orderBy("doc_id").select("rec")
             .collect().map(_.getString(0)).mkString("")
-          Files.write(run.resolve(s"chunk-$k.warc"),
-            txt.getBytes("UTF-8"))
-          run.resolve(s"chunk-$k.warc").toFile
-            .setLastModified(1000000000000L + k * 1000L)
+          StreamRun.stamp(java.nio.file.Files.write(
+            run.resolve(s"chunk-$k.warc"), txt.getBytes("UTF-8")), k)
         }
       }
-      val ns = s"st16-${java.util.UUID.randomUUID()}"
-      val sink = graft.cdc.Sinks.MemoryDb.table(ns, "crawl")
-      val writer = new graft.cdc.Sinks.UpsertWriter("crawl", "doc_id",
-        Seq("doc_id", "host", "warc_ok", "url_ok", "score_micro", "keep"),
-        runId = ns)
-      val factory = graft.cdc.Sinks.MemoryDb.factory(ns)
-      val stream = spark.readStream
-        .option("lineSep", "WARC/1.1\r\n")
-        .option("maxFilesPerTrigger", "1")
-        .text(run.toString)
-        .filter(length(col("value")) > 0)
-      val parsed = WebOps.parseWarc(stream, "value")
-        .withColumn("doc_id", expr(
-          "CAST(regexp_extract(target_uri, '/doc/([0-9]+)$', 1) AS BIGINT)"))
-      val extracted = WebOps.htmlToText(parsed, "payload")
-      val gated = WebOps.urlFilter(extracted, "target_uri",
-        blockedDomains = Seq("blocked.example"), blockedPatterns = Nil)
-      val scored = TextOps.classifierScore(gated, "doc_id",
-        "extracted_text", weightsMicro = qcModel.toMap,
-        biasMicro = qcBias, thresholdMicro = qcThreshold,
-        passthrough = Seq("host", "warc_ok", "url_ok"))
-      val q = scored.writeStream
-        .outputMode("append")
-        .option("checkpointLocation",
-          Files.createTempDirectory("graft-st16-ckpt").toString)
-        .foreachBatch {
-          (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-            writer.writeBatch(batch.select(col("doc_id"), col("host"),
-              col("warc_ok"), col("url_ok"), col("score_micro"),
-              col("keep")), factory, batchId)
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
+      val sink = StreamRun(spark, "st16") { run =>
+        val sink = graft.cdc.Sinks.MemoryDb.table(run.id, "crawl")
+        val writer = new graft.cdc.Sinks.UpsertWriter("crawl", "doc_id",
+          Seq("doc_id", "host", "warc_ok", "url_ok", "score_micro", "keep"),
+          runId = run.id)
+        val factory = graft.cdc.Sinks.MemoryDb.factory(run.id)
+        val stream = run.session().readStream
+          .option("lineSep", "WARC/1.1\r\n")
+          .option("maxFilesPerTrigger", "1")
+          .text(fix)
+          .filter(length(col("value")) > 0)
+        val parsed = WebOps.parseWarc(stream, "value")
+          .withColumn("doc_id", expr(
+            "CAST(regexp_extract(target_uri, '/doc/([0-9]+)$', 1) AS BIGINT)"))
+        val extracted = WebOps.htmlToText(parsed, "payload")
+        val gated = WebOps.urlFilter(extracted, "target_uri",
+          blockedDomains = Seq("blocked.example"), blockedPatterns = Nil)
+        val scored = TextOps.classifierScore(gated, "doc_id",
+          "extracted_text", weightsMicro = qcModel.toMap,
+          biasMicro = qcBias, thresholdMicro = qcThreshold,
+          passthrough = Seq("host", "warc_ok", "url_ok"))
+        run.drain(scored.writeStream
+          .outputMode("append")
+          .foreachBatch {
+            (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+              writer.writeBatch(batch.select(col("doc_id"), col("host"),
+                col("warc_ok"), col("url_ok"), col("score_micro"),
+                col("keep")), factory, batchId)
+          })
+        sink
+      }
       sink.snapshot.values.toSeq.map(r =>
         (r("doc_id").toString.toLong, r("host").toString,
           r("warc_ok").toString.toBoolean, r("url_ok").toString.toBoolean,

@@ -1,0 +1,44 @@
+package org.apache.spark.sql
+
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.streaming.StreamingQueryListener
+
+/** The session internals [[graft.queries.StreamRun]] needs, which Spark
+  * keeps `private[sql]`/`private[spark]`: reachable only from inside this
+  * package. */
+object GraftSessionShim {
+
+  /** A clone of `spark` — its own conf, temp views and catalogs, the
+    * same SparkContext — with `shufflePartitions` set in the CLONE's conf
+    * when given. The caller's session is never written. */
+  def cloneSession(spark: SparkSession,
+      shufflePartitions: Option[Int]): SparkSession = {
+    val c = spark.asInstanceOf[classic.SparkSession].cloneSession()
+    shufflePartitions.foreach(
+      c.sessionState.conf.setConf(SQLConf.SHUFFLE_PARTITIONS, _))
+    c
+  }
+
+  /** `df`'s analyzed plan as a frame of `spark`: executes under `spark`'s
+    * conf although `df` was built in another session. */
+  def rehome(df: DataFrame, spark: SparkSession): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      df.queryExecution.analyzed)
+
+  /** Delivers the queued listener events (waiting at most 10 s), then
+    * detaches from the context's listener bus the streaming-listener bus
+    * that holds `marker`. Each session's query manager attaches one such
+    * bus and Spark never detaches it, so without this every cloned
+    * session that ran a stream would stay subscribed to all events of
+    * the context. */
+  def detachStreams(spark: SparkSession,
+      marker: StreamingQueryListener): Unit = {
+    val bus = spark.sparkContext.listenerBus
+    try bus.waitUntilEmpty()
+    catch { case _: java.util.concurrent.TimeoutException => () }
+    bus.findListenersByClass[StreamingQueryListenerBus]()
+      .filter(_.listeners.contains(marker))
+      .foreach(bus.removeListener)
+  }
+}

@@ -37,24 +37,42 @@ class FunctionsSpec extends SparkSpec {
   test("cdc_cuts matches the SQL rolling-hash fold") {
     val texts = Seq("abcdef", "zzabcdef", "abcd",
       "the quick brown fox jumps over the lazy dog " * 8)
-    val df = registered.createDataset(texts).toDF("t")
-    for (mod <- Seq(1, 4, 16)) {
-      val got = df.selectExpr(s"cdc_cuts(t, $mod)",
-        s"""array_distinct(concat(
-           |  aggregate(
-           |    transform(split(t, ''), ch -> ascii(ch)),
-           |    named_struct('pos', 0, 'a', 0, 'b', 0, 'c', 0,
-           |                 'acc', cast(array() as array<int>)),
-           |    (st, x) -> named_struct(
-           |      'pos', st.pos + 1, 'a', st.b, 'b', st.c, 'c', x,
-           |      'acc', if(st.pos + 1 >= 4 and
-           |                (st.a * 29791 + st.b * 961 + st.c * 31 + x)
-           |                  % $mod = 0,
-           |              concat(st.acc, array(st.pos + 1)), st.acc)),
-           |    st -> st.acc),
-           |  array(cast(length(t) as int))))""".stripMargin).collect()
-      got.foreach(r => assert(r.getSeq[Int](0) == r.getSeq[Int](1),
-        s"mod=$mod: ${r.getSeq[Int](0)} vs ${r.getSeq[Int](1)}"))
+    // A string ending in a truncated 3-byte sequence: outside parquet,
+    // strings are not validated (CAST(binary AS STRING)). Its tail is
+    // one final position, as `length` counts it.
+    val truncated = "CAST(X'41424344E282' AS STRING)"
+    // Codegen and interpreted eval, each on its own session; local rows
+    // would otherwise fold into a driver-side interpreted projection.
+    for ((mode, wholeStage) <- Seq("CODEGEN_ONLY" -> "true",
+        "NO_CODEGEN" -> "false")) {
+      val s = spark.newSession()
+      GraftFunctions.register(s)
+      s.conf.set("spark.sql.codegen.factoryMode", mode)
+      s.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      s.conf.set("spark.sql.optimizer.excludedRules",
+        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+      val df = s.createDataset(texts)(org.apache.spark.sql.Encoders.STRING)
+        .toDF("t").union(s.sql(s"SELECT $truncated AS t"))
+      for (mod <- Seq(1, 4, 7, 16)) {
+        val got = df.selectExpr(s"cdc_cuts(t, $mod)",
+          s"""array_distinct(concat(
+             |  aggregate(
+             |    transform(split(t, ''), ch -> ascii(ch)),
+             |    named_struct('pos', 0, 'a', 0, 'b', 0, 'c', 0,
+             |                 'acc', cast(array() as array<int>)),
+             |    (st, x) -> named_struct(
+             |      'pos', st.pos + 1, 'a', st.b, 'b', st.c, 'c', x,
+             |      'acc', if(st.pos + 1 >= 4 and
+             |                (st.a * 29791 + st.b * 961 + st.c * 31 + x)
+             |                  % $mod = 0,
+             |              concat(st.acc, array(st.pos + 1)), st.acc)),
+             |    st -> st.acc),
+             |  array(cast(length(t) as int))))""".stripMargin).collect()
+        got.foreach(r => assert(r.getSeq[Int](0) == r.getSeq[Int](1),
+          s"$mode mod=$mod: ${r.getSeq[Int](0)} vs ${r.getSeq[Int](1)}"))
+      }
+      assert(df.filter(expr(s"t = $truncated"))
+        .selectExpr("cdc_cuts(t, 7)").head().getSeq[Int](0).last == 5, mode)
     }
   }
 

@@ -12,8 +12,11 @@ class StreamMvServedSpec extends SparkSpec {
       val df = graft.SparkEntry.queries("st11_stream_mv_maintenance")(
         spark, "/root/testdata/sf0.001")
       val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("graft-st11-mv"), s"not MV-served:\n$plan")
-      assert(!plan.contains("graft-st11-run"), "still scanning the chunks")
+      // the run's dirs: <root>/st11-<n>/mv (the rollup), .../in (chunks)
+      assert("st11-[0-9]+/mv".r.findFirstIn(plan).isDefined,
+        s"not MV-served:\n$plan")
+      assert("st11-[0-9]+/in".r.findFirstIn(plan).isEmpty,
+        "still scanning the chunks")
     } finally MaterializedViews.clear()
   }
 }

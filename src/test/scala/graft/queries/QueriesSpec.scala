@@ -1,5 +1,9 @@
 package graft.queries
 
+import scala.collection.concurrent.TrieMap
+
+import org.apache.spark.sql.streaming.StreamingQueryListener
+
 import graft.{SparkSpec, SparkEntry}
 
 /** Smoke + plan-shape checks for the batch query inventory. Value-level
@@ -12,10 +16,49 @@ class QueriesSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("every query runs and returns rows at sf0.001") {
-    SparkEntry.queries.foreach { case (name, fn) =>
+    // The same pass checks that entries leave the caller's session and
+    // java.io.tmpdir as they found them: streaming and temp-table entries
+    // run in StreamRun's cloned session (no conf write the caller could
+    // observe mid-stream, no temp view) and under its per-context root,
+    // which goes when the harness scope ends. Keyed fixture caches, named
+    // after the sf dir they derive from, are the only dirs that persist.
+    graft.Tables.registerAll(spark, sf)
+    val partitions = "spark.sql.shuffle.partitions"
+    val callerPartitions = spark.conf.get(partitions)
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    def graftDirs = tmp.list().filter(_.startsWith("graft-")).toSet
+    def views = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    // fixed-name views of batch entries, replaced in place on every run
+    val batchViews = Set("rc1_m", "rc1_e", "__graft_decontam_eval_grams")
+    val dirs0 = graftDirs
+    val seenMidStream = TrieMap.empty[String, Unit]
+    val listener = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        seenMidStream.put(spark.conf.get(partitions), ())
+    }
+    spark.streams.addListener(listener)
+    try SparkEntry.queries.foreach { case (name, fn) =>
+      val views0 = views
       val n = fn(spark, sf).count()
       assert(n > 0, s"$name returned 0 rows")
-    }
+      val added = views -- views0 -- batchViews
+      assert(added.isEmpty, s"$name left temp views: $added")
+    } finally spark.streams.removeListener(listener)
+    Thread.sleep(500) // async listener bus drains
+    assert(seenMidStream.nonEmpty, "no streaming progress observed")
+    assert(seenMidStream.keySet == Set(callerPartitions),
+      s"caller's $partitions moved while streams ran: ${seenMidStream.keySet}")
+    assert(spark.conf.get(partitions) == callerPartitions)
+    val t0 = System.nanoTime()
+    StreamRun.release(spark.sparkContext)
+    info(f"harness root removal: ${(System.nanoTime() - t0) / 1e6}%.1f ms")
+    val sfKey = sf.replaceAll("[^A-Za-z0-9.]", "_")
+    val leaked = (graftDirs -- dirs0).filterNot(_.contains(sfKey))
+    assert(leaked.isEmpty, s"dirs left in $tmp: ${leaked.toSeq.sorted}")
   }
 
   test("entry (flagship) returns rows") {

@@ -74,18 +74,18 @@ class StateBudgetSpec extends SparkSpec {
   test("state partitions derive from input volume") {
     // fixture scale: single-digit partitions — per-trigger store-commit
     // choreography dominates tiny state (round-13 iv2 profile)
-    assert(CdcQueries.statePartitionsFor(1L) == 1)
-    assert(CdcQueries.statePartitionsFor(2L << 20) == 1)   // iv chunk set
-    assert(CdcQueries.statePartitionsFor(15L << 20) == 4)  // sf0.1 wal
+    assert(StreamRun.statePartitionsFor(1L) == 1)
+    assert(StreamRun.statePartitionsFor(2L << 20) == 1)   // iv chunk set
+    assert(StreamRun.statePartitionsFor(15L << 20) == 4)  // sf0.1 wal
     // deployment scale: partitions grow with volume (state per store
     // bounded), up to the clamp
-    assert(CdcQueries.statePartitionsFor(1L << 30) == 256)
-    assert(CdcQueries.statePartitionsFor(1L << 40) == 2048)
+    assert(StreamRun.statePartitionsFor(1L << 30) == 256)
+    assert(StreamRun.statePartitionsFor(1L << 40) == 2048)
     // dense-state operators (session windows: per-key merge work every
     // commit) size at density x the byte-derived count and still scale
     // with volume / respect the clamp
-    assert(CdcQueries.statePartitionsFor(2L << 20, 4) == 2)
-    assert(CdcQueries.statePartitionsFor(15L << 20, 4) == 15)
-    assert(CdcQueries.statePartitionsFor(1L << 40, 4) == 2048)
+    assert(StreamRun.statePartitionsFor(2L << 20, 4) == 2)
+    assert(StreamRun.statePartitionsFor(15L << 20, 4) == 15)
+    assert(StreamRun.statePartitionsFor(1L << 40, 4) == 2048)
   }
 }
