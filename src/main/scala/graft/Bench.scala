@@ -64,17 +64,6 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // SPARK_GRAFT_NOBCAST=1 → disable broadcast joins (diagnosis only,
-    // never the gate path): scale-curve shuffle ratios step when a join
-    // side crosses the 10 MB broadcast threshold between two sf notches
-    // (the sf1→sf3 cc1/db1 jump) — re-measuring both notches with
-    // broadcasts off separates that one-time plan flip from genuinely
-    // superlinear candidate growth.
-    if (sys.env.get("SPARK_GRAFT_NOBCAST").contains("1")) {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    }
-
     def short(k: String): String = k.takeWhile(_ != '_')
     def fmt(v: Double): String = "%.2f".format(v)
     val sfTag = sfDir.split('/').lastOption.getOrElse(sfDir)
@@ -95,91 +84,6 @@ object Bench {
     val picked = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.exists(n.contains)) }
 
-    // SPARK_GRAFT_SHUFFLE=1 → shuffle-bytes profiling instead of timing:
-    // one cold run per query, total shuffle WRITE bytes attributed via a
-    // stage listener (deterministic per plan, so a single run suffices;
-    // used for the scale-curve "bytes shuffled" ratios in
-    // tools/BENCH_METHOD.md without touching the timing path).
-    if (sys.env.get("SPARK_GRAFT_SHUFFLE").contains("1")) {
-      val bytes = new java.util.concurrent.atomic.AtomicLong(0)
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-            bytes.addAndGet(
-              sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        })
-      def consumeOnce(df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      val rows = picked.map { case (name, fn) =>
-        val before = { Thread.sleep(200); bytes.get() }
-        val err =
-          try { consumeOnce(fn(spark, sfDir)); None }
-          catch { case e: Throwable => Some(e.getClass.getSimpleName) }
-        Thread.sleep(200) // let straggler stage-completed events land
-        val mb = (bytes.get() - before) / 1e6
-        name -> (err match {
-          case Some(e) => "\"" + e + "\""
-          case None => "%.1f".format(mb)
-        })
-      }
-      val qs = rows.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      spark.stop()
-      println(s"""{"metric":"shuffle_write_mb","queries":$qs,"sf":"$sfTag"}""")
-      return
-    }
-    // SPARK_GRAFT_JOBS=1 → choreography profiling instead of timing: one
-    // cold run per query, counting Spark jobs / stages / tasks via a
-    // listener (deterministic per plan). An iterative or streaming query
-    // whose measured seconds are dominated by driver job-launch barriers
-    // shows up here as a three-digit job count on kilobyte data — the
-    // optimization guide's §1 "decide whether the time is scheduler
-    // delay" question, answered mechanically for all 360 entries.
-    if (sys.env.get("SPARK_GRAFT_JOBS").contains("1")) {
-      val jobs = new java.util.concurrent.atomic.AtomicLong(0)
-      val stages = new java.util.concurrent.atomic.AtomicLong(0)
-      val tasks = new java.util.concurrent.atomic.AtomicLong(0)
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            jobs.incrementAndGet()
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            stages.incrementAndGet()
-            tasks.addAndGet(sc.stageInfo.numTasks)
-          }
-        })
-      def consumeOnce(df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      val rows = picked.map { case (name, fn) =>
-        val j0 = jobs.get(); val s0 = { Thread.sleep(100); stages.get() }
-        val t0 = tasks.get()
-        val wall0 = System.nanoTime()
-        val err =
-          try { consumeOnce(fn(spark, sfDir)); None }
-          catch { case e: Throwable => Some(e.getClass.getSimpleName) }
-        Thread.sleep(100) // let straggler stage-completed events land
-        val sec = (System.nanoTime() - wall0) / 1e9
-        name -> (err match {
-          case Some(e) => "\"" + e + "\""
-          case None =>
-            s"""{"jobs":${jobs.get() - j0},"stages":${stages.get() - s0},""" +
-              s""""tasks":${tasks.get() - t0},"sec":${fmt(sec)}}"""
-        })
-      }
-      val qs = rows.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      spark.stop()
-      val out = s"""{"metric":"job_counts","queries":$qs,"sf":"$sfTag"}"""
-      try {
-        val w = new java.io.PrintWriter("bench_jobs.json")
-        try w.println(out) finally w.close()
-      } catch { case _: Throwable => () }
-      println(out)
-      return
-    }
     // Consume through a noop write, not count(): under count(1) Catalyst
     // prunes every column, so projection-only queries would be timed as
     // bare parquet scans. The noop sink pulls fully materialized rows —
@@ -196,39 +100,24 @@ object Bench {
       try { consume(fn(spark, sfDir)); None } catch { case e: Throwable =>
         Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")
       }
-    // Scaling signal (round-14 verdict item 7): per-query TASK time —
-    // Σ executorRunTime over completed stages — measured during the
-    // UNTIMED warmup pass (sequential queries + a short post-query drain
-    // give the attribution; the drain sleep would contaminate the timed
-    // passes, which stay byte-identical to round 14). A query whose wall
-    // time is driver choreography shows task_sec ≪ wall; a compute-bound
-    // query shows task_sec ≈ wall × cores-in-use — the mechanical
-    // decomposition the 8-vs-32-core probe needs to stop reading ≈1 for
-    // structural reasons. Streaming queries' micro-batch stages land on
-    // the same global listener, so they are attributed too.
-    val taskMs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          taskMs.addAndGet(sc.stageInfo.taskMetrics.executorRunTime)
-      })
-    val taskSec = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     // Warmup pass: codegen + JIT + grading-fixture population, untimed.
     // Cache detection happens here — a query that touches GradeFixtures
     // during its first execution is fixture-cached for the timed passes.
+    // The same pass profiles each query: its jobs — micro-batch triggers
+    // included — run under its QueryProfile tag, and the listener goes
+    // before the timed passes, which it would otherwise observe.
+    val profile = QueryProfile.attach(spark.sparkContext)
     picked.foreach { case (name, fn) =>
       val fixturesBefore = graft.queries.GradeFixtures.accesses.get()
-      val task0 = taskMs.get()
-      run(fn).foreach { e =>
+      QueryProfile.tagged(spark.sparkContext, name)(run(fn)).foreach { e =>
         System.err.println(s"[bench] $name FAILED (warmup) — $e")
         errors += name -> e
       }
-      Thread.sleep(50) // let straggler stage-completed events land
-      taskSec(name) = (taskMs.get() - task0) / 1000.0
       if (graft.queries.GradeFixtures.accesses.get() > fixturesBefore)
         cachedQueries += name
     }
+    val work = profile.byTag
+    profile.detach()
     // Two INTERLEAVED timed passes (all queries once, then all again),
     // per-query min: the min over samples minutes apart is robust both
     // to GC/compilation noise AND to a multi-minute contended window on
@@ -317,15 +206,13 @@ object Bench {
           "\"" + k + "\":\"" + v.replace("\\", "\\\\").replace("\"", "\\\"")
             .replaceAll("[\\x00-\\x1f]", " ") + "\"" }.mkString("{", ",", "}")
         val fullCached = cachedQueries.map(n => "\"" + n + "\"").mkString("[", ",", "]")
-        // task_sec: per-query Σ executor task time from the warmup pass
-        // (see the listener note above) — the driver's scaling signal;
-        // additive only, the timed "queries" map is computed as before
-        val fullTask = results.map { case (k, _) =>
-          "\"" + k + "\":" + "%.3f".format(taskSec.getOrElse(k, 0.0)) }
+        // profile: per-query Spark work from the warmup pass
+        val fullProfile = picked.map { case (k, _) =>
+          "\"" + k + "\":" + work.getOrElse(k, QueryProfile.Work()).json }
           .mkString("{", ",", "}")
         // same "method" label as the stdout line — see
         // tools/BENCH_METHOD.md for the label/method history
-        w.println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$full,"task_sec":$fullTask,"sf":"$sfDir","method":"noop_write","errors":$fullFailed,"cached":$fullCached,$telemetry}""")
+        w.println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$full,"profile":$fullProfile,"sf":"$sfDir","method":"noop_write","errors":$fullFailed,"cached":$fullCached,$telemetry}""")
       } finally w.close()
     } catch { case _: Throwable => () }
     // Stop BEFORE printing: shutdown warnings must not land after the JSON

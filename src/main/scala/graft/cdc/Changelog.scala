@@ -39,11 +39,8 @@ object Changelog {
           if (!wasAlive && nowAlive) 1
           else if (wasAlive && !nowAlive) -1
           else 0
-        val d = CompactionDelta(
-          CdcEnvelope.keyOf(latest.schema, latest.image.getOrElse("id",
-            latest.image.getOrElse("user_id", ""))),
-          latest.schema, latest.table, latest.lsn, nowAlive, delta,
-          latest.image)
+        val d = CompactionDelta(latest.key, latest.schema, latest.table,
+          latest.lsn, nowAlive, delta, latest.image)
         (Some(KeyState(latest.lsn, nowAlive)), Some(d))
     }
   }
@@ -72,8 +69,7 @@ object Changelog {
     val timeoutConf = if (tombstoneTtl.isDefined)
       GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
     events
-      .groupByKey(e => CdcEnvelope.keyOf(e.schema,
-        e.image.getOrElse("id", e.image.getOrElse("user_id", ""))))
+      .groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Update, timeoutConf)(
         (_: String, it: Iterator[CdcEnvelope], state: GroupState[KeyState]) => {
           if (state.hasTimedOut) {
@@ -113,8 +109,7 @@ object Changelog {
     prior match {
       case Some(st) if st.lsn >= latest.lsn => (prior, Nil) // stale replay
       case _ =>
-        val key = CdcEnvelope.keyOf(latest.schema,
-          latest.image.getOrElse("id", latest.image.getOrElse("user_id", "")))
+        val key = latest.key
         val wasAlive = prior.exists(_.alive)
         val nowAlive = !latest.isDelete
         val gNew = if (nowAlive) group(latest) else ""
@@ -159,8 +154,7 @@ object Changelog {
       implicit spark: SparkSession): Dataset[ValueDelta] = {
     import spark.implicits._
     events
-      .groupByKey(e => CdcEnvelope.keyOf(e.schema,
-        e.image.getOrElse("id", e.image.getOrElse("user_id", ""))))
+      .groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
         (_: String, it: Iterator[CdcEnvelope],
             state: GroupState[ValueState]) => {
@@ -378,8 +372,7 @@ object Changelog {
     var last = floor
     val out = Seq.newBuilder[VersionRow]
     events.filter(_.lsn > floor).sortBy(_.lsn).foreach { e =>
-      val key = CdcEnvelope.keyOf(e.schema,
-        e.image.getOrElse("id", e.image.getOrElse("user_id", "")))
+      val key = e.key
       cur.foreach { v =>
         out += VersionRow(key, e.schema, v.lsn, Some(e.lsn), v.image)
       }
@@ -406,8 +399,7 @@ object Changelog {
       implicit spark: SparkSession): Dataset[VersionRow] = {
     import spark.implicits._
     events
-      .groupByKey(e => CdcEnvelope.keyOf(e.schema,
-        e.image.getOrElse("id", e.image.getOrElse("user_id", ""))))
+      .groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
         (_: String, it: Iterator[CdcEnvelope],
             state: GroupState[ScdState]) => {
@@ -420,10 +412,7 @@ object Changelog {
   /** Batch form: same semantics via replay over a bounded dataset —
     * used by specs to cross-check the streaming operator. */
   def compactBatch(events: Seq[CdcEnvelope]): Map[String, CompactionDelta] = {
-    val byKey = events.groupBy(e =>
-      CdcEnvelope.keyOf(e.schema, e.image.getOrElse("id",
-        e.image.getOrElse("user_id", ""))))
-    byKey.flatMap { case (k, evs) =>
+    events.groupBy(_.key).flatMap { case (k, evs) =>
       transition(None, evs)._2.map(k -> _)
     }
   }

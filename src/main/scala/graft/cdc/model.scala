@@ -30,6 +30,11 @@ final case class CdcEnvelope(
   def image: Map[String, String] = if (op == "d") before else after
 
   def isDelete: Boolean = op == "d"
+
+  /** The row's synthetic primary key: its schema and the image's `id`,
+    * or `user_id` for tables keyed by the user (user_favorite_colors). */
+  def key: String =
+    CdcEnvelope.keyOf(schema, image.getOrElse("id", image.getOrElse("user_id", "")))
 }
 
 /** Flat typed event base (reference DebeziumEvent, CustomJob.java:346-389). */

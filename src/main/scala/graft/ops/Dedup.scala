@@ -300,7 +300,8 @@ object Dedup {
     // join-shaped convergence probe — see below). Under AQE each
     // exchange materializes as its own driver-scheduled job, and on an
     // iterative operator those per-round barriers ARE the cost (guide
-    // §1.1: scheduler delay, measured via SPARK_GRAFT_JOBS).
+    // §1.1: scheduler delay, measured by the job counts in Bench's
+    // `profile` map).
     //
     // Convergence probe without a join, a moved flag, OR its own job:
     // labels only ever decrease, so Σ lbl (exact, DECIMAL(38,0) — no

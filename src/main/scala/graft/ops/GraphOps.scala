@@ -735,7 +735,8 @@ object GraphOps {
     // of the former join-chain ([[Dedup.dupClusters]] got the same
     // treatment; under AQE every exchange is its own driver-scheduled
     // job, and those per-round barriers are what an iterative operator
-    // actually pays — SPARK_GRAFT_JOBS measured 271 jobs here before).
+    // actually pays — Bench's per-query job count measured 271 jobs
+    // here before).
     // Convergence probe without a join: Σ lbl over the tagged relation
     // (exact DECIMAL(38,0)) is strictly decreasing until fixpoint.
     // Per-round Σ lbl probe rides the round's own checkpoint job

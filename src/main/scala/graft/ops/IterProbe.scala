@@ -10,9 +10,9 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
   * convergence probe (Σ label, survivor count). Under AQE each job is a
   * full driver barrier plus listener round-trips, and on an iterative
   * operator those per-round barriers ARE the cost (guide §1.1: the
-  * SPARK_GRAFT_JOBS profile shows ~20 ms of pure choreography per job on
-  * kilobyte fixture data; at 100 TB the probe job is additionally a full
-  * scan of the round's output).
+  * per-query job counts in Bench's `profile` map show ~20 ms of pure
+  * choreography per job on kilobyte fixture data; at 100 TB the probe
+  * job is additionally a full scan of the round's output).
   *
   * `Dataset.observe` removes the second job: the probe aggregate rides
   * the checkpoint's own materialization as a CollectMetricsExec node —

@@ -93,19 +93,9 @@ final class CdcFileScan(path: String, numPartitions: Int,
       if (lsns.isEmpty || numPartitions <= 1)
         Array(CdcRangePartition(path, Long.MinValue, Long.MaxValue, walFormat,
           malformed = malformed))
-      else {
-        val lo = lsns.min - 1 // exclusive start
-        val hi = lsns.max
-        val n = math.max(1L, math.min(numPartitions.toLong, hi - lo)).toInt
-        val width = math.max(1L, (hi - lo + n - 1) / n)
-        val parts = (0 until n).iterator
-          .map(i => CdcRangePartition(path, lo + i * width,
-            math.min(hi, lo + (i + 1) * width), walFormat,
-            malformed = malformed))
-          .filter(p => p.endInclusive > p.startExclusive)
-          .toArray
-        CdcFileMicroBatchStream.attachPgStates(path, walFormat, parts)
-      }
+      else
+        CdcFileMicroBatchStream.planRanges(path, walFormat, malformed,
+          numPartitions, lsns.min - 1, lsns.max)
     }
     override def createReaderFactory(): PartitionReaderFactory =
       new CdcReaderFactory
@@ -161,18 +151,9 @@ final class CdcFileMicroBatchStream(path: String, numPartitions: Int = 1,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[CdcOffset].lsn
     val e = end.asInstanceOf[CdcOffset].lsn
-    if (e <= s) return Array.empty
-    // Contiguous LSN subranges → parallel replay readers (the real
-    // source's analog: one reader per slot range / table shard).
-    val n = math.max(1, math.min(numPartitions, (e - s).toInt))
-    val width = math.max(1L, (e - s + n - 1) / n)
-    val parts = (0 until n).iterator
-      .map(i => CdcRangePartition(path, s + i * width,
-        math.min(e, s + (i + 1) * width), walFormat,
-        malformed = malformed))
-      .filter(p => p.endInclusive > p.startExclusive)
-      .toArray
-    CdcFileMicroBatchStream.attachPgStates(path, walFormat, parts)
+    if (e <= s) Array.empty
+    else CdcFileMicroBatchStream.planRanges(path, walFormat, malformed,
+      numPartitions, s, e)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new CdcReaderFactory
@@ -185,12 +166,31 @@ final class CdcFileMicroBatchStream(path: String, numPartitions: Int = 1,
 object CdcFileMicroBatchStream {
   private val mapper = new ObjectMapper()
 
+  /** The LSN range `(lo, hi]` as at most `numPartitions` contiguous
+    * subranges, one replay reader each (the real source's analog: one
+    * reader per slot range / table shard). Long arithmetic throughout: a
+    * first trigger from offset 0 on a live slot spans the slot's whole
+    * LSN, far past `Int.MaxValue` bytes. */
+  private[sources] def planRanges(path: String, walFormat: String,
+      malformed: String, numPartitions: Int, lo: Long,
+      hi: Long): Array[InputPartition] = {
+    val n = math.max(1L, math.min(numPartitions.toLong, hi - lo)).toInt
+    val width = math.max(1L, (hi - lo + n - 1) / n)
+    val parts = (0 until n).iterator
+      .map(i => CdcRangePartition(path, lo + i * width,
+        math.min(hi, lo + (i + 1) * width), walFormat,
+        malformed = malformed))
+      .filter(p => p.endInclusive > p.startExclusive)
+      .toArray
+    attachPgStates(path, walFormat, parts)
+  }
+
   /** For pgoutput multi-range plans: ONE driver-side metadata pass over
     * the log computes the decoder state at each range boundary
     * ([[PgOutputSession.boundaryStates]]), so each range reader decodes
     * only its own LSN span — O(log) total planning instead of
     * O(partitions × log) reader work. jsonl is stateless: pass-through. */
-  def attachPgStates(path: String, walFormat: String,
+  private def attachPgStates(path: String, walFormat: String,
       parts: Array[CdcRangePartition]): Array[InputPartition] =
     // Also worthwhile for a SINGLE partition when its range starts past
     // the log head (an incremental micro-batch, or a restart from a
@@ -230,46 +230,6 @@ object CdcFileMicroBatchStream {
     if (digits == 0) mapper.readTree(l).get("lsn").asLong()
     else if (neg) -v else v
   }
-
-  /** (lsn, line) pairs for the whole log. A line whose LSN cannot be
-    * parsed at all (structural corruption) is indexed at its
-    * predecessor's LSN so it rides the same range and the same
-    * micro-batch as its file neighborhood — offset accounting stays
-    * monotone and the stream never wedges on it. Whether the line then
-    * errors or quarantines is the READER's `malformed` policy; the
-    * index itself is always lenient (a planning-time throw would kill
-    * the query before the policy could apply). */
-  def readLines(path: String): Seq[(Long, String)] = {
-    val f = new java.io.File(path)
-    if (!f.exists()) return Seq.empty
-    val src = scala.io.Source.fromFile(f, "UTF-8")
-    try {
-      var prev = Long.MinValue + 1
-      src.getLines().filter(_.nonEmpty).map { l =>
-        val lsn = try lsnOf(l) catch { case scala.util.control.NonFatal(_) => prev }
-        prev = lsn
-        lsn -> l
-      }.toVector
-    } finally src.close()
-  }
-
-  /** LSNs present in the log, for either format (no payload decode). */
-  def readLsns(path: String, walFormat: String): Seq[Long] =
-    if (walFormat == "pgoutput") readRawLines(path).map(_._1)
-    else readLines(path).map(_._1)
-
-  /** Binary-WAL lines as (lsn, raw line) — LSN from the cheap numeric
-    * prefix, base64 payload NOT decoded (callers decode lazily after
-    * range pruning; see [[FileWalTransport.frames]]). */
-  def readRawLines(path: String): Seq[(Long, String)] = {
-    val f = new java.io.File(path)
-    if (!f.exists()) return Seq.empty
-    val src = scala.io.Source.fromFile(f, "UTF-8")
-    try src.getLines().filter(_.nonEmpty)
-      .map(l => l.substring(0, l.indexOf(' ')).toLong -> l).toVector
-    finally src.close()
-  }
-
 
   def envelopeToRow(e: graft.cdc.CdcEnvelope): InternalRow = {
     def mapOf(m: Map[String, String]) = {

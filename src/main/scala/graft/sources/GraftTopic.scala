@@ -115,13 +115,13 @@ final class GraftTopicTable(topic: String) extends Table
     new WriteBuilder {
       override def build(): Write = new Write {
         override def toStreaming: StreamingWrite =
-          new TopicStreamingWrite(topic, info.queryId(), ki, vi)
+          new TopicWrite(topic, info.queryId(), ki, vi)
         // batch produce — the BACKFILL path (kafka-connect's batch
         // ingest analog): one append per job at driver commit, task
         // retries deduplicated by Spark's commit coordinator (only one
         // attempt's commit message reaches commit()).
-        override def toBatch: BatchWrite = new TopicBatchWrite(
-          topic, info.queryId(), ki, vi)
+        override def toBatch: BatchWrite =
+          new TopicWrite(topic, info.queryId(), ki, vi)
       }
     }
   }
@@ -192,44 +192,40 @@ final class TopicRangeReaderFactory extends PartitionReaderFactory {
   }
 }
 
-final class TopicStreamingWrite(topic: String, queryId: String,
-    ki: Int, vi: Int) extends StreamingWrite {
+/** Streaming and batch produce into the topic. Both append a commit's
+  * rows in a deterministic order across retries — partition id, then
+  * each writer's buffered order — through the same TopicStore commit. A
+  * batch commits as epoch 0 under its query id: a re-submitted JOB
+  * appends again, which is the backfill semantic; duplicated TASK
+  * attempts never reach commit(). */
+final class TopicWrite(topic: String, queryId: String, ki: Int, vi: Int)
+    extends StreamingWrite with BatchWrite {
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
     new TopicWriterFactory(ki, vi)
+  override def createBatchWriterFactory(
+      info: PhysicalWriteInfo): DataWriterFactory =
+    new TopicWriterFactory(ki, vi)
 
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    // deterministic append order across retries: partition id, then the
-    // writer's buffered order
-    val rows = messages.collect { case m: TopicCommitMessage => m }
-      .sortBy(_.partitionId).toSeq.flatMap(_.rows)
-    TopicStore.commit(topic, queryId, epochId, rows)
-  }
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    TopicStore.commit(topic, queryId, epochId,
+      messages.collect { case m: TopicCommitMessage => m }
+        .sortBy(_.partitionId).toSeq.flatMap(_.rows))
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    commit(0L, messages)
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
+  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
+  // both interfaces default it to true; Scala needs the pick spelled out
+  override def useCommitCoordinator(): Boolean = true
 }
 
 final case class TopicCommitMessage(partitionId: Int,
     rows: Seq[(String, String)]) extends WriterCommitMessage
 
-/** Batch produce into the topic: same deterministic append order and
-  * TopicStore commit as the streaming write (epoch 0 under the batch
-  * query id — a re-submitted JOB appends again, which is the backfill
-  * semantic; duplicated TASK attempts never reach commit()). */
-final class TopicBatchWrite(topic: String, queryId: String,
-    ki: Int, vi: Int) extends BatchWrite {
-  override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory =
-    new TopicBatchWriterFactory(ki, vi)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val rows = messages.collect { case m: TopicCommitMessage => m }
-      .sortBy(_.partitionId).toSeq.flatMap(_.rows)
-    TopicStore.commit(topic, queryId, 0L, rows)
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-final class TopicBatchWriterFactory(ki: Int, vi: Int)
-    extends DataWriterFactory {
+/** One writer for batch and streaming writes: buffers the partition's
+  * `(key, value)` pairs and returns them in its commit message. */
+final class TopicWriterFactory(ki: Int, vi: Int)
+    extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
@@ -242,20 +238,6 @@ final class TopicBatchWriterFactory(ki: Int, vi: Int)
       override def abort(): Unit = rows.clear()
       override def close(): Unit = ()
     }
-}
-
-final class TopicWriterFactory(ki: Int, vi: Int)
-    extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      private val rows = ArrayBuffer.empty[(String, String)]
-      override def write(r: InternalRow): Unit =
-        rows += ((if (r.isNullAt(ki)) null else r.getUTF8String(ki).toString,
-          if (r.isNullAt(vi)) null else r.getUTF8String(vi).toString))
-      override def commit(): WriterCommitMessage =
-        TopicCommitMessage(partitionId, rows.toVector)
-      override def abort(): Unit = rows.clear()
-      override def close(): Unit = ()
-    }
+      epochId: Long): DataWriter[InternalRow] = createWriter(partitionId, taskId)
 }

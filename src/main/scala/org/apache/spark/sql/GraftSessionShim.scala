@@ -1,11 +1,15 @@
 package org.apache.spark.sql
 
+import java.util.concurrent.TimeoutException
+
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** The session internals [[graft.queries.StreamRun]] needs, which Spark
-  * keeps `private[sql]`/`private[spark]`: reachable only from inside this
+/** The session and listener-bus internals [[graft.queries.StreamRun]] and
+  * [[graft.QueryProfile]] need, which Spark keeps
+  * `private[sql]`/`private[spark]`: reachable only from inside this
   * package. */
 object GraftSessionShim {
 
@@ -26,6 +30,11 @@ object GraftSessionShim {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       df.queryExecution.analyzed)
 
+  /** Returns once every listener event posted so far has been delivered
+    * to every listener; throws `TimeoutException` after 10 s. Readers of
+    * listener-collected figures call this instead of sleeping. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
   /** Delivers the queued listener events (waiting at most 10 s), then
     * detaches from the context's listener bus the streaming-listener bus
     * that holds `marker`. Each session's query manager attaches one such
@@ -34,9 +43,9 @@ object GraftSessionShim {
     * the context. */
   def detachStreams(spark: SparkSession,
       marker: StreamingQueryListener): Unit = {
+    try drainListeners(spark.sparkContext)
+    catch { case _: TimeoutException => () }
     val bus = spark.sparkContext.listenerBus
-    try bus.waitUntilEmpty()
-    catch { case _: java.util.concurrent.TimeoutException => () }
     bus.findListenersByClass[StreamingQueryListenerBus]()
       .filter(_.listeners.contains(marker))
       .foreach(bus.removeListener)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSessionShim, SparkSession}
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 
@@ -79,7 +79,7 @@ object DumpPlans {
       })
 
     def drainAndReset(): (Seq[String], Seq[String]) = {
-      Thread.sleep(400) // async listener buses drain
+      GraftSessionShim.drainListeners(spark.sparkContext)
       val i = internal.synchronized {
         val v = internal.toVector; internal.clear(); v }
       val s = streaming.synchronized {

@@ -2,6 +2,7 @@ package graft.queries
 
 import scala.collection.concurrent.TrieMap
 
+import org.apache.spark.sql.GraftSessionShim
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import graft.{SparkSpec, SparkEntry}
@@ -47,8 +48,10 @@ class QueriesSpec extends SparkSpec {
       assert(n > 0, s"$name returned 0 rows")
       val added = views -- views0 -- batchViews
       assert(added.isEmpty, s"$name left temp views: $added")
-    } finally spark.streams.removeListener(listener)
-    Thread.sleep(500) // async listener bus drains
+    } finally {
+      GraftSessionShim.drainListeners(spark.sparkContext)
+      spark.streams.removeListener(listener)
+    }
     assert(seenMidStream.nonEmpty, "no streaming progress observed")
     assert(seenMidStream.keySet == Set(callerPartitions),
       s"caller's $partitions moved while streams ran: ${seenMidStream.keySet}")

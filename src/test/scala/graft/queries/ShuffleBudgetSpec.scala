@@ -1,8 +1,6 @@
 package graft.queries
 
-import graft.{SparkSpec, SparkEntry}
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import graft.{QueryProfile, SparkSpec, SparkEntry}
 
 /** Shuffle-regression guard (VERDICT r8 "next round" #3): the empirical
   * sf0.1→sf1 scale curve in tools/BENCH_METHOD.md establishes that the
@@ -14,8 +12,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   *
   * Per query: one warmup run (grading fixtures populate; codegen
   * compiles), then one measured run whose total shuffle WRITE bytes
-  * (stage-listener attribution, the same mechanism as Bench's
-  * SPARK_GRAFT_SHUFFLE=1 mode) must stay under a per-query ceiling.
+  * ([[graft.QueryProfile]] attribution under the query's tag, the same
+  * figure as `shuffle_write` in the `profile` map of Bench's
+  * bench_last.json) must stay under a per-query ceiling.
   * Ceilings are ~3× the bytes measured at spec config (local[4],
   * 4 shuffle partitions, sf0.01) — far above run-to-run wobble
   * (shuffle bytes are deterministic per plan to within compression
@@ -53,21 +52,19 @@ class ShuffleBudgetSpec extends SparkSpec {
     "er1_golden_record" -> 250_000L)
 
   test("heavy queries stay inside their shuffle-write budgets") {
-    val bytes = new AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        bytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val profile = QueryProfile.attach(spark.sparkContext)
     def consume(name: String): Unit =
       SparkEntry.queries(name)(spark, sf)
         .write.format("noop").mode("overwrite").save()
+    val work = try {
+      budgets.foreach { case (name, _) =>
+        consume(name) // warmup: fixtures + codegen, untagged, not measured
+        QueryProfile.tagged(spark.sparkContext, name)(consume(name))
+      }
+      profile.byTag
+    } finally profile.detach()
     val over = budgets.flatMap { case (name, budget) =>
-      consume(name) // warmup: fixtures + codegen, not measured
-      Thread.sleep(300)
-      val before = bytes.get()
-      consume(name)
-      Thread.sleep(300) // let straggler stage-completed events land
-      val got = bytes.get() - before
+      val got = work.getOrElse(name, QueryProfile.Work()).shuffleWrite
       info(f"$name%-22s ${got / 1e6}%10.2f MB (budget ${budget / 1e6}%.2f MB)")
       if (got > budget)
         Some(f"$name: ${got / 1e6}%.2f MB > budget ${budget / 1e6}%.2f MB")

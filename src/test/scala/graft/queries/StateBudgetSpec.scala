@@ -1,6 +1,7 @@
 package graft.queries
 
 import scala.collection.concurrent.TrieMap
+import org.apache.spark.sql.GraftSessionShim
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import graft.{SparkSpec, SparkEntry}
 
@@ -54,7 +55,7 @@ class StateBudgetSpec extends SparkSpec {
       spark.streams.addListener(listener)
       try {
         SparkEntry.queries(name)(spark, sf).count()
-        Thread.sleep(500) // async listener bus drains
+        GraftSessionShim.drainListeners(spark.sparkContext)
         val total = last.values.sum
         assert(last.nonEmpty && total > 0,
           s"$name: no stateful streaming progress observed — the entry " +

@@ -120,6 +120,21 @@ class CdcFileSourceSpec extends SparkSpec {
     })
   }
 
+  test("a span past Int.MaxValue still splits into numPartitions ranges") {
+    // a live slot's first trigger runs from offset 0 to the slot's LSN;
+    // planning a jsonl range reads no file
+    val stream = new CdcFileMicroBatchStream(
+      Paths.get(tmpDir("cdclog8"), "wal.jsonl").toString, 4, walFormat = "jsonl")
+    val ranges = stream.planInputPartitions(CdcOffset(0), CdcOffset(3000000000L))
+      .map(_.asInstanceOf[CdcRangePartition]).sortBy(_.startExclusive)
+    assert(ranges.length == 4, ranges.toSeq)
+    assert(ranges.head.startExclusive == 0L)
+    assert(ranges.last.endInclusive == 3000000000L)
+    assert(ranges.sliding(2).forall {
+      case Array(a, b) => a.endInclusive == b.startExclusive
+    }, ranges.toSeq)
+  }
+
   test("batch read splits the LSN span into parallel range readers") {
     val log = Paths.get(tmpDir("cdclog7"), "wal.jsonl")
     Files.write(log, golden.mkString("\n").getBytes)
