@@ -172,24 +172,22 @@ object Dedup {
     // Pinned: the banding self-join below plants this relation twice —
     // unpinned, the minhash_shingle signature pass (the expensive
     // projection here) runs once per side.
-    val bandsDf = sigs.select(col("doc_id"), explode(expr(
+    val bandsDf = Pin(sigs.select(col("doc_id"), explode(expr(
         s"transform(sequence(0, ${bands - 1}), b -> struct(b as band, xxhash64($bandCols) as bucket))"))
       .as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      .localCheckpoint()
+      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket")))
     val cand = bandsDf.as("x").join(bandsDf.as("y"),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
       .distinct()
     // Pinned like jaccardPairs' t: both verify sides fetch from it.
-    val payload = base
+    val payload = Pin(base
       .withColumn("w", expr(
         s"array_sort(array_distinct(transform(word_ngrams(toks, $shingleN), " +
           "x -> xxhash64(x))))"))
       .withColumn("nw", size(col("w")).cast("bigint"))
-      .select("doc_id", "w", "nw")
-      .localCheckpoint()
+      .select("doc_id", "w", "nw"))
     // Verification fetches payloads by id through SHUFFLE equi-joins: at
     // corpus scale the payload relation IS the corpus (every doc's shingle
     // set), so broadcasting it would OOM the driver at broadcast build.
@@ -214,12 +212,11 @@ object Dedup {
       maxHamming: Int = 3): DataFrame = {
     // Pinned: the banding self-join + the final anti-join plant this
     // three times; the signature projection runs once.
-    val docs = df.select(col(idCol).as("doc_id"),
+    val docs = Pin(df.select(col(idCol).as("doc_id"),
         expr(s"array_distinct(filter(split($textCol, ' '), x -> length(x) > 0))").as("w"))
       .withColumn("hs", expr("transform(w, t -> xxhash64(t))"))
       .withColumn("simhash", expr("simhash64(hs)"))
-      .select("doc_id", "simhash")
-      .localCheckpoint()
+      .select("doc_id", "simhash"))
     val bandsDf = docs.select(col("doc_id"), col("simhash"), explode(expr(
         "transform(sequence(0, 3), k -> struct(k as band, shiftright(simhash, k*16) & 65535 as bucket))"))
       .as("bb"))
@@ -244,7 +241,7 @@ object Dedup {
     * Iterative: each round joins labels across edges and takes the
     * neighborhood minimum, converging in O(component diameter) rounds
     * (dup clusters are shallow — near-dup graphs converge in a handful).
-    * Labels are `localCheckpoint`ed per round to truncate lineage (the
+    * Labels are pinned ([[Pin]]) per round to truncate lineage (the
     * label table is O(nodes in the dup graph), the standard iterative-
     * graph trade also made by k-means/GraphX); the convergence probe is
     * an aggregate count, not a data collect. */
@@ -256,37 +253,28 @@ object Dedup {
     // unioning two selects over `pairs` — a union would plant the (often
     // expensive — e.g. a jaccardPairs verify join) upstream plan twice,
     // and Spark does not dedupe common subtrees.
-    val sym = pairs
+    val sym = Pin(pairs
       .select(explode(array(
         struct(col(aCol).as("a"), col(bCol).as("b")),
         struct(col(bCol).as("a"), col(aCol).as("b"))))
         .as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
-      .repartition(col("b"))
-      .localCheckpoint()
+      .repartition(col("b")))
     // Seed labels with min(node, min neighbor) — the same aggregation a
     // plain distinct() would cost, but it folds the first propagation
     // round into initialization (one fewer iteration of the loop's
     // join+jump choreography). The seed's Σ lbl probe rides the
-    // checkpoint job itself (observe — see [[IterProbe]]), as does every
-    // round's below: one driver-scheduled job per round, probe included.
+    // pin job itself ([[Pin.observed]]), as does every round's below:
+    // one driver-scheduled job per round, probe included.
     val lblSumMetric =
       sum(col("lbl").cast("decimal(38,0)"))
-    var (labels, seedSum) = IterProbe.checkpointWith(
+    var (labels, seedSum) = Pin.observed(
       sym.groupBy(col("a").as("node"))
         .agg(least(col("a"), min(col("b"))).as("lbl")),
       lblSumMetric)
-    // Checkpoints here also SEVER STATS LINEAGE (rebuild from the
-    // checkpointed RDD): localCheckpoint carries originStats forward,
-    // and this loop both multiplies (edge join) and SQUARES (the jump
-    // self-join) the size estimate every round — digits grow ~2^iter,
-    // so a deep-diameter graph that needs tens of rounds would spend
-    // its driver time in the optimizer's BigInteger arithmetic before
-    // any task runs (observed live in the SCC sibling of this loop:
-    // a core pinned 20 min in Toom-Cook multiplication inside
-    // canBroadcastBySize). Fresh LogicalRDD stats keep the arithmetic
-    // constant-size at any round count; the per-row Row round-trip is
-    // noise next to the exchange each round already pays.
+    // Round pins are fresh ([[Pin]]): this loop both multiplies (edge
+    // join) and SQUARES (the jump self-join) the size estimate a pin
+    // would otherwise carry every round.
     // Each round folds the edge relax AND the pointer jump into ONE
     // min-aggregate by treating the jump as an extra edge set: the
     // label graph lbl(v) → v contributes lbl(lbl(v)) to v exactly like
@@ -296,7 +284,7 @@ object Dedup {
     // label, and every v owns a jump edge, so the aggregate is total
     // (no left-join back onto labels needed). This halves the round's
     // exchange count versus the former relax-join → left-join →
-    // self-join chain (one checkpoint per round instead of two, and no
+    // self-join chain (one pin per round instead of two, and no
     // join-shaped convergence probe — see below). Under AQE each
     // exchange materializes as its own driver-scheduled job, and on an
     // iterative operator those per-round barriers ARE the cost (guide
@@ -307,9 +295,9 @@ object Dedup {
     // labels only ever decrease, so Σ lbl (exact, DECIMAL(38,0) — no
     // overflow below 10^19 rows) is strictly decreasing until fixpoint;
     // "sum unchanged" ⟺ "no label changed". The sum is observed during
-    // the round's own checkpoint materialization ([[IterProbe]]), so a
-    // round is ONE driver-scheduled job chain with no trailing probe.
-    var prevSum = IterProbe.asDecimal(seedSum)
+    // the round's own pin ([[Pin.observed]]), so a round is ONE
+    // driver-scheduled job chain with no trailing probe.
+    var prevSum = Pin.asDecimal(seedSum)
     var changed = true
     var iter = 0
     while (changed && iter < maxIters) {
@@ -321,10 +309,10 @@ object Dedup {
         .join(labels.select(col("node").as("jsrc"), col("lbl"))
           .hint("shuffle_hash"), Seq("jsrc"))
         .select(col("node"), col("lbl"))
-      val (next, sRaw) = IterProbe.checkpointFreshWith(
+      val (next, sRaw) = Pin.observed(
         relax.unionAll(jump).groupBy("node").agg(min("lbl").as("lbl")),
-        lblSumMetric)
-      val s = IterProbe.asDecimal(sRaw)
+        lblSumMetric, fresh = true)
+      val s = Pin.asDecimal(sRaw)
       changed = s.compareTo(prevSum) != 0
       prevSum = s
       labels = next
@@ -360,16 +348,15 @@ object Dedup {
     // Tokenized once, pinned: this relation feeds the inverted index,
     // the document-frequency aggregate, BOTH payload sides of the
     // verify join, and the empty-doc tier — six plan plants without the
-    // checkpoint (Spark does not dedupe common subtrees), i.e. six
+    // pin (Spark does not dedupe common subtrees), i.e. six
     // split/hash/sort tokenization passes over the corpus per run.
     // O(corpus tokens) storage for a 6× scan/compute saving is the same
     // trade the candidate relation in [[Density.dbscan2D]] makes.
-    val t = df.select(col(idCol).as("doc_id"), col(strataCol).as("lang"),
+    val t = Pin(df.select(col(idCol).as("doc_id"), col(strataCol).as("lang"),
         expr(s"array_sort(array_distinct(transform(filter(split($textCol, ' '), " +
           "x -> length(x) > 0), x -> xxhash64(x))))").as("w"))
       .withColumn("nw", size(col("w")).cast("bigint"))
-      .withColumn("bucket", floor(col("nw") / 8).cast("bigint"))
-      .localCheckpoint()
+      .withColumn("bucket", floor(col("nw") / 8).cast("bigint")))
     val tokens = t.select(col("doc_id"), col("lang"), col("bucket"),
       col("nw"), explode(col("w")).as("word"))
     val freq = tokens.groupBy("word").agg(count(lit(1)).as("df"))
@@ -377,12 +364,11 @@ object Dedup {
       .partitionBy("doc_id").orderBy(col("df"), col("word"))
     // Pinned: the candidate SELF-join below would otherwise plant (and
     // run) the df-join + per-doc rarity window twice, once per side.
-    val prefixes = tokens.join(freq, "word")
+    val prefixes = Pin(tokens.join(freq, "word")
       .withColumn("rn", row_number().over(byRarity))
       .filter(col("rn") <=
         col("nw") - ceil(col("nw") * threshold / lit(10.0)) + 1)
-      .select("doc_id", "lang", "bucket", "word")
-      .localCheckpoint()
+      .select("doc_id", "lang", "bucket", "word"))
     val cand = prefixes.as("a").join(prefixes.as("b"),
         col("a.lang") === col("b.lang") && col("a.bucket") === col("b.bucket") &&
           col("a.word") === col("b.word") && col("a.doc_id") < col("b.doc_id"))
@@ -441,14 +427,13 @@ object Dedup {
     // Pinned like [[jaccardPairs]]' t: each side feeds the digest tier,
     // the df aggregate, the inverted index, a payload join side, and
     // the empty-doc tier — five tokenization plants per side without
-    // the checkpoint.
-    def prep(df: DataFrame) = df.select(col(idCol).as("doc_id"),
+    // the pin.
+    def prep(df: DataFrame) = Pin(df.select(col(idCol).as("doc_id"),
         col(strataCol).as("lang"), md5(col(textCol)).as("digest"),
         expr(s"array_sort(array_distinct(transform(filter(split($textCol, ' '), " +
           "x -> length(x) > 0), x -> xxhash64(x))))").as("w"))
       .withColumn("nw", size(col("w")).cast("bigint"))
-      .withColumn("bucket", floor(col("nw") / 8).cast("bigint"))
-      .localCheckpoint()
+      .withColumn("bucket", floor(col("nw") / 8).cast("bigint")))
     val inc = prep(incoming)
     val ref = prep(reference)
     val exact = inc.select("doc_id", "digest")

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Density clustering (DBSCAN) over 2-D integer coordinates — the
   * outlier-robust clustering a curation pipeline reaches for when
@@ -40,11 +41,11 @@ object Density {
     require(eps > 0, "dbscan2D: eps must be positive")
     require(minPts >= 1, "dbscan2D: minPts must be >= 1")
     val off = 1000000000L
-    val pts = df.select(col(idCol).cast("bigint").as("id"),
+    // pinned: consumed by both sides of the cell join
+    val pts = Pin(df.select(col(idCol).cast("bigint").as("id"),
       col(xCol).cast("bigint").as("x"), col(yCol).cast("bigint").as("y"))
       .withColumn("cx", expr(s"(x + $off) div $eps"))
-      .withColumn("cy", expr(s"(y + $off) div $eps"))
-      .localCheckpoint() // consumed by both sides of the cell join
+      .withColumn("cy", expr(s"(y + $off) div $eps")))
     // candidate pairs: probe side exploded into its 3×3 cell
     // neighborhood, equi-joined on the build side's home cell, then
     // the exact integer distance verify
@@ -55,28 +56,27 @@ object Density {
       .select(col("id").as("a"), col("x").as("ax"), col("y").as("ay"),
         (col("cx") + col("dxy.dx")).as("cx"),
         (col("cy") + col("dxy.dy")).as("cy"))
-    val pairs = probes.join(
+    // Feeds core counts, core edges AND borders — but pairs is the
+    // O(n · density) relation, the one thing here that GROWS
+    // superlinearly as a corpus densifies in a fixed ε-space. A
+    // MEMORY_AND_DISK pin held it in the unified memory pool and at
+    // 100× original density (the sf10 scale notch) the pinned blocks
+    // starved execution memory to zero (SparkOutOfMemoryError in
+    // HashAggregate init). DISK_ONLY keeps the multi-consumer reuse
+    // without competing with join/aggregate execution memory — the
+    // only storage level that is safe for a relation whose size is a
+    // function of data density rather than data size.
+    val pairs = Pin(probes.join(
         pts.select(col("id").as("b"), col("x").as("bx"),
           col("y").as("by"), col("cx"), col("cy")),
         Seq("cx", "cy"))
       .filter(expr(s"(ax-bx)*(ax-bx) + (ay-by)*(ay-by) <= ${eps * eps}L"))
-      .select("a", "b")
-      // Feeds core counts, core edges AND borders — but pairs is the
-      // O(n · density) relation, the one thing here that GROWS
-      // superlinearly as a corpus densifies in a fixed ε-space. A
-      // localCheckpoint pinned it in the unified memory pool and at
-      // 100× original density (the sf10 scale notch) the pinned blocks
-      // starved execution memory to zero (SparkOutOfMemoryError in
-      // HashAggregate init). DISK_ONLY keeps the multi-consumer reuse
-      // without competing with join/aggregate execution memory — the
-      // only storage level that is safe for a relation whose size is a
-      // function of data density rather than data size.
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val cores = pairs.groupBy(col("a").as("id"))
+      .select("a", "b"), StorageLevel.DISK_ONLY)
+    // small; consumed three times below
+    val cores = Pin(pairs.groupBy(col("a").as("id"))
       .agg(count(lit(1)).as("n_nbr"))
       .filter(col("n_nbr") >= minPts)
-      .select("id")
-      .localCheckpoint() // small; consumed three times below
+      .select("id"))
     // core-core edges -> connected components (min-label canonical ids)
     val coreEdges = pairs
       .join(cores.select(col("id").as("a")), "a")

@@ -30,53 +30,16 @@ object GraphOps {
     * (partial aggs absorb high-in-degree hubs map-side), one left join
     * back to the node set. Edges dominate and are never replicated;
     * ranks are 16 bytes/node. Fixed iteration count keeps the plan a
-    * straight pipeline — no convergence-test collect per step. */
+    * straight pipeline — no convergence-test collect per step.
+    *
+    * This is [[personalizedPageRank]] with every node a seed: with
+    * n_seeds = n both the seed mass and the restart term are the same
+    * integer expressions. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 3, dampingPm: Int = 850,
-      scale: Long = 1000000000000L): DataFrame = {
-    require(iterations >= 1, s"pageRank: need iterations >= 1")
-    require(dampingPm >= 0 && dampingPm <= 1000,
-      s"pageRank: dampingPm must be in [0, 1000], got $dampingPm")
-    // Pin the derived edge relation ONCE: it is planted four times
-    // below (twice building eo, twice deriving nodes), and its upstream
-    // is typically a corpus-wide derivation (crossJoin + explode +
-    // distinct) that Spark would otherwise re-execute per plant —
-    // common subtrees are not deduped (guide §5; the dedup-family
-    // playbook).
-    val e = edges.select(col(srcCol).cast("bigint").as("src"),
-      col(dstCol).cast("bigint").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint()
-    // nodes is re-planted by every superstep's left join back to the
-    // node set (`base`, iterations + 1 plants) — pin it too, or each
-    // superstep re-runs the union + distinct over the edge list.
-    val nodes = e.select(col("src").as("v"))
-      .union(e.select(col("dst").as("v"))).distinct()
-      .localCheckpoint()
-    val n = nodes.agg(count(lit(1)).as("n"))
-    // out-degree joined onto the edge list ONCE: every superstep then
-    // reuses the (src, dst, outdeg) relation instead of re-joining
-    val eo = e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-      .localCheckpoint() // consumed once per superstep: truncate the
-                         // derivation instead of re-scanning per iter
-    val base = nodes.crossJoin(broadcast(n))
-    var pr = base.select(col("v"),
-      expr(s"CAST($scale AS BIGINT) div n").as("pr"))
-    for (_ <- 1 to iterations) {
-      // shuffle-hash both superstep joins: ranks and contributions are
-      // node-keyed on both sides, so a sort adds nothing (SMJ would
-      // sort the edge relation every iteration)
-      val contrib = eo.join(pr.hint("shuffle_hash"), eo("src") === pr("v"))
-        .select(col("dst").as("v"),
-          expr(s"(pr * $dampingPm div 1000) div outdeg").as("m"))
-        .groupBy("v").agg(sum("m").as("m"))
-      pr = base.join(contrib.hint("shuffle_hash"), Seq("v"), "left")
-        .select(col("v"), (expr(
-          s"(CAST($scale AS BIGINT) * ${1000 - dampingPm} div 1000) div n") +
-          coalesce(col("m"), lit(0L))).as("pr"))
-    }
-    pr
-  }
+      scale: Long = 1000000000000L): DataFrame =
+    personalizedPageRank(edges, srcCol, dstCol, lit(true), iterations,
+      dampingPm, scale).select("v", "pr")
 
   /** Personalized PageRank: [[pageRank]]'s integer-mass Pregel loop
     * with the teleport mass restricted to a SEED set — the retrieval /
@@ -86,10 +49,10 @@ object GraphOps {
     * put (1−d) of the mass uniformly on seeds only, so rank
     * concentrates in the seeds' neighborhoods. Same all-integer
     * arithmetic as pageRank (scale div counts), so an external engine
-    * unrolling the same iterations matches bit-for-bit. Plan shape is
-    * pageRank's: the (src, dst, outdeg) relation is built once and
-    * localCheckpoint'd; each superstep is two shuffle-hash joins keyed
-    * by node — nothing grows with iteration count. */
+    * unrolling the same iterations matches bit-for-bit. Plan shape: the
+    * (src, dst, outdeg) relation is built once and pinned ([[Pin]]);
+    * each superstep is two shuffle-hash joins keyed by node — nothing
+    * grows with iteration count. */
   def personalizedPageRank(edges: DataFrame, srcCol: String,
       dstCol: String, seedPred: org.apache.spark.sql.Column,
       iterations: Int = 3, dampingPm: Int = 850,
@@ -97,25 +60,33 @@ object GraphOps {
     require(iterations >= 1, s"personalizedPageRank: need iterations >= 1")
     require(dampingPm >= 0 && dampingPm <= 1000,
       s"personalizedPageRank: dampingPm must be in [0, 1000]")
-    // Same pinning as [[pageRank]]: e is planted four times, nodes
-    // once per superstep — materialize each once.
-    val e = edges.select(col(srcCol).cast("bigint").as("src"),
-      col(dstCol).cast("bigint").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint()
-    val nodes = e.select(col("src").as("v"))
+    // Pin the derived edge relation ONCE: it is planted four times
+    // below (twice building eo, twice deriving nodes), and its upstream
+    // is typically a corpus-wide derivation (crossJoin + explode +
+    // distinct) that Spark would otherwise re-execute per plant —
+    // common subtrees are not deduped (guide §5; the dedup-family
+    // playbook). nodes is re-planted by every superstep's left join
+    // back to the node set (`base`, iterations + 1 plants) — pin it
+    // too, or each superstep re-runs the union + distinct.
+    val e = Pin(directed(edges, srcCol, dstCol))
+    val nodes = Pin(e.select(col("src").as("v"))
       .union(e.select(col("dst").as("v"))).distinct()
-      .withColumn("is_seed", seedPred.cast("boolean"))
-      .localCheckpoint()
+      .withColumn("is_seed", seedPred.cast("boolean")))
     val ns = nodes.agg(
       sum(when(col("is_seed"), 1L).otherwise(0L)).as("n_seeds"))
-    val eo = e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-      .localCheckpoint()
+    // out-degree joined onto the edge list ONCE and pinned: every
+    // superstep reuses the (src, dst, outdeg) relation instead of
+    // re-joining or re-scanning the derivation
+    val eo = Pin(
+      e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src"))
     val base = nodes.crossJoin(broadcast(ns))
     var pr = base.select(col("v"), col("is_seed"), col("n_seeds"),
       when(col("is_seed"), expr(s"CAST($scale AS BIGINT) div n_seeds"))
         .otherwise(0L).as("pr"))
     for (_ <- 1 to iterations) {
+      // shuffle-hash both superstep joins: ranks and contributions are
+      // node-keyed on both sides, so a sort adds nothing (SMJ would
+      // sort the edge relation every iteration)
       val contrib = eo.join(pr.hint("shuffle_hash"), eo("src") === pr("v"))
         .select(col("dst").as("v"),
           expr(s"(pr * $dampingPm div 1000) div outdeg").as("m"))
@@ -146,14 +117,11 @@ object GraphOps {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 2): DataFrame = {
     require(iterations >= 1, "labelPropagation: need iterations >= 1")
-    val e = edges.select(col(srcCol).cast("bigint").as("src"),
-      col(dstCol).cast("bigint").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-    val sym = e.select(explode(array(
+    val e = directed(edges, srcCol, dstCol)
+    val sym = Pin(e.select(explode(array( // reused every round
         struct(col("src").as("a"), col("dst").as("b")),
         struct(col("dst").as("a"), col("src").as("b")))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b")).distinct()
-      .localCheckpoint() // reused every round
+      .select(col("p.a").as("a"), col("p.b").as("b")).distinct())
     val nodes = sym.select(col("a").as("v")).distinct()
     var labels = nodes.select(col("v"), col("v").as("lbl"))
     for (_ <- 1 to iterations) {
@@ -227,40 +195,62 @@ object GraphOps {
     * derivation Spark would re-run per plant (guide §5). */
   private def undirect(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame =
-    edges.select(
+    Pin(edges.select(
         least(col(srcCol), col(dstCol)).cast("bigint").as("a"),
         greatest(col(srcCol), col(dstCol)).cast("bigint").as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint()
+      .filter(col("a") =!= col("b")).distinct())
+
+  /** Directed edge list: endpoints cast to bigint, self-loops and
+    * duplicate edges dropped. Not pinned: callers pin what they re-plant. */
+  private def directed(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast("bigint").as("src"),
+        col(dstCol).cast("bigint").as("dst"))
+      .filter(col("src") =!= col("dst")).distinct()
 
   /** [[triangleCounts]] over an already-canonical pinned (a, b) edge
     * list — shared with [[clusteringCoefficient]] so the caller's
     * degree aggregate and the triangle pass read ONE materialization
     * of the edge derivation instead of re-running it. */
-  private def triangleCountsOnUe(ue: DataFrame): DataFrame = {
-    val deg = ue.select(explode(array(col("a"), col("b"))).as("v"))
+  private def triangleCountsOnUe(ue: DataFrame): DataFrame =
+    triangles(Pin(orient(ue)), ue) // both wedge sides probe the pin
+      .select(explode(array(col("u"), col("v"), col("w"))).as("v"))
+      .groupBy("v").agg(count(lit(1)).as("n_triangles"))
+
+  /** Node degrees (v, deg) of a canonical (a, b) edge list. */
+  private def degrees(ue: DataFrame): DataFrame =
+    ue.select(explode(array(col("a"), col("b"))).as("v"))
       .groupBy("v").agg(count(lit(1)).as("deg"))
-    // (deg, id) total order — ties broken by node id, so orientation
-    // is deterministic and the oriented graph is acyclic
-    val withDeg = ue
-      .join(deg.withColumnRenamed("v", "a").withColumnRenamed("deg", "da"), "a")
+
+  /** `ue` with both endpoints' degrees: (b, a, da, db). */
+  private def withDegrees(ue: DataFrame): DataFrame = {
+    val deg = degrees(ue)
+    ue.join(deg.withColumnRenamed("v", "a").withColumnRenamed("deg", "da"), "a")
       .join(deg.withColumnRenamed("v", "b").withColumnRenamed("deg", "db"), "b")
-    val oriented = withDeg.select(
+  }
+
+  /** A canonical (a < b) edge list's edges as (u, t), pointed from the
+    * (deg, id)-smaller endpoint: ties broken by node id, so orientation
+    * is deterministic and the oriented graph is acyclic. */
+  private def orient(ue: DataFrame): DataFrame =
+    withDegrees(ue).select(
       when(col("da") < col("db") ||
           (col("da") === col("db") && col("a") < col("b")),
         struct(col("a").as("u"), col("b").as("t")))
         .otherwise(struct(col("b").as("u"), col("a").as("t"))).as("e"))
       .select(col("e.u").as("u"), col("e.t").as("t"))
-      .localCheckpoint() // both wedge sides probe this relation
+
+  /** Every triangle of the canonical edge list `ue` exactly once, as
+    * (u, v, w): u its minimum-(deg, id) apex, v < w, enumerated from
+    * `oriented` = [[orient]](ue), pinned or not. */
+  private def triangles(oriented: DataFrame, ue: DataFrame): DataFrame = {
     // wedges at the apex: two out-edges of u, endpoints in node order
     val e1 = oriented.select(col("u"), col("t").as("v"))
     val e2 = oriented.select(col("u"), col("t").as("w"))
     val wedges = e1.join(e2, Seq("u")).filter(col("v") < col("w"))
     // closure: (v, w) is an undirected edge (ue is in node order, v<w)
-    val tris = wedges.join(ue,
+    wedges.join(ue,
       wedges("v") === ue("a") && wedges("w") === ue("b"), "left_semi")
-    tris.select(explode(array(col("u"), col("v"), col("w"))).as("v"))
-      .groupBy("v").agg(count(lit(1)).as("n_triangles"))
   }
 
   /** Per-node local clustering coefficient — "how much of my
@@ -276,9 +266,7 @@ object GraphOps {
     // and the triangle pass — the former triangleCounts(edges) call
     // re-derived (and re-ran) the whole upstream edge pipeline.
     val ue = undirect(edges, srcCol, dstCol)
-    val deg = ue.select(explode(array(col("a"), col("b"))).as("v"))
-      .groupBy("v").agg(count(lit(1)).as("deg"))
-    deg.join(triangleCountsOnUe(ue), Seq("v"), "left")
+    degrees(ue).join(triangleCountsOnUe(ue), Seq("v"), "left")
       .select(col("v"), col("deg"),
         coalesce(col("n_triangles"), lit(0L)).as("n_triangles"),
         when(col("deg") >= 2, expr(
@@ -297,12 +285,8 @@ object GraphOps {
     * division. Returns one row: (n_pairs, r_ppm). */
   def degreeAssortativity(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
-    val ue = undirect(edges, srcCol, dstCol) // pinned: 2 plants below
-    val deg = ue.select(explode(array(col("a"), col("b"))).as("v"))
-      .groupBy("v").agg(count(lit(1)).as("deg"))
-    val withDeg = ue
-      .join(deg.withColumnRenamed("v", "a").withColumnRenamed("deg", "da"), "a")
-      .join(deg.withColumnRenamed("v", "b").withColumnRenamed("deg", "db"), "b")
+    // undirect pins: withDegrees plants the edge list twice
+    val withDeg = withDegrees(undirect(edges, srcCol, dstCol))
     val pairs = withDeg.select(col("da").as("x"), col("db").as("y"))
       .unionByName(withDeg.select(col("db").as("x"), col("da").as("y")))
     Stats.linearFit(pairs, Seq.empty, "x", "y")
@@ -319,40 +303,37 @@ object GraphOps {
     * (not all visited nodes) against the edge list — the superstep
     * exchange carries |frontier| + |new nodes| longs, never node
     * payloads, and the edge relation is computed/partitioned once
-    * (localCheckpoint) and re-probed per round. Rounds are data-bounded:
+    * (pinned) and re-probed per round. Rounds are data-bounded:
     * an empty frontier short-circuits the remaining hops — on a
     * small-diameter web graph the loop ends at the diameter, not at
-    * `maxHops`; the isEmpty probe is a limit-1 job on a checkpointed
-    * frontier, not a full materialization. BFS level-synchronous
+    * `maxHops`; the frontier count rides the hop's own pin job, not a
+    * job of its own. BFS level-synchronous
     * distances are deterministic (no tie-break needed: a node's dist is
     * the first round that reaches it). */
   def shortestPaths(edges: DataFrame, srcCol: String, dstCol: String,
       sources: DataFrame, sourceCol: String, maxHops: Int = 8): DataFrame = {
     require(maxHops >= 1 && maxHops <= 64,
       s"shortestPaths: maxHops must be in [1, 64], got $maxHops")
-    val e = edges.select(col(srcCol).cast("bigint").as("src"),
-        col(dstCol).cast("bigint").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint()
+    val e = Pin(directed(edges, srcCol, dstCol))
     // A hop used to cost THREE driver jobs: the frontier.isEmpty probe,
     // the frontier checkpoint, and a re-materialization of the ENTIRE
     // visited set (O(V) rows copied per hop — O(V·hops) total). Now the
-    // frontier count rides the hop's own checkpoint job ([[IterProbe]])
+    // frontier count rides the hop's own pin job ([[Pin.observed]])
     // and visited stays a union of already-pinned per-hop frontiers (a
     // union of LogicalRDDs adds stats linearly — nothing squares), so a
     // hop is ONE job and only frontier-sized data ever materializes.
-    val (visited0, n0) = IterProbe.checkpointWith(
+    val (visited0, n0) = Pin.observed(
       sources.select(col(sourceCol).cast("bigint").as("v"))
         .distinct().withColumn("dist", lit(0L)),
       count(lit(1)))
     var visited = visited0
     var frontier = visited0.select("v")
-    var frontierN = IterProbe.asLong(n0)
+    var frontierN = Pin.asLong(n0)
     var hop = 1
     while (hop <= maxHops && frontierN > 0) {
       // shuffle-hash: both sides are node-keyed; SMJ would re-sort the
-      // checkpointed edge relation every round for nothing
-      val (next, nRaw) = IterProbe.checkpointWith(
+      // pinned edge relation every round for nothing
+      val (next, nRaw) = Pin.observed(
         e.join(frontier.hint("shuffle_hash"),
             e("src") === frontier("v"))
           .select(col("dst").as("v")).distinct()
@@ -361,7 +342,7 @@ object GraphOps {
         count(lit(1)))
       visited = visited.union(next)
       frontier = next.select("v")
-      frontierN = IterProbe.asLong(nRaw)
+      frontierN = Pin.asLong(nRaw)
       hop += 1
     }
     visited
@@ -390,7 +371,7 @@ object GraphOps {
     * symmetrized edge list against the survivor set (node ids only —
     * 8 bytes a row, never payloads) + one hash-aggregated degree count
     * with map-side partials. The edge relation is symmetrized and
-    * partitioned ONCE (localCheckpoint) and re-probed each round;
+    * partitioned ONCE (pinned) and re-probed each round;
     * survivors shrink monotonically, so per-round exchange volume only
     * goes down. Nothing in the loop retains history or grows with
     * round count — at 100 TB the cost is rounds × (edges ⋈ survivors),
@@ -401,15 +382,12 @@ object GraphOps {
     require(k >= 1, s"kCore: need k >= 1, got $k")
     require(rounds >= 1 && rounds <= 64,
       s"kCore: rounds must be in [1, 64], got $rounds")
-    val e = edges.select(col(srcCol).cast("bigint").as("src"),
-        col(dstCol).cast("bigint").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-    val sym = e.select(explode(array(
+    val e = directed(edges, srcCol, dstCol)
+    val sym = Pin(e.select(explode(array( // re-probed every peel round
         struct(col("src").as("a"), col("dst").as("b")),
         struct(col("dst").as("a"), col("src").as("b")))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b")).distinct()
-      .localCheckpoint() // re-probed every peel round
-    var (alive, nAlive0) = IterProbe.checkpointWith(
+      .select(col("p.a").as("a"), col("p.b").as("b")).distinct())
+    var (alive, nAlive0) = Pin.observed(
       sym.select(col("a").as("v")).distinct(), count(lit(1)))
     def inducedDegrees(surv: DataFrame): DataFrame = sym
       // both endpoints must survive for the edge to count toward the
@@ -420,18 +398,18 @@ object GraphOps {
     // Early exit on a no-op round: a round that removes no node leaves
     // induced degrees (hence every later round) unchanged, so stopping
     // emits the identical fixpoint while skipping the remaining passes
-    // — the count probe rides the round's own checkpoint job (observe,
-    // [[IterProbe]]): no per-round probe job at all.
-    var nAlive = IterProbe.asLong(nAlive0)
+    // — the count probe rides the round's own pin job
+    // ([[Pin.observed]]): no per-round probe job at all.
+    var nAlive = Pin.asLong(nAlive0)
     var done = false
     for (_ <- 1 to rounds if !done) {
-      val (next, nRaw) = IterProbe.checkpointWith(
+      val (next, nRaw) = Pin.observed(
         inducedDegrees(alive).filter(col("deg") >= k)
           .select("v"), // ids only: truncate the round's lineage,
                         // carry 8 bytes a node
         count(lit(1)))
       alive = next
-      val n = IterProbe.asLong(nRaw)
+      val n = Pin.asLong(nRaw)
       done = n == nAlive
       nAlive = n
     }
@@ -443,10 +421,10 @@ object GraphOps {
     // (e.g. a long chain peels one node per round) and the result is a
     // SUPERSET of the k-core. Callers that need the guarantee, not the
     // approximation, opt into the loud check (one bounded aggregate;
-    // checkpointed so the check and the returned frame share one
+    // pinned so the check and the returned frame share one
     // computation).
     val fin =
-      if (requireConverged) inducedDegrees(alive).localCheckpoint()
+      if (requireConverged) Pin(inducedDegrees(alive))
       else inducedDegrees(alive)
     if (requireConverged) {
       val bad = fin.filter(col("deg") < k).limit(1).count()
@@ -477,7 +455,7 @@ object GraphOps {
     * scale; at 100 TB you drop k to 256 and take the ±1/√(k−2) rsd, and
     * NOTHING about the plan changes. Per-round state is |V| sketches of
     * ≤ k+1 longs (bounded by construction — the reason this beats
-    * materializing reachable sets), localCheckpoint'd so round r+1
+    * materializing reachable sets), pinned so round r+1
     * starts from bytes, not lineage.
     *
     * Self-loops are added to the propagation edge list once, so a
@@ -490,34 +468,30 @@ object GraphOps {
       s"neighborhoodFunction: radius must be in [1, 16], got $radius")
     require(k >= 16, s"neighborhoodFunction: need k >= 16, got $k")
     graft.functions.GraftFunctions.register(edges.sparkSession)
-    val e = edges.select(col(srcCol).cast("bigint").as("src"),
-        col(dstCol).cast("bigint").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
+    val e = directed(edges, srcCol, dstCol)
     val nodes = e.select(col("src").as("v"))
       .union(e.select(col("dst").as("v"))).distinct()
     // propagation relation: both directions + a self-loop per node, so
     // each round is ONE join + ONE merge agg (no separate union-with-
-    // own-sketch pass); built and partitioned once
-    val prop = e.select(explode(array(
+    // own-sketch pass); built and partitioned once, re-probed every round
+    val prop = Pin(e.select(explode(array(
         struct(col("src").as("a"), col("dst").as("b")),
         struct(col("dst").as("a"), col("src").as("b")))).as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"))
       .union(nodes.select(col("v").as("a"), col("v").as("b")))
-      .distinct()
-      .localCheckpoint() // re-probed every round
+      .distinct())
     // B(v, 0) = {v}: one k-sized sketch per node seeded with its own id
-    var sk = nodes.groupBy("v")
-      .agg(expr(s"kmv_sketch(v, $k)").as("sk"))
-      .localCheckpoint()
+    var sk = Pin(nodes.groupBy("v")
+      .agg(expr(s"kmv_sketch(v, $k)").as("sk")))
     var out: DataFrame = null
     for (r <- 1 to radius) {
-      sk = prop
+      // bytes, not lineage: round r+1 and the estimate projection both
+      // read this once
+      sk = Pin(prop
         .join(sk.select(col("v").as("b"), col("sk")).hint("shuffle_hash"),
           "b")
         .groupBy(col("a").as("v"))
-        .agg(expr("kmv_merge(sk)").as("sk"))
-        .localCheckpoint() // bytes, not lineage: round r+1 and the
-                           // estimate projection both read this once
+        .agg(expr("kmv_merge(sk)").as("sk")))
       val est = sk.select(col("v"), lit(r.toLong).as("r"),
         expr("kmv_value(sk)").as("ball"))
       out = if (out == null) est else out.unionByName(est)
@@ -555,26 +529,10 @@ object GraphOps {
     * out-degree bounds the wedge exchange); each triangle then credits
     * its THREE edges — emitted as ordered (a, b) pairs — through one
     * hash aggregate. Edges in no triangle don't appear (support 0). */
-  private def edgeSupport(ue: DataFrame): DataFrame = {
-    val deg = ue.select(explode(array(col("a"), col("b"))).as("v"))
-      .groupBy("v").agg(count(lit(1)).as("deg"))
-    val withDeg = ue
-      .join(deg.withColumnRenamed("v", "a").withColumnRenamed("deg", "da"), "a")
-      .join(deg.withColumnRenamed("v", "b").withColumnRenamed("deg", "db"), "b")
-    val oriented = withDeg.select(
-      when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")),
-        struct(col("a").as("u"), col("b").as("t")))
-        .otherwise(struct(col("b").as("u"), col("a").as("t"))).as("e"))
-      .select(col("e.u").as("u"), col("e.t").as("t"))
-    val e1 = oriented.select(col("u"), col("t").as("v"))
-    val e2 = oriented.select(col("u"), col("t").as("w"))
-    val wedges = e1.join(e2, Seq("u")).filter(col("v") < col("w"))
-    val tris = wedges.join(ue,
-      wedges("v") === ue("a") && wedges("w") === ue("b"), "left_semi")
+  private def edgeSupport(ue: DataFrame): DataFrame =
     // u is min in (deg, id) order, not id order — re-normalize the two
     // apex edges; the closing edge (v, w) is already id-ordered
-    tris.select(explode(array(
+    triangles(orient(ue), ue).select(explode(array(
         struct(least(col("u"), col("v")).as("a"),
           greatest(col("u"), col("v")).as("b")),
         struct(least(col("u"), col("w")).as("a"),
@@ -582,7 +540,6 @@ object GraphOps {
         struct(col("v").as("a"), col("w").as("b")))).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("support"))
-  }
 
   /** k-truss of the UNDIRECTED graph: the maximal subgraph in which
     * every EDGE sits in ≥ k−2 triangles — the edge-level strengthening
@@ -603,14 +560,14 @@ object GraphOps {
     * (wedge build + closure semi-join, Σ out-deg² bounded) + one edge-
     * keyed hash agg + one filter — edge keys (16 B) are all that moves,
     * survivors shrink monotonically, and the round's output is
-    * localCheckpoint'd ids so no lineage accumulates. */
+    * pinned ids so no lineage accumulates. */
   def kTruss(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, rounds: Int = 4, requireConverged: Boolean = false)
       : DataFrame = {
     require(k >= 3, s"kTruss: need k >= 3, got $k")
     require(rounds >= 1 && rounds <= 16,
       s"kTruss: rounds must be in [1, 16], got $rounds")
-    var (surv, nSurv0) = IterProbe.checkpointWith(
+    var (surv, nSurv0) = Pin.observed(
       edges.select(
           least(col(srcCol), col(dstCol)).cast("bigint").as("a"),
           greatest(col(srcCol), col(dstCol)).cast("bigint").as("b"))
@@ -618,16 +575,16 @@ object GraphOps {
       count(lit(1)))
     // Same early exit as [[kCore]]: a round that drops no edge is a
     // fixpoint — later rounds recompute identical supports. The count
-    // probe rides the round's checkpoint job (observe, [[IterProbe]]).
-    var nSurv = IterProbe.asLong(nSurv0)
+    // probe rides the round's pin job ([[Pin.observed]]).
+    var nSurv = Pin.asLong(nSurv0)
     var done = false
     for (_ <- 1 to rounds if !done) {
-      val (next, nRaw) = IterProbe.checkpointWith(
+      val (next, nRaw) = Pin.observed(
         edgeSupport(surv).filter(col("support") >= k - 2)
           .select("a", "b"),
         count(lit(1)))
       surv = next
-      val n = IterProbe.asLong(nRaw)
+      val n = Pin.asLong(nRaw)
       done = n == nSurv
       nSurv = n
     }
@@ -635,7 +592,7 @@ object GraphOps {
     // not converged in `rounds` rounds and the result is a superset of
     // the k-truss; the opt-in check turns that into a loud failure.
     val fin =
-      if (requireConverged) edgeSupport(surv).localCheckpoint()
+      if (requireConverged) Pin(edgeSupport(surv))
       else edgeSupport(surv)
     if (requireConverged) {
       val bad = fin.filter(col("support") < k - 2).limit(1).count()
@@ -669,7 +626,7 @@ object GraphOps {
     * Scale shape: labels-only exchanges throughout — each propagation
     * round is one (src-keyed) equi-join of the live edge list against
     * the 16-byte (v, lbl) relation + one min hash-aggregate with
-    * map-side partials, localCheckpoint'd so no lineage accumulates;
+    * map-side partials, pinned so no lineage accumulates;
     * rounds to fixpoint = O(log SCC diameter) — each round pairs the
     * one-hop edge relax with pointer jumping on the label graph (the
     * [[Dedup.dupClusters]] argument lifted to directed reachability),
@@ -685,12 +642,10 @@ object GraphOps {
       s"scc: maxPeels must be in [1, 32], got $maxPeels")
     require(maxRounds >= 1 && maxRounds <= 256,
       s"scc: maxRounds must be in [1, 256], got $maxRounds")
-    val e0 = edges.select(col(srcCol).cast("bigint").as("src"),
-        col(dstCol).cast("bigint").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
+    val e0 = Pin(directed(edges, srcCol, dstCol))
     var live = e0
-    var remaining = e0.select(col("src").as("v"))
-      .unionAll(e0.select(col("dst").as("v"))).distinct().localCheckpoint()
+    var remaining = Pin(e0.select(col("src").as("v"))
+      .unionAll(e0.select(col("dst").as("v"))).distinct())
     var out: DataFrame = null
     var peel = 0
     var done = false
@@ -700,24 +655,9 @@ object GraphOps {
     // reaches v, so min(L(v), L(L(v))) is a sound shortcut and label
     // paths halve per round (cc1's pointer-jumping argument, lifted to
     // directed reachability). The fixpoint is unique (min id reaching
-    // v), so the shortcut changes round count, never the answer. The
-    // per-round changed probe is a limit(1) count over labels only.
-    // Checkpoint AND sever stats lineage: Spark's localCheckpoint
-    // carries the source plan's size estimate forward (originStats),
-    // and a loop that SELF-JOINS its own checkpoint squares that
-    // estimate every round — by round ~10 the optimizer's sizeInBytes
-    // BigInts have millions of digits and InjectRuntimeFilter's
-    // canBroadcastBySize spends minutes in Toom-Cook multiplication
-    // (observed live: the first jump-enabled run pinned a driver core
-    // for 20 minutes in BigInteger.multiply). Rebuilding the frame
-    // from the checkpointed RDD resets the estimate to the default —
-    // constant-size stats arithmetic no matter how many rounds run.
-    // Cost: one Row encode/decode per 16-byte label row, noise next
-    // to the exchange the round already pays.
-    def freshCk(df: DataFrame): DataFrame = {
-      val ck = df.localCheckpoint()
-      ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-    }
+    // v), so the shortcut changes round count, never the answer.
+    // The edge and label pins the loop joins with themselves are fresh
+    // ([[Pin]]: their size estimate would square every round).
     // BOTH fixpoints advance in ONE tagged relation per round: the
     // forward labels (dir 0, along edges) and backward labels (dir 1,
     // against them) are independent, so tagging rows with a direction
@@ -731,7 +671,7 @@ object GraphOps {
     // (dir-tagged) edge set: with labels monotone non-increasing and
     // lbl(u) ≤ u, the jump edge contributes lbl(lbl(v)) ≤ lbl(v) to v,
     // so the aggregate is total and can only keep or lower a label —
-    // no left-joins back onto labels, one checkpoint per round instead
+    // no left-joins back onto labels, one pin per round instead
     // of the former join-chain ([[Dedup.dupClusters]] got the same
     // treatment; under AQE every exchange is its own driver-scheduled
     // job, and those per-round barriers are what an iterative operator
@@ -739,19 +679,19 @@ object GraphOps {
     // here before).
     // Convergence probe without a join: Σ lbl over the tagged relation
     // (exact DECIMAL(38,0)) is strictly decreasing until fixpoint.
-    // Per-round Σ lbl probe rides the round's own checkpoint job
-    // (observe — [[IterProbe]]): no trailing probe job per round.
+    // Per-round Σ lbl probe rides the round's own pin job
+    // ([[Pin.observed]]): no trailing probe job per round.
     val lblSumMetric = sum(col("lbl").cast("decimal(38,0)"))
     def minLabelsBoth(ed: DataFrame): DataFrame = {
-      val ed2 = freshCk(
+      val ed2 = Pin(
         ed.select(lit(0).as("dir"), col("src"), col("dst"))
           .unionAll(ed.select(lit(1).as("dir"), col("dst").as("src"),
-            col("src").as("dst"))))
-      var (labels, seedSum) = IterProbe.checkpointFreshWith(remaining
+            col("src").as("dst"))), fresh = true)
+      var (labels, seedSum) = Pin.observed(remaining
         .select(explode(array(lit(0), lit(1))).as("dir"), col("v"),
           col("v").as("lbl")),
-        lblSumMetric)
-      var prevSum = IterProbe.asDecimal(seedSum)
+        lblSumMetric, fresh = true)
+      var prevSum = Pin.asDecimal(seedSum)
       var changed = true
       var r = 0
       while (changed && r < maxRounds) {
@@ -764,11 +704,11 @@ object GraphOps {
           .join(labels.select(col("dir"), col("v").as("jsrc"), col("lbl"))
             .hint("shuffle_hash"), Seq("dir", "jsrc"))
           .select(col("dir"), col("v"), col("lbl"))
-        val (next, sRaw) = IterProbe.checkpointFreshWith(
+        val (next, sRaw) = Pin.observed(
           relax.unionAll(jump)
             .groupBy(col("dir"), col("v")).agg(min("lbl").as("lbl")),
-          lblSumMetric)
-        val s = IterProbe.asDecimal(sRaw)
+          lblSumMetric, fresh = true)
+        val s = Pin.asDecimal(sRaw)
         changed = s.compareTo(prevSum) != 0
         prevSum = s
         labels = next
@@ -782,16 +722,16 @@ object GraphOps {
       peel += 1
       val lbls = minLabelsBoth(live)
       // the unresolved count (f ≠ b) is observed during the join's own
-      // checkpoint job — the former remaining.isEmpty probe job is gone
-      val (both, nRemRaw) = IterProbe.checkpointWith(
+      // pin job — the former remaining.isEmpty probe job is gone
+      val (both, nRemRaw) = Pin.observed(
         lbls.filter(col("dir") === 0)
           .select(col("v"), col("lbl").as("f"))
           .join(lbls.filter(col("dir") === 1)
             .select(col("v"), col("lbl").as("b")), "v"),
         sum(when(col("f") =!= col("b"), 1L).otherwise(0L)))
       // assigned and remaining are filters over the PINNED `both` —
-      // replanting them costs a scan of checkpointed partitions, not a
-      // recompute, so neither needs its own checkpoint job: `out` stays
+      // replanting them costs a scan of pinned partitions, not a
+      // recompute, so neither needs its own pin job: `out` stays
       // a union of per-peel filters (peel count is small and bounded;
       // union stats add linearly) and `remaining`'s two plants in the
       // live join probe the same pinned relation. Two fewer driver
@@ -799,15 +739,15 @@ object GraphOps {
       val assigned = both.filter(col("f") === col("b"))
         .select(col("v"), col("f").as("scc"))
       out = if (out == null) assigned else out.unionAll(assigned)
-      if (IterProbe.asLong(nRemRaw) == 0L) done = true
+      if (Pin.asLong(nRemRaw) == 0L) done = true
       else {
         remaining = both.filter(col("f") =!= col("b")).select("v")
-        live = live
+        live = Pin(live
           .join(remaining.select(col("v").as("src")).hint("shuffle_hash"),
             "src")
           .join(remaining.select(col("v").as("dst")).hint("shuffle_hash"),
             "dst")
-          .select("src", "dst").localCheckpoint()
+          .select("src", "dst"))
       }
     }
     require(done,

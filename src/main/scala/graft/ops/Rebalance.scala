@@ -26,7 +26,7 @@ object Rebalance {
     * PER-PARTITION row_number plus each partition's start offset — a
     * |partitions|-row driver-side cumsum folded back in as a map
     * literal, so no exchange ever funnels the data. The input is
-    * localCheckpoint'ed so the offsets pass and the rank pass see
+    * pinned ([[Pin]]) so the offsets pass and the rank pass see
     * identical partition boundaries. Appends `outCol` (1-based BIGINT
     * rank by `order`); ties rank arbitrarily among equals, exactly as
     * row_number does. */
@@ -39,10 +39,10 @@ object Rebalance {
     // of whatever lineage feeds this; pinning first makes both passes
     // read the materialized rows instead of re-running an expensive
     // upstream pipeline
-    val src = df.localCheckpoint()
-    val ranged = src.repartitionByRange(nParts, order: _*)
-      .withColumn("__gr_pid", spark_partition_id().cast("bigint"))
-      .localCheckpoint() // pin boundaries across the two consumers
+    val src = Pin(df)
+    // pin boundaries across the two consumers
+    val ranged = Pin(src.repartitionByRange(nParts, order: _*)
+      .withColumn("__gr_pid", spark_partition_id().cast("bigint")))
     val cnts = ranged.groupBy("__gr_pid").agg(count(lit(1)).as("__c"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     val offExpr =

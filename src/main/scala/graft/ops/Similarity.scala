@@ -157,7 +157,7 @@ object Similarity {
     * set is deterministic. Output: (a_id, b_id), one row per mutual
     * pair.
     *
-    * Scale shape: the pair scores are computed ONCE (localCheckpoint:
+    * Scale shape: the pair scores are computed ONCE (pinned:
     * both argmax directions consume the same table) and reduced by two
     * max_by hash aggregates — no ranked window over the pair stream.
     * This entry grades the exact semantics; at corpus scale the pair
@@ -174,13 +174,12 @@ object Similarity {
     // mirrors), so the pair set stays deterministic and exact.
     val a = corpus.filter(sideA && queryPred)
     val b = corpus.filter(!sideA)
-    val pairs = withNorm(a, idCol, vecCol).as("a")
+    val pairs = Pin(withNorm(a, idCol, vecCol).as("a")
       .join(broadcast(withNorm(b, idCol, vecCol).as("b")))
       .withColumn("cs",
         expr("vec_dot(a.embedding, b.embedding)") / (col("a.nrm") * col("b.nrm")))
       .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
-        col("cs"))
-      .localCheckpoint()
+        col("cs")))
     val ab = pairs.groupBy("a_id")
       .agg(max_by(col("b_id"), struct(col("cs"), -col("b_id"))).as("b_id"))
     val ba = pairs.groupBy("b_id")
@@ -334,8 +333,8 @@ object Similarity {
 
   /** A built IVF index: driver-side coarse-quantizer centroids plus the
     * clustered corpus `(vec_id, cluster, v, nrm)`. Build once with
-    * [[ivfIndex]], search many times with [[ivfSearch]] — callers should
-    * `.persist()` or write out `assigned` for reuse; at corpus scale the
+    * [[ivfIndex]], search many times with [[ivfSearch]] — `assigned` is
+    * pinned; write it out to reuse it across sessions; at corpus scale the
     * natural layout is `assigned` partitioned (or bucketed) by cluster,
     * so a probe touches only its nprobe cells' files. */
   final case class IvfIndex(
@@ -382,12 +381,11 @@ object Similarity {
     // the normalize projection over the corpus (plan subtrees are not
     // deduped), and ivfSearch plants `assigned` twice more. O(corpus)
     // storage for ~5 fewer corpus passes — the jaccardPairs trade.
-    val vecs = corpus
+    val vecs = Pin(corpus
       .select(col(idCol).as("vec_id"),
         expr(s"transform($vecCol, x -> cast(x as double))").as("v"))
       .withColumn("nrm", expr("sqrt(vec_dot(v, v))"))
-      .select("vec_id", "v", "nrm")
-      .localCheckpoint()
+      .select("vec_id", "v", "nrm"))
 
     def assign(cents: Seq[(Int, Seq[Double])]) =
       vecs.withColumn("cluster", clusterAssignment(cents))
@@ -412,8 +410,8 @@ object Similarity {
     // Final assignment pinned: ivfSearch reads it for the query slice
     // AND the probed-cell scan — two plants of the k×dims argmin
     // projection without this.
-    IvfIndex(cents, assign(cents).select("vec_id", "cluster", "v", "nrm")
-      .localCheckpoint())
+    IvfIndex(cents,
+      Pin(assign(cents).select("vec_id", "cluster", "v", "nrm")))
   }
 
   /** Extends a built IVF index with NEW vectors WITHOUT retraining: the
@@ -736,14 +734,13 @@ object Similarity {
     // Pinned once, like ivfIndex's vecs: the seed collect, each
     // training iteration's encode + recenter, and the final encode all
     // replant this normalize projection otherwise.
-    val vecs = corpus
+    val vecs = Pin(corpus
       .select(col(idCol).as("vec_id"),
         expr(s"transform($vecCol, x -> cast(x as double))").as("v"))
       .withColumn("nrm", expr("sqrt(vec_dot(v, v))"))
       .withColumn("u", expr(
         "CASE WHEN nrm = 0.0D THEN v ELSE transform(v, x -> x / nrm) END"))
-      .select("vec_id", "u")
-      .localCheckpoint()
+      .select("vec_id", "u"))
     val seedRows = vecs.orderBy("vec_id").limit(k)
       .select(col("vec_id"), col("u")).as[(Long, Seq[Double])].collect()
     require(seedRows.length == k, s"pqIndex: corpus has fewer than k=$k vectors")
@@ -780,7 +777,7 @@ object Similarity {
     // Encoded corpus pinned: pqSearch plants it three times (query
     // slice, ADC scan side, rerank payload side).
     PqIndex(m, k, cb.toIndexedSeq,
-      encode(cb).select("vec_id", "u", "codes").localCheckpoint())
+      Pin(encode(cb).select("vec_id", "u", "codes")))
   }
 
   /** PQ (ADC) top-k search: per query, a lookup table of
@@ -865,9 +862,9 @@ object Similarity {
     // probed-cell ADC scan, rerank payload) — without this each plant
     // re-runs the cluster⋈codes join.
     IvfPqIndex(coarse.centroids, pq.m, pq.k, pq.codebook,
-      coarse.assigned.select("vec_id", "cluster")
+      Pin(coarse.assigned.select("vec_id", "cluster")
         .join(pq.encoded, Seq("vec_id"))
-        .select("vec_id", "cluster", "u", "codes").localCheckpoint())
+        .select("vec_id", "cluster", "u", "codes")))
   }
 
   /** Persists an IVFADC index in the at-scale layout: `assigned`
@@ -1072,7 +1069,7 @@ object Similarity {
     * tie-broken (dist desc, id asc) — bit-identical on any engine
     * replaying the same greedy.
     *
-    * Scale shape: the vector table is coded once (localCheckpoint) and
+    * Scale shape: the vector table is coded once (pinned) and
     * re-scanned k times — each round is ONE scan-local distance update
     * against a single broadcast-as-literal center + ONE max_by
     * aggregate (map-side partials; a single row reaches the driver per
@@ -1088,10 +1085,10 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     val s = math.pow(10, scalePow).toLong
-    val vecs = corpus.select(col(idCol).cast("bigint").as("id"),
+    // re-scanned once per round
+    val vecs = Pin(corpus.select(col(idCol).cast("bigint").as("id"),
         expr(s"transform($vecCol, x -> " +
-          s"CAST(floor(CAST(x AS DOUBLE) * $s) AS BIGINT))").as("v"))
-      .localCheckpoint() // re-scanned once per round
+          s"CAST(floor(CAST(x AS DOUBLE) * $s) AS BIGINT))").as("v")))
     def distTo(center: Seq[Long]) = expr(
       s"vec_l2sq(v, array(${center.map(_ + "L").mkString(",")}))")
     // loud preconditions instead of corruption: an empty corpus would
@@ -1110,8 +1107,7 @@ object Similarity {
         s"got sizes in [${shape.get(2)}, ${shape.get(3)}]")
     val first = vecs.orderBy("id").head()
     var centers = List((0L, first.getLong(0), 0L))
-    var cur = vecs.withColumn("mind", distTo(first.getSeq[Long](1)))
-      .localCheckpoint()
+    var cur = Pin(vecs.withColumn("mind", distTo(first.getSeq[Long](1))))
     for (i <- 1 until k) {
       // farthest point, ties to the smaller id; one row to the driver
       val pick = cur.agg(max_by(struct(col("id"), col("v"), col("mind")),
@@ -1119,9 +1115,8 @@ object Similarity {
         .select(col("p.id"), col("p.v"), col("p.mind")).head()
       centers ::= (i.toLong, pick.getLong(0), pick.getLong(2))
       if (i < k - 1)
-        cur = cur.withColumn("mind",
-            least(col("mind"), distTo(pick.getSeq[Long](1))))
-          .localCheckpoint()
+        cur = Pin(cur.withColumn("mind",
+            least(col("mind"), distTo(pick.getSeq[Long](1)))))
     }
     centers.reverse.toDF("center_idx", "vec_id", "dist_sq")
   }

@@ -145,11 +145,11 @@ object Stats {
       StructField("__ymax", LongType, nullable = false),
       StructField("__prefbefore", LongType, nullable = false),
       StructField("__pid", IntegerType, nullable = false)))
-    // localCheckpoint: scanned is |distinct x| narrow rows and feeds
+    // Pinned: scanned is |distinct x| narrow rows and feeds
     // THREE consumers (the P-row fold, the frontier broadcast, and —
     // via lineage — the verify join); without it each action replays
     // the aggregate + range exchange + sort from the source.
-    val scanned = cands.mapPartitions { it =>
+    val scanned = Pin(cands.mapPartitions { it =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       var prefix = Long.MinValue
       it.map { r =>
@@ -158,7 +158,7 @@ object Stats {
         if (y > prefix) prefix = y
         Row(x, y, before, pid)
       }
-    }(Encoders.row(scanSchema)).localCheckpoint()
+    }(Encoders.row(scanSchema)))
     // P-row fold: cumulative max of the partitions strictly before each
     // pid (the range partitioner emits pids in x-desc order, so
     // "before" = larger x). Bounded by partition count, not data.
@@ -313,10 +313,10 @@ object Stats {
     // |keys| partitions (srk1: 600k rows in 3 partitions, twice).
     // Moments then weight by the count. Identical exact integers.
     val kc = keys.map(col)
-    val cnts = df
+    // feeds both rank tables + the final join
+    val cnts = Pin(df
       .groupBy((kc :+ col(xCol).as("__x") :+ col(yCol).as("__y")): _*)
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint() // feeds both rank tables + the final join
+      .agg(count(lit(1)).as("__c")))
     def rankOf(vc: String, out: String): DataFrame = {
       val w = Window.partitionBy(kc: _*).orderBy(col(vc))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -941,18 +941,16 @@ object Stats {
     // Hash once, pinned: orderBy's range-partitioner SAMPLING pass would
     // otherwise evaluate the md5 projection a second time over every row
     // (the sampler runs the child plan in full).
-    val hashed = df.select(idCols.map(col): _*)
+    val hashed = Pin(df.select(idCols.map(col): _*)
       .withColumn("__u", expr(
-        s"${TextOps.hex48FastSql(s"md5($idStr)")}"))
-      .localCheckpoint()
-    // Total-order sort, pinned: localCheckpoint materializes the range
+        s"${TextOps.hex48FastSql(s"md5($idStr)")}")))
+    // Total-order sort, pinned: the pin materializes the range
     // partitions so the two consumers below (count pass, rank pass) see
     // the SAME partitioning — and monotonically_increasing_id, evaluated
     // on the pinned partitions, encodes (pid, ordinal) of the global
     // sort order.
-    val ordered = hashed
-      .orderBy((col("__u") +: idCols.map(col)): _*)
-      .localCheckpoint()
+    val ordered = Pin(hashed
+      .orderBy((col("__u") +: idCols.map(col)): _*))
     val counts = ordered
       .groupBy(spark_partition_id().as("__pid")).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -980,10 +978,10 @@ object Stats {
     * DECIMAL(38,0); the √ is the one IEEE op, ppm-rounded. Completes
     * the nonparametric family (Spearman ρ, Mann-Whitney U, KS). */
   def kendallTau(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    val cells = df.groupBy(col(xCol).cast("bigint").as("__x"),
+    // reused by the pair join + three margins
+    val cells = Pin(df.groupBy(col(xCol).cast("bigint").as("__x"),
         col(yCol).cast("bigint").as("__y"))
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint() // reused by the pair join + three margins
+      .agg(count(lit(1)).as("__c")))
     val c1 = cells.select(col("__x").as("x1"), col("__y").as("y1"),
       dec(col("__c")).as("c1"))
     val c2 = cells.select(col("__x").as("x2"), col("__y").as("y2"),
@@ -1373,15 +1371,13 @@ object Stats {
     // the self-join probes materialized rows instead of re-running the
     // frequency broadcast join per side (guide §5, the dedup-family
     // playbook).
-    val items = df.select(col(basketCol).as("__basket"),
-      col(itemCol).as("__item")).distinct()
-      .localCheckpoint()
+    val items = Pin(df.select(col(basketCol).as("__basket"),
+      col(itemCol).as("__item")).distinct())
     val nBaskets = items.select("__basket").distinct()
       .agg(count(lit(1)).as("__n"))
     val freq = items.groupBy("__item")
       .agg(count(lit(1)).as("__c")).filter(col("__c") >= minSupport)
-    val pruned = items.join(broadcast(freq), "__item")
-      .localCheckpoint()
+    val pruned = Pin(items.join(broadcast(freq), "__item"))
     val pairs = pruned.as("a").join(pruned.as("b"),
         col("a.__basket") === col("b.__basket") &&
           col("a.__item") < col("b.__item"))

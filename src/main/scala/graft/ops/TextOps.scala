@@ -1026,7 +1026,7 @@ object TextOps {
     *
     * Fault-tolerance trade-off (applies equally to [[dsirSelect]] and
     * [[tfidfTopK]]): the shared per-(doc, token) aggregate is pinned
-    * with `localCheckpoint`, which truncates lineage onto EXECUTOR-LOCAL
+    * with [[Pin]], which truncates lineage onto EXECUTOR-LOCAL
     * storage — losing an executor after the checkpoint fails the job
     * (no recompute path, no replication). That is the right default
     * here because the alternative is strictly worse: without the pin,
@@ -1057,17 +1057,15 @@ object TextOps {
       .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
     // per-(doc, bigram) counts first: all downstream joins and the LM
     // tables themselves run on this reduced stream. Materialized ONCE
-    // (localCheckpoint): its three consumers' subtrees don't
+    // (pinned): its three consumers' subtrees don't
     // canonicalize equal (lambda exprIds defeat exchange reuse), so
     // without this the corpus-wide explode+aggregate would re-execute
     // per consumer — this is the "tokenize once, then train and score"
     // two-pass structure of a real LM filter
-    val db = bg.groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+    val db = Pin(bg.groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("n")))
     // the model table is vocab-bounded — materialize it too so the
     // big (w1, w2) shuffle runs once, not once per derived table
-    val c2 = db.groupBy("w1", "w2").agg(sum("n").cast("bigint").as("c2"))
-      .localCheckpoint()
+    val c2 = Pin(db.groupBy("w1", "w2").agg(sum("n").cast("bigint").as("c2")))
     // context counts AND the smoothing vocab roll up from the small
     // model table — no second pass over the corpus: V counts distinct
     // CONTEXTS, the event space the conditional actually normalizes over
@@ -1208,19 +1206,17 @@ object TextOps {
       "dsirSelect: need quota > 0 and maxVocab >= 0")
     val base = df.select(col(idCol).as("doc_id"), targetPred.as("is_t"),
       toks(textCol).as("__w"))
-    // per-(doc, token) counts materialized ONCE (localCheckpoint, as in
+    // per-(doc, token) counts materialized ONCE (pinned, as in
     // [[lmScore]] — see its scaladoc for the executor-local
     // fault-tolerance trade-off): the scored chain and the distribution
     // roll-up would otherwise each re-run the corpus-wide
     // explode+aggregate
-    val dt = base.select(col("doc_id"), col("is_t"), explode(col("__w")).as("w"))
-      .groupBy("doc_id", "is_t", "w").agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+    val dt = Pin(base.select(col("doc_id"), col("is_t"), explode(col("__w")).as("w"))
+      .groupBy("doc_id", "is_t", "w").agg(count(lit(1)).as("n")))
     // ONE roll-up to the vocab-bounded (side, token) table; both
     // distributions and the corpus totals derive from it — the corpus-
     // sized token stream is aggregated exactly once
-    val wc = dt.groupBy("is_t", "w").agg(sum("n").cast("bigint").as("c"))
-      .localCheckpoint()
+    val wc = Pin(dt.groupBy("is_t", "w").agg(sum("n").cast("bigint").as("c")))
     val ct0 = wc.filter(col("is_t")).select(col("w"), col("c").as("ct"))
     val cr0 = wc.filter(!col("is_t")).select(col("w"), col("c").as("cr"))
     val stats = wc.agg(
@@ -1279,16 +1275,15 @@ object TextOps {
     * arithmetic; the per-doc top-k is a window PARTITIONED by doc.
     *
     * Scale shape: the token stream pre-aggregates to (doc, term, tf)
-    * once (localCheckpoint — two consumers; see [[lmScore]] for the
+    * once (pinned — two consumers; see [[lmScore]] for the
     * executor-local fault-tolerance trade-off); df and N derive from that
     * aggregate; the df join shuffles on the term key (vocab-bounded
     * table, broadcastable when capped). */
   def tfidfTopK(df: DataFrame, idCol: String, textCol: String,
       k: Int = 5): DataFrame = {
     require(k > 0, "tfidfTopK: need k > 0")
-    val dt = df.select(col(idCol).as("doc_id"), explode(toks(textCol)).as("w"))
-      .groupBy("doc_id", "w").agg(count(lit(1)).cast("bigint").as("tf"))
-      .localCheckpoint()
+    val dt = Pin(df.select(col(idCol).as("doc_id"), explode(toks(textCol)).as("w"))
+      .groupBy("doc_id", "w").agg(count(lit(1)).cast("bigint").as("tf")))
     val dft = dt.groupBy("w").agg(count(lit(1)).cast("bigint").as("df"))
     val nDocs = dt.agg(countDistinct(col("doc_id")).cast("bigint").as("n"))
     dt.join(dft, Seq("w"))
@@ -1440,7 +1435,7 @@ object TextOps {
     * the scan — and each iteration is one partial+final aggregate over
     * that projection producing J+1 numbers; the driver's update is O(J)
     * on a model bounded by the vocabulary, broadcast back as literals
-    * in the next iteration's expressions. localCheckpoint here stands
+    * in the next iteration's expressions. The pin here stands
     * in for persist-to-cluster-storage on a real deployment.
     *
     * Weight update: w ← w − (lrNum · g) / (lrDen · n) in micro units,
@@ -1467,11 +1462,11 @@ object TextOps {
     require(iters >= 1 && lrNum > 0 && lrDen > 0,
       s"trainLogistic: need iters>=1 and a positive rate, " +
         s"got iters=$iters lr=$lrNum/$lrDen")
-    val feats = df.select(
+    val feats = Pin(df.select(
       label.cast("bigint").as("y") +:
       vocab.zipWithIndex.map { case (t, j) =>
         termFeature(textCol, t, countFeatures).as(s"x$j")
-      }: _*).localCheckpoint()
+      }: _*))
     val n = feats.count()
     require(n > 0, "trainLogistic: empty corpus")
     var wb = 0L
@@ -1786,15 +1781,14 @@ object TextOps {
     *   H_µ = −Σ c·lp_s div N,   KL_µ = Σ c·(lp_s − lp_c) div N.
     *
     * Scale shape: the corpus reduces once to the (group, token) count
-    * table (vocab-bounded, localCheckpoint'd for its four consumers);
+    * table (vocab-bounded, pinned for its four consumers);
     * group totals broadcast back, the corpus marginal joins on token —
     * every post-reduction table is vocabulary-sized. */
   def sourceEntropy(df: DataFrame, groupCol: String,
       textCol: String): DataFrame = {
     val tok = df.select(col(groupCol).as("source"),
       explode(toks(textCol)).as("__t"))
-    val c = tok.groupBy("source", "__t").agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
+    val c = Pin(tok.groupBy("source", "__t").agg(count(lit(1)).as("__c")))
     val ns = c.groupBy("source")
       .agg(sum("__c").as("__n"), count(lit(1)).as("__vocab"))
     val cc = c.groupBy("__t").agg(sum("__c").as("__cc"))
@@ -1834,13 +1828,13 @@ object TextOps {
   def phraseSearch(df: DataFrame, idCol: String, textCol: String,
       phrase: Seq[String]): DataFrame = {
     require(phrase.size >= 2, "phraseSearch: need at least a 2-word phrase")
-    val postings = df
+    // |phrase-term postings| rows; joined |phrase| times
+    val postings = Pin(df
       .select(col(idCol).as("doc_id"), posexplode(toks(textCol))
         .as(Seq("__p0", "__w")))
       .filter(col("__w").isin(phrase.map(lit): _*))
       // posexplode is 0-based; positions are reported 1-based
-      .select(col("doc_id"), (col("__p0") + 1).as("pos"), col("__w"))
-      .localCheckpoint() // |phrase-term postings| rows; joined |phrase| times
+      .select(col("doc_id"), (col("__p0") + 1).as("pos"), col("__w")))
     val first = postings.filter(col("__w") === phrase.head)
       .select(col("doc_id"), col("pos"))
     val matched = phrase.zipWithIndex.tail.foldLeft(first) {
@@ -1866,10 +1860,10 @@ object TextOps {
     * group count, not corpus size, bounds the output. */
   def vocabOverlap(df: DataFrame, groupCol: String,
       textCol: String): DataFrame = {
-    val vocab = df
+    // three consumers: sizes + both join sides
+    val vocab = Pin(df
       .select(col(groupCol).as("__g"), explode(toks(textCol)).as("__t"))
-      .distinct()
-      .localCheckpoint() // three consumers: sizes + both join sides
+      .distinct())
     val sizes = vocab.groupBy("__g").agg(count(lit(1)).as("__n"))
     val inter = vocab.as("a").join(vocab.as("b"),
         col("a.__t") === col("b.__t") && col("a.__g") < col("b.__g"))
@@ -1960,18 +1954,17 @@ object TextOps {
     // Materialization barrier: downstream the cuts column must be an
     // ATTRIBUTE (array data), not an expression CollapseProject can
     // duplicate into the per-chunk lambda below.
-    val staged = df.filter(length(col(textCol)) >= 4)
+    val staged = Pin(df.filter(length(col(textCol)) >= 4)
       .select(col(idCol).as("doc_id"), col(textCol).as("__text"),
-        cutsExpr.as("__cuts"))
-      .localCheckpoint()
-    val chunks = staged
+        cutsExpr.as("__cuts")))
+    // two consumers: recurrence build + the join
+    val chunks = Pin(staged
       .withColumn("__chunks", expr(
         """transform(__cuts, (c, k) -> substring(__text,
           |  case when k = 0 then 1 else element_at(__cuts, k) + 1 end,
           |  c - case when k = 0 then 0 else element_at(__cuts, k) end))"""
           .stripMargin))
-      .select(col("doc_id"), explode(col("__chunks")).as("__c"))
-      .localCheckpoint() // two consumers: recurrence build + the join
+      .select(col("doc_id"), explode(col("__chunks")).as("__c")))
     val recurrence = chunks.groupBy("__c")
       .agg(countDistinct(col("doc_id")).as("__nd"))
     chunks.join(recurrence, "__c")
@@ -2043,7 +2036,7 @@ object TextOps {
     *
     * Scale shape: lmScore's "one corpus pass, then vocab-bounded
     * everything" discipline — the corpus is tokenized and reduced to
-    * the (w1,w2) count table once (localCheckpoint: three downstream
+    * the (w1,w2) count table once (pinned: three downstream
     * consumers would otherwise re-run the explode), marginals and the
     * total roll up from that table, and the assembly joins are
     * vocab-sized. The final top-k is a TakeOrderedAndProject, not a
@@ -2059,9 +2052,8 @@ object TextOps {
           |                      'w2', element_at(__w, i + 1)))
           |  else null end""".stripMargin)).as("bg"))
       .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-    val c2 = bg.groupBy("w1", "w2")
-      .agg(count(lit(1)).cast("decimal(38,0)").as("c_ab"))
-      .localCheckpoint()
+    val c2 = Pin(bg.groupBy("w1", "w2")
+      .agg(count(lit(1)).cast("decimal(38,0)").as("c_ab")))
     val ra = c2.groupBy("w1").agg(sum("c_ab").as("__ra"))
     val cb = c2.groupBy("w2").agg(sum("c_ab").as("__cb"))
     val nb = c2.agg(sum("c_ab").as("__nb"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cdc.{CdcEnvelope, Changelog, CompactionDelta, Sinks, ValueDelta}
+import graft.ops.Pin
 import graft.sources.PgOutputFrames
 
 /** CORRECTNESS-graded batch entries for the custom engine pieces:
@@ -1196,13 +1197,12 @@ object CdcQueries {
         // Dim side pinned: the broadcast exchange re-executes its child
         // per micro-batch (IncrementalExecution re-plans each trigger), so
         // unpinned the customer parquet scan + filter runs once per batch;
-        // a localCheckpoint'd 100-row relation rebuilds the broadcast from
+        // a pinned 100-row relation rebuilds the broadcast from
         // block-manager rows instead.
-        val dim = s.table("customer")
+        val dim = Pin(s.table("customer")
           .filter(col("c_custkey") < 100)
           .select(col("c_custkey").as("user_id"),
-            col("c_mktsegment").as("segment"))
-          .localCheckpoint()
+            col("c_mktsegment").as("segment")))
         run.drain(enrichStream(s, chunks)
           .join(broadcast(dim), Seq("user_id"), "left")
           .withColumn("segment", coalesce(col("segment"), lit("NONE")))
@@ -1582,8 +1582,8 @@ object CdcQueries {
     // each joins the dimension VERSION valid at its own time (Flink's
     // FOR SYSTEM_TIME AS OF — the flagship join of the CDC world this
     // engine re-expresses). Spark shape: a stream-STATIC left join —
-    // the SCD2 history (sc1's operator, frozen once via
-    // localCheckpoint) broadcasts under each micro-batch, the probe
+    // the SCD2 history (sc1's operator, frozen once by a
+    // pin) broadcasts under each micro-batch, the probe
     // stream joins on the key with the validity interval as residual,
     // stateless (no watermark, no state store: history is bounded by
     // |versions|, facts pass through). Probes split across three
@@ -1596,11 +1596,11 @@ object CdcQueries {
       StreamRun(spark, "sc4") { run =>
         val s = run.session()
         val env = readWal(s, fix, "jsonl").drop("mode").as[CdcEnvelope]
-        val hist = Changelog.scd2(env)
+        // freeze: re-planned, not re-computed, per batch
+        val hist = Pin(Changelog.scd2(env)
           .select(col("key_id").cast("bigint").as("h_id"),
             col("valid_from_lsn"), col("valid_to_lsn"),
-            element_at(col("after"), "event_type").as("event_type_at"))
-          .localCheckpoint() // freeze: re-planned, not re-computed, per batch
+            element_at(col("after"), "event_type").as("event_type_at")))
         val in = run.path("in")
         s.table("events")
           .filter(col("event_type") === "error")

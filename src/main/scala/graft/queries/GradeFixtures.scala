@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.ops.{Dedup, Similarity}
+import graft.ops.{Dedup, Pin, Similarity}
 
 /** Session-scoped cache for the expensive DIAGNOSTIC inputs shared by the
   * similarity grading queries (ec1, e1x, ec1x): the exact O(n²) cosine
@@ -15,7 +15,7 @@ import graft.ops.{Dedup, Similarity}
   * per verify run, 9× per bench run with warmups) was pure grading
   * overhead: ec1x alone cost 12.2s in BENCH_r06, ~2× the next query.
   *
-  * Keyed by (session, input files) and localCheckpoint'd: the first
+  * Keyed by (session, input files) and pinned ([[Pin]]): the first
   * consumer in a run computes each fixture, later consumers reuse the
   * materialized blocks; a new session or a different sf dir recomputes.
   * Entries are small (pair lists and label maps, not corpus rows).
@@ -43,7 +43,7 @@ private[graft] object GradeFixtures {
     val hit = cache.get(key)
     if (hit != null) hit
     else {
-      val built = build(emb).localCheckpoint()
+      val built = Pin(build(emb))
       val prev = cache.putIfAbsent(key, built)
       if (prev != null) prev else built
     }

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Pca, Stats, TextOps}
+import graft.ops.{Pca, Pin, Stats, TextOps}
 
 /** Inference / resampling / risk-analytics query inventory (session 7):
   * survival hazard, digit-law data-quality testing, Poisson-bootstrap
@@ -279,12 +279,12 @@ object Inference {
       // md5-amplification trap as poissonBootstrap's scaladoc notes);
       // rebalanced because the md5 + three filtered passes all inherit
       // the scan's split count (one file at bench scale = one core).
-      // The projection is PINNED (localCheckpoint): fit, calibration
+      // The projection is PINNED ([[Pin]]): fit, calibration
       // rank, and test coverage are three separate consumers, and
       // without pinning each re-runs the md5 over the full table —
       // materialized it is 3 integers per row, the cheap side of that
       // trade at any scale.
-      val p = graft.ops.Rebalance.forAmplification(
+      val p = Pin(graft.ops.Rebalance.forAmplification(
         spark.table("lineitem")
           .withColumn("__h", expr(
             "md5(concat_ws('-', CAST(l_orderkey AS STRING), " +
@@ -292,8 +292,7 @@ object Inference {
           .select(
             expr("CAST(floor(l_quantity) AS BIGINT)").as("x"),
             expr("CAST(floor(l_extendedprice * 100) AS BIGINT)").as("y"),
-            expr(TextOps.pmBucketFastSql("__h")).as("bucket")))
-        .localCheckpoint()
+            expr(TextOps.pmBucketFastSql("__h")).as("bucket"))))
       val fit = Stats.linearFit(p.filter(col("bucket") < 600),
         Seq.empty, "x", "y")
         .select(col("n").as("n_train"), col("slope_ppm"),

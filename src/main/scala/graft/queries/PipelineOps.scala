@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, GraphOps, Layout, Privacy, Profile, PublicSuffix, Similarity, Stats, TextOps, Tokenizer, WebOps}
+import graft.ops.{Dedup, GraphOps, Layout, Pin, Privacy, Profile, PublicSuffix, Similarity, Stats, TextOps, Tokenizer, WebOps}
 
 /** LLM-training-data pipeline operators (BASELINE.json north_star; SURVEY §7.5
   * item 5) — thin oracle-graded wrappers over the public library surface in
@@ -4590,8 +4590,8 @@ object PipelineOps {
       // materialize it once or the digest join re-scans both corpus
       // versions per consumer (exchange reuse cannot be relied on
       // across the two differently-filtered subtrees)
-      val diff = Layout.diffSnapshots(oldSnap, newSnap, "doc_id", "text")
-        .select("doc_id", "status").localCheckpoint()
+      val diff = Pin(Layout.diffSnapshots(oldSnap, newSnap, "doc_id", "text")
+        .select("doc_id", "status"))
       val carried = TextOps.quality(oldSnap, "doc_id", "text", "n_chars", stop)
         .join(diff.filter(col("status") === "unchanged").select("doc_id"),
           "doc_id")
@@ -4994,14 +4994,14 @@ object PipelineOps {
       // The recursive CTE's loop body replants every relation it
       // references ON EACH LEVEL — unpinned, the md5-over-sorted-tokens
       // corpus pass (`g`) and the rank self-join (`e`) re-executed per
-      // recursion depth. Pin `m` and `e` once (localCheckpoint — the
+      // recursion depth. Pin `m` and `e` once ([[Pin]] — the
       // dedup-family playbook, computed inside the timed query), so each
       // level joins the frontier against a materialized edge list.
       // `m` additionally fuses the former dup-join (g ⋈ groupBy-having)
       // into one windowed pass: rn + group count share the PARTITION BY
       // h exchange, and `cnt > 1` keeps exactly the dup groups. Output
       // relations are identical; the oracle text is unchanged.
-      spark.sql(
+      Pin(spark.sql(
         """WITH g AS (SELECT doc_id, md5(array_join(array_sort(array_distinct(
           |        filter(split(text, ' '), x -> length(x) > 0))), ' ')) AS h
           |      FROM documents),
@@ -5009,14 +5009,12 @@ object PipelineOps {
           |        row_number() OVER (PARTITION BY h ORDER BY doc_id) AS rn,
           |        count(*) OVER (PARTITION BY h) AS cnt
           |      FROM g)
-          |SELECT doc_id, h, rn FROM w WHERE cnt > 1""".stripMargin)
-        .localCheckpoint()
+          |SELECT doc_id, h, rn FROM w WHERE cnt > 1""".stripMargin))
         .createOrReplaceTempView("rc1_m")
-      spark.sql(
+      Pin(spark.sql(
         """SELECT a.doc_id AS src, b.doc_id AS dst
           |FROM rc1_m a JOIN rc1_m b ON a.h = b.h AND b.rn >= 2
-          |  AND a.rn = greatest(b.rn div 16, 1)""".stripMargin)
-        .localCheckpoint()
+          |  AND a.rn = greatest(b.rn div 16, 1)""".stripMargin))
         .createOrReplaceTempView("rc1_e")
       spark.sql(
         """WITH RECURSIVE

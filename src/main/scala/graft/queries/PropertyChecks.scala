@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, Profile, Similarity}
+import graft.ops.{Dedup, Pin, Profile, Similarity}
 
 /** Oracle-encoded invariants for the hash-signature operators DuckDB
   * cannot reproduce directly (minhash / simhash / LSH / IVF / sketches —
@@ -93,7 +93,7 @@ object PropertyChecks {
         |       CAST(0 AS BIGINT) AS n_outside_exact,
         |       true AS recall_ge_90""".stripMargin) { spark =>
       // Both pair sets come from the session-scoped GradeFixtures cache
-      // (localCheckpoint'd — each is consumed by multiple aggregates
+      // (pinned — each is consumed by multiple aggregates
       // here AND shared with ec1/ec1x, so the generation plans run once
       // per verify/bench run, not once per consumer). The blocked side
       // uses recall-oriented parameters (same as s2x/OpsApiSpec): this
@@ -199,30 +199,28 @@ object PropertyChecks {
       val docs = spark.table("documents")
       // kept ids pinned: consumed by BOTH endpoint semi-joins below —
       // unpinned, the full minhash pipeline would run twice.
-      val kept = Dedup.minhashKept(docs, "doc_id", "text")
-        .select(col("doc_id")).localCheckpoint()
+      val kept = Pin(Dedup.minhashKept(docs, "doc_id", "text")
+        .select(col("doc_id")))
       // Truth pairs, Spark side: same shingling/blocking as the oracle,
       // shingles as sorted xxhash64 sets (codegen sorted-merge count —
       // the exact kernel minhashKept's verification uses). The shingle
       // relation is pinned (the self-join plants it twice), and so is
       // the truth pair set (counted once, semi-joined once).
-      val g = docs.select(col("doc_id"), col("lang"), expr(
+      val g = Pin(docs.select(col("doc_id"), col("lang"), expr(
           "array_sort(array_distinct(transform(word_ngrams(" +
             "filter(split(text, ' '), x -> length(x) > 0), 2), " +
             "x -> xxhash64(x))))").as("s"))
         .withColumn("ns", size(col("s")).cast("bigint"))
         .filter(col("ns") > 0)
-        .withColumn("bucket", expr("ns div 8"))
-        .localCheckpoint()
-      val truth = g.as("a").join(g.as("b"),
+        .withColumn("bucket", expr("ns div 8")))
+      val truth = Pin(g.as("a").join(g.as("b"),
           col("a.lang") === col("b.lang") &&
             col("a.bucket") === col("b.bucket") &&
             col("a.doc_id") < col("b.doc_id"))
         .withColumn("inter", expr("sorted_intersect_count(a.s, b.s)"))
         .filter(col("inter") * 10 >=
           (col("a.ns") + col("b.ns") - col("inter")) * 9)
-        .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-        .localCheckpoint()
+        .select(col("a.doc_id").as("da"), col("b.doc_id").as("db")))
       // missed = both endpoints survived dedup
       val missed = truth
         .join(kept.as("ka"), col("da") === col("ka.doc_id"), "left_semi")

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.TimestampNTZType
 
+import graft.ops.Pin
+
 /** Batch analogs of the reference's operator inventory (SURVEY.md §2).
   *
   * Naming maps 1:1 onto the §2 ids: tN_* = transform operators T1-T7,
@@ -1220,7 +1222,7 @@ object Relational {
     // from their first to last purchase, zero-filled where no purchases
     // happened — the regularization step before any window/trend
     // computation (Spark has no native gap fill; the grid is a bounded
-    // per-key sequence explode). The daily aggregate is localCheckpoint'd
+    // per-key sequence explode). The daily aggregate is pinned
     // because BOTH the grid derivation and the join probe read it —
     // without it the corpus is scanned twice (lambda subtrees defeat
     // exchange reuse). Grid size is bounded by span/day per key, never
@@ -1239,13 +1241,12 @@ object Relational {
         |       CAST(coalesce(d.n, 0) AS BIGINT) AS n_purchases
         |FROM grid g LEFT JOIN daily d USING (user_id, day)
         |ORDER BY user_id, day""".stripMargin) { spark =>
-      val daily = spark.table("events")
+      val daily = Pin(spark.table("events")
         .filter(col("event_type") === "purchase")
         .select(col("user_id"),
           expr("unix_micros(cast(ts as timestamp)) div 86400000000")
             .as("day"))
-        .groupBy("user_id", "day").agg(count(lit(1)).as("n"))
-        .localCheckpoint()
+        .groupBy("user_id", "day").agg(count(lit(1)).as("n")))
       val grid = daily.groupBy("user_id")
         .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
         .withColumn("day", explode(sequence(col("d0"), col("d1"))))

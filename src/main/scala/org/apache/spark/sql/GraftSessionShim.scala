@@ -3,12 +3,13 @@ package org.apache.spark.sql
 import java.util.concurrent.TimeoutException
 
 import org.apache.spark.SparkContext
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** The session and listener-bus internals [[graft.queries.StreamRun]] and
-  * [[graft.QueryProfile]] need, which Spark keeps
+/** The session, plan and listener-bus internals [[graft.queries.StreamRun]],
+  * [[graft.ops.Pin]] and [[graft.QueryProfile]] need, which Spark keeps
   * `private[sql]`/`private[spark]`: reachable only from inside this
   * package. */
 object GraftSessionShim {
@@ -29,6 +30,16 @@ object GraftSessionShim {
   def rehome(df: DataFrame, spark: SparkSession): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       df.queryExecution.analyzed)
+
+  /** `pinned` — a frame over one `LogicalRDD`, as a checkpoint returns —
+    * over the same `RDD[InternalRow]` under new attribute ids, without
+    * the size estimate, constraints, partitioning and ordering the
+    * checkpoint carried from its source plan. */
+  def withoutStats(pinned: DataFrame): DataFrame = {
+    val r = pinned.queryExecution.logical.asInstanceOf[LogicalRDD]
+    val s = pinned.sparkSession.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(s, LogicalRDD(r.output.map(_.newInstance()), r.rdd)(s))
+  }
 
   /** Returns once every listener event posted so far has been delivered
     * to every listener; throws `TimeoutException` after 10 s. Readers of

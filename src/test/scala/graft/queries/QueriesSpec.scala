@@ -2,7 +2,7 @@ package graft.queries
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.GraftSessionShim
+import org.apache.spark.sql.{GraftSessionShim, classic}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import graft.{SparkSpec, SparkEntry}
@@ -23,7 +23,11 @@ class QueriesSpec extends SparkSpec {
     // observe mid-stream, no temp view) and under its per-context root,
     // which goes when the harness scope ends. Keyed fixture caches, named
     // after the sf dir they derive from, are the only dirs that persist.
+    // Nor may an entry leave a cached relation in the shared session:
+    // any later plan that matched it would be served from that cache.
     graft.Tables.registerAll(spark, sf)
+    val cacheManager =
+      spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager
     val partitions = "spark.sql.shuffle.partitions"
     val callerPartitions = spark.conf.get(partitions)
     val tmp = new java.io.File(sys.props("java.io.tmpdir"))
@@ -44,10 +48,13 @@ class QueriesSpec extends SparkSpec {
     spark.streams.addListener(listener)
     try SparkEntry.queries.foreach { case (name, fn) =>
       val views0 = views
+      val uncached0 = cacheManager.isEmpty
       val n = fn(spark, sf).count()
       assert(n > 0, s"$name returned 0 rows")
       val added = views -- views0 -- batchViews
       assert(added.isEmpty, s"$name left temp views: $added")
+      assert(cacheManager.isEmpty || !uncached0,
+        s"$name left a cached relation")
     } finally {
       GraftSessionShim.drainListeners(spark.sparkContext)
       spark.streams.removeListener(listener)

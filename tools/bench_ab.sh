@@ -15,7 +15,8 @@
 # Output: tools/AB_latest.json
 #   {"prev_commit":…,"head_commit":…,"sf":…,"queries":[…],
 #    "prev":{q:sec,…},"head":{q:sec,…},
-#    "total_prev":…,"total_head":…,"ratio":head/prev}
+#    "total_prev":…,"total_head":…,"ratio":head/prev,
+#    "pair_ratios":[head1/prev1, head2/prev2]}
 # graft.Bench embeds this file as the "ab" key of its stdout line when
 # it runs the full set, so the round artifact carries the ratio.
 set -euo pipefail
@@ -51,27 +52,32 @@ run_bench() { # $1 = repo dir, $2 = output json name
 # INTERLEAVED passes, per-query MIN of two (round 14): single-pass
 # A/B readings on this host swing +-20% run-to-run (identical-code
 # prev totals measured 35-50s across three round-14 runs), and the
-# swing is correlated within a pass, not per query — prev/head/prev/
-# head interleaving plus min-merge cancels both the drift and the
-# run-order bias a single back-to-back pair bakes in.
+# swing is correlated within a pass, not per query. The passes run
+# prev/head/head/prev, so each side takes one first and one second
+# slot of a pair: under prev/head/prev/head head always ran second,
+# and an A/A control (the same commit on both sides) read 1.132.
 run_bench "$WT" /tmp/graft-ab-prev1.json
 run_bench "$PWD" /tmp/graft-ab-head1.json
-run_bench "$WT" /tmp/graft-ab-prev2.json
 run_bench "$PWD" /tmp/graft-ab-head2.json
+run_bench "$WT" /tmp/graft-ab-prev2.json
 
 python3 - "$PREV" "$HEAD_SHA" "$SF" <<'EOF'
 import json, sys
 prev_sha, head_sha, sf = sys.argv[1:4]
+def load(name):
+    return json.load(open(f'/tmp/graft-ab-{name}.json'))['queries']
+runs = {n: load(n) for n in ('prev1', 'head1', 'head2', 'prev2')}
+common = sorted(set.intersection(*(set(r) for r in runs.values())))
+def total(r):
+    return sum(r[q] for q in common)
 def minmerge(a, b):
-    qa, qb = a['queries'], b['queries']
-    return {q: min(qa[q], qb[q]) for q in set(qa) & set(qb)}
-pq = minmerge(json.load(open('/tmp/graft-ab-prev1.json')),
-              json.load(open('/tmp/graft-ab-prev2.json')))
-hq = minmerge(json.load(open('/tmp/graft-ab-head1.json')),
-              json.load(open('/tmp/graft-ab-head2.json')))
-common = sorted(set(pq) & set(hq))
-tp = sum(pq[q] for q in common)
-th = sum(hq[q] for q in common)
+    return {q: min(a[q], b[q]) for q in common}
+pq = minmerge(runs['prev1'], runs['prev2'])
+hq = minmerge(runs['head1'], runs['head2'])
+tp, th = total(pq), total(hq)
+# pair 1 = (prev1, head1), pair 2 = (head2, prev2): one slot order each
+pairs = [round(total(runs[h]) / total(runs[p]), 4) if total(runs[p]) else None
+         for p, h in (('prev1', 'head1'), ('prev2', 'head2'))]
 out = {
   'prev_commit': prev_sha[:12], 'head_commit': head_sha[:12], 'sf': sf,
   'queries': common,
@@ -79,8 +85,10 @@ out = {
   'head': {q: round(hq[q], 3) for q in common},
   'total_prev': round(tp, 2), 'total_head': round(th, 2),
   'ratio': round(th / tp, 4) if tp else None,
+  'pair_ratios': pairs,
 }
 json.dump(out, open('tools/AB_latest.json', 'w'), indent=1)
 print(f"[ab] total_prev={tp:.2f}s total_head={th:.2f}s "
-      f"ratio={th/tp:.3f} over {len(common)} queries")
+      f"ratio={th/tp:.3f} (pairs: {', '.join(f'{r:.3f}' for r in pairs)}) "
+      f"over {len(common)} queries")
 EOF
