@@ -39,16 +39,8 @@ class CdcFileSource extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     CdcFileSource.schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val malformed = Option(properties.get("malformed")).getOrElse("fail")
-    require(malformed == "fail" || malformed == "quarantine",
-      s"malformed must be 'fail' or 'quarantine', got '$malformed'")
-    new CdcFileTable(properties.get("path"),
-      Option(properties.get("numPartitions")).map(_.toInt).getOrElse(1),
-      Option(properties.get("maxEventsPerBatch")).map(_.toLong),
-      Option(properties.get("walFormat")).getOrElse("jsonl"),
-      malformed)
-  }
+      properties: util.Map[String, String]): Table =
+    new CdcFileTable(CdcOptions(properties))
 }
 
 object CdcFileSource {
@@ -64,45 +56,66 @@ object CdcFileSource {
     StructField("after", MapType(StringType, StringType), nullable = true)))
 }
 
-final class CdcFileTable(path: String, numPartitions: Int,
-    maxEventsPerBatch: Option[Long], walFormat: String,
-    malformed: String = "fail")
-    extends Table with SupportsRead {
-  override def name(): String = s"graft-cdc:$path"
+/** The source's options, parsed and checked once when the table loads:
+  *
+  *  - `path`: a captured-log file, `graft-wal://host:port` or `pgwal://…`
+  *    ([[WalTransport.open]]);
+  *  - `walFormat`: "jsonl" (default) or "pgoutput";
+  *  - `numPartitions`: LSN-range readers per batch or trigger (default 1);
+  *  - `maxEventsPerBatch`: WAL frames admitted per trigger (default: all);
+  *  - `malformed`: "fail" (default) or "quarantine" — see
+  *    [[CdcFileMicroBatchStream.parse]]. */
+final case class CdcOptions(path: String, walFormat: String = "jsonl",
+    numPartitions: Int = 1, maxEventsPerBatch: Option[Long] = None,
+    malformed: String = "fail") {
+  require(path != null, "path is required")
+  require(walFormat == "jsonl" || walFormat == "pgoutput",
+    s"walFormat must be 'jsonl' or 'pgoutput', got '$walFormat'")
+  require(maxEventsPerBatch.forall(_ > 0),
+    s"maxEventsPerBatch must be positive, got ${maxEventsPerBatch.get}")
+  require(malformed == "fail" || malformed == "quarantine",
+    s"malformed must be 'fail' or 'quarantine', got '$malformed'")
+}
+
+object CdcOptions {
+  def apply(props: util.Map[String, String]): CdcOptions = {
+    def opt(key: String): Option[String] = Option(props.get(key))
+    val d = CdcOptions(props.get("path"))
+    d.copy(walFormat = opt("walFormat").getOrElse(d.walFormat),
+      numPartitions = opt("numPartitions").map(_.toInt).getOrElse(d.numPartitions),
+      maxEventsPerBatch = opt("maxEventsPerBatch").map(_.toLong).orElse(d.maxEventsPerBatch),
+      malformed = opt("malformed").getOrElse(d.malformed))
+  }
+}
+
+final class CdcFileTable(opts: CdcOptions) extends Table with SupportsRead {
+  override def name(): String = s"graft-cdc:${opts.path}"
   override def schema(): StructType = CdcFileSource.schema
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new CdcFileScan(path, numPartitions, maxEventsPerBatch, walFormat,
-      malformed)
+    () => new CdcFileScan(opts)
 }
 
-final class CdcFileScan(path: String, numPartitions: Int,
-    maxEventsPerBatch: Option[Long], walFormat: String,
-    malformed: String = "fail") extends Scan {
+final class CdcFileScan(opts: CdcOptions) extends Scan {
   override def readSchema(): StructType = CdcFileSource.schema
   override def toBatch: Batch = new Batch {
-    // Batch replay parallelizes the same way the stream does: contiguous
-    // LSN subranges, one reader per range (`numPartitions` option). The
-    // LSN span is probed through the transport at plan time — the analog
-    // of asking the source for its low/high watermark before a snapshot —
-    // so file and socket paths plan identically.
+    // A batch read is one stream trigger over the whole log: the span
+    // (first LSN - 1, head] goes through the stream's planner, probed
+    // through the transport at plan time — the analog of asking the
+    // source for its low/high watermark before a snapshot — so file and
+    // socket paths plan identically.
     override def planInputPartitions(): Array[InputPartition] = {
-      val t = WalTransport.open(path, walFormat)
-      val lsns = try t.lsns(Long.MinValue).toVector finally t.close()
-      if (lsns.isEmpty || numPartitions <= 1)
-        Array(CdcRangePartition(path, Long.MinValue, Long.MaxValue, walFormat,
-          malformed = malformed))
-      else
-        CdcFileMicroBatchStream.planRanges(path, walFormat, malformed,
-          numPartitions, lsns.min - 1, lsns.max)
+      val t = WalTransport.open(opts.path, opts.walFormat)
+      try t.lsns(Long.MinValue).nextOption().fold(Array.empty[InputPartition])(
+        first => CdcFileMicroBatchStream.planRanges(t, opts, first - 1, t.headLsn()))
+      finally t.close()
     }
     override def createReaderFactory(): PartitionReaderFactory =
       new CdcReaderFactory
   }
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new CdcFileMicroBatchStream(path, numPartitions, maxEventsPerBatch,
-      walFormat, malformed)
+    new CdcFileMicroBatchStream(opts)
 }
 
 /** LSN watermark offset (reference: Debezium `sourceOffset={lsn=…}`,
@@ -111,36 +124,35 @@ final case class CdcOffset(lsn: Long) extends Offset {
   override def json(): String = lsn.toString
 }
 
-final class CdcFileMicroBatchStream(path: String, numPartitions: Int = 1,
-    maxEventsPerBatch: Option[Long] = None, walFormat: String = "jsonl",
-    malformed: String = "fail")
+final class CdcFileMicroBatchStream(opts: CdcOptions)
     extends MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
   import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxRows}
 
-  // The replication-connection seam: offset probes and slot acks go
-  // through the transport; a socket implementation drops in here.
-  private val transport: WalTransport = WalTransport.open(path, walFormat)
+  // The replication-connection seam: offset probes, range planning and
+  // slot acks all go through this one driver-side transport; a socket
+  // implementation drops in here.
+  private val transport: WalTransport = WalTransport.open(opts.path, opts.walFormat)
 
   override def initialOffset(): Offset = CdcOffset(0L)
 
   override def latestOffset(): Offset = CdcOffset(transport.headLsn())
 
-  /** Admission control: cap each micro-batch at maxEventsPerBatch change
-    * events (backpressure against replication-lag catch-up storms —
+  /** Admission control: cap each micro-batch at `maxEventsPerBatch` WAL
+    * frames (backpressure against replication-lag catch-up storms —
     * without it the first batch after downtime replays the whole backlog
-    * in one trigger). */
+    * in one trigger). The cap counts frames, not change events: a
+    * pgoutput transaction of one row is three frames (Begin, DML,
+    * Commit), and a trigger always ends on a whole LSN. */
   override def getDefaultReadLimit: ReadLimit =
-    maxEventsPerBatch.map(n => ReadLimit.maxRows(n)).getOrElse(ReadLimit.allAvailable())
+    opts.maxEventsPerBatch.map(n => ReadLimit.maxRows(n)).getOrElse(ReadLimit.allAvailable())
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[CdcOffset].lsn
     limit match {
       case mr: ReadMaxRows =>
-        // Admission control needs the LSN list (to stop after N events);
-        // lsns() is the payload-free probe.
-        val lsns = transport.lsns(s).take(mr.maxRows().toInt).toSeq
-        if (lsns.isEmpty) CdcOffset(s) else CdcOffset(lsns.last)
+        // lsns() is the payload-free probe; stop after N frames.
+        CdcOffset(transport.lsns(s).take(mr.maxRows().toInt).foldLeft(s)((_, l) => l))
       case _ =>
         // Unthrottled: the head probe answers directly — no LSN list,
         // no payload transfer.
@@ -148,13 +160,9 @@ final class CdcFileMicroBatchStream(path: String, numPartitions: Int = 1,
     }
   }
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[CdcOffset].lsn
-    val e = end.asInstanceOf[CdcOffset].lsn
-    if (e <= s) Array.empty
-    else CdcFileMicroBatchStream.planRanges(path, walFormat, malformed,
-      numPartitions, s, e)
-  }
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    CdcFileMicroBatchStream.planRanges(transport, opts,
+      start.asInstanceOf[CdcOffset].lsn, end.asInstanceOf[CdcOffset].lsn)
 
   override def createReaderFactory(): PartitionReaderFactory = new CdcReaderFactory
   override def deserializeOffset(json: String): Offset = CdcOffset(json.toLong)
@@ -168,48 +176,32 @@ object CdcFileMicroBatchStream {
 
   /** The LSN range `(lo, hi]` as at most `numPartitions` contiguous
     * subranges, one replay reader each (the real source's analog: one
-    * reader per slot range / table shard). Long arithmetic throughout: a
-    * first trigger from offset 0 on a live slot spans the slot's whole
-    * LSN, far past `Int.MaxValue` bytes. */
-  private[sources] def planRanges(path: String, walFormat: String,
-      malformed: String, numPartitions: Int, lo: Long,
+    * reader per slot range / table shard); batch reads and stream
+    * triggers both plan here. The span is BigInt arithmetic: a first
+    * trigger from offset 0 on a live slot spans the slot's whole LSN,
+    * and a batch span may start at any Long.
+    *
+    * pgoutput ranges carry the decoder state at their start (relation
+    * catalog + tx context): ONE metadata pass over `t` up to the last
+    * boundary ([[PgOutputSession.boundaryStates]]) serves every range,
+    * so each reader decodes only its own span — O(log) planning instead
+    * of O(partitions × log) reader work, and a range at the log head
+    * carries the empty state. jsonl is stateless. */
+  private[sources] def planRanges(t: WalTransport, opts: CdcOptions, lo: Long,
       hi: Long): Array[InputPartition] = {
-    val n = math.max(1L, math.min(numPartitions.toLong, hi - lo)).toInt
-    val width = math.max(1L, (hi - lo + n - 1) / n)
-    val parts = (0 until n).iterator
-      .map(i => CdcRangePartition(path, lo + i * width,
-        math.min(hi, lo + (i + 1) * width), walFormat,
-        malformed = malformed))
-      .filter(p => p.endInclusive > p.startExclusive)
-      .toArray
-    attachPgStates(path, walFormat, parts)
+    if (hi <= lo) return Array.empty
+    val span = BigInt(hi) - lo
+    val n = span.min(opts.numPartitions).max(1).toInt
+    val width = ((span + n - 1) / n).max(1)
+    val bounds = (0 to n).map(i => (width * i + lo).min(hi).toLong).distinct
+    val starts = bounds.init
+    val states =
+      if (opts.walFormat == "pgoutput")
+        PgOutputSession.boundaryStates(t.frames(Long.MinValue, starts.last), starts)
+      else starts.map(_ => PgOutputSession.State.empty)
+    starts.indices.map(i =>
+      CdcRangePartition(opts, bounds(i), bounds(i + 1), states(i))).toArray
   }
-
-  /** For pgoutput multi-range plans: ONE driver-side metadata pass over
-    * the log computes the decoder state at each range boundary
-    * ([[PgOutputSession.boundaryStates]]), so each range reader decodes
-    * only its own LSN span — O(log) total planning instead of
-    * O(partitions × log) reader work. jsonl is stateless: pass-through. */
-  private def attachPgStates(path: String, walFormat: String,
-      parts: Array[CdcRangePartition]): Array[InputPartition] =
-    // Also worthwhile for a SINGLE partition when its range starts past
-    // the log head (an incremental micro-batch, or a restart from a
-    // checkpointed LSN): without a state the reader must re-decode the
-    // whole prefix every batch just to rebuild the relation catalog.
-    if (walFormat != "pgoutput" || parts.isEmpty ||
-        parts.forall(_.startExclusive == Long.MinValue))
-      parts.toArray[InputPartition]
-    else {
-      val boundaries = parts.map(_.startExclusive).toSeq
-      val t = WalTransport.open(path, walFormat)
-      // Only the prefix up to the LAST boundary can affect any state —
-      // bound the pull so a socket server never ships the final range.
-      val states = try PgOutputSession.boundaryStates(
-        t.frames(Long.MinValue, boundaries.max), boundaries)
-      finally t.close()
-      parts.zip(states).map { case (p, s) => p.copy(preState = Some(s)) }
-        .toArray[InputPartition]
-    }
 
   /** Cheap LSN extraction from a jsonl envelope line — the LSN index is
     * scanned far more often than full envelopes are materialized (offset
@@ -302,44 +294,29 @@ object CdcFileMicroBatchStream {
   }
 }
 
-/** One LSN-range replay reader. For pgoutput, `preState` carries the
-  * decoder state at `startExclusive` (relation catalog + tx context) from
-  * the driver's one metadata pass, so the reader decodes ONLY its range;
-  * absent (single partition / legacy), the reader falls back to decoding
-  * the log from the beginning and filtering. */
-final case class CdcRangePartition(path: String, startExclusive: Long,
-    endInclusive: Long, walFormat: String = "jsonl",
-    preState: Option[PgOutputSession.State] = None,
-    malformed: String = "fail") extends InputPartition
+/** One LSN-range replay reader. For pgoutput, `state` is the decoder
+  * state at `startExclusive` from the planner's one metadata pass, so the
+  * reader decodes ONLY its range. */
+final case class CdcRangePartition(opts: CdcOptions, startExclusive: Long,
+    endInclusive: Long, state: PgOutputSession.State) extends InputPartition
 
 final class CdcReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[CdcRangePartition]
-    val transport = WalTransport.open(p.path, p.walFormat)
+    val transport = WalTransport.open(p.opts.path, p.opts.walFormat)
+    // Both range bounds travel to the transport, so only this reader's
+    // span is transferred/decoded (socket servers stop at the end bound;
+    // the file impl slices its index).
+    val frames = transport.frames(p.startExclusive, p.endInclusive)
     val rows: Iterator[InternalRow] =
-      if (p.walFormat == "pgoutput") {
-        // Binary pgoutput frames need Relation/Begin metadata from earlier
-        // in the log. With a planner-supplied preState the reader seeds
-        // the session and pulls ONLY its range from the transport; without
-        // one (single partition) it decodes from the beginning and filters.
-        val session = new PgOutputSession(initial = p.preState)
-        // Both range bounds travel to the transport, so only this
-        // reader's span is transferred/decoded (socket servers stop at
-        // the end bound; the file impl prunes before payload decode).
-        val src =
-          if (p.preState.isDefined)
-            transport.frames(p.startExclusive, p.endInclusive)
-          else transport.frames(Long.MinValue, p.endInclusive)
-        src.flatMap { case (lsn, frame) => session.decode(frame, lsn) }
-          .filter(e => e.lsn > p.startExclusive && e.lsn <= p.endInclusive)
+      if (p.opts.walFormat == "pgoutput") {
+        val session = new PgOutputSession(initial = p.state)
+        frames.flatMap { case (lsn, frame) => session.decode(frame, lsn) }
           .map(CdcFileMicroBatchStream.envelopeToRow)
-      } else {
-        // jsonl is stateless — range-prune entirely at the transport.
-        transport.frames(p.startExclusive, p.endInclusive)
-          .map { case (lsn, bytes) => CdcFileMicroBatchStream.parse(
-            new String(bytes, java.nio.charset.StandardCharsets.UTF_8),
-            lsn, p.malformed) }
-      }
+      } else
+        frames.map { case (lsn, bytes) => CdcFileMicroBatchStream.parse(
+          new String(bytes, java.nio.charset.StandardCharsets.UTF_8),
+          lsn, p.opts.malformed) }
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
       override def next(): Boolean =

@@ -22,22 +22,17 @@ import graft.cdc.CdcEnvelope
   * replication client must replay relation metadata before row messages.
   */
 final class PgOutputSession(db: String = "experiment",
-    initial: Option[PgOutputSession.State] = None) {
+    initial: PgOutputSession.State = PgOutputSession.State.empty) {
 
   private final case class Rel(namespace: String, name: String,
       cols: Array[String])
 
   private val relations = scala.collection.mutable.Map[Int, Rel]()
-  private var currentXid: Long = 0L
-  private var currentTsMs: Long = 0L
-
-  initial.foreach { s =>
-    s.relations.foreach { case (oid, (ns, name, cols)) =>
-      relations(oid) = Rel(ns, name, cols.toArray)
-    }
-    currentXid = s.xid
-    currentTsMs = s.tsMs
+  initial.relations.foreach { case (oid, (ns, name, cols)) =>
+    relations(oid) = Rel(ns, name, cols.toArray)
   }
+  private var currentXid: Long = initial.xid
+  private var currentTsMs: Long = initial.tsMs
 
   /** Serializable snapshot of the decoder state — everything a reader must
     * know before decoding frames past a given LSN (the relation catalog +
@@ -176,6 +171,11 @@ object PgOutputSession {
     * column names in attribute order). */
   final case class State(relations: Map[Int, (String, String, Seq[String])],
       xid: Long, tsMs: Long) extends Serializable
+
+  object State {
+    /** The state at the log head: no relations, no open transaction. */
+    val empty: State = State(Map.empty, 0L, 0L)
+  }
 
   /** Decoder states at partition boundaries: for each exclusive-start LSN
     * in `boundaries` (must be sorted ascending), the state after every

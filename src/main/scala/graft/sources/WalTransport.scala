@@ -153,8 +153,9 @@ final class SocketWalTransport(host: String, port: Int) extends WalTransport {
 }
 
 /** Per-JVM byte-offset index of a WAL capture file: one streaming pass
-  * records each non-empty line's (lsn, byte offset, byte length); every
-  * subsequent range read seeks straight to its span.
+  * records each non-empty line's (lsn, byte offset, byte length), sorted
+  * once by (lsn, offset); every later probe or range read is a binary
+  * search into that order.
   *
   * Why it exists: without it, EVERY range reader of EVERY micro-batch
   * re-read and line-split the whole file — O(partitions × batches ×
@@ -163,7 +164,7 @@ final class SocketWalTransport(host: String, port: Int) extends WalTransport {
   * once per (executor JVM, file version) and each reader transfers only
   * its own range — the replication-slot analog of "start streaming at
   * LSN X", which a file stand-in must emulate with seeks. Admission
-  * probes (`lsns`, `headLsn`) become pure in-memory reads, which
+  * probes (`lsns`, `headLsn`) are slices of the sorted arrays, which
   * matters because the driver issues them on every trigger.
   *
   * Cache keyed by path and validated by (length, mtime): a regenerated
@@ -172,13 +173,21 @@ final class SocketWalTransport(host: String, port: Int) extends WalTransport {
   * index. Offsets are BYTE offsets (multi-byte UTF-8 safe: the scan
   * counts raw bytes, never chars). */
 object WalIndex {
+  /** Parallel arrays in (lsn, file offset) order: file order survives
+    * within an LSN (Begin/DML/Commit share their transaction's LSN). */
   final case class Idx(lsns: Array[Long], offs: Array[Long], lens: Array[Int],
       fileLen: Long, mtime: Long) {
-    def maxLsn: Long = {
-      var m = 0L; var i = 0
-      while (i < lsns.length) { if (lsns(i) > m) m = lsns(i); i += 1 }
-      m
+    /** Position of the first entry with an LSN past `lsn`. */
+    def after(lsn: Long): Int = {
+      var lo = 0; var hi = lsns.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (lsns(mid) <= lsn) lo = mid + 1 else hi = mid
+      }
+      lo
     }
+
+    def maxLsn: Long = if (lsns.isEmpty) 0L else lsns(lsns.length - 1)
   }
 
   private val cache =
@@ -204,28 +213,32 @@ object WalIndex {
       return Idx(lsns.result(), offs.result(), lens.result(), -1L, -1L)
     val in = new java.io.BufferedInputStream(
       new java.io.FileInputStream(f), 1 << 20)
+    // Same malformed-lsn policy as the line reader: a line whose LSN
+    // can't be determined indexes at its predecessor's LSN (rides the
+    // same range; the reader's `malformed` policy then applies). Lines
+    // before the first parseable LSN take that LSN instead, so they sit
+    // inside the log's span for batch and stream alike (at 1 in a log
+    // with no parseable LSN at all — the first a fresh stream reads).
+    var leading = 0 // lines before the first parseable LSN
     try {
       val line = new java.io.ByteArrayOutputStream(256)
       var off = 0L
       var lineStart = 0L
-      // Same malformed-lsn policy as the line reader: a line whose LSN
-      // can't be determined indexes at its predecessor's LSN (rides the
-      // same range; the reader's `malformed` policy then applies).
-      var prev = Long.MinValue + 1
-      def flush(): Unit = {
-        if (line.size() > 0) {
-          val bytes = line.toByteArray
-          val s = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-          val lsn =
-            try {
-              if (walFormat == "pgoutput")
-                s.substring(0, s.indexOf(' ')).toLong
-              else CdcFileMicroBatchStream.lsnOf(s)
-            } catch { case scala.util.control.NonFatal(_) => prev }
-          prev = lsn
-          lsns += lsn; offs += lineStart; lens += bytes.length
-          line.reset()
-        }
+      var prev = 0L
+      def flush(): Unit = if (line.size() > 0) {
+        val bytes = line.toByteArray
+        val s = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
+        prev =
+          try {
+            if (walFormat == "pgoutput") s.substring(0, s.indexOf(' ')).toLong
+            else CdcFileMicroBatchStream.lsnOf(s)
+          } catch {
+            case scala.util.control.NonFatal(_) =>
+              if (lens.length == leading) leading += 1
+              prev
+          }
+        lsns += prev; offs += lineStart; lens += bytes.length
+        line.reset()
       }
       var b = in.read()
       while (b >= 0) {
@@ -236,26 +249,23 @@ object WalIndex {
       }
       flush()
     } finally in.close()
-    Idx(lsns.result(), offs.result(), lens.result(),
-      f.length(), f.lastModified())
+    val l = lsns.result(); val o = offs.result(); val n = lens.result()
+    java.util.Arrays.fill(l, 0, leading, if (leading < l.length) l(leading) else 1L)
+    // Stable by LSN: offsets ascend in file order, so ties keep it.
+    val order = Array.range(0, l.length).sortBy(l(_))
+    Idx(order.map(l), order.map(o), order.map(n), f.length(), f.lastModified())
   }
 
-  /** Materialize the in-range lines: one mmap of the file, then a
-    * positional copy per selected line — no per-line syscalls, and only
-    * the selected spans' pages fault in. Output is stably sorted by LSN
-    * (file order preserved within an LSN — Begin/DML/Commit share their
-    * transaction's LSN). */
+  /** Materialize the lines with LSN in `(afterLsn, endInclusive]`: two
+    * binary searches bound the slice, one mmap of the file, then a
+    * positional copy per line — no per-line syscalls, and only the
+    * selected spans' pages fault in. Output is in index order. */
   def linesInRange(path: String, walFormat: String, afterLsn: Long,
       endInclusive: Long): IndexedSeq[(Long, Array[Byte])] = {
     val idx = of(path, walFormat)
-    val sel = scala.collection.mutable.ArrayBuilder.make[Int]
-    var i = 0
-    while (i < idx.lsns.length) {
-      if (idx.lsns(i) > afterLsn && idx.lsns(i) <= endInclusive) sel += i
-      i += 1
-    }
-    val picked = sel.result()
-    if (picked.isEmpty) return Vector.empty
+    val from = idx.after(afterLsn)
+    val until = idx.after(endInclusive)
+    if (from >= until) return Vector.empty
     // MappedByteBuffer positions are int-bounded; a >2 GB capture file
     // would need chunked maps (real deployments segment WAL far below
     // that, as Postgres does at 16 MB).
@@ -263,20 +273,16 @@ object WalIndex {
       s"WAL capture $path exceeds 2GB — segment it")
     val ch = java.nio.channels.FileChannel.open(
       java.nio.file.Paths.get(path), java.nio.file.StandardOpenOption.READ)
-    val out =
-      try {
-        val map = ch.map(
-          java.nio.channels.FileChannel.MapMode.READ_ONLY, 0, idx.fileLen)
-        picked.map { k =>
-          val bytes = new Array[Byte](idx.lens(k))
-          map.position(idx.offs(k).toInt)
-          map.get(bytes)
-          idx.lsns(k) -> bytes
-        }.toIndexedSeq
-      } finally ch.close()
-    // picked is ascending file order; sortBy is stable → file order
-    // survives within equal LSNs.
-    out.sortBy(_._1)
+    try {
+      val map = ch.map(
+        java.nio.channels.FileChannel.MapMode.READ_ONLY, 0, idx.fileLen)
+      (from until until).map { k =>
+        val bytes = new Array[Byte](idx.lens(k))
+        map.position(idx.offs(k).toInt)
+        map.get(bytes)
+        idx.lsns(k) -> bytes
+      }
+    } finally ch.close()
   }
 }
 
@@ -304,9 +310,7 @@ final class FileWalTransport(path: String, walFormat: String)
 
   override def lsns(afterLsn: Long): Iterator[Long] = {
     val idx = WalIndex.of(path, walFormat)
-    val out = idx.lsns.filter(_ > afterLsn)
-    java.util.Arrays.sort(out)
-    out.iterator
+    idx.lsns.view.slice(idx.after(afterLsn), idx.lsns.length).iterator
   }
 
   override def headLsn(): Long = WalIndex.of(path, walFormat).maxLsn

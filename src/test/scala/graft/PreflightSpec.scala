@@ -13,7 +13,7 @@ class PreflightSpec extends SparkSpec {
   }
 
   test("a missing table is one named error") {
-    val dir = java.nio.file.Files.createTempDirectory("preflight").toString
+    val dir = tmpDir("preflight")
     Tables.names.filterNot(_ == "events").foreach { n =>
       copyTable(sf, dir, n)
     }
@@ -22,7 +22,7 @@ class PreflightSpec extends SparkSpec {
   }
 
   test("a renamed key column is one named error citing the column") {
-    val dir = java.nio.file.Files.createTempDirectory("preflight").toString
+    val dir = tmpDir("preflight")
     Tables.names.foreach(n => copyTable(sf, dir, n))
     // rewrite region with its key column renamed
     spark.read.parquet(s"$sf/region.parquet")

@@ -369,8 +369,7 @@ class FunctionsSpec extends SparkSpec {
     // direct estimate over the union
     val direct = df.selectExpr("kmv_distinct(u, 64) AS d").head().getLong(0)
     // per-group sketches, persisted through a parquet roundtrip, merged
-    val skPath = java.nio.file.Files
-      .createTempDirectory("kmv_sk").toString
+    val skPath = tmpDir("kmv_sk")
     df.groupBy("g").agg(expr("kmv_sketch(u, 64) AS sk"))
       .write.mode("overwrite").parquet(skPath)
     val viaSketches = spark.read.parquet(skPath)

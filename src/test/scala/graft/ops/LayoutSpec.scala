@@ -177,8 +177,7 @@ class LayoutSpec extends SparkSpec {
 
   test("snapshot table: commits are isolated, time travel reads, " +
       "vacuum retains only referenced files and is loud afterwards") {
-    val t = java.nio.file.Files.createTempDirectory("graft-snap-spec")
-      .toString
+    val t = tmpDir("graft-snap-spec")
     val v1 = Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1)
     val v2 = Seq((1L, "a"), (2L, "B"), (3L, "c")).toDF("id", "v")
       .coalesce(1)
@@ -223,8 +222,7 @@ class LayoutSpec extends SparkSpec {
 
   test("optimistic commit: concurrent append∥append commits BOTH " +
       "with the union visible") {
-    val t = java.nio.file.Files.createTempDirectory("graft-race-spec")
-      .toString
+    val t = tmpDir("graft-race-spec")
     // seed snapshot so both appenders race to re-base on a real head
     Layout.commitSnapshot(
       spark.range(0, 10).toDF("id").coalesce(1), t)
@@ -261,8 +259,7 @@ class LayoutSpec extends SparkSpec {
 
   test("optimistic commit: merge aborts loudly on a stale base " +
       "instead of silently dropping the interleaved commit") {
-    val t = java.nio.file.Files.createTempDirectory("graft-stale-spec")
-      .toString
+    val t = tmpDir("graft-stale-spec")
     import spark.implicits._
     Layout.commitSnapshot(
       Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1), t)
@@ -287,8 +284,7 @@ class LayoutSpec extends SparkSpec {
 
   test("zero-file snapshot: manifest schema line makes an empty " +
       "commit readable; stray snapshots/ files never break reads") {
-    val t = java.nio.file.Files.createTempDirectory("graft-empty-spec")
-      .toString
+    val t = tmpDir("graft-empty-spec")
     import spark.implicits._
     val empty = Seq.empty[(Long, String)].toDF("id", "v")
     assert(Layout.commitSnapshot(empty, t) == 1)
@@ -313,8 +309,7 @@ class LayoutSpec extends SparkSpec {
 
   test("snapshot stats pruning: only overlapping files are read, " +
       "answers never change, empty overlap is empty") {
-    val t = java.nio.file.Files.createTempDirectory("graft-prune-spec")
-      .toString
+    val t = tmpDir("graft-prune-spec")
     // three appends with KNOWN disjoint id ranges = three manifest
     // entries with known [min, max]
     def block(lo: Long): org.apache.spark.sql.DataFrame =
@@ -340,8 +335,7 @@ class LayoutSpec extends SparkSpec {
 
   test("optimize: bin-packs small files into a content-identical " +
       "commit; history intact; idempotent at target; stats recorded") {
-    val t = java.nio.file.Files.createTempDirectory("graft-opt-spec")
-      .toString
+    val t = tmpDir("graft-opt-spec")
     // eight 10-row appends = a streaming-shaped small-files table
     (0 until 8).foreach { k =>
       Layout.appendSnapshot(
@@ -371,8 +365,7 @@ class LayoutSpec extends SparkSpec {
 
   test("optimize conflict rule: re-bases over a concurrent append, " +
       "aborts on a concurrent merge") {
-    val t = java.nio.file.Files.createTempDirectory("graft-optc-spec")
-      .toString
+    val t = tmpDir("graft-optc-spec")
     import spark.implicits._
     (0 until 4).foreach { k =>
       Layout.appendSnapshot(
@@ -409,8 +402,7 @@ class LayoutSpec extends SparkSpec {
   test("schema evolution: append with a new column widens the table; " +
       "old files null-fill; type changes abort; pruned/changes reads " +
       "agree") {
-    val t = java.nio.file.Files.createTempDirectory("graft-evo-spec")
-      .toString
+    val t = tmpDir("graft-evo-spec")
     import spark.implicits._
     Layout.appendSnapshot(
       spark.range(0, 10).toDF("id").withColumn("v", col("id") * 2)
@@ -452,8 +444,7 @@ class LayoutSpec extends SparkSpec {
 
   test("restore: rolls the head back to an earlier image by metadata " +
       "only; idempotent; vacuum keeps shared files; loud on vacuumed") {
-    val t = java.nio.file.Files.createTempDirectory("graft-rest-spec")
-      .toString
+    val t = tmpDir("graft-rest-spec")
     import spark.implicits._
     Layout.commitSnapshot(
       spark.range(0, 20).toDF("id").withColumn("v", col("id") * 2)
@@ -490,8 +481,7 @@ class LayoutSpec extends SparkSpec {
 
   test("stats column identity: sticky across appends, conflicting " +
       "index aborts, mismatched pruned read degrades to read-all") {
-    val t = java.nio.file.Files.createTempDirectory("graft-scol-spec")
-      .toString
+    val t = tmpDir("graft-scol-spec")
     Layout.appendSnapshot(
       spark.range(0, 10).toDF("id").withColumn("v", col("id") * 3)
         .coalesce(1), t, statsCol = "id")
@@ -531,8 +521,7 @@ class LayoutSpec extends SparkSpec {
   test("multi-column stats: statsCol=\"id,v\" records positional " +
       "ranges; pruning and metadata aggregates work on EITHER column; " +
       "a different column LIST (or order) aborts the append") {
-    val t = java.nio.file.Files.createTempDirectory("graft-mcol")
-      .toString
+    val t = tmpDir("graft-mcol")
     // two files, disjoint on BOTH columns: ids [0,9]/v [0,27] and
     // ids [10,19]/v [30,57]
     Layout.appendSnapshot(
@@ -583,8 +572,7 @@ class LayoutSpec extends SparkSpec {
   test("change feed recording: identical upserts emit nothing, the " +
       "recorded diff is exact, and vacuum retires change files with " +
       "their manifest") {
-    val t = java.nio.file.Files.createTempDirectory("graft-cdf")
-      .toString
+    val t = tmpDir("graft-cdf")
     Layout.appendSnapshot(
       spark.range(0L, 10L).toDF("id").withColumn("v", col("id"))
         .coalesce(1), t, statsCol = "id")
@@ -630,8 +618,7 @@ class LayoutSpec extends SparkSpec {
 
   test("zorder optimize: after the rewrite BOTH clustered dimensions " +
       "prune files; a single-column sort only prunes its leading one") {
-    val t = java.nio.file.Files.createTempDirectory("graft-zopt")
-      .toString
+    val t = tmpDir("graft-zopt")
     val df = spark.range(0L, 1024L).toDF("id")
       .withColumn("a", col("id") % 32)
       .withColumn("b", (col("id") / 32).cast("long") % 32)
@@ -660,8 +647,7 @@ class LayoutSpec extends SparkSpec {
       .count() == 256)
     // contrast: a table range-sorted by `a` alone records wide-open b
     // ranges — the b-filter reads everything
-    val t2 = java.nio.file.Files.createTempDirectory("graft-zopt2")
-      .toString
+    val t2 = tmpDir("graft-zopt2")
     Layout.appendSnapshot(
       df.repartitionByRange(8, col("a")).sortWithinPartitions("a"),
       t2, statsCol = "a,b")
@@ -709,8 +695,7 @@ class LayoutSpec extends SparkSpec {
 
   test("file-pruned merge: a small delta rewrites ONLY the files " +
       "whose key range it touches; the rest carry forward by name") {
-    val t = java.nio.file.Files.createTempDirectory("graft-pmerge")
-      .toString
+    val t = tmpDir("graft-pmerge")
     // four disjoint-range files indexed on id: [0,9] [10,19] [20,29] [30,39]
     (0 until 4).foreach { k =>
       Layout.appendSnapshot(
@@ -750,8 +735,7 @@ class LayoutSpec extends SparkSpec {
 
   test("file-pruned merge: a pure out-of-range insert rewrites ZERO " +
       "files — append-shaped cost") {
-    val t = java.nio.file.Files.createTempDirectory("graft-pmerge0")
-      .toString
+    val t = tmpDir("graft-pmerge0")
     Layout.appendSnapshot(
       spark.range(0L, 20L).toDF("id").withColumn("v", col("id"))
         .coalesce(1), t, statsCol = "id")
@@ -767,8 +751,7 @@ class LayoutSpec extends SparkSpec {
 
   test("file-pruned merge: rangeless files and unindexed tables " +
       "rewrite conservatively — pruning never changes answers") {
-    val t = java.nio.file.Files.createTempDirectory("graft-pmergeC")
-      .toString
+    val t = tmpDir("graft-pmergeC")
     Layout.appendSnapshot(
       spark.range(0L, 10L).toDF("id").withColumn("v", col("id"))
         .coalesce(1), t, statsCol = "id")
@@ -794,8 +777,7 @@ class LayoutSpec extends SparkSpec {
       "key-disjoint append is re-based over; an overlapping or " +
       "rangeless one aborts — deterministically via the staged hook") {
     def fresh(): String = {
-      val t = java.nio.file.Files.createTempDirectory("graft-pmergeR")
-        .toString
+      val t = tmpDir("graft-pmergeR")
       Layout.appendSnapshot(
         spark.range(0L, 10L).toDF("id").withColumn("v", col("id"))
           .coalesce(1), t, statsCol = "id")
@@ -844,8 +826,7 @@ class LayoutSpec extends SparkSpec {
 
   test("file-pruned merge: stale base over a DISJOINT append " +
       "self-rebases; over an OVERLAPPING commit aborts") {
-    val t = java.nio.file.Files.createTempDirectory("graft-pmergeS")
-      .toString
+    val t = tmpDir("graft-pmergeS")
     Layout.appendSnapshot(
       spark.range(0L, 10L).toDF("id").withColumn("v", col("id"))
         .coalesce(1), t, statsCol = "id")

@@ -19,8 +19,7 @@ class ManifestScaleSpec extends SparkSpec {
 
   test("a 10,000-file manifest parses, appends, and plans within " +
       "pinned ceilings; history exposes the line count") {
-    val t = java.nio.file.Files.createTempDirectory("graft-mscale")
-      .toString
+    val t = tmpDir("graft-mscale")
     // one REAL commit (readable schema + a real file), then a
     // hand-synthesized head whose 10^4 file lines are fictional —
     // commits and planning only parse manifest TEXT, so the guard
@@ -89,8 +88,7 @@ class ManifestScaleSpec extends SparkSpec {
   test("tier 2 (round 13): a 100,000-file v2 head commits O(delta) — " +
       "appends carry segments by reference, the head file stays flat " +
       "in |files|, and reads resolve through the segment cache") {
-    val t = java.nio.file.Files.createTempDirectory("graft-mscale2")
-      .toString
+    val t = tmpDir("graft-mscale2")
     Layout.appendSnapshot(
       spark.range(0L, 10L).toDF("id").coalesce(1), t, statsCol = "id")
     val conf = spark.sessionState.newHadoopConf()
@@ -178,8 +176,7 @@ class ManifestScaleSpec extends SparkSpec {
   test("tier 3 (round 14): a 1,000,000-file head — 100 TB at 100 MB " +
       "per file — still parses, appends O(delta), and plans within " +
       "pinned ceilings") {
-    val t = java.nio.file.Files.createTempDirectory("graft-mscale4")
-      .toString
+    val t = tmpDir("graft-mscale4")
     Layout.appendSnapshot(
       spark.range(0L, 10L).toDF("id").coalesce(1), t, statsCol = "id")
     val conf = spark.sessionState.newHadoopConf()
@@ -248,8 +245,7 @@ class ManifestScaleSpec extends SparkSpec {
   test("tier 2 (round 14): AUTOMATIC geometric segment merging — " +
       "1000 commits stay at O(log) segments with amortized O(delta) " +
       "metadata cost, no manual compact_manifests ever needed") {
-    val t = java.nio.file.Files.createTempDirectory("graft-mscale3")
-      .toString
+    val t = tmpDir("graft-mscale3")
     Layout.appendSnapshot(
       spark.range(0L, 10L).toDF("id").coalesce(1), t, statsCol = "id")
     val schema = Layout.snapshotInfo(spark, t).get.schema.get

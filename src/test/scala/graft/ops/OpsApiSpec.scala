@@ -565,7 +565,7 @@ class OpsApiSpec extends SparkSpec {
       (3L, "scan scan scan merge"), (4L, "window hash window"),
       (5L, "unrelated words only")).toDF("doc_id", "text")
     val qs = Seq(0 -> Seq("scan", "merge"), 1 -> Seq("window"))
-    val dir = java.nio.file.Files.createTempDirectory("bm25idx").toString
+    val dir = tmpDir("bm25idx")
     TextOps.buildBm25Index(docs, "doc_id", "text")
       .sortWithinPartitions("token")
       .write.mode("overwrite").parquet(s"$dir/postings")

@@ -12,7 +12,7 @@ class AggPushdownSpec extends SparkSpec {
   import spark.implicits._
 
   test("count/min/max are served from footers under the V2 reader") {
-    val dir = java.nio.file.Files.createTempDirectory("aggpush").toString
+    val dir = tmpDir("aggpush")
     Seq.tabulate(10000)(i => (i.toLong, (i % 97) * 1.5))
       .toDF("id", "v").repartition(4)
       .write.mode("overwrite").parquet(dir)

@@ -7,7 +7,7 @@ class MaterializedViewsSpec extends SparkSpec {
   import spark.implicits._
 
   private def fixture(): (String, String) = {
-    val dir = java.nio.file.Files.createTempDirectory("mvspec").toString
+    val dir = tmpDir("mvspec")
     val base = Seq.tabulate(1000)(i =>
       (i.toLong, s"s${i % 3}", s"p${i % 5}", (i % 97) * 1.25))
       .toDF("id", "status", "prio", "price")

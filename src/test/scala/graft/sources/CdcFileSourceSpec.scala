@@ -35,6 +35,24 @@ class CdcFileSourceSpec extends SparkSpec {
     assert(envs.last.op == "u" && envs.last.schema == "schema2")
   }
 
+  test("options are checked at load: unknown walFormat, non-positive maxEventsPerBatch") {
+    val log = Paths.get(tmpDir("cdclog9"), "wal.jsonl")
+    Files.write(log, golden.mkString("\n").getBytes)
+    val format = intercept[IllegalArgumentException] {
+      spark.read.format("graft-cdc").option("walFormat", "pgouput")
+        .load(log.toString)
+    }
+    assert(format.getMessage.contains("walFormat") &&
+      format.getMessage.contains("pgouput"), format.getMessage)
+    for (n <- Seq("0", "-3")) {
+      val cap = intercept[IllegalArgumentException] {
+        spark.readStream.format("graft-cdc").option("maxEventsPerBatch", n)
+          .load(log.toString)
+      }
+      assert(cap.getMessage.contains("maxEventsPerBatch"), cap.getMessage)
+    }
+  }
+
   test("micro-batch stream: incremental LSN offsets drive the CDC pipeline") {
     val log = Paths.get(tmpDir("cdclog2"), "wal.jsonl")
     Files.write(log, golden.mkString("\n").getBytes)
@@ -108,7 +126,7 @@ class CdcFileSourceSpec extends SparkSpec {
     Files.write(log, golden.mkString("\n").getBytes)
     val df = spark.read.format("graft-cdc").load(log.toString)
     assert(df.count() == 5)
-    val stream = new CdcFileMicroBatchStream(log.toString, numPartitions = 3)
+    val stream = new CdcFileMicroBatchStream(CdcOptions(log.toString, numPartitions = 3))
     val parts = stream.planInputPartitions(CdcOffset(0), CdcOffset(5))
     assert(parts.length == 3)
     val ranges = parts.map(_.asInstanceOf[CdcRangePartition])
@@ -123,8 +141,9 @@ class CdcFileSourceSpec extends SparkSpec {
   test("a span past Int.MaxValue still splits into numPartitions ranges") {
     // a live slot's first trigger runs from offset 0 to the slot's LSN;
     // planning a jsonl range reads no file
-    val stream = new CdcFileMicroBatchStream(
-      Paths.get(tmpDir("cdclog8"), "wal.jsonl").toString, 4, walFormat = "jsonl")
+    val stream = new CdcFileMicroBatchStream(CdcOptions(
+      Paths.get(tmpDir("cdclog8"), "wal.jsonl").toString, numPartitions = 4,
+      walFormat = "jsonl"))
     val ranges = stream.planInputPartitions(CdcOffset(0), CdcOffset(3000000000L))
       .map(_.asInstanceOf[CdcRangePartition]).sortBy(_.startExclusive)
     assert(ranges.length == 4, ranges.toSeq)
@@ -184,7 +203,7 @@ class CdcFileSourceSpec extends SparkSpec {
     t.ack(5L)
     assert(t.ackedLsn == 5L)
     // the stream commits offsets through the same seam
-    val stream = new CdcFileMicroBatchStream(log.toString)
+    val stream = new CdcFileMicroBatchStream(CdcOptions(log.toString))
     stream.commit(CdcOffset(4L))
     stream.stop()
   }

@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * 100 TB replay must be a routed, auditable event — not a stream-killer
   * (quarantine) — unless the operator wants stop-the-world (fail, the
   * default). Structurally corrupt lines (no parseable LSN) are indexed
-  * at their predecessor's LSN so offset accounting stays monotone and
-  * the stream advances past the damage either way. */
+  * at their predecessor's LSN — or, before the first parseable one, at
+  * that LSN — so offset accounting stays monotone, batch and stream both
+  * see the line, and the stream advances past the damage either way. */
 class MalformedWalSpec extends SparkSpec {
   import spark.implicits._
 
@@ -55,9 +56,6 @@ class MalformedWalSpec extends SparkSpec {
   test("fail (default): the corrupt line stops the world with context") {
     val df = spark.read.format("graft-cdc").load(writeWal(wal))
     val ex = intercept[Exception] { df.count() }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++
-        messages(e.getCause))
     assert(messages(ex).exists(_.contains("malformed CDC envelope")),
       s"unexpected failure: ${messages(ex).take(3).mkString(" | ")}")
   }
@@ -77,5 +75,57 @@ class MalformedWalSpec extends SparkSpec {
     assert(rows.filter(col("table") === "_quarantine").count() == 2)
     assert(rows.agg(max("lsn")).head().getLong(0) == 5L,
       "the stream must reach the post-damage tail")
+  }
+
+  private def messages(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++
+      messages(e.getCause))
+
+  private def assertMalformed(ex: Throwable): Unit =
+    assert(messages(ex).exists(_.contains("malformed CDC envelope")),
+      s"unexpected failure: ${messages(ex).take(3).mkString(" | ")}")
+
+  /** Each damaged log with the LSNs its quarantine rows carry. */
+  private val damaged = Seq(
+    "mid-log damage" -> (wal, Seq(2L, 4L)),
+    "corrupt first line" -> (Seq("""{"oops the first line""", good(1, 1),
+      good(2, 2), good(3, 3)), Seq(1L)))
+
+  test("batch reads surface the damage under both policies, 1 and 3 ranges") {
+    for ((name, (lines, badLsns)) <- damaged; n <- Seq(1, 3)) withClue(
+        s"$name, $n partitions: ") {
+      val path = writeWal(lines)
+      val df = spark.read.format("graft-cdc").option("numPartitions", n)
+        .option("malformed", "quarantine").load(path)
+      assert(df.count() == lines.size)
+      assert(df.filter(col("table") === "_quarantine").select("lsn").as[Long]
+        .collect().sorted.toSeq == badLsns)
+      assert(Demux.users(df.as[CdcEnvelope]).count() ==
+        lines.size - badLsns.size)
+      assertMalformed(intercept[Exception] {
+        spark.read.format("graft-cdc").option("numPartitions", n)
+          .load(path).count()
+      })
+    }
+  }
+
+  test("the stream surfaces the damage under both policies") {
+    for (((name, (lines, badLsns)), i) <- damaged.zipWithIndex) withClue(
+        s"$name: ") {
+      val path = writeWal(lines)
+      def start(policy: String) = spark.readStream.format("graft-cdc")
+        .option("malformed", policy).load(path).writeStream
+        .option("checkpointLocation", tmpDir("bad-wal-ckpt"))
+        .format("memory").queryName(s"bad_wal_${policy}_$i").start()
+      val q = start("quarantine")
+      q.processAllAvailable(); q.stop()
+      val rows = spark.table(s"bad_wal_quarantine_$i")
+      assert(rows.count() == lines.size)
+      assert(rows.filter(col("table") === "_quarantine").count() ==
+        badLsns.size)
+      val failing = start("fail")
+      try assertMalformed(intercept[Exception] { failing.processAllAvailable() })
+      finally failing.stop()
+    }
   }
 }

@@ -34,8 +34,9 @@ class PgLiveReplicationSpec extends graft.SparkSpec with BeforeAndAfterAll {
 
   override def beforeAll(): Unit = {
     if (!pgAvailable) return
-    dir = java.nio.file.Files.createTempDirectory("pglive").toFile
-    require(sh(s"chown postgres '$dir'") == 0)
+    dir = tmpPath("pglive").toFile
+    // the postgres user must traverse the suite's temp root to reach `dir`
+    require(sh(s"chmod o+x '${dir.getParent}' && chown postgres '$dir'") == 0)
     require(sh(s"cd /tmp && su postgres -c \"initdb -D '$dir/data' " +
       "-U postgres --no-sync\"") == 0, "initdb failed")
     // logical decoding on; loopback only; keep the cluster tiny
@@ -61,7 +62,7 @@ class PgLiveReplicationSpec extends graft.SparkSpec with BeforeAndAfterAll {
   override def afterAll(): Unit = {
     if (started)
       sh(s"cd /tmp && su postgres -c \"pg_ctl -D '$dir/data' -m immediate stop\"")
-    if (dir != null) sh(s"rm -rf '$dir'")
+    super.afterAll()
   }
 
   private def transport() = WalTransport.open(

@@ -25,12 +25,18 @@ final class FakeWalSender(initial: Seq[(Long, Array[Byte])] = Seq.empty)
   def append(lsn: Long, frame: Array[Byte]): Unit =
     synchronized { log = log :+ (lsn -> frame) }
 
+  private val accepted = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** Connections accepted so far. */
+  def connections: Int = accepted.get()
+
   /** Standby Status Updates received, in arrival order. */
   def acked: Seq[Long] = ackLog.asScala.map(_.longValue()).toSeq
 
   private val acceptor = new Thread(() => {
     try while (!server.isClosed) {
       val s = server.accept()
+      accepted.incrementAndGet()
       val t = new Thread(() => serve(s))
       t.setDaemon(true); t.start()
     } catch { case _: SocketException => () /* closed */ }
@@ -159,6 +165,34 @@ class SocketWalTransportSpec extends SparkSpec {
       assert(df.rdd.getNumPartitions == 3)
       assert(df.select("lsn").as[Long].collect().sorted.toSeq ==
         (1L to 6L).toSeq)
+    } finally sender.close()
+  }
+
+  test("a pgoutput stream holds one driver connection plus one per reader") {
+    import PgOutputFrames._
+    val oid = 7
+    val txs = 4
+    // a Relation at LSN 10, then one single-row transaction per 10 LSNs
+    val sender = new FakeWalSender(
+      (10L -> relation(oid, "s1", "users", Seq("id", "full_name"))) +:
+        (1 to txs).flatMap { k =>
+          val lsn = 10L * (k + 1)
+          Seq(lsn -> begin(100 + k, 1600000000000L + k),
+            lsn -> insert(oid, Seq(Some(k.toString), Some(s"user $k"))),
+            lsn -> commit())
+        })
+    try {
+      val q = spark.readStream.format("graft-cdc")
+        .option("walFormat", "pgoutput").option("numPartitions", "2")
+        .option("maxEventsPerBatch", "3").load(sender.url)
+        .writeStream.format("memory").queryName("wal_sock_conns")
+        .option("checkpointLocation", tmpDir("wal-sock-conns")).start()
+      q.processAllAvailable(); q.stop()
+      assert(spark.table("wal_sock_conns").count() == txs)
+      // 3 frames per trigger: (0,20], (20,30], (30,40], (40,50], each
+      // split into two ranges — and the ranges past LSN 10 need the
+      // Relation, so every trigger plans decoder states
+      assert(sender.connections == 1 + 2 * txs)
     } finally sender.close()
   }
 }

@@ -1,17 +1,16 @@
 package graft.sources
 
 import java.nio.file.{Files, Path}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The WAL byte-offset index behind FileWalTransport's range reads:
   * correctness of the offsets themselves (multi-byte UTF-8, blank
   * lines), the malformed-LSN neighborhood policy, range selection with
   * stable LSN order, and (length, mtime) cache invalidation — the
   * property that keeps a regenerated fixture from serving stale spans. */
-class WalIndexSpec extends AnyFunSuite {
+class WalIndexSpec extends graft.SpecTempDirs {
 
   private def write(lines: Seq[String]): Path = {
-    val f = Files.createTempFile("walindex", ".jsonl")
+    val f = tmpFile("walindex", ".jsonl")
     Files.writeString(f, lines.mkString("\n") + "\n")
     f
   }
@@ -51,6 +50,18 @@ class WalIndexSpec extends AnyFunSuite {
     // malformed policy (fail/quarantine) gets to see it
     assert(got.map(_._1) == Seq(4L, 4L))
     assert(new String(got.last._2, "UTF-8") == "garbage-not-json")
+  }
+
+  test("leading lines with no parseable LSN index at the first parseable one") {
+    val f = write(Seq("garbage-1", "garbage-2", env(3), "garbage-3", env(5)))
+    val idx = WalIndex.of(f.toString, "jsonl")
+    assert(idx.lsns.toSeq == Seq(3L, 3L, 3L, 3L, 5L))
+    val head = WalIndex.linesInRange(f.toString, "jsonl", 0L, 3L)
+      .map(l => new String(l._2, "UTF-8"))
+    assert(head.take(2) == Seq("garbage-1", "garbage-2"))
+    // with no parseable LSN anywhere, the first a fresh stream reads
+    val none = write(Seq("garbage-1", "garbage-2"))
+    assert(WalIndex.of(none.toString, "jsonl").lsns.toSeq == Seq(1L, 1L))
   }
 
   test("cache invalidates when the file is rewritten") {
