@@ -9,14 +9,17 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Content-defined chunk boundaries (LBFS/rsync family): positions p
   * (1-based, in code points) where the trailing 4-gram polynomial hash
   * `cp₋₃·31³ + cp₋₂·31² + cp₋₁·31 + cp₀ ≡ 0 (mod modulus)` — plus the
-  * final text length, deduplicated — exactly the cut list of the SQL
-  * fold
+  * final text length, deduplicated. The hash is the exact polynomial,
+  * computed in `Long`: it never wraps, for any code point a 4-byte
+  * sequence decodes to (≤ 0x1FFFFF, invalid leads included). For text
+  * of code points ≤ 0xFFFF the sum stays below 2.02e9, and the cut list
+  * is exactly that of the INT SQL fold
   * `aggregate(transform(split(text,''), ch -> ascii(ch)), ...)` the
-  * operator previously inlined. That fold evaluates an interpreted
-  * lambda with a struct allocation per character (guide §4); this
-  * kernel is one code-point walk per row inside whole-stage codegen
-  * (the loop lives in a static method the generated code calls — no
-  * boxing, no per-char state object).
+  * operator previously inlined; above it that fold would overflow INT.
+  * That fold evaluates an interpreted lambda with a struct allocation
+  * per character (guide §4); this kernel is one code-point walk per row
+  * inside whole-stage codegen (the loop lives in a static method the
+  * generated code calls — no boxing, no per-char state object).
   */
 case class ContentCuts(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -73,7 +76,7 @@ object ContentCuts {
           (cont(i + 2) << 6) | cont(i + 3); i += 4
       }
       pos += 1
-      if (pos >= 4 && (a * 29791 + b * 961 + c * 31 + cp) % modulus == 0)
+      if (pos >= 4 && (a * 29791L + b * 961L + c * 31L + cp) % modulus == 0)
         out.add(pos)
       a = b; b = c; c = cp
     }

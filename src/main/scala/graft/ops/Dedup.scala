@@ -272,9 +272,9 @@ object Dedup {
       sym.groupBy(col("a").as("node"))
         .agg(least(col("a"), min(col("b"))).as("lbl")),
       lblSumMetric)
-    // Round pins are fresh ([[Pin]]): this loop both multiplies (edge
-    // join) and SQUARES (the jump self-join) the size estimate a pin
-    // would otherwise carry every round.
+    // This loop both multiplies (edge join) and squares (the jump
+    // self-join) its size estimate; each round's pin resets it to the
+    // size measured ([[Pin]]), so the estimate never compounds.
     // Each round folds the edge relax AND the pointer jump into ONE
     // min-aggregate by treating the jump as an extra edge set: the
     // label graph lbl(v) → v contributes lbl(lbl(v)) to v exactly like
@@ -311,7 +311,7 @@ object Dedup {
         .select(col("node"), col("lbl"))
       val (next, sRaw) = Pin.observed(
         relax.unionAll(jump).groupBy("node").agg(min("lbl").as("lbl")),
-        lblSumMetric, fresh = true)
+        lblSumMetric)
       val s = Pin.asDecimal(sRaw)
       changed = s.compareTo(prevSum) != 0
       prevSum = s

@@ -656,8 +656,9 @@ object GraphOps {
     // paths halve per round (cc1's pointer-jumping argument, lifted to
     // directed reachability). The fixpoint is unique (min id reaching
     // v), so the shortcut changes round count, never the answer.
-    // The edge and label pins the loop joins with themselves are fresh
-    // ([[Pin]]: their size estimate would square every round).
+    // The loop joins its edge and label pins with themselves; each pin
+    // carries its measured size ([[Pin]]), so no estimate squares from
+    // round to round.
     // BOTH fixpoints advance in ONE tagged relation per round: the
     // forward labels (dir 0, along edges) and backward labels (dir 1,
     // against them) are independent, so tagging rows with a direction
@@ -686,11 +687,11 @@ object GraphOps {
       val ed2 = Pin(
         ed.select(lit(0).as("dir"), col("src"), col("dst"))
           .unionAll(ed.select(lit(1).as("dir"), col("dst").as("src"),
-            col("src").as("dst"))), fresh = true)
+            col("src").as("dst"))))
       var (labels, seedSum) = Pin.observed(remaining
         .select(explode(array(lit(0), lit(1))).as("dir"), col("v"),
           col("v").as("lbl")),
-        lblSumMetric, fresh = true)
+        lblSumMetric)
       var prevSum = Pin.asDecimal(seedSum)
       var changed = true
       var r = 0
@@ -707,7 +708,7 @@ object GraphOps {
         val (next, sRaw) = Pin.observed(
           relax.unionAll(jump)
             .groupBy(col("dir"), col("v")).agg(min("lbl").as("lbl")),
-          lblSumMetric, fresh = true)
+          lblSumMetric)
         val s = Pin.asDecimal(sRaw)
         changed = s.compareTo(prevSum) != 0
         prevSum = s

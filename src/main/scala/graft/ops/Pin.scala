@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, GraftSessionShim, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.storage.StorageLevel
 
 /** The one way the engine materializes an intermediate relation ("pins"
@@ -22,45 +23,44 @@ import org.apache.spark.storage.StorageLevel
   * competes with join and aggregate execution memory (see
   * [[Density.dbscan2D]]).
   *
-  * `fresh = true` drops the size estimate the pin would carry. A local
-  * checkpoint keeps its source plan's estimate (`originStats`), and a
-  * loop that SELF-JOINS its own pin squares that estimate every round:
-  * digits grow ~2^round, and by round ~10 the optimizer's sizeInBytes
-  * BigIntegers have millions of digits — InjectRuntimeFilter's
-  * canBroadcastBySize once pinned a driver core for 20 minutes in
-  * BigInteger.multiply before any task ran. A fresh pin is the same
-  * checkpointed rows under a plan with no estimate (the session's
-  * `spark.sql.defaultSizeInBytes`), no constraints and unknown
-  * partitioning: constant-size stats arithmetic at any round count.
-  * Use it for the round relations of loops that self-join them (the
-  * min-label loops of [[Dedup.dupClusters]] and
-  * [[GraphOps.stronglyConnectedComponents]]).
+  * A pin's plan carries the statistics it measured, not its source
+  * plan's estimate: the row count its own job observed and the bytes
+  * its blocks take in the block managers
+  * ([[GraftSessionShim.withStats]]). A MEMORY_AND_DISK pin's blocks hold
+  * deserialized rows, larger than their row bytes, so the size errs
+  * towards fewer broadcasts. Every round of a loop thus starts from a
+  * measurement, and a loop that self-joins its pin never compounds an
+  * estimate from one round to the next.
   *
-  * [[observed]] computes an aggregate during the pin's own job through
-  * `Dataset.observe`: the aggregate rides the materialization as a
-  * CollectMetrics node, rows pass through unchanged, and the checkpoint
-  * runs through `withAction`, so the observation completes as the job
-  * finishes. An iterative operator's convergence probe (Σ label,
-  * survivor count) then costs no job of its own — under AQE each job is
-  * a driver barrier, and on a loop those barriers are the cost. */
+  * The row count, and [[observed]]'s metric, are computed during the
+  * pin's own job through `Dataset.observe`: the aggregates ride the
+  * materialization as a CollectMetrics node, rows pass through
+  * unchanged, and the checkpoint runs through `withAction`, so the
+  * observation completes as the job finishes. An iterative operator's
+  * convergence probe (Σ label, survivor count) then costs no job of its
+  * own — under AQE each job is a driver barrier, and on a loop those
+  * barriers are the cost. */
 object Pin {
 
   def apply(df: DataFrame,
-      level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-      fresh: Boolean = false): DataFrame = {
-    val ck = atCaller(df.sparkSession.sparkContext)(
-      df.localCheckpoint(eager = true, level))
-    if (fresh) GraftSessionShim.withoutStats(ck) else ck
-  }
+      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
+    pin(df, level)._1
 
   /** [[apply]] with `metric` (an aggregate) computed by the pin's job.
     * Returns the pin and the metric's value, which is null on empty
     * input for aggregates such as `sum`. */
-  def observed(df: DataFrame, metric: Column,
-      fresh: Boolean = false): (DataFrame, Any) = {
+  def observed(df: DataFrame, metric: Column): (DataFrame, Any) =
+    pin(df, StorageLevel.MEMORY_AND_DISK, metric.as("m"))
+
+  private def pin(df: DataFrame, level: StorageLevel,
+      metrics: Column*): (DataFrame, Any) = {
     val obs = Observation()
-    val pinned = apply(df.observe(obs, metric.as("m")), fresh = fresh)
-    (pinned, obs.get("m"))
+    val ck = atCaller(df.sparkSession.sparkContext)(
+      df.observe(obs, count(lit(1)).as("rows"), metrics: _*)
+        .localCheckpoint(eager = true, level))
+    val m = obs.get
+    (GraftSessionShim.withStats(ck, m("rows").asInstanceOf[Long]),
+      m.getOrElse("m", null))
   }
 
   /** Runs `body` with Spark's call site set to the pin's caller. Spark

@@ -160,9 +160,21 @@ final class CdcFileMicroBatchStream(opts: CdcOptions)
     }
   }
 
+  /** The last trigger's plan: Spark asks for one trigger's partitions
+    * several times (once per physical planning of the micro-batch), and
+    * each plan reads the log prefix for decoder states. A restart builds
+    * a new stream, so the memo starts empty there. */
+  private var lastPlan: Option[((Long, Long), Array[InputPartition])] = None
+
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    CdcFileMicroBatchStream.planRanges(transport, opts,
-      start.asInstanceOf[CdcOffset].lsn, end.asInstanceOf[CdcOffset].lsn)
+    synchronized {
+      val span = (start.asInstanceOf[CdcOffset].lsn, end.asInstanceOf[CdcOffset].lsn)
+      lastPlan.collect { case (`span`, plan) => plan }.getOrElse {
+        val plan = CdcFileMicroBatchStream.planRanges(transport, opts, span._1, span._2)
+        lastPlan = Some(span -> plan)
+        plan
+      }
+    }
 
   override def createReaderFactory(): PartitionReaderFactory = new CdcReaderFactory
   override def deserializeOffset(json: String): Offset = CdcOffset(json.toLong)

@@ -3,13 +3,16 @@ package org.apache.spark.sql
 import java.util.concurrent.TimeoutException
 
 import org.apache.spark.SparkContext
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.storage.RDDBlockId
 
-/** The session, plan and listener-bus internals [[graft.queries.StreamRun]],
-  * [[graft.ops.Pin]] and [[graft.QueryProfile]] need, which Spark keeps
+/** The session, plan, block-manager and listener-bus internals
+  * [[graft.queries.StreamRun]], [[graft.ops.Pin]] and
+  * [[graft.QueryProfile]] need, which Spark keeps
   * `private[sql]`/`private[spark]`: reachable only from inside this
   * package. */
 object GraftSessionShim {
@@ -32,13 +35,22 @@ object GraftSessionShim {
       df.queryExecution.analyzed)
 
   /** `pinned` — a frame over one `LogicalRDD`, as a checkpoint returns —
-    * over the same `RDD[InternalRow]` under new attribute ids, without
-    * the size estimate, constraints, partitioning and ordering the
-    * checkpoint carried from its source plan. */
-  def withoutStats(pinned: DataFrame): DataFrame = {
+    * over the same `RDD[InternalRow]`, output, partitioning, ordering and
+    * constraints, with the statistics the pin measured in place of its
+    * source plan's estimate: `rowCount` rows, and as size the bytes the
+    * block managers hold for the RDD's blocks, memory plus disk (what
+    * `RDDInfo` reports). The bytes come from the block-manager master,
+    * which every block put updates before its task ends, not from the
+    * listener-fed status store, which can lag behind the job. */
+  def withStats(pinned: DataFrame, rowCount: Long): DataFrame = {
     val r = pinned.queryExecution.logical.asInstanceOf[LogicalRDD]
     val s = pinned.sparkSession.asInstanceOf[classic.SparkSession]
-    classic.Dataset.ofRows(s, LogicalRDD(r.output.map(_.newInstance()), r.rdd)(s))
+    val bytes = s.sparkContext.env.blockManager.master.getStorageStatus
+      .iterator.flatMap(_.rddBlocks).collect {
+        case (RDDBlockId(id, _), b) if id == r.rdd.id => b.memSize + b.diskSize
+      }.sum
+    classic.Dataset.ofRows(s, r.copy()(s,
+      Some(Statistics(bytes, Some(rowCount))), Some(r.constraints)))
   }
 
   /** Returns once every listener event posted so far has been delivered

@@ -41,6 +41,26 @@ class FunctionsSpec extends SparkSpec {
     // strings are not validated (CAST(binary AS STRING)). Its tail is
     // one final position, as `length` counts it.
     val truncated = "CAST(X'41424344E282' AS STRING)"
+    // Astral code points and an invalid 4-byte lead (F7 BF BF BF decodes
+    // to 0x1FFFFF) take the hash past Int: checked against a plain Long
+    // fold over the code points the bytes encode.
+    def utf8(cps: Int*): Array[Byte] =
+      new String(cps.toArray, 0, cps.length).getBytes("UTF-8")
+    val astral = Seq[Int](0x1F600, 'a', 0x10FFFF, 0x1D11E, 'b', 0x1F600,
+      0x10348, 'c', 0x10FFFF, 0x10FFFF, 'd', 0x1F4A9, 'e', 0x20000, 0x2A6D6, 'f')
+    val bad = Array(0xF7, 0xBF, 0xBF, 0xBF).map(_.toByte)
+    val wide = Seq(
+      utf8(astral: _*) -> astral,
+      (utf8('x', 'y') ++ bad ++ utf8('z') ++ bad ++ bad ++ utf8('w', 'v') ++
+        bad ++ utf8('u')) ->
+        Seq[Int]('x', 'y', 0x1FFFFF, 'z', 0x1FFFFF, 0x1FFFFF, 'w', 'v', 0x1FFFFF, 'u'))
+    def reference(cps: Seq[Int], mod: Int): Seq[Int] = {
+      val cuts = (4 to cps.length).filter { p =>
+        val Seq(a, b, c, d) = cps.slice(p - 4, p).map(_.toLong)
+        (a * 29791 + b * 961 + c * 31 + d) % mod == 0
+      }
+      (cuts :+ cps.length).distinct
+    }
     // Codegen and interpreted eval, each on its own session; local rows
     // would otherwise fold into a driver-side interpreted projection.
     for ((mode, wholeStage) <- Seq("CODEGEN_ONLY" -> "true",
@@ -73,6 +93,13 @@ class FunctionsSpec extends SparkSpec {
       }
       assert(df.filter(expr(s"t = $truncated"))
         .selectExpr("cdc_cuts(t, 7)").head().getSeq[Int](0).last == 5, mode)
+      val bin = s.createDataset(wide.map(_._1))(org.apache.spark.sql.Encoders.BINARY)
+        .toDF("b")
+      for (mod <- Seq(3, 7, 16)) {
+        val got = bin.selectExpr(s"cdc_cuts(CAST(b AS STRING), $mod)")
+          .collect().map(_.getSeq[Int](0)).toSeq
+        assert(got == wide.map(w => reference(w._2, mod)), s"$mode mod=$mod")
+      }
     }
   }
 
