@@ -2,6 +2,8 @@ package graft.cdc
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.StreamRun
+
 /** Runnable end-to-end demo of both CDC pipelines over the reference's
   * golden scenario (README.md:54-114) extended with a delete. Usage:
   * `sbt "runMain graft.cdc.CdcDemo"`. Prints the typed event stream, the
@@ -38,7 +40,7 @@ object CdcDemo {
         else mm.map { case (k, v) => s""""$k": "$v"""" }.mkString("{", ", ", "}")
       s"""{"lsn": ${e.lsn}, "txId": ${e.txId}, "tsMs": ${e.tsMs}, "op": "${e.op}", "db": "${e.db}", "schema": "${e.schema}", "table": "${e.table}", "before": ${m(e.before)}, "after": ${m(e.after)}}"""
     }
-    val demoDir = java.nio.file.Files.createTempDirectory("cdc-demo")
+    val demoDir = java.nio.file.Paths.get(StreamRun.dir(spark, "cdc-demo"))
     val wal = demoDir.resolve("wal.jsonl")
     java.nio.file.Files.write(wal, golden.map(jsonLine).mkString("\n").getBytes)
 

@@ -270,20 +270,6 @@ object Changelog {
         })
   }
 
-  /** SCD Type-2 history materialization: one row per (key, version)
-    * with an LSN validity interval, instead of [[compact]]'s
-    * latest-image-only view. Every c/u/r envelope OPENS a version at
-    * its LSN; the key's next change (any op, deletes included) CLOSES
-    * it via `lead(lsn)`; a delete opens nothing, so a deleted key's
-    * history simply ends with a closed interval. `is_current` marks the
-    * open tail version.
-    *
-    * Plan shape at scale: ONE hash exchange on the key + per-partition
-    * sort for the lead window — the same cost class as the compaction
-    * itself, and embarrassingly partition-parallel (history of one key
-    * never crosses partitions). This is the standard warehouse
-    * "dimension history" consumer the latest-only changelog view can't
-    * serve: as-of queries, audit trails, slowly-changing joins. */
   /** Transactionally-consistent snapshot at an LSN watermark — the
     * all-or-nothing visibility rule a CDC consumer must honor when it
     * materializes "the table as of W": a transaction is visible only if
@@ -321,6 +307,20 @@ object Changelog {
         col("last.et").as("event_type"))
   }
 
+  /** SCD Type-2 history materialization: one row per (key, version)
+    * with an LSN validity interval, instead of [[compact]]'s
+    * latest-image-only view. Every c/u/r envelope OPENS a version at
+    * its LSN; the key's next change (any op, deletes included) CLOSES
+    * it via `lead(lsn)`; a delete opens nothing, so a deleted key's
+    * history simply ends with a closed interval. `is_current` marks the
+    * open tail version.
+    *
+    * Plan shape at scale: ONE hash exchange on the key + per-partition
+    * sort for the lead window — the same cost class as the compaction
+    * itself, and embarrassingly partition-parallel (history of one key
+    * never crosses partitions). This is the standard warehouse
+    * "dimension history" consumer the latest-only changelog view can't
+    * serve: as-of queries, audit trails, slowly-changing joins. */
   def scd2(events: Dataset[CdcEnvelope]): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._

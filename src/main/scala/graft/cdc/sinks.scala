@@ -49,6 +49,10 @@ object Sinks {
     }
   }
 
+  /** Ledger claim keys are (runId, batchId, partition) over this many
+    * pk-hash partitions, fixed so a replay maps rows to the same keys. */
+  private val LedgerPartitions = 32
+
   /** K2: JDBC upsert writer (reference CustomJob.java:183-193 +
     * setup_sink_db1.sql). Spark's jdbc writer has no upsert, so this
     * renders `INSERT ... ON CONFLICT (pk) DO UPDATE` and executes it as a
@@ -61,8 +65,7 @@ object Sinks {
     */
   final class UpsertWriter(table: String, pk: String, columns: Seq[String],
       additive: Set[String] = Set.empty, batchSize: Int = 500,
-      runId: String = "", ledgerPartitions: Int = 32)
-      extends Serializable {
+      runId: String = "") extends Serializable {
     require(columns.contains(pk), s"pk $pk must be among columns")
 
     def upsertSql: String = {
@@ -85,14 +88,14 @@ object Sinks {
     /** Distributed upsert of `batch`: one connection + transaction per
       * partition, `executeBatch` every `batchSize` rows.
       *
-      * Pass the `foreachBatch` micro-batch id as `batchId` to make the
-      * write EXACTLY-ONCE under retries: each partition first claims
+      * `batchId` is the `foreachBatch` micro-batch id; it makes the write
+      * EXACTLY-ONCE under retries: each partition first claims
       * (runId, batchId, partitionId) in a ledger table inside the same
       * transaction; a replayed partition whose claim already exists
       * (data committed, checkpoint didn't advance before the crash)
-      * skips — the standard idempotent-foreachBatch recipe. Required for
-      * additive merge, where blind re-application would double-count;
-      * replace merge is idempotent by PK and may omit it.
+      * skips — the standard idempotent-foreachBatch recipe. Additive
+      * merge depends on it, where blind re-application would
+      * double-count.
       *
       * Two details make the claim key SOUND rather than merely plausible:
       *  - `runId` scopes it to one logical pipeline run (derive it from
@@ -100,28 +103,27 @@ object Sinks {
       *    checkpoint, distinct for a fresh checkpoint or another pipeline
       *    sharing the table — otherwise a reprocessing run's batch 0
       *    collides with the old run's batch 0 and is silently skipped);
-      *  - in exactly-once mode the batch is first hash-repartitioned by
-      *    pk into a FIXED `ledgerPartitions` count, so partition ids are
+      *  - the batch is first hash-repartitioned by pk into a FIXED
+      *    [[LedgerPartitions]] count, so partition ids are
       *    a pure function of the data — a replay after a
       *    shuffle-partition/AQE change still maps rows to the same claim
       *    keys (physical partition ids of the incoming plan are not
       *    replay-stable). */
     def writeBatch(batch: DataFrame, factory: ConnectionFactory,
-        batchId: Long = -1L): Unit = {
+        batchId: Long): Unit = {
       val cols = columns
       val sql = upsertSql
       val ledger = ledgerSql
       val bs = batchSize
       val run = runId
       val stable =
-        if (batchId < 0) batch.select(cols.map(col): _*)
-        else batch.select(cols.map(col): _*).repartition(ledgerPartitions, col(pk))
+        batch.select(cols.map(col): _*).repartition(LedgerPartitions, col(pk))
       stable.foreachPartition { rows: Iterator[Row] =>
         if (rows.hasNext) {
           val conn = factory.connect()
           try {
             conn.setAutoCommit(false)
-            val claimed = batchId < 0 || {
+            val claimed = {
               val ls = conn.prepareStatement(ledger)
               try {
                 ls.setObject(1, s"$run/$batchId/${org.apache.spark.TaskContext.getPartitionId()}")

@@ -212,22 +212,6 @@ object PipelineOps {
     case (row, j) => s"($j, [${row.mkString(", ")}]::DOUBLE[])"
   }.mkString(",\n        ")
 
-  /** Writes the documents table as JSONL once per sf-dir — the corpus
-    * interchange format every public text dataset ships in. The write
-    * is Spark-native (executors write shards; nothing funnels through
-    * the driver), fixture-cached like the CDC WAL. */
-  private def jsonlFixture(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): String = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft-jsonl-fixture-$key")
-    if (!java.nio.file.Files.exists(dir.resolve("_SUCCESS"))) {
-      graft.Tables.registerAll(spark, sfDir)
-      spark.table("documents").write.mode("overwrite").json(dir.toString)
-    }
-    dir.toString
-  }
-
   val defs: Seq[QueryDef] = Seq(
 
     // Exact dedup: hash-groupBy on content digest, keep smallest doc_id.
@@ -1685,16 +1669,14 @@ object PipelineOps {
     // path bit-for-bit (same ppm scores, same tie-breaks).
     QueryDef("rt2_bm25_from_index", (spark, sfDir) => {
       graft.Tables.registerAll(spark, sfDir)
-      val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft-bm25idx-$key")
       val docs = spark.table("documents")
-      if (!java.nio.file.Files.exists(base.resolve("postings"))) {
+      val base = StreamRun.fixture(spark, "bm25idx", "bm25idxv1", sfDir,
+          "documents") { build =>
         TextOps.buildBm25Index(docs, "doc_id", "text")
           .sortWithinPartitions("token") // row-group stats carry token
-          .write.mode("overwrite").parquet(s"$base/postings")
+          .write.mode("overwrite").parquet(s"$build/postings")
         TextOps.bm25IndexStats(docs, "text")
-          .write.mode("overwrite").parquet(s"$base/stats")
+          .write.mode("overwrite").parquet(s"$build/stats")
       }
       TextOps.bm25ServeFromIndex(
         spark.read.parquet(s"$base/postings"),
@@ -2845,10 +2827,8 @@ object PipelineOps {
         col("event_id"), col("user_id").cast("bigint").as("user_id"),
         col("event_type"),
         floor(col("value")).cast("bigint").as("value_floor"))
-      val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-      val path = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft-compact-fixture-$key").toString
-      val compacted = Layout.compactTo(slim, "event_id", path, 3000L)
+      val compacted = Layout.compactTo(slim, "event_id",
+        StreamRun.dir(spark, "z2"), 3000L)
       // file-metadata rows only (~n_files) — constant partition
       val w = Window.partitionBy(lit(1)).orderBy("lo")
       val layout = Layout.fileRanges(compacted, "event_id")
@@ -2883,22 +2863,18 @@ object PipelineOps {
         col("event_id"), col("user_id").cast("bigint").as("user_id"),
         col("event_type"),
         floor(col("value")).cast("bigint").as("value_floor"))
-      val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-      val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft-z3-fixture-$key")
-      val marker = dir.resolve("_COMPACTED")
-      if (!java.nio.file.Files.exists(marker)) {
+      val dir = StreamRun.fixture(spark, "z3", "z3v1", sfDir, "events") {
+          build =>
         slim.filter(col("event_id") % 10 >= 3).orderBy("event_id")
           .coalesce(1)
-          .write.mode("overwrite").parquet(dir.toString)
+          .write.mode("overwrite").parquet(build.toString)
         slim.filter(col("event_id") % 10 < 3).repartition(20)
-          .write.mode("append").parquet(dir.toString)
+          .write.mode("append").parquet(build.toString)
         val smallRows = slim.filter(col("event_id") % 10 < 3).count()
-        Layout.compactSmallFiles(spark, dir.toString, "event_id",
+        Layout.compactSmallFiles(spark, build.toString, "event_id",
           smallRows / 2 + 1)
-        java.nio.file.Files.createFile(marker)
       }
-      val back = spark.read.parquet(dir.toString)
+      val back = spark.read.parquet(dir)
       val nFiles = back.select(input_file_name()).distinct().count()
       back.crossJoin(broadcast(Seq(nFiles).toDF("n_files")))
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -2919,9 +2895,7 @@ object PipelineOps {
     // a small-table special case, is what eliminates the shuffle).
     QueryDef("bk1_bucketed_join", (spark, sfDir) => {
       graft.Tables.registerAll(spark, sfDir)
-      val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft-bucketed-$key")
+      val base = StreamRun.dir(spark, "bk1")
       val c = Layout.bucketedWrite(spark.table("customer"), "c_custkey",
         s"graft_bk_customer", s"$base/customer", buckets = 8)
       val o = Layout.bucketedWrite(spark.table("orders"), "o_custkey",
@@ -5375,11 +5349,17 @@ object PipelineOps {
     // read), graded field-for-field against the parquet original —
     // the interchange path every public text corpus arrives through.
     // Schema'd read, no inference pass: at 100 TB, schema inference
-    // would be a second full scan.
+    // would be a second full scan. The JSONL write is Spark-native
+    // (executors write shards; nothing funnels through the driver) and
+    // cached like the CDC WAL.
     QueryDef("js1_jsonl_roundtrip", (spark, sfDir) => {
       graft.Tables.registerAll(spark, sfDir)
-      val schema = spark.table("documents").schema
-      spark.read.schema(schema).json(jsonlFixture(spark, sfDir))
+      val docs = spark.table("documents")
+      val fix = StreamRun.fixture(spark, "jsonl", "jsonlv1", sfDir,
+          "documents") { build =>
+        docs.write.mode("overwrite").json(build.toString)
+      }
+      spark.read.schema(docs.schema).json(fix)
         .select("doc_id", "text", "lang", "source", "n_chars")
         .orderBy("doc_id")
     }, Some("""SELECT doc_id, text, lang, source, n_chars
@@ -5393,13 +5373,11 @@ object PipelineOps {
     // is what's being hashed.
     QueryDef("or1_orc_roundtrip", (spark, sfDir) => {
       graft.Tables.registerAll(spark, sfDir)
-      val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-      val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft-orc-fixture-$key")
-      if (!java.nio.file.Files.exists(dir.resolve("_SUCCESS"))) {
-        spark.table("documents").write.mode("overwrite").orc(dir.toString)
+      val dir = StreamRun.fixture(spark, "orc", "orcv1", sfDir,
+          "documents") { build =>
+        spark.table("documents").write.mode("overwrite").orc(build.toString)
       }
-      spark.read.orc(dir.toString)
+      spark.read.orc(dir)
         .select("doc_id", "text", "lang", "source", "n_chars")
         .orderBy("doc_id")
     }, Some("""SELECT doc_id, text, lang, source, n_chars
@@ -5420,18 +5398,16 @@ object PipelineOps {
     // instead of killing the 1000-executor job at hour three).
     QueryDef("cv1_csv_roundtrip", (spark, sfDir) => {
       graft.Tables.registerAll(spark, sfDir)
-      val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-      val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft-csv-fixture-$key")
-      if (!java.nio.file.Files.exists(dir.resolve("_SUCCESS"))) {
+      val dir = StreamRun.fixture(spark, "csv", "csvv1", sfDir,
+          "documents") { build =>
         spark.table("documents").write.mode("overwrite")
           .option("header", "true").option("nullValue", "\\N")
-          .csv(dir.toString)
+          .csv(build.toString)
       }
       spark.read.schema(spark.table("documents").schema)
         .option("header", "true").option("nullValue", "\\N")
         .option("mode", "PERMISSIVE")
-        .csv(dir.toString)
+        .csv(dir)
         .select("doc_id", "text", "lang", "source", "n_chars")
         .orderBy("doc_id")
     }, Some("""SELECT doc_id, text, lang, source, n_chars
@@ -5450,14 +5426,12 @@ object PipelineOps {
     // storage — worth grading).
     QueryDef("pt1_partition_pruning", (spark, sfDir) => {
       graft.Tables.registerAll(spark, sfDir)
-      val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-      val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft-part-fixture-$key")
-      if (!java.nio.file.Files.exists(dir.resolve("_SUCCESS"))) {
+      val dir = StreamRun.fixture(spark, "part", "partv1", sfDir,
+          "documents") { build =>
         spark.table("documents").write.mode("overwrite")
-          .partitionBy("lang").parquet(dir.toString)
+          .partitionBy("lang").parquet(build.toString)
       }
-      spark.read.parquet(dir.toString)
+      spark.read.parquet(dir)
         .filter(col("lang") === "en")
         .select("doc_id", "text", "lang", "source", "n_chars")
         .orderBy("doc_id")
@@ -5477,21 +5451,19 @@ object PipelineOps {
     // oracle computes the same week straight off the events table.
     QueryDef("pt2_dynamic_pruning", (spark, sfDir) => {
       graft.Tables.registerAll(spark, sfDir)
-      val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-      val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft-dpp-fixture-$key")
-      if (!java.nio.file.Files.exists(dir.resolve("fact").resolve("_SUCCESS"))) {
+      val dir = StreamRun.fixture(spark, "dpp", "dppv1", sfDir, "events") {
+          build =>
         val ev = spark.table("events")
           .withColumn("day", col("ts").cast("date"))
         ev.write.mode("overwrite").partitionBy("day")
-          .parquet(dir.resolve("fact").toString)
+          .parquet(s"$build/fact")
         ev.select(col("day")).distinct()
           .withColumn("dom", dayofmonth(col("day")).cast("bigint"))
           .coalesce(1)
-          .write.mode("overwrite").parquet(dir.resolve("dim").toString)
+          .write.mode("overwrite").parquet(s"$build/dim")
       }
-      val fact = spark.read.parquet(dir.resolve("fact").toString)
-      val dim = spark.read.parquet(dir.resolve("dim").toString)
+      val fact = spark.read.parquet(s"$dir/fact")
+      val dim = spark.read.parquet(s"$dir/dim")
         .filter(col("dom") <= 7)
       fact.join(dim, "day")
         .groupBy("day")
@@ -5919,32 +5891,21 @@ object PipelineOps {
     // the source directly.
     QueryDef("ov1_partition_backfill", (spark, sfDir) => {
       graft.Tables.registerAll(spark, sfDir)
-      val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft-backfill-$key")
-      val tab = s"$base/events_by_day"
       val src = spark.table("events")
         .select(col("event_id"), col("user_id"),
           col("value").cast("decimal(18,2)").as("value"),
           col("ts").cast("date").as("day"))
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(tab))) {
+      val base = StreamRun.fixture(spark, "backfill", "backfillv1", sfDir,
+          "events") { build =>
+        val tab = s"$build/events_by_day"
         src.write.partitionBy("day").mode("overwrite").parquet(tab)
         // backfill: recompute days 10-12 with corrected (doubled) values
-        val patch = src
-          .filter(col("day").between("2024-01-10", "2024-01-12"))
+        src.filter(col("day").between("2024-01-10", "2024-01-12"))
           .withColumn("value", (col("value") * 2).cast("decimal(18,2)"))
-        val prev = spark.conf.getOption(
-          "spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try patch.write.partitionBy("day").mode("overwrite").parquet(tab)
-        finally prev match {
-          case Some(v) => spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", v)
-          case None => spark.conf.unset(
-            "spark.sql.sources.partitionOverwriteMode")
-        }
+          .write.partitionBy("day").mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic").parquet(tab)
       }
-      spark.read.parquet(tab)
+      spark.read.parquet(s"$base/events_by_day")
         .groupBy("day")
         .agg(count(lit(1)).as("n_events"),
           sum(col("value")).cast("double").as("sum_value"))
@@ -5974,14 +5935,13 @@ object PipelineOps {
     // the base table.
     QueryDef("mv1_rollup_rewrite", (spark, sfDir) => {
       graft.Tables.registerAll(spark, sfDir)
-      val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft-mv-$key")
       val src = s"$sfDir/orders.parquet"
-      if (!java.nio.file.Files.exists(base.resolve("mv")))
-        graft.plans.MaterializedViews.build(spark, src, s"$base/mv",
+      val base = StreamRun.fixture(spark, "mv", "mvv1", sfDir, "orders") {
+          build =>
+        graft.plans.MaterializedViews.build(spark, src, s"$build/mv",
           Seq("o_orderstatus", "o_orderpriority"),
           Seq("CAST(o_totalprice AS DECIMAL(18,2))"))
+      }
       graft.plans.MaterializedViews.register(spark, src, s"$base/mv",
         Seq("o_orderstatus", "o_orderpriority"),
         Seq("o_totalprice:DECIMAL(18,2)"))
@@ -6545,7 +6505,31 @@ object PipelineOps {
     // the oracle pins seq/token totals independently — windows are
     // dense per shard, so n_seqs = Σ_shards ceil(tokens/budget) without
     // replaying the packing.
-    QueryDef.views("sh1_shard_roundtrip",
+    QueryDef("sh1_shard_roundtrip", (spark, sfDir) => {
+      graft.Tables.registerAll(spark, sfDir)
+      val docs = spark.table("documents").select(col("doc_id"),
+        expr("filter(split(text, ' '), x -> length(x) > 0)").as("words"))
+      val packed = TextOps.assembleSequences(docs, "doc_id", "words",
+          budget = 64, shards = 8)
+        .select(col("shard"), col("window_id"), expr(
+          "transform(tokens, t -> CAST(xxhash64(t) & 2147483647 AS INT))")
+          .as("token_ids"))
+      val dir = StreamRun.fixture(spark, "shards", "shardsv1", sfDir,
+          "documents") { build =>
+        graft.sources.ShardFiles.write(
+          packed.repartition(4, col("shard")), build.toString)
+      }
+      val back = graft.sources.ShardFiles.read(spark, dir)
+      val nFiles = graft.sources.ShardFiles.listCommitted(
+        java.nio.file.Paths.get(dir)).size.toLong
+      packed.as("a")
+        .join(back.as("b"), Seq("shard", "window_id"), "full_outer")
+        .agg(count(lit(1)).cast("bigint").as("n_seqs"),
+          sum(size(col("b.token_ids"))).cast("bigint").as("n_tokens"),
+          lit(nFiles).cast("bigint").as("n_files"),
+          sum(when(col("a.token_ids") <=> col("b.token_ids"), 0L)
+            .otherwise(1L)).cast("bigint").as("n_mismatch"))
+    }, Some(
       """WITH d AS (SELECT doc_id % 8 AS shard,
         |             CAST(len(list_filter(string_split(text, ' '),
         |               x -> len(x) > 0)) AS BIGINT) AS n
@@ -6556,32 +6540,7 @@ object PipelineOps {
         |       CAST(sum(tok) AS BIGINT) AS n_tokens,
         |       CAST(4 AS BIGINT) AS n_files,
         |       CAST(0 AS BIGINT) AS n_mismatch
-        |FROM s""".stripMargin) { spark =>
-      val docs = spark.table("documents").select(col("doc_id"),
-        expr("filter(split(text, ' '), x -> length(x) > 0)").as("words"))
-      val packed = TextOps.assembleSequences(docs, "doc_id", "words",
-          budget = 64, shards = 8)
-        .select(col("shard"), col("window_id"), expr(
-          "transform(tokens, t -> CAST(xxhash64(t) & 2147483647 AS INT))")
-          .as("token_ids"))
-      val inputKey = spark.table("documents").inputFiles.sorted
-        .mkString(",").replaceAll("[^A-Za-z0-9.]", "_").takeRight(64)
-      val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft-shards-fixture-$inputKey")
-      if (!java.nio.file.Files.exists(dir.resolve("_SUCCESS"))) {
-        graft.sources.ShardFiles.write(
-          packed.repartition(4, col("shard")), dir.toString)
-      }
-      val back = graft.sources.ShardFiles.read(spark, dir.toString)
-      val nFiles = graft.sources.ShardFiles.listCommitted(dir).size.toLong
-      packed.as("a")
-        .join(back.as("b"), Seq("shard", "window_id"), "full_outer")
-        .agg(count(lit(1)).cast("bigint").as("n_seqs"),
-          sum(size(col("b.token_ids"))).cast("bigint").as("n_tokens"),
-          lit(nFiles).cast("bigint").as("n_files"),
-          sum(when(col("a.token_ids") <=> col("b.token_ids"), 0L)
-            .otherwise(1L)).cast("bigint").as("n_mismatch"))
-    },
+        |FROM s""".stripMargin)),
 
     // The id-space roundtrip: tokens → deterministic vocab ids →
     // tokens → detokenized text. Grades the vocab BIJECTION on top of

@@ -1,7 +1,6 @@
 package graft.queries
 
-import java.nio.file.{DirectoryNotEmptyException, FileAlreadyExistsException,
-  Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
@@ -224,9 +223,12 @@ object StreamRun {
     if (!Files.exists(dir)) {
       val b = Paths.get(StreamRun.dir(spark, s"$kind-build"))
       build(b)
+      // a racer that published first leaves `dir` non-empty; rename(2)
+      // then fails with EEXIST or ENOTEMPTY, which Java reports as
+      // FileAlreadyExistsException or a plain FileSystemException
       try Files.move(b, dir, StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: FileAlreadyExistsException
-          | _: DirectoryNotEmptyException => delete(b) }
+      catch { case _: java.io.IOException if Files.isDirectory(dir) =>
+        delete(b) }
     }
     dir.toString
   }

@@ -11,8 +11,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.storage.RDDBlockId
 
 /** The session, plan, block-manager and listener-bus internals
-  * [[graft.queries.StreamRun]], [[graft.ops.Pin]] and
-  * [[graft.QueryProfile]] need, which Spark keeps
+  * [[graft.queries.StreamRun]], [[graft.ops.Pin]], [[graft.QueryProfile]]
+  * and [[graft.tools.DumpPlans]] need, which Spark keeps
   * `private[sql]`/`private[spark]`: reachable only from inside this
   * package. */
 object GraftSessionShim {
@@ -52,6 +52,14 @@ object GraftSessionShim {
     classic.Dataset.ofRows(s, r.copy()(s,
       Some(Statistics(bytes, Some(rowCount))), Some(r.constraints)))
   }
+
+  /** The physical plan of the last micro-batch of the active stream `id`,
+    * whichever session of `spark`'s context started it (a
+    * [[graft.queries.StreamRun]] clone included, which the caller's
+    * `streams.get` cannot see); None once the stream has stopped. */
+  def lastBatchPlan(spark: SparkSession, id: java.util.UUID): Option[String] =
+    Option(spark.asInstanceOf[classic.SparkSession].sharedState
+      .activeStreamingQueries.get(id)).map(_.explainInternal(false))
 
   /** Returns once every listener event posted so far has been delivered
     * to every listener; throws `TimeoutException` after 10 s. Readers of

@@ -34,7 +34,7 @@ class PreflightSpec extends SparkSpec {
 
   test("docs/PLANS.md covers the query inventory exactly") {
     // The plan-audit completeness gate: a query landing without a
-    // regenerated plan dump (sbt "Test/runMain graft.DumpPlans") fails
+    // regenerated plan dump (sbt "runMain graft.tools.DumpPlans") fails
     // here, so PLANS.md can never silently drift from the inventory.
     val txt = java.nio.file.Files.readString(
       java.nio.file.Paths.get("docs/PLANS.md"))

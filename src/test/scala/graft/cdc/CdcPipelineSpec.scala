@@ -146,13 +146,15 @@ class CdcPipelineSpec extends SparkSpec {
     val target = Sinks.MemoryDb.table(ns, "user_count_by_pgschema")
     val batch = spark.createDataFrame(Seq(("schema1", 2L), ("schema2", 1L)))
       .toDF("pgschema", "user_count")
-    w.writeBatch(batch, factory)
-    w.writeBatch(batch, factory) // at-least-once replay: same final state
+    w.writeBatch(batch, factory, batchId = 0L)
+    // the same rows again under a new batch id (the ledger does not skip
+    // them): the replace merge rewrites them to the same final state
+    w.writeBatch(batch, factory, batchId = 1L)
     assert(target.snapshot.view.mapValues(_("user_count")).toMap ==
       Map("schema1" -> 2L, "schema2" -> 1L))
     val update = spark.createDataFrame(Seq(("schema1", 5L)))
       .toDF("pgschema", "user_count")
-    w.writeBatch(update, factory)
+    w.writeBatch(update, factory, batchId = 2L)
     assert(target.snapshot("schema1")("user_count") == 5L)
     assert(target.snapshot("schema2")("user_count") == 1L)
   }
@@ -168,8 +170,8 @@ class CdcPipelineSpec extends SparkSpec {
     def deltas(d: Long*) = spark.createDataFrame(
       d.zipWithIndex.map { case (v, i) => (s"schema$i", v) })
       .toDF("pgschema", "user_count")
-    w.writeBatch(deltas(2L, 1L), factory)
-    w.writeBatch(deltas(1L, -1L), factory)
+    w.writeBatch(deltas(2L, 1L), factory, batchId = 0L)
+    w.writeBatch(deltas(1L, -1L), factory, batchId = 1L)
     assert(target.snapshot.view.mapValues(_("user_count")).toMap ==
       Map("schema0" -> 3L, "schema1" -> 0L))
   }

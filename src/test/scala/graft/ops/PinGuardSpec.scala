@@ -5,26 +5,42 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[Pin]] is the one way `src/main` materializes a relation: no other
-  * file checkpoints, persists or caches a frame, or rebuilds one from
-  * its `.rdd`. */
+/** One mechanism per concern, checked over the `src/main` sources:
+  * [[Pin]] is the one way to materialize a relation (no other file
+  * checkpoints, persists or caches a frame, or rebuilds one from its
+  * `.rdd`), and [[graft.queries.StreamRun]] the one owner of temp dirs
+  * (no other file names `java.io.tmpdir` or makes a temp directory). */
 class PinGuardSpec extends AnyFunSuite {
 
   private val materializing =
     """(?s)\.localCheckpoint\(|\.persist\(|\.cache\(\)|createDataFrame\([^)]*\.rdd""".r
 
-  test("only Pin.scala materializes a relation in src/main") {
+  private val tempDirs = """java\.io\.tmpdir|createTempDirectory""".r
+
+  private lazy val sources: Seq[Path] = {
     val root = Paths.get("src/main")
     assert(Files.isDirectory(root), root.toAbsolutePath)
-    val sources = Files.walk(root).iterator.asScala
+    Files.walk(root).iterator.asScala
       .filter(p => Files.isRegularFile(p) &&
         (p.toString.endsWith(".scala") || p.toString.endsWith(".java")))
       .toSeq
-    assert(sources.exists(_.getFileName.toString == "Pin.scala"))
-    def hits(p: Path) = materializing.findAllIn(Files.readString(p)).toSeq
-    val offenders = sources.filter(_.getFileName.toString != "Pin.scala")
+  }
+
+  /** Asserts that `pattern` matches in `owner` and in no other file. */
+  private def onlyIn(owner: String, pattern: scala.util.matching.Regex): Unit = {
+    assert(sources.exists(_.getFileName.toString == owner))
+    def hits(p: Path) = pattern.findAllIn(Files.readString(p)).toSeq
+    val offenders = sources.filter(_.getFileName.toString != owner)
       .map(p => p -> hits(p)).filter(_._2.nonEmpty)
     assert(offenders.isEmpty, offenders.mkString("\n"))
-    assert(hits(sources.find(_.getFileName.toString == "Pin.scala").get).nonEmpty)
+    assert(hits(sources.find(_.getFileName.toString == owner).get).nonEmpty)
+  }
+
+  test("only Pin.scala materializes a relation in src/main") {
+    onlyIn("Pin.scala", materializing)
+  }
+
+  test("only StreamRun.scala makes temp dirs in src/main") {
+    onlyIn("StreamRun.scala", tempDirs)
   }
 }

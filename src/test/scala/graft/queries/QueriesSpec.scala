@@ -21,8 +21,8 @@ class QueriesSpec extends SparkSpec {
     // java.io.tmpdir as they found them: streaming and temp-table entries
     // run in StreamRun's cloned session (no conf write the caller could
     // observe mid-stream, no temp view) and under its per-context root,
-    // which goes when the harness scope ends. Keyed fixture caches, named
-    // after the sf dir they derive from, are the only dirs that persist.
+    // which goes when the harness scope ends. StreamRun.fixture's keyed
+    // caches (`graft-<kind>-fixture-*`) are the only dirs that persist.
     // Nor may an entry leave a cached relation in the shared session:
     // any later plan that matched it would be served from that cache.
     graft.Tables.registerAll(spark, sf)
@@ -66,8 +66,7 @@ class QueriesSpec extends SparkSpec {
     val t0 = System.nanoTime()
     StreamRun.release(spark.sparkContext)
     info(f"harness root removal: ${(System.nanoTime() - t0) / 1e6}%.1f ms")
-    val sfKey = sf.replaceAll("[^A-Za-z0-9.]", "_")
-    val leaked = (graftDirs -- dirs0).filterNot(_.contains(sfKey))
+    val leaked = (graftDirs -- dirs0).filterNot(_.matches("graft-.+-fixture-.+"))
     assert(leaked.isEmpty, s"dirs left in $tmp: ${leaked.toSeq.sorted}")
   }
 

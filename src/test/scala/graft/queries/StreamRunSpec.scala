@@ -1,6 +1,8 @@
 package graft.queries
 
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
@@ -13,7 +15,9 @@ import graft.SparkSpec
   * each run's own session, so two runs in one caller session, started
   * together with different sizings, each keep their own partition count
   * — where a set/restore of the shared session's conf hands one stream
-  * the other's count. */
+  * the other's count. And [[StreamRun.fixture]], the one cross-run cache:
+  * a failed build publishes nothing, racing builds publish one complete
+  * dir, and a touched source table gets a new key. */
 class StreamRunSpec extends SparkSpec {
 
   /** A stateful aggregation over `rows` replayed ids, sized at `density`;
@@ -54,5 +58,92 @@ class StreamRunSpec extends SparkSpec {
       }
       assert(spark.conf.get("spark.sql.shuffle.partitions") == callerPartitions)
     } finally pool.shutdown()
+  }
+
+  /** A source table `t.parquet` (a plain file: the cache only
+    * fingerprints it) in a fresh sf dir, and a kind no other run uses. */
+  private def fixtureSource(): (String, Path, String) = {
+    val sf = tmpPath("sf")
+    val table = Files.write(sf.resolve("t.parquet"), Array[Byte](1, 2, 3))
+    (sf.toString, table, s"spec${java.util.UUID.randomUUID().toString.take(8)}")
+  }
+
+  /** The published dirs of `kind` in java.io.tmpdir. */
+  private def published(kind: String): Seq[Path] =
+    new java.io.File(sys.props("java.io.tmpdir"))
+      .listFiles((_, n) => n.startsWith(s"graft-$kind-fixture-")).toSeq
+      .map(_.toPath)
+
+  private def deleteAll(dirs: Seq[Path]): Unit =
+    dirs.foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(d.toFile))
+
+  test("a fixture build that throws publishes nothing; the next call builds") {
+    val (sf, _, kind) = fixtureSource()
+    val builds = new AtomicInteger()
+    try {
+      val e = intercept[IllegalStateException] {
+        StreamRun.fixture(spark, kind, "v1", sf, "t") { b =>
+          builds.incrementAndGet()
+          Files.write(b.resolve("half"), Array[Byte](1))
+          throw new IllegalStateException("build failed")
+        }
+      }
+      assert(e.getMessage == "build failed")
+      assert(published(kind).isEmpty, "a failed build was published")
+      val dir = StreamRun.fixture(spark, kind, "v1", sf, "t") { b =>
+        builds.incrementAndGet()
+        Files.write(b.resolve("whole"), Array[Byte](1))
+      }
+      assert(builds.get == 2)
+      assert(published(kind) == Seq(Paths.get(dir)))
+      assert(new java.io.File(dir).list().toSeq == Seq("whole"))
+    } finally deleteAll(published(kind))
+  }
+
+  test("two concurrent fixture builds publish one complete dir") {
+    val (sf, _, kind) = fixtureSource()
+    val pool = Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      // both callers find no fixture and build; the barrier holds each
+      // build until the other has started, so both reach the publish
+      val building = new CyclicBarrier(2)
+      val calls = Seq("a", "b").map(who => Future(
+        StreamRun.fixture(spark, kind, "v1", sf, "t") { b =>
+          Files.writeString(b.resolve("first"), who)
+          building.await(60, TimeUnit.SECONDS)
+          Files.writeString(b.resolve("second"), who)
+        }))
+      val dirs = calls.map(Await.result(_, Duration(2, TimeUnit.MINUTES)))
+      assert(dirs.distinct.size == 1, dirs)
+      val d = Paths.get(dirs.head)
+      assert(published(kind) == Seq(d))
+      assert(d.toFile.list().toSet == Set("first", "second"))
+      val contents = Seq("first", "second").map(f => Files.readString(d.resolve(f)))
+      assert(contents.distinct.size == 1 && Set("a", "b")(contents.head),
+        s"published dir mixes builds: $contents")
+    } finally { pool.shutdown(); deleteAll(published(kind)) }
+  }
+
+  test("touching the source table's size or mtime gives a new fixture key") {
+    val (sf, table, kind) = fixtureSource()
+    val builds = new AtomicInteger()
+    def fixture() = StreamRun.fixture(spark, kind, "v1", sf, "t") { b =>
+      Files.write(b.resolve("n"), Array(builds.incrementAndGet().toByte))
+    }
+    try {
+      val mtime = table.toFile.lastModified()
+      val first = fixture()
+      assert(fixture() == first && builds.get == 1, "an untouched table rebuilt")
+      assert(table.toFile.setLastModified(mtime - 60000L))
+      val touched = fixture()
+      Files.write(table, Array[Byte](1, 2, 3, 4))
+      assert(table.toFile.setLastModified(mtime - 60000L))
+      val grown = fixture()
+      assert(Seq(first, touched, grown).distinct.size == 3,
+        Seq(first, touched, grown))
+      assert(builds.get == 3)
+      assert(published(kind).map(_.toString).toSet == Set(first, touched, grown))
+    } finally deleteAll(published(kind))
   }
 }
