@@ -35,7 +35,16 @@ object CdcPipeline {
     * the writer's `foreachPartition` + `executeBatch` path, so no data
     * rides through the driver. Compaction emits a delta at most once per
     * (key, lsn) — replays are LSN-filtered — which makes the additive
-    * merge idempotent under at-least-once redelivery. */
+    * merge idempotent under at-least-once redelivery.
+    *
+    * The stream is stateful, so Spark runs its batches without AQE, and
+    * the sums arrive hash-partitioned by `pgschema` into the stream's
+    * recorded partition count: the writer claims and writes in those
+    * partitions, straight from the final aggregate (scan, state and
+    * aggregate: 3 stages per trigger). A restart under a changed
+    * `spark.sql.shuffle.partitions` re-partitions the sums into the
+    * recorded count first, so a replayed batch claims the same ledger
+    * keys ([[Sinks.UpsertWriter.writeBatch]]). */
   def liveCountPerSchema(
       events: Dataset[CdcEnvelope],
       factory: Sinks.ConnectionFactory,

@@ -5,8 +5,11 @@ import java.sql.{Connection, PreparedStatement, Statement}
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Sinks mirroring the reference's two output paths. */
 object Sinks {
@@ -49,8 +52,10 @@ object Sinks {
     }
   }
 
-  /** Ledger claim keys are (runId, batchId, partition) over this many
-    * pk-hash partitions, fixed so a replay maps rows to the same keys. */
+  /** The pk-hash partition count a batch is written in when it has no
+    * replay-stable count of its own: it comes from outside a stream, or
+    * its stream runs with AQE (see [[UpsertWriter.writeBatch]]). Fixed,
+    * so a replay maps rows to the same claim keys. */
   private val LedgerPartitions = 32
 
   /** K2: JDBC upsert writer (reference CustomJob.java:183-193 +
@@ -103,12 +108,19 @@ object Sinks {
       *    checkpoint, distinct for a fresh checkpoint or another pipeline
       *    sharing the table — otherwise a reprocessing run's batch 0
       *    collides with the old run's batch 0 and is silently skipped);
-      *  - the batch is first hash-repartitioned by pk into a FIXED
-      *    [[LedgerPartitions]] count, so partition ids are
-      *    a pure function of the data — a replay after a
-      *    shuffle-partition/AQE change still maps rows to the same claim
-      *    keys (physical partition ids of the incoming plan are not
-      *    replay-stable). */
+      *  - the partition a row is written in is murmur3(pk) mod P, with
+      *    P fixed for the run, so a replay maps rows to the same claim
+      *    keys. For a stream's batch P is the partition count the stream
+      *    records in its offset log and restores on every restart (its
+      *    stateful operators' count; a restart under another
+      *    `spark.sql.shuffle.partitions` changes only the stream's
+      *    stateless shuffles). Spark turns AQE off for stateful streams,
+      *    so their batches keep the partitions they are planned with:
+      *    Pipeline B's per-batch `groupBy(pk)` already hash-partitions
+      *    by pk into P and writes straight from its final aggregate,
+      *    with no shuffle of its own ([[claimPartitions]]). Claim keys
+      *    read `runId/batchId/partition/P`, so keys counted in different
+      *    partitionings never collide. */
     def writeBatch(batch: DataFrame, factory: ConnectionFactory,
         batchId: Long): Unit = {
       val cols = columns
@@ -116,8 +128,7 @@ object Sinks {
       val ledger = ledgerSql
       val bs = batchSize
       val run = runId
-      val stable =
-        batch.select(cols.map(col): _*).repartition(LedgerPartitions, col(pk))
+      val (stable, parts) = claimPartitions(batch.select(cols.map(col): _*))
       stable.foreachPartition { rows: Iterator[Row] =>
         if (rows.hasNext) {
           val conn = factory.connect()
@@ -126,7 +137,7 @@ object Sinks {
             val claimed = {
               val ls = conn.prepareStatement(ledger)
               try {
-                ls.setObject(1, s"$run/$batchId/${org.apache.spark.TaskContext.getPartitionId()}")
+                ls.setObject(1, s"$run/$batchId/${TaskContext.getPartitionId()}/$parts")
                 ls.executeUpdate() == 1 // 0 = already applied → skip
               } finally ls.close()
             }
@@ -151,6 +162,30 @@ object Sinks {
               throw e
           } finally conn.close()
         }
+      }
+    }
+
+    /** `rows` in the partitions it is written in, and their count P.
+      * A batch of a stream whose session runs without AQE counts in the
+      * stream's recorded partition count: written in place when its
+      * executed plan already hash-partitions by `pk` alone into that many
+      * partitions, else hash-repartitioned by `pk` into them. Any other
+      * batch — AQE may coalesce its partitions, or it comes from outside
+      * a stream — is hash-repartitioned into [[LedgerPartitions]]. */
+    private def claimPartitions(rows: DataFrame): (DataFrame, Int) = {
+      val qe = rows.queryExecution
+      val conf = qe.sparkSession.sessionState.conf
+      conf.getConf(SQLConf.STATEFUL_SHUFFLE_PARTITIONS_INTERNAL) match {
+        case Some(n) if !conf.adaptiveExecutionEnabled =>
+          val plan = qe.executedPlan
+          plan.outputPartitioning match {
+            case HashPartitioning(Seq(e), `n`)
+                if e.semanticEquals(plan.output(columns.indexOf(pk))) =>
+              (rows, n)
+            case _ => (rows.repartition(n, col(pk)), n)
+          }
+        case _ =>
+          (rows.repartition(LedgerPartitions, col(pk)), LedgerPartitions)
       }
     }
   }
