@@ -58,6 +58,9 @@ object Sinks {
     * so a replay maps rows to the same claim keys. */
   private val LedgerPartitions = 32
 
+  /** Rows per `executeBatch` round-trip of the K2 upsert writer. */
+  private val BatchSize = 500
+
   /** K2: JDBC upsert writer (reference CustomJob.java:183-193 +
     * setup_sink_db1.sql). Spark's jdbc writer has no upsert, so this
     * renders `INSERT ... ON CONFLICT (pk) DO UPDATE` and executes it as a
@@ -69,7 +72,7 @@ object Sinks {
     * (delta accumulation — see [[CdcPipeline.liveCountPerSchema]]).
     */
   final class UpsertWriter(table: String, pk: String, columns: Seq[String],
-      additive: Set[String] = Set.empty, batchSize: Int = 500,
+      additive: Set[String] = Set.empty,
       runId: String = "") extends Serializable {
     require(columns.contains(pk), s"pk $pk must be among columns")
 
@@ -91,7 +94,7 @@ object Sinks {
         "ON CONFLICT (batch_key) DO NOTHING"
 
     /** Distributed upsert of `batch`: one connection + transaction per
-      * partition, `executeBatch` every `batchSize` rows.
+      * partition, `executeBatch` every [[BatchSize]] rows.
       *
       * `batchId` is the `foreachBatch` micro-batch id; it makes the write
       * EXACTLY-ONCE under retries: each partition first claims
@@ -126,7 +129,6 @@ object Sinks {
       val cols = columns
       val sql = upsertSql
       val ledger = ledgerSql
-      val bs = batchSize
       val run = runId
       val (stable, parts) = claimPartitions(batch.select(cols.map(col): _*))
       stable.foreachPartition { rows: Iterator[Row] =>
@@ -150,7 +152,7 @@ object Sinks {
                   while (i < cols.length) { st.setObject(i + 1, r.get(i)); i += 1 }
                   st.addBatch()
                   n += 1
-                  if (n % bs == 0) st.executeBatch()
+                  if (n % BatchSize == 0) st.executeBatch()
                 }
                 st.executeBatch()
               } finally st.close()

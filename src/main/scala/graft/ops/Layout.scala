@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSessionShim}
 import org.apache.spark.sql.functions._
 
 /** Data-layout operators: Z-order (Morton) clustering for multi-column
@@ -1155,18 +1155,19 @@ object Layout {
     val stage = new org.apache.hadoop.fs.Path(root, s".stage-$tok")
     // TIMESTAMP columns must stage as TIMESTAMP_MICROS: Spark's
     // legacy INT96 default writes NO column statistics (the index
-    // would refuse) and the graft-snapshot DSv2 reader has no sane
-    // INT96 decode path. Parquet exposes no per-write option, so the
-    // session conf is pinned around the staging write and restored.
-    val tsConf = "spark.sql.parquet.outputTimestampType"
+    // would refuse). Parquet exposes no per-write option, so such a
+    // frame is written through a clone of its session that carries
+    // the setting — the caller's session conf is never written.
     val hasTs = df.schema.exists(f =>
       f.dataType == org.apache.spark.sql.types.TimestampType ||
         f.dataType == org.apache.spark.sql.types.TimestampNTZType)
-    val spark0 = df.sparkSession
-    val prevTs = if (hasTs) Some(spark0.conf.get(tsConf)) else None
-    if (hasTs) spark0.conf.set(tsConf, "TIMESTAMP_MICROS")
-    try df.write.mode("overwrite").parquet(stage.toString)
-    finally prevTs.foreach(spark0.conf.set(tsConf, _))
+    val staging = if (!hasTs) df else {
+      val clone = GraftSessionShim.cloneSession(df.sparkSession, None)
+      clone.conf.set("spark.sql.parquet.outputTimestampType",
+        "TIMESTAMP_MICROS")
+      GraftSessionShim.rehome(df, clone)
+    }
+    staging.write.mode("overwrite").parquet(stage.toString)
     val staged = fs.listStatus(stage).filter(st => st.isFile &&
       st.getPath.getName.endsWith(".parquet"))
     // integral and STRING types only: a floating stats value silently

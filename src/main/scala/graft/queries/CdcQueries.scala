@@ -72,46 +72,63 @@ object CdcQueries {
     def op(eventId: Long, eventType: String): String =
       if (eventId % 7 == 0) "d" else if (eventType == "signup") "c" else "u"
 
-    val enc = java.util.Base64.getEncoder
-
-    val wj = Files.newBufferedWriter(dir.resolve("wal.jsonl"))
-    try rows.foreach { case (id, uid, et) =>
+    // one users-table envelope per event: deletes carry only the key in
+    // `before`, other ops carry {id, event_type} in `after`
+    def userEnvelope(lsn: Long, id: Long, uid: Long, et: String): String = {
       val o = op(id, et)
       val before = if (o == "d") s"""{"id":"$uid"}""" else "{}"
       val after =
         if (o == "d") "{}" else s"""{"id":"$uid","event_type":"$et"}"""
-      wj.write(s"""{"lsn":$id,"txId":${id / 100},"tsMs":${id * 1000},""" +
-        s""""op":"$o","db":"experiment","schema":"public","table":"users",""" +
-        s""""before":$before,"after":$after}""")
+      envelope(lsn, id / 100, id * 1000, o, "users", before, after)
+    }
+
+    val wj = Files.newBufferedWriter(dir.resolve("wal.jsonl"))
+    try rows.foreach { case (id, uid, et) =>
+      wj.write(userEnvelope(id, id, uid, et))
       wj.newLine()
     } finally wj.close()
 
-    val wp = Files.newBufferedWriter(dir.resolve("wal.pgoutput"))
-    try {
-      val oid = 101
-      // Relation metadata precedes all DML, as on a real replication
-      // socket; Begin/Commit share the DML frame's LSN (they emit no
-      // envelope — stable sort keeps file order within an LSN).
-      wp.write("0 " + enc.encodeToString(
-        PgOutputFrames.relation(oid, "public", "users",
-          Seq("id", "event_type"))))
-      wp.newLine()
-      def frame(lsn: Long, bytes: Array[Byte]): Unit = {
-        wp.write(s"$lsn " + enc.encodeToString(bytes)); wp.newLine()
-      }
-      rows.foreach { case (id, uid, et) =>
-        frame(id, PgOutputFrames.begin((id / 100).toInt, id * 1000))
-        op(id, et) match {
-          case "c" => frame(id, PgOutputFrames.insert(oid,
-            Seq(Some(uid.toString), Some(et))))
-          case "u" => frame(id, PgOutputFrames.update(oid, None,
-            Seq(Some(uid.toString), Some(et))))
-          case _ => frame(id, PgOutputFrames.delete(oid,
-            Seq(Some(uid.toString), None)))
+    val enc = java.util.Base64.getEncoder
+
+    // One pgoutput log of the users table: the Relation message
+    // precedes all DML, as on a real replication socket, then one
+    // Begin/DML/Commit per event; Begin/Commit share the DML frame's
+    // LSN (they emit no envelope — stable sort keeps file order within
+    // an LSN). `midLog` gives the frames of the one mid-log event,
+    // emitted before the first event at or past `midAt`; with `email`,
+    // events from there on carry a third column.
+    def pgLog(file: String, oid: Int, midAt: Long = Long.MaxValue,
+        email: Boolean = false)(
+        midLog: Long => Seq[(Long, Array[Byte])] = _ => Nil): Unit = {
+      val w = Files.newBufferedWriter(dir.resolve(file))
+      try {
+        def frame(lsn: Long, bytes: Array[Byte]): Unit = {
+          w.write(s"$lsn " + enc.encodeToString(bytes)); w.newLine()
         }
-        frame(id, PgOutputFrames.commit())
-      }
-    } finally wp.close()
+        frame(0, PgOutputFrames.relation(oid, "public", "users",
+          Seq("id", "event_type")))
+        var past = false
+        rows.foreach { case (id, uid, et) =>
+          if (!past && id >= midAt) {
+            midLog(id).foreach { case (lsn, bytes) => frame(lsn, bytes) }
+            past = true
+          }
+          val third =
+            if (past && email) Seq(Some(s"$uid@example.com")) else Nil
+          frame(id, PgOutputFrames.begin((id / 100).toInt, id * 1000))
+          val v = Seq(Some(uid.toString), Some(et)) ++ third
+          op(id, et) match {
+            case "c" => frame(id, PgOutputFrames.insert(oid, v))
+            case "u" => frame(id, PgOutputFrames.update(oid, None, v))
+            case _ => frame(id, PgOutputFrames.delete(oid,
+              Seq(Some(uid.toString), None) ++ third.map(_ => None)))
+          }
+          frame(id, PgOutputFrames.commit())
+        }
+      } finally w.close()
+    }
+
+    pgLog("wal.pgoutput", 101)()
 
     // wal_evo.pgoutput — the cdc4 log: the same stream, but the table's
     // schema CHANGES mid-log (a column added upstream — the ALTER TABLE
@@ -121,43 +138,14 @@ object CdcQueries {
     // columns, rows at/after it three. Decoding correctly requires the
     // relation catalog to be REPLAYED IN LSN ORDER — including by the
     // parallel range readers, whose boundary states must snapshot the
-    // catalog version in force at each split point.
-    val we = Files.newBufferedWriter(dir.resolve("wal_evo.pgoutput"))
-    try {
-      val oid = 102
-      val mid = (rows.head._1 + rows.last._1) / 2
-      def frame(lsn: Long, bytes: Array[Byte]): Unit = {
-        we.write(s"$lsn " + enc.encodeToString(bytes)); we.newLine()
-      }
-      we.write("0 " + enc.encodeToString(
-        PgOutputFrames.relation(oid, "public", "users",
-          Seq("id", "event_type"))))
-      we.newLine()
-      var evolved = false
-      rows.foreach { case (id, uid, et) =>
-        if (!evolved && id >= mid) {
-          // the DDL point: same-LSN Relation precedes the DML in file
-          // order, as on the wire
-          frame(id, PgOutputFrames.relation(oid, "public", "users",
-            Seq("id", "event_type", "email")))
-          evolved = true
-        }
-        frame(id, PgOutputFrames.begin((id / 100).toInt, id * 1000))
-        val v2 = Seq(Some(uid.toString), Some(et),
-          Some(s"$uid@example.com"))
-        val v1 = Seq(Some(uid.toString), Some(et))
-        op(id, et) match {
-          case "c" => frame(id,
-            PgOutputFrames.insert(oid, if (evolved) v2 else v1))
-          case "u" => frame(id,
-            PgOutputFrames.update(oid, None, if (evolved) v2 else v1))
-          case _ => frame(id, PgOutputFrames.delete(oid,
-            if (evolved) Seq(Some(uid.toString), None, None)
-            else Seq(Some(uid.toString), None)))
-        }
-        frame(id, PgOutputFrames.commit())
-      }
-    } finally we.close()
+    // catalog version in force at each split point. The DDL point's
+    // Relation shares the first evolved event's LSN and precedes its
+    // DML in file order, as on the wire.
+    pgLog("wal_evo.pgoutput", 102,
+        midAt = (rows.head._1 + rows.last._1) / 2, email = true) { id =>
+      Seq(id -> PgOutputFrames.relation(102, "public", "users",
+        Seq("id", "event_type", "email")))
+    }
 
     // wal_trunc.pgoutput — the cdc5 log: the same stream with a TRUNCATE
     // mid-log (the bulk-reset every reference-data table eventually
@@ -170,37 +158,12 @@ object CdcQueries {
     // be vacuous) — at 98% both populations are nonzero at every sf
     // (sf0.01: 96 survivors / 29 truncated). The frame's own LSN is
     // floor-1 so the id-derived DML LSNs partition cleanly around it.
-    val wt = Files.newBufferedWriter(dir.resolve("wal_trunc.pgoutput"))
-    try {
-      val oid = 103
-      val mid = rows.head._1 + (98L * (rows.last._1 - rows.head._1)) / 100L
-      def frame(lsn: Long, bytes: Array[Byte]): Unit = {
-        wt.write(s"$lsn " + enc.encodeToString(bytes)); wt.newLine()
-      }
-      wt.write("0 " + enc.encodeToString(
-        PgOutputFrames.relation(oid, "public", "users",
-          Seq("id", "event_type"))))
-      wt.newLine()
-      var truncated = false
-      rows.foreach { case (id, uid, et) =>
-        if (!truncated && id >= mid) {
-          frame(mid - 1, PgOutputFrames.begin((mid / 100).toInt, mid * 1000))
-          frame(mid - 1, PgOutputFrames.truncate(Seq(oid)))
-          frame(mid - 1, PgOutputFrames.commit())
-          truncated = true
-        }
-        frame(id, PgOutputFrames.begin((id / 100).toInt, id * 1000))
-        op(id, et) match {
-          case "c" => frame(id, PgOutputFrames.insert(oid,
-            Seq(Some(uid.toString), Some(et))))
-          case "u" => frame(id, PgOutputFrames.update(oid, None,
-            Seq(Some(uid.toString), Some(et))))
-          case _ => frame(id, PgOutputFrames.delete(oid,
-            Seq(Some(uid.toString), None)))
-        }
-        frame(id, PgOutputFrames.commit())
-      }
-    } finally wt.close()
+    val floor = rows.head._1 + (98L * (rows.last._1 - rows.head._1)) / 100L
+    pgLog("wal_trunc.pgoutput", 103, midAt = floor) { _ =>
+      Seq(PgOutputFrames.begin((floor / 100).toInt, floor * 1000),
+        PgOutputFrames.truncate(Seq(103)), PgOutputFrames.commit())
+        .map(floor - 1 -> _)
+    }
 
     // wal_snap.jsonl — the cdc3 log: an initial snapshot segment (op='r',
     // one envelope per pre-existing key, lsn = key id — all below
@@ -216,24 +179,24 @@ object CdcQueries {
       val snapIds = (uids.filter(_ % 2 == 0) ++
         uids.filter(_ % 5 == 0).map(_ + 100000L)).sorted
       snapIds.foreach { sid =>
-        ws.write(s"""{"lsn":$sid,"txId":0,"tsMs":0,"op":"r",""" +
-          s""""db":"experiment","schema":"public","table":"users",""" +
-          s""""before":{},"after":{"id":"$sid","event_type":"snapshot"}}""")
+        ws.write(envelope(sid, 0, 0, "r", "users", "{}",
+          s"""{"id":"$sid","event_type":"snapshot"}"""))
         ws.newLine()
       }
       rows.foreach { case (id, uid, et) =>
-        val o = op(id, et)
-        val lsn = SnapStreamBase + id
-        val before = if (o == "d") s"""{"id":"$uid"}""" else "{}"
-        val after =
-          if (o == "d") "{}" else s"""{"id":"$uid","event_type":"$et"}"""
-        ws.write(s"""{"lsn":$lsn,"txId":${id / 100},"tsMs":${id * 1000},""" +
-          s""""op":"$o","db":"experiment","schema":"public","table":"users",""" +
-          s""""before":$before,"after":$after}""")
+        ws.write(userEnvelope(SnapStreamBase + id, id, uid, et))
         ws.newLine()
       }
     } finally ws.close()
   }
+
+  /** One Debezium-style change envelope of the fixture logs, as a jsonl
+    * line of the `experiment.public` database. */
+  private def envelope(lsn: Long, txId: Long, tsMs: Long, op: String,
+      table: String, before: String, after: String): String =
+    s"""{"lsn":$lsn,"txId":$txId,"tsMs":$tsMs,"op":"$op",""" +
+      s""""db":"experiment","schema":"public","table":"$table",""" +
+      s""""before":$before,"after":$after}"""
 
   /** LSN offset separating the cdc3 snapshot segment from its stream:
     * snapshot reads use lsn = user_id (bounded by the key space), streamed
@@ -1900,9 +1863,7 @@ object CdcQueries {
         val maxId = rows.map(_._1).max
         def line(lsn: Long, table: String, op: String,
             before: String, after: String): String =
-          s"""{"lsn":$lsn,"txId":${lsn / 100},"tsMs":${lsn * 1000},""" +
-            s""""op":"$op","db":"experiment","schema":"public",""" +
-            s""""table":"$table","before":$before,"after":$after}"""
+          envelope(lsn, lsn / 100, lsn * 1000, op, table, before, after)
         // facts: one envelope per event (delete every 7th), plus a later
         // amount REVISION for every 5th live fact — the update path.
         val factLines = rows.flatMap { case (id, uid) =>

@@ -115,8 +115,6 @@ final class GraftRowLevelScan(op: GraftRowLevelOperation, path: String,
       // resurrect masked rows
       val dvByRel = Layout.snapshotDvPaths(spark, path, asOf)
       val dvpByRel = Layout.snapshotDvpPaths(spark, path, asOf)
-      val physOf = Layout.snapshotInfo(spark, path, asOf)
-        .map(_.colMap).getOrElse(Map.empty)
       val all = Layout.snapshotFileStats(spark, path, asOf)
         .map(e => (e._1, e._2))
       val planned = kept match {
@@ -127,13 +125,14 @@ final class GraftRowLevelScan(op: GraftRowLevelOperation, path: String,
       planned.map { case (abs, rel) =>
         SnapshotFilePartition(abs,
           dvFiles = dvByRel.getOrElse(rel, Nil),
-          physOf = physOf,
           dvpFiles = dvpByRel.getOrElse(rel, Nil)): InputPartition
       }.toArray
     }
-    override def createReaderFactory(): PartitionReaderFactory =
-      new SnapshotFileReaderFactory(required,
-        SnapshotHadoopConf.broadcast())
+    override def createReaderFactory(): PartitionReaderFactory = {
+      val info = Layout.snapshotInfo(SparkSession.active, path, asOf)
+      SnapshotFileReaderFactory(path, required,
+        info.map(_.colMap).getOrElse(Map.empty), sidecars = info)
+    }
   }
 }
 
@@ -167,7 +166,6 @@ final class GraftReplaceDataWrite(op: GraftRowLevelOperation,
       Layout.registerTok(tok)
       SnapshotWriterFactory(fs.makeQualified(stage).toString,
         info.schema(), statsCol, partCols, tok,
-        SnapshotHadoopConf.broadcast(),
         Layout.snapshotInfo(SparkSession.active, path)
           .map(_.colMap).getOrElse(Map.empty))
     }

@@ -3,6 +3,7 @@ package graft.sources
 import java.util
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -10,10 +11,14 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.{streaming => rstreaming}
+import org.apache.spark.sql.execution.datasources.{FileFormat, OutputWriterFactory, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.ops.Layout
 
@@ -45,10 +50,11 @@ import graft.ops.Layout
   *
   * Batch reads (`spark.read.format("graft-snapshot")`) serve the
   * current head (or `asOfSnapshot`) through the same per-file readers.
-  * The reader decodes parquet via the parquet-hadoop Group API against
-  * the MANIFEST-recorded schema — atomic types only (the table's own
-  * writer records what it wrote, so a mismatch is a corrupt table, not
-  * a cast decision).
+  * Every parquet byte is read and written by Spark's own
+  * `ParquetFileFormat`, the codec Layout's API uses, against the
+  * MANIFEST-recorded schema — atomic types only (the table's own
+  * writers record what they wrote, so a mismatch is a corrupt table,
+  * not a cast decision).
   */
 class GraftSnapshotProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-snapshot"
@@ -485,20 +491,17 @@ final class GraftSnapshotScanBuilder(path: String,
         require(to <= asOf,
           s"graft-snapshot: endingSnapshot $to is beyond the pinned " +
             s"snapshot $asOf")
-        val physOf = Layout.snapshotInfo(spark, path, asOf)
-          .map(_.colMap).getOrElse(Map.empty)
         Layout.changeFeedPlan(spark, path, from, to)
           .map { case (f, op) =>
-            // recorded change files (op None) carry their own written
-            // names; synthesized data-file reads use the mapping
-            SnapshotFilePartition(f, op.orNull,
-              physOf = if (op.isEmpty) Map.empty else physOf)
-              : InputPartition
+            SnapshotFilePartition(f, op.orNull): InputPartition
           }.toArray
       }
+      // recorded change files (op None) carry their own written names;
+      // synthesized data-file reads use the mapping
       override def createReaderFactory(): PartitionReaderFactory =
-        new SnapshotFileReaderFactory(required,
-          SnapshotHadoopConf.broadcast())
+        SnapshotFileReaderFactory(path, required,
+          Layout.snapshotInfo(SparkSession.active, path, asOf)
+            .map(_.colMap).getOrElse(Map.empty), changeFeed = true)
     } else new Batch {
       override def planInputPartitions(): Array[InputPartition] = {
         val spark = SparkSession.active
@@ -514,8 +517,6 @@ final class GraftSnapshotScanBuilder(path: String,
         }
         val dvByRel = Layout.snapshotDvPaths(spark, path, asOf)
         val dvpByRel = Layout.snapshotDvpPaths(spark, path, asOf)
-        val physOf = Layout.snapshotInfo(spark, path, asOf)
-          .map(_.colMap).getOrElse(Map.empty)
         Layout.snapshotFileStats(spark, path, asOf)
           .filter { case (_, rel, stats) =>
             partKeep(rel) &&
@@ -537,13 +538,15 @@ final class GraftSnapshotScanBuilder(path: String,
             }
           }
           .map(e => SnapshotFilePartition(e._1,
-            dvFiles = dvByRel.getOrElse(e._2, Nil), physOf = physOf,
+            dvFiles = dvByRel.getOrElse(e._2, Nil),
             dvpFiles = dvpByRel.getOrElse(e._2, Nil))
             : InputPartition).toArray
       }
-      override def createReaderFactory(): PartitionReaderFactory =
-        new SnapshotFileReaderFactory(required,
-          SnapshotHadoopConf.broadcast())
+      override def createReaderFactory(): PartitionReaderFactory = {
+        val info = Layout.snapshotInfo(SparkSession.active, path, asOf)
+        SnapshotFileReaderFactory(path, required,
+          info.map(_.colMap).getOrElse(Map.empty), sidecars = info)
+      }
     }
     override def toMicroBatchStream(
         checkpointLocation: String): rstreaming.MicroBatchStream =
@@ -664,34 +667,40 @@ final class SnapshotMicroBatchStream(path: String, schema: StructType,
           "the new schema; emitted batches up to this point used " +
           "the old names.")
       val physOf = headInfo.map(_.colMap).getOrElse(Map.empty)
-      if (changeFeed)
+      if (changeFeed) {
         // per-commit plan: recorded change files (own _op column) for
         // merge/restore commits, new data files with synthesized
         // op='added' for appends
+        factory = SnapshotFileReaderFactory(path, schema, physOf,
+          changeFeed = true)
         Layout.changeFeedPlan(spark, path, s, e).map { case (f, op) =>
-          SnapshotFilePartition(f, op.orNull,
-            physOf = if (op.isEmpty) Map.empty else physOf)
-            : InputPartition
+          SnapshotFilePartition(f, op.orNull): InputPartition
         }.toArray
-      else {
+      } else {
         // the END snapshot's deletion sidecars apply to the streamed
         // files (matching the batch twin readSnapshotChanges): a fresh
         // file that gained a delete sidecar inside the same window
         // must not stream rows the equivalent batch read masks
         val dvByRel = Layout.snapshotDvPaths(spark, path, e)
         val dvpByRel = Layout.snapshotDvpPaths(spark, path, e)
+        factory = SnapshotFileReaderFactory(path, schema, physOf,
+          sidecars = Layout.snapshotInfo(spark, path, e))
         Layout.changedFilePaths(spark, path, s, e)
           .map { case (abs, rel) =>
             SnapshotFilePartition(abs,
               dvFiles = dvByRel.getOrElse(rel, Nil),
-              physOf = physOf,
               dvpFiles = dvpByRel.getOrElse(rel, Nil)): InputPartition
           }.toArray
       }
     }
   }
+  // the reader factory of the last planned batch, built for its column
+  // mapping and sidecars: Spark plans a batch's partitions before it
+  // asks for the factory (a factory that misses a partition's sidecars
+  // fails the read, never unmasks a row)
+  @volatile private var factory: PartitionReaderFactory = _
   override def createReaderFactory(): PartitionReaderFactory =
-    new SnapshotFileReaderFactory(schema, SnapshotHadoopConf.broadcast())
+    Option(factory).getOrElse(SnapshotFileReaderFactory(path, schema))
   override def deserializeOffset(json: String): rstreaming.Offset =
     SnapshotOffset(json.toInt)
   override def commit(end: rstreaming.Offset): Unit = ()
@@ -701,21 +710,20 @@ final class SnapshotMicroBatchStream(path: String, schema: StructType,
 /** One data (or recorded-change) file to read. `op` (change-feed
   * batches only): the constant `_op` to synthesize for every row —
   * null when the file carries its own `_op` column or the scan is a
-  * plain table read. `dvFiles`: ABSOLUTE paths of the file's deletion
-  * sidecars (merge-on-read) — the reader drops rows whose key appears
-  * in any of them. */
+  * plain table read. `dvFiles` / `dvpFiles`: ABSOLUTE paths of the
+  * file's keyed and positional deletion sidecars (merge-on-read) — the
+  * reader drops rows whose key appears in any keyed one and rows whose
+  * physical ordinal a positional one lists for this file. */
 final case class SnapshotFilePartition(file: String, op: String = null,
-    dvFiles: Seq[String] = Nil,
-    physOf: Map[String, String] = Map.empty,
-    dvpFiles: Seq[String] = Nil)
+    dvFiles: Seq[String] = Nil, dvpFiles: Seq[String] = Nil)
     extends InputPartition
 
 object SnapshotFileReaderFactory {
   /** Is `dt` a column type the snapshot reader/writer pair carries?
-    * Atomic types only; DECIMAL up to precision 18 (the INT64
-    * unscaled rendering — also what the data-skipping index stores,
-    * Layout.DecRange); DATE as INT32 epoch days; TIMESTAMP (both
-    * LTZ and NTZ) as INT64 TIMESTAMP_MICROS. */
+    * Atomic types only; DECIMAL up to precision 18 (what the
+    * data-skipping index stores as an unscaled long, Layout.DecRange);
+    * DATE as INT32 epoch days; TIMESTAMP (both LTZ and NTZ) as INT64
+    * TIMESTAMP_MICROS. */
   private[sources] def supports(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | DoubleType | FloatType |
       BooleanType | StringType | DateType | TimestampType |
@@ -730,271 +738,200 @@ object SnapshotFileReaderFactory {
         "BOOLEAN, STRING, DATE, TIMESTAMP, TIMESTAMP_NTZ, " +
         "DECIMAL(<=18, s))")
   }
-}
 
-/** One reader per committed data file (executor-side): parquet-hadoop's
-  * Group API decoded straight into InternalRow against the (possibly
-  * column-pruned) schema. The read is PROJECTED to the required columns
-  * by intersecting the file's own parquet schema with the wanted names
-  * (one footer open — also how files predating an evolved column stay
-  * readable: the projection simply omits what the file lacks and the
-  * decode null-fills it). A zero-column read (count(*) pushdown shape)
-  * projects to the file's narrowest-to-hand first column and emits
-  * empty rows, so row counts survive full pruning. Field positions are
-  * resolved once from the first record's (projected) schema, then
-  * reused for every row. */
-final class SnapshotFileReaderFactory(schema: StructType,
-    hadoopConf: org.apache.spark.broadcast
-      .Broadcast[SerializableHadoopConf])
-    extends PartitionReaderFactory {
+  /** Spark's parquet reader for `required`, built on the driver and
+    * shipped to executors: rows (never batches) and no pushed filters
+    * — every filter stays residual. A column the file lacks reads null
+    * (files predating an evolved column); an INT or FLOAT file column
+    * widens to a BIGINT or DOUBLE `required` one (ALTER COLUMN TYPE
+    * stays metadata-only); the row index column yields each row's
+    * physical ordinal in the file. */
+  private[sources] final class FileRead(spark: SparkSession,
+      val required: StructType) extends Serializable {
+    private val read = new ParquetFileFormat()
+      .buildReaderWithPartitionValues(spark, required, new StructType(),
+        required, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf())
 
-  /** Load the union of the sidecars' masked keys (single column;
-    * integrals boxed as Long, strings as String) — bounded by the
-    * masked-row count, loaded once per reader task. Returns the key
-    * column's NAME (recorded as the sidecar's field name) + the set. */
-  private def loadDvKeys(paths: Seq[String],
-      conf: org.apache.hadoop.conf.Configuration)
-      : (String, java.util.HashSet[Any]) = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val set = new java.util.HashSet[Any]()
-    var keyName: String = null
-    paths.foreach { p =>
-      val r = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-          new org.apache.hadoop.fs.Path(p))
-        .withConf(conf).build()
-      try {
-        var g = r.read()
-        while (g != null) {
-          if (keyName == null) keyName = g.getType.getFieldName(0)
-          if (g.getFieldRepetitionCount(0) > 0) {
-            g.getType.getType(0).asPrimitiveType()
-              .getPrimitiveTypeName match {
-              case INT64 => set.add(g.getLong(0, 0))
-              case INT32 => set.add(g.getInteger(0, 0).toLong)
-              case _ => set.add(new String(
-                g.getBinary(0, 0).getBytes, "UTF-8"))
-            }
-          }
-          g = r.read()
-        }
-      } finally r.close()
+    /** `file` read whole as one split, so row indexes are ordinals. */
+    def rows(file: String,
+        conf: org.apache.hadoop.conf.Configuration)
+        : Iterator[InternalRow] = {
+      val p = new org.apache.hadoop.fs.Path(file)
+      val len = p.getFileSystem(conf).getFileStatus(p).getLen
+      read(PartitionedFile(InternalRow.empty,
+        SparkPath.fromPathString(file), 0L, len, fileSize = len))
     }
-    (keyName, set)
   }
 
-  /** Load THIS file's masked physical row ordinals from positional
-    * sidecars — rows are (`__gf_fb` basename, `__gf_pos` ordinal)
-    * pairs, filtered to the partition's own file. Bounded by the
-    * masked-row count, loaded once per reader task. */
+  private val RowIndex = StructField(
+    ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType)
+  private val PositionSchema = new StructType()
+    .add("__gf_fb", StringType).add("__gf_pos", LongType)
+
+  /** The reader factory of one scan, built on the DRIVER. `schema`:
+    * the scan's (pruned, logical) columns; `physOf`: the snapshot's
+    * logical → physical column names, which data files store (recorded
+    * change files — a change-feed partition without `op` — keep the
+    * names they were written with); `sidecars`: the snapshot whose
+    * deletion sidecars the partitions carry. The keyed sidecars' key
+    * columns join every data read, so masking evaluates whether or not
+    * the scan selects them. */
+  def apply(path: String, schema: StructType,
+      physOf: Map[String, String] = Map.empty,
+      sidecars: Option[Layout.ManifestInfo] = None,
+      changeFeed: Boolean = false): SnapshotFileReaderFactory = {
+    val spark = SparkSession.active
+    val keys = sidecars.toSeq.flatMap(dvKeyFields(spark, path, _))
+    def dataRead(name: String => String) = {
+      val cols = schema.fields.toSeq.filter(_.name != "_file")
+        .map(f => f.copy(name = name(f.name), nullable = true))
+      new FileRead(spark, StructType((cols ++ keys.filterNot(k =>
+        cols.exists(_.name == k.name))) :+ RowIndex))
+    }
+    val data = dataRead(c => physOf.getOrElse(c, c))
+    new SnapshotFileReaderFactory(schema, data,
+      written = if (changeFeed && physOf.nonEmpty) dataRead(identity)
+        else data,
+      keys = if (keys.isEmpty) null
+        else new FileRead(spark, StructType(keys)),
+      positions = if (sidecars.exists(_.dvp.nonEmpty))
+        new FileRead(spark, PositionSchema) else null,
+      spark.sparkContext.broadcast(new SerializableConfiguration(
+        spark.sessionState.newHadoopConf())))
+  }
+
+  /** The key columns of `info`'s keyed deletion sidecars: the PHYSICAL
+    * name each sidecar records, typed as the snapshot's schema types
+    * that column — so a sidecar written before a type widening reads
+    * in the data files' current type. */
+  private def dvKeyFields(spark: SparkSession, path: String,
+      info: Layout.ManifestInfo): Seq[StructField] = {
+    val typeOf = info.schema.toSeq.flatMap(_.fields).map(f =>
+      Layout.physName(info.colMap, f.name) -> f.dataType).toMap
+    Layout.dvKeyPhysCols(spark, path, info).toSeq.sorted.map(k =>
+      StructField(k, typeOf.getOrElse(k, throw new IllegalStateException(
+        s"graft-snapshot: deletion-sidecar key '$k' is not a column " +
+          s"of the snapshot at $path"))))
+  }
+}
+
+/** One reader per committed data file (executor-side), over Spark's own
+  * parquet reader ([[SnapshotFileReaderFactory.FileRead]]): the read
+  * function built on the driver projects the file to the scan's
+  * physical columns plus the sidecar key columns and the row index;
+  * each partition wraps its iterator — drop rows a keyed sidecar masks
+  * (a null key is never masked), drop positionally masked ordinals,
+  * fill the `_file` and `_op` constants, project to the scan's schema.
+  * A zero-column read (the count(*) shape) still reads the row index,
+  * so row counts survive full pruning. `data` reads a file under the
+  * snapshot's physical names, `written` one without a synthesized `_op`
+  * — in a change feed a recorded change file, under the names it was
+  * written with; elsewhere the same read as `data`. `keys` /
+  * `positions`: the sidecar reads, null when the scan's snapshot has
+  * none of that kind. */
+final class SnapshotFileReaderFactory private (schema: StructType,
+    data: SnapshotFileReaderFactory.FileRead,
+    written: SnapshotFileReaderFactory.FileRead,
+    keys: SnapshotFileReaderFactory.FileRead,
+    positions: SnapshotFileReaderFactory.FileRead,
+    hadoopConf: org.apache.spark.broadcast
+      .Broadcast[SerializableConfiguration])
+    extends PartitionReaderFactory {
+
+  /** The union of the sidecars' masked keys, one set per key column —
+    * bounded by the masked-row count, loaded once per reader task. */
+  private def loadDvKeys(paths: Seq[String],
+      conf: org.apache.hadoop.conf.Configuration)
+      : Array[java.util.HashSet[Any]] = {
+    val fields = keys.required.fields
+    val sets = fields.map(_ => new java.util.HashSet[Any]())
+    paths.foreach(p => keys.rows(p, conf).foreach(r =>
+      fields.indices.filterNot(r.isNullAt).foreach(k =>
+        sets(k).add(InternalRow.copyValue(r.get(k, fields(k).dataType))))))
+    sets
+  }
+
+  /** THIS file's masked physical row ordinals from positional sidecars
+    * — rows are (`__gf_fb` basename, `__gf_pos` ordinal) pairs,
+    * filtered to the partition's own file. */
   private def loadDvPositions(paths: Seq[String], fileBase: String,
       conf: org.apache.hadoop.conf.Configuration)
       : java.util.HashSet[Long] = {
     val set = new java.util.HashSet[Long]()
-    paths.foreach { p =>
-      val r = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-          new org.apache.hadoop.fs.Path(p))
-        .withConf(conf).build()
-      try {
-        var g = r.read()
-        while (g != null) {
-          val fbIdx = g.getType.getFieldIndex("__gf_fb")
-          val posIdx = g.getType.getFieldIndex("__gf_pos")
-          if (g.getFieldRepetitionCount(fbIdx) > 0 &&
-              g.getFieldRepetitionCount(posIdx) > 0 &&
-              new String(g.getBinary(fbIdx, 0).getBytes,
-                "UTF-8") == fileBase)
-            set.add(g.getLong(posIdx, 0))
-          g = r.read()
-        }
-      } finally r.close()
-    }
+    val base = UTF8String.fromString(fileBase)
+    paths.foreach(p => positions.rows(p, conf).foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1) && r.getUTF8String(0) == base)
+        set.add(r.getLong(1))
+    })
     set
   }
 
   override def createReader(
       p: InputPartition): PartitionReader[InternalRow] = {
-    val file = p.asInstanceOf[SnapshotFilePartition].file
-    val opConst = p.asInstanceOf[SnapshotFilePartition].op
-    val dvPaths = p.asInstanceOf[SnapshotFilePartition].dvFiles
-    val dvpPaths = p.asInstanceOf[SnapshotFilePartition].dvpFiles
-    // column mapping: files store PHYSICAL names; `schema` speaks the
-    // current LOGICAL names — all file-side lookups go through physOf
-    val physOf = p.asInstanceOf[SnapshotFilePartition].physOf
-    def phys(c: String): String = physOf.getOrElse(c, c)
-    // per-reader COPY: PARQUET_READ_SCHEMA is set below, and the
-    // broadcast value is shared by every task on the executor
-    val conf =
-      new org.apache.hadoop.conf.Configuration(hadoopConf.value.value)
-    val (dvKeyName, dvKeys) =
-      if (dvPaths.isEmpty) (null: String, null: java.util.HashSet[Any])
-      else loadDvKeys(dvPaths, conf)
-    val dvPositions =
-      if (dvpPaths.isEmpty) null
-      else loadDvPositions(dvpPaths,
-        file.substring(file.lastIndexOf('/') + 1), conf)
-    val hPath = new org.apache.hadoop.fs.Path(file)
-    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(hPath, conf))
-    val fileSchema =
-      try footer.getFileMetaData.getSchema finally footer.close()
-    // `_file` is the synthesized group-identity METADATA column (the
-    // row-level-operation protocol keys on it) — never read from
-    // parquet, filled with this partition's absolute path. The mask
-    // key column (already physical — sidecars store physical names)
-    // is FORCED into the projection (column pruning may have dropped
-    // it) so sidecar filtering can evaluate.
-    val wanted = (schema.fieldNames.toSet - "_file").map(phys) ++
-      Option(dvKeyName).toSet
-    val kept = fileSchema.getFields.asScala.filter(f => wanted(f.getName))
-    val projected = new org.apache.parquet.schema.MessageType(
-      fileSchema.getName,
-      (if (kept.nonEmpty) kept
-       else fileSchema.getFields.asScala.take(1)).asJava)
-    conf.set(org.apache.parquet.hadoop.api.ReadSupport
-      .PARQUET_READ_SCHEMA, projected.toString)
-    val reader = org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-        hPath)
-      .withConf(conf).build()
-    new PartitionReader[InternalRow] {
-      private var cur: InternalRow = _
-      private var idx: Array[Int] = _
-      private var dvIdx = -2 // -2 = unresolved, -1 = file lacks the key
-
-      /** Is this row masked by a deletion sidecar? */
-      private def masked(g: org.apache.parquet.example.data.Group)
-          : Boolean = {
-        if (dvKeys == null) return false
-        if (dvIdx == -2)
-          dvIdx = if (g.getType.containsField(dvKeyName))
-            g.getType.getFieldIndex(dvKeyName) else -1
-        if (dvIdx < 0 || g.getFieldRepetitionCount(dvIdx) == 0)
-          return false // a null/absent key is never masked
-        import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-        val v: Any = g.getType.getType(dvIdx).asPrimitiveType()
-          .getPrimitiveTypeName match {
-          case INT64 => g.getLong(dvIdx, 0)
-          case INT32 => g.getInteger(dvIdx, 0).toLong
-          case _ => new String(g.getBinary(dvIdx, 0).getBytes, "UTF-8")
-        }
-        dvKeys.contains(v)
+    val part = p.asInstanceOf[SnapshotFilePartition]
+    val file = part.file
+    val conf = hadoopConf.value.value
+    require((part.dvFiles.isEmpty || keys != null) &&
+      (part.dvpFiles.isEmpty || positions != null),
+      s"graft-snapshot: $file carries deletion sidecars the scan's " +
+        "reader was not built for")
+    val read = if (part.op == null) written else data
+    // per sidecar key column: its ordinal in the read row, its type
+    // and the keys it masks
+    val keyed: Array[(Int, DataType, java.util.HashSet[Any])] =
+      if (part.dvFiles.isEmpty) Array.empty
+      else keys.required.fields.zip(loadDvKeys(part.dvFiles, conf)).map {
+        case (f, set) => (read.required.fieldIndex(f.name), f.dataType, set)
       }
-
-      private var prim:
-        Array[org.apache.parquet.schema.PrimitiveType] = _
-      // PHYSICAL row ordinal of the record about to be read — counts
-      // every record (including keyed-mask drops), matching the
-      // `_metadata.row_index` domain the positional sidecars store
-      private var ordinal = -1L
-      private def posMasked: Boolean =
-        dvPositions != null && dvPositions.contains(ordinal)
+    val dropped =
+      if (part.dvpFiles.isEmpty) null
+      else loadDvPositions(part.dvpFiles,
+        file.substring(file.lastIndexOf('/') + 1), conf)
+    val rowIdx = read.required.length - 1
+    // per output column: its ordinal in the read row, or -1 = the
+    // `_file` metadata column (the row-level-operation protocol's group
+    // identity), -2 = the change feed's synthesized `_op`
+    val src = schema.fields.zipWithIndex.map { case (f, i) =>
+      if (f.name == "_file") -1
+      else if (f.name == "_op" && part.op != null) -2
+      else i - schema.fields.take(i).count(_.name == "_file")
+    }
+    val types = schema.fields.map(_.dataType)
+    val fileU = UTF8String.fromString(file)
+    val opU = if (part.op == null) null else UTF8String.fromString(part.op)
+    val it = read.rows(file, conf)
+    new PartitionReader[InternalRow] {
+      private val cur = new GenericInternalRow(schema.length)
+      private def masked(r: InternalRow): Boolean =
+        (dropped != null && dropped.contains(r.getLong(rowIdx))) ||
+          keyed.exists { case (o, dt, set) =>
+            !r.isNullAt(o) && set.contains(r.get(o, dt)) }
       override def next(): Boolean = {
-        var g = reader.read()
-        ordinal += 1
-        while (g != null && (posMasked || masked(g))) {
-          g = reader.read(); ordinal += 1
+        var r: InternalRow = null
+        while (r == null && it.hasNext) {
+          r = it.next()
+          if (masked(r)) r = null
         }
-        if (g == null) false
+        if (r == null) false
         else {
-          if (idx == null) {
-            // -1 = the file PREDATES this column (append-time schema
-            // evolution): null-fill, matching Layout.readSnapshot's
-            // recorded-union-schema read; -2 = the `_file` metadata
-            // column, synthesized from the partition's path; -3 = a
-            // change-feed `_op` the file doesn't carry, synthesized
-            // from the partition's constant (an append batch).
-            // Lookups use the PHYSICAL name (column mapping).
-            idx = schema.fields.map(f =>
-              if (f.name == "_file") -2
-              else if (f.name == "_op" && opConst != null &&
-                  !g.getType.containsField(phys(f.name))) -3
-              else if (g.getType.containsField(phys(f.name)))
-                g.getType.getFieldIndex(phys(f.name))
-              else -1)
-            // the file's own primitive TYPE per field — TYPE WIDENING
-            // (int32 file read as BIGINT, float as DOUBLE) upcasts at
-            // decode, so ALTER COLUMN TYPE is metadata-only; the
-            // logical annotation disambiguates timestamp units and
-            // decimal physicals
-            prim = idx.map(i =>
-              if (i < 0) null
-              else g.getType.getType(i).asPrimitiveType())
-          }
-          val vals = new Array[Any](schema.length)
           var i = 0
-          while (i < schema.length) {
-            import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-            import org.apache.parquet.schema.LogicalTypeAnnotation
-            def tn = prim(i).getPrimitiveTypeName
-            vals(i) =
-              if (idx(i) == -2) UTF8String.fromString(file)
-              else if (idx(i) == -3) UTF8String.fromString(opConst)
-              else if (idx(i) < 0 ||
-                  g.getFieldRepetitionCount(idx(i)) == 0)
-                null
-              else schema.fields(i).dataType match {
-                case LongType if tn == INT32 =>
-                  g.getInteger(idx(i), 0).toLong
-                case LongType => g.getLong(idx(i), 0)
-                case IntegerType => g.getInteger(idx(i), 0)
-                case DoubleType if tn == FLOAT =>
-                  g.getFloat(idx(i), 0).toDouble
-                case DoubleType => g.getDouble(idx(i), 0)
-                case FloatType => g.getFloat(idx(i), 0)
-                case BooleanType => g.getBoolean(idx(i), 0)
-                case StringType =>
-                  UTF8String.fromBytes(g.getBinary(idx(i), 0).getBytes)
-                case DateType => g.getInteger(idx(i), 0) // epoch days
-                case TimestampType | TimestampNTZType =>
-                  // INT64 in the annotation's unit, normalized to the
-                  // MICROS InternalRow domain; legacy INT96 has no
-                  // stats and no sane decode path — refuse by name
-                  require(tn == INT64,
-                    s"graft-snapshot: '${schema.fields(i).name}' is " +
-                      s"a legacy $tn timestamp in $file — rewrite " +
-                      "with spark.sql.parquet.outputTimestampType=" +
-                      "TIMESTAMP_MICROS")
-                  val unit = prim(i).getLogicalTypeAnnotation match {
-                    case t: LogicalTypeAnnotation
-                        .TimestampLogicalTypeAnnotation => t.getUnit
-                    case _ => LogicalTypeAnnotation.TimeUnit.MICROS
-                  }
-                  val v = g.getLong(idx(i), 0)
-                  unit match {
-                    case LogicalTypeAnnotation.TimeUnit.MILLIS =>
-                      Math.multiplyExact(v, 1000L)
-                    case LogicalTypeAnnotation.TimeUnit.NANOS =>
-                      Math.floorDiv(v, 1000L)
-                    case _ => v
-                  }
-                case d: DecimalType => tn match {
-                  case INT32 => org.apache.spark.sql.types.Decimal
-                    .createUnsafe(g.getInteger(idx(i), 0).toLong,
-                      d.precision, d.scale)
-                  case INT64 => org.apache.spark.sql.types.Decimal
-                    .createUnsafe(g.getLong(idx(i), 0),
-                      d.precision, d.scale)
-                  case _ => // FLBA/BINARY: big-endian two's complement
-                    val bi = new java.math.BigInteger(
-                      g.getBinary(idx(i), 0).getBytes)
-                    org.apache.spark.sql.types.Decimal(
-                      new java.math.BigDecimal(bi, d.scale),
-                      d.precision, d.scale)
-                }
-                case other => throw new IllegalStateException(
-                  s"unreachable: $other passed validate()")
-              }
+          while (i < src.length) {
+            cur.update(i, src(i) match {
+              case -1 => fileU
+              case -2 => opU
+              case o => if (r.isNullAt(o)) null else r.get(o, types(i))
+            })
             i += 1
           }
-          cur = new GenericInternalRow(vals)
           true
         }
       }
       override def get(): InternalRow = cur
-      override def close(): Unit = reader.close()
+      override def close(): Unit = it match {
+        case c: java.io.Closeable => c.close()
+        case _ => ()
+      }
     }
   }
 }
@@ -1205,8 +1142,7 @@ final class SnapshotWrite(path: String, writeSchema: StructType,
       // (even graceMs = 0) never sweeps its staged/just-renamed files
       Layout.registerTok(tok)
       SnapshotWriterFactory(prepareStageDir(tok), writeSchema,
-        statsCol, partCols, tok, SnapshotHadoopConf.broadcast(),
-        tablePhys)
+        statsCol, partCols, tok, tablePhys)
     }
     override def commit(messages: Array[WriterCommitMessage]): Unit =
       try {
@@ -1237,8 +1173,7 @@ final class SnapshotWrite(path: String, writeSchema: StructType,
         // against vacuum for the JVM's lifetime
         StreamingTokRegistry.register(queryId, tok)
         SnapshotWriterFactory(prepareStageDir(tok), writeSchema,
-          statsCol, partCols, tok, SnapshotHadoopConf.broadcast(),
-          tablePhys)
+          statsCol, partCols, tok, tablePhys)
       }
       // epoch replay after a restart re-stages files but the tagged
       // manifest short-circuits: exactly one commit per (query, epoch),
@@ -1308,130 +1243,82 @@ private[sources] object StreamingTokRegistry {
     toks.containsKey(queryId)
 }
 
-/** Hadoop configuration shipped executor-side — a bare
-  * `new Configuration()` on an executor would drop every spark.hadoop.*
-  * setting (credentials, endpoints, defaultFS) and only work on a
-  * local filesystem. Serialized via Hadoop's own Writable form and
-  * BROADCAST once per scan/write (Spark's SerializableConfiguration
-  * idiom): the resolved configuration is hundreds of entries, and
-  * embedding a copy in every task's serialized factory is measurable
-  * per-task overhead on wide scans — a broadcast ships it to each
-  * executor once. */
-final class SerializableHadoopConf(
-    @transient var value: org.apache.hadoop.conf.Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new org.apache.hadoop.conf.Configuration(false)
-    value.readFields(in)
-  }
-}
-
-object SnapshotHadoopConf {
-  /** One broadcast of the session's resolved Hadoop conf — create per
-    * scan/write on the DRIVER, hand the handle to factories. */
-  def broadcast(): org.apache.spark.broadcast
-      .Broadcast[SerializableHadoopConf] = {
-    val spark = SparkSession.active
-    spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
-  }
-}
-
 final case class SnapshotFileCommit(lines: Seq[String], rows: Long)
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
-final case class SnapshotWriterFactory(stageDir: String,
-    schema: StructType, statsCol: Option[String],
-    partCols: Seq[String], tok: String,
-    hadoopConf: org.apache.spark.broadcast
-      .Broadcast[SerializableHadoopConf],
-    physOf: Map[String, String] = Map.empty)
+/** What every task of one snapshot write shares, built on the DRIVER
+  * ([[SnapshotWriterFactory.apply]]): Spark's parquet writer prepared
+  * for `physSchema` — the written schema under the table's PHYSICAL
+  * column names (column mapping; rows are written by position, so only
+  * the names change) — and the job conf it writes with. */
+final class SnapshotWriterFactory private (val stageDir: String,
+    val schema: StructType, val statsCol: Option[String],
+    val partCols: Seq[String], tok: String,
+    val physSchema: StructType, val parquet: OutputWriterFactory,
+    val jobConf: org.apache.spark.broadcast
+      .Broadcast[SerializableConfiguration])
     extends org.apache.spark.sql.connector.write.DataWriterFactory
     with org.apache.spark.sql.connector.write.streaming
       .StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new SnapshotDataWriter(stageDir, schema, statsCol, partCols,
-      s"$tok-p$partitionId-t$taskId", hadoopConf, physOf)
+    new SnapshotDataWriter(this, partitionId,
+      s"$tok-p$partitionId-t$taskId")
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new SnapshotDataWriter(stageDir, schema, statsCol, partCols,
-      s"$tok-e$epochId-p$partitionId-t$taskId", hadoopConf, physOf)
+    new SnapshotDataWriter(this, partitionId,
+      s"$tok-e$epochId-p$partitionId-t$taskId")
 }
 
-object SnapshotParquet {
-  /** The parquet MessageType for a (validated, atomic-typed) write
-    * schema — all fields optional, strings UTF8-annotated, mirroring
-    * what the Group-API reader decodes. `physOf` renames fields to
-    * their PHYSICAL column names (column mapping): writes are
-    * index-based, so only the declared names change. */
-  def messageType(schema: StructType,
-      physOf: Map[String, String] = Map.empty)
-      : org.apache.parquet.schema.MessageType = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-    val b = Types.buildMessage()
-    schema.fields.foreach { f =>
-      val nm = physOf.getOrElse(f.name, f.name)
-      f.dataType match {
-        case LongType => b.addField(Types.optional(INT64).named(nm))
-        case IntegerType =>
-          b.addField(Types.optional(INT32).named(nm))
-        case DoubleType =>
-          b.addField(Types.optional(DOUBLE).named(nm))
-        case FloatType => b.addField(Types.optional(FLOAT).named(nm))
-        case BooleanType =>
-          b.addField(Types.optional(BOOLEAN).named(nm))
-        case StringType => b.addField(Types.optional(BINARY)
-          .as(LogicalTypeAnnotation.stringType()).named(nm))
-        case DateType => b.addField(Types.optional(INT32)
-          .as(LogicalTypeAnnotation.dateType()).named(nm))
-        case TimestampType => b.addField(Types.optional(INT64)
-          .as(LogicalTypeAnnotation.timestampType(true,
-            LogicalTypeAnnotation.TimeUnit.MICROS)).named(nm))
-        case TimestampNTZType => b.addField(Types.optional(INT64)
-          .as(LogicalTypeAnnotation.timestampType(false,
-            LogicalTypeAnnotation.TimeUnit.MICROS)).named(nm))
-        case d: DecimalType => // validate() caps precision at 18
-          b.addField(Types.optional(INT64)
-            .as(LogicalTypeAnnotation.decimalType(d.scale,
-              d.precision)).named(nm))
-        case other => throw new IllegalStateException(
-          s"unreachable: $other passed validate()")
-      }
-    }
-    b.named("graft_snapshot")
+object SnapshotWriterFactory {
+  /** Prepares Spark's parquet write of `schema` renamed by `physOf`.
+    * TIMESTAMP columns are pinned to INT64 TIMESTAMP_MICROS on the job
+    * conf, whatever the session's default: Spark's legacy INT96 has no
+    * column statistics for the data-skipping index. */
+  def apply(stageDir: String, schema: StructType,
+      statsCol: Option[String], partCols: Seq[String], tok: String,
+      physOf: Map[String, String]): SnapshotWriterFactory = {
+    val spark = SparkSession.active
+    val physSchema = StructType(schema.fields.map(f =>
+      f.copy(name = physOf.getOrElse(f.name, f.name))))
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      spark.sessionState.newHadoopConf())
+    val parquet = new ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, physSchema)
+    job.getConfiguration.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
+      "TIMESTAMP_MICROS")
+    new SnapshotWriterFactory(stageDir, schema, statsCol, partCols, tok,
+      physSchema, parquet, spark.sparkContext.broadcast(
+        new SerializableConfiguration(job.getConfiguration)))
   }
 }
 
-/** One parquet file per non-empty task (executor-side), written with
-  * the Group API straight from InternalRow. The writer is LAZY — an
-  * empty partition stages nothing and commits an empty message — and
-  * tracks the min/max of `statsCol` over the rows it writes, so the
-  * manifest's data-skipping index costs nothing beyond values already
-  * in hand. A null in `statsCol` drops the file's range (rangeless =
-  * always read — skipping must never change answers). */
-final class SnapshotDataWriter(stageDir: String, schema: StructType,
-    statsCol: Option[String], partCols: Seq[String], suffix: String,
-    hadoopConf: org.apache.spark.broadcast
-      .Broadcast[SerializableHadoopConf],
-    physOf: Map[String, String] = Map.empty)
+/** One parquet file per non-empty task and partition directory
+  * (executor-side), written by Spark's parquet writer straight from
+  * InternalRow. Files open LAZILY — an empty partition stages nothing
+  * and commits an empty message — and each tracks the min/max of
+  * `statsCol` over the rows it writes, so the manifest's data-skipping
+  * index costs nothing beyond values already in hand. A null in
+  * `statsCol` drops the file's range (rangeless = always read —
+  * skipping must never change answers). */
+final class SnapshotDataWriter(f: SnapshotWriterFactory,
+    partitionId: Int, suffix: String)
     extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
+  private val schema = f.schema
+  // a per-writer copy: the parquet writer may set keys on its conf,
+  // and the broadcast value is shared by every task on the executor
   private val conf =
-    new org.apache.hadoop.conf.Configuration(hadoopConf.value.value)
-  private val msgType = SnapshotParquet.messageType(schema, physOf)
-  private val groups =
-    new org.apache.parquet.example.data.simple.SimpleGroupFactory(msgType)
+    new org.apache.hadoop.conf.Configuration(f.jobConf.value.value)
+  private val task = new org.apache.hadoop.mapreduce.task
+    .TaskAttemptContextImpl(conf, new org.apache.hadoop.mapreduce
+      .TaskAttemptID(new org.apache.hadoop.mapreduce.TaskID(
+        new org.apache.hadoop.mapreduce.JobID(suffix, 0),
+        org.apache.hadoop.mapreduce.TaskType.MAP, partitionId), 0))
   // per indexed column (statsCol is a comma list), in order
-  private val statsIdx = statsCol.toSeq.flatMap(_.split(','))
+  private val statsIdx = f.statsCol.toSeq.flatMap(_.split(','))
     .map(_.trim).filter(_.nonEmpty).map(schema.fieldIndex).toArray
-  private val partIdx = partCols.map(schema.fieldIndex).toArray
+  private val partIdx = f.partCols.map(schema.fieldIndex).toArray
 
   /** One open parquet file (plus its running stats) — a task writes
     * one per partition-value directory it encounters; an
@@ -1439,13 +1326,8 @@ final class SnapshotDataWriter(stageDir: String, schema: StructType,
     * writer opens lazily, so an empty task stages nothing. */
   private final class FileState(val relName: String) {
     val hPath = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(stageDir), relName)
-    val writer: org.apache.parquet.hadoop.ParquetWriter[
-      org.apache.parquet.example.data.Group] =
-      org.apache.parquet.hadoop.example.ExampleParquetWriter
-        .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
-          .fromPath(hPath, conf))
-        .withType(msgType).withConf(conf).build()
+      new org.apache.hadoop.fs.Path(f.stageDir), relName)
+    val writer = f.parquet.newInstance(hPath.toString, f.physSchema, task)
     var rows = 0L
     val lo = Array.fill(statsIdx.length)(Long.MaxValue)
     val hi = Array.fill(statsIdx.length)(Long.MinValue)
@@ -1487,7 +1369,7 @@ final class SnapshotDataWriter(stageDir: String, schema: StructType,
     * table is unpartitioned); values are URL-encoded so any string
     * is path-safe, nulls get a reserved marker. */
   private def dirOf(row: InternalRow): String =
-    partIdx.zip(partCols).map { case (i, c) =>
+    partIdx.zip(f.partCols).map { case (i, c) =>
       val v =
         if (row.isNullAt(i)) "__HIVE_DEFAULT_PARTITION__"
         else schema.fields(i).dataType match {
@@ -1509,28 +1391,7 @@ final class SnapshotDataWriter(stageDir: String, schema: StructType,
       fileSeq += 1
       new FileState(if (dir.isEmpty) nm else s"$dir/$nm")
     })
-    val g = groups.newGroup()
-    var i = 0
-    while (i < schema.length) {
-      if (!row.isNullAt(i)) schema.fields(i).dataType match {
-        case LongType => g.add(i, row.getLong(i))
-        case IntegerType => g.add(i, row.getInt(i))
-        case DoubleType => g.add(i, row.getDouble(i))
-        case FloatType => g.add(i, row.getFloat(i))
-        case BooleanType => g.add(i, row.getBoolean(i))
-        case StringType => g.add(i, row.getUTF8String(i).toString)
-        case DateType => g.add(i, row.getInt(i)) // epoch days
-        case TimestampType | TimestampNTZType =>
-          g.add(i, row.getLong(i)) // epoch micros
-        case d: DecimalType => // INT64 unscaled (precision <= 18)
-          g.add(i,
-            row.getDecimal(i, d.precision, d.scale).toUnscaledLong)
-        case other => throw new IllegalStateException(
-          s"unreachable: $other passed validate()")
-      }
-      i += 1
-    }
-    st.writer.write(g)
+    st.writer.write(row)
     st.rows += 1
     var k = 0
     while (k < statsIdx.length) {

@@ -139,24 +139,35 @@ class CdcPipelineSpec extends SparkSpec {
   }
 
   test("K2 upsert writer: batched executeBatch write + idempotent rewrite") {
+    import org.apache.spark.sql.functions.{col, concat, hash, lit, min, pmod}
     val ns = s"k2-${java.util.UUID.randomUUID()}"
     val w = new Sinks.UpsertWriter("user_count_by_pgschema", "pgschema",
-      Seq("pgschema", "user_count"), batchSize = 1) // force multiple executeBatch
+      Seq("pgschema", "user_count"))
     val factory = Sinks.MemoryDb.factory(ns)
     val target = Sinks.MemoryDb.table(ns, "user_count_by_pgschema")
-    val batch = spark.createDataFrame(Seq(("schema1", 2L), ("schema2", 1L)))
-      .toDF("pgschema", "user_count")
+    // 40,000 keys over the writer's 32 pk-hash ledger partitions: every
+    // partition passes the 500-row executeBatch size, so each writes
+    // several full batches before its final partial one
+    val batch = spark.range(40000).select(
+      concat(lit("schema"), col("id")).as("pgschema"),
+      (col("id") % 7).as("user_count"))
+    val perPartition = batch
+      .groupBy(pmod(hash(col("pgschema")), lit(32))).count()
+      .agg(min("count")).head().getLong(0)
+    assert(perPartition > 500, perPartition)
     w.writeBatch(batch, factory, batchId = 0L)
     // the same rows again under a new batch id (the ledger does not skip
     // them): the replace merge rewrites them to the same final state
     w.writeBatch(batch, factory, batchId = 1L)
-    assert(target.snapshot.view.mapValues(_("user_count")).toMap ==
-      Map("schema1" -> 2L, "schema2" -> 1L))
+    val landed = target.snapshot.view.mapValues(_("user_count")).toMap
+    assert(landed.size == 40000)
+    assert(landed.forall { case (k, v) =>
+      v == k.stripPrefix("schema").toLong % 7 })
     val update = spark.createDataFrame(Seq(("schema1", 5L)))
       .toDF("pgschema", "user_count")
     w.writeBatch(update, factory, batchId = 2L)
     assert(target.snapshot("schema1")("user_count") == 5L)
-    assert(target.snapshot("schema2")("user_count") == 1L)
+    assert(target.snapshot("schema2")("user_count") == 2L)
   }
 
   test("K2 additive merge accumulates deltas through the JDBC path") {

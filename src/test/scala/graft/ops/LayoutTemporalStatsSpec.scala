@@ -1,7 +1,28 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.hadoop.mapreduce.JobContext
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.apache.spark.sql.functions._
+
+/** Records, at every write job's driver-side setup, the output
+  * timestamp type the session in [[CallerTsProbe.caller]] holds then. */
+class CallerTsProbeCommitProtocol(jobId: String, path: String,
+    dynamicPartitionOverwrite: Boolean)
+    extends SQLHadoopMapReduceCommitProtocol(jobId, path,
+      dynamicPartitionOverwrite) {
+  override def setupJob(jobContext: JobContext): Unit = {
+    Option(CallerTsProbe.caller).foreach(s => CallerTsProbe.seen.add(
+      s.conf.get("spark.sql.parquet.outputTimestampType")))
+    super.setupJob(jobContext)
+  }
+}
+
+object CallerTsProbe {
+  @volatile var caller: SparkSession = _
+  val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}
 
 /** DATE/TIMESTAMP data-skipping: parquet stores dates as INT32 days
   * and timestamps as INT64 micros, so the integral manifest index
@@ -79,6 +100,44 @@ class LayoutTemporalStatsSpec extends SparkSpec {
         spark.conf.set("spark.sql.parquet.outputTimestampType", v)
       case None =>
         spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    }
+  }
+
+  test("staging a timestamp frame pins TIMESTAMP_MICROS on a clone, " +
+      "never on the caller's session") {
+    val t = tmpDir("graft-tsclone")
+    val keys = Seq("spark.sql.parquet.outputTimestampType",
+      "spark.sql.sources.commitProtocolClass")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), "INT96")
+    spark.conf.set(keys(1), classOf[CallerTsProbeCommitProtocol].getName)
+    CallerTsProbe.seen.clear()
+    CallerTsProbe.caller = spark
+    try {
+      val df = Seq((java.sql.Timestamp.valueOf("2020-01-01 00:00:00"),
+        1L)).toDF("ts", "v")
+      Layout.appendSnapshot(df.coalesce(1), t, statsCol = "ts")
+      // the staging job ran while the caller still held its own value
+      assert(!CallerTsProbe.seen.isEmpty)
+      assert(CallerTsProbe.seen.toArray.toSet == Set("INT96"))
+      assert(spark.conf.get(keys(0)) == "INT96")
+      // and the staged file is INT64 micros all the same
+      val f = Layout.snapshotInfo(spark, t).get.files.head
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(s"$t/data/$f"),
+          spark.sessionState.newHadoopConf()))
+      val ts = try r.getFileMetaData.getSchema.getFields.get(0)
+        .asPrimitiveType() finally r.close()
+      assert(ts.getPrimitiveTypeName.name == "INT64")
+      assert(ts.getLogicalTypeAnnotation.toString.contains("MICROS"))
+      assert(Layout.readSnapshot(spark, t).count() == 1)
+    } finally {
+      CallerTsProbe.caller = null
+      prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
     }
   }
 }

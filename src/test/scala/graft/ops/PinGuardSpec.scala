@@ -8,14 +8,19 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One mechanism per concern, checked over the `src/main` sources:
   * [[Pin]] is the one way to materialize a relation (no other file
   * checkpoints, persists or caches a frame, or rebuilds one from its
-  * `.rdd`), and [[graft.queries.StreamRun]] the one owner of temp dirs
-  * (no other file names `java.io.tmpdir` or makes a temp directory). */
+  * `.rdd`), [[graft.queries.StreamRun]] the one owner of temp dirs
+  * (no other file names `java.io.tmpdir` or makes a temp directory),
+  * and Spark's parquet format the one parquet codec (no file encodes
+  * or decodes rows through parquet-hadoop's Group API). */
 class PinGuardSpec extends AnyFunSuite {
 
   private val materializing =
     """(?s)\.localCheckpoint\(|\.persist\(|\.cache\(\)|createDataFrame\([^)]*\.rdd""".r
 
   private val tempDirs = """java\.io\.tmpdir|createTempDirectory""".r
+
+  private val groupApi =
+    """org\.apache\.parquet\.example|GroupReadSupport|ExampleParquetWriter""".r
 
   private lazy val sources: Seq[Path] = {
     val root = Paths.get("src/main")
@@ -42,5 +47,11 @@ class PinGuardSpec extends AnyFunSuite {
 
   test("only StreamRun.scala makes temp dirs in src/main") {
     onlyIn("StreamRun.scala", tempDirs)
+  }
+
+  test("no file in src/main uses parquet-hadoop's Group API") {
+    val offenders = sources.filter(p =>
+      groupApi.findFirstIn(Files.readString(p)).nonEmpty)
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -6,13 +6,15 @@ import org.apache.spark.sql.functions._
 
 /** Round-14 typed columns through the DSv2 snapshot surface: DATE
   * (INT32 epoch days), TIMESTAMP / TIMESTAMP_NTZ (INT64 micros) and
-  * DECIMAL(<=18) (INT64 unscaled) flow through the sink, the reader,
-  * the data-skipping index and the SQL catalog — the reference itself
-  * declares TIMESTAMP(3) metadata columns (CustomJob.java:162), and a
-  * DATE/DECIMAL-less analytics table format fails its first real user.
-  * Layout staging pins outputTimestampType=TIMESTAMP_MICROS, so a
-  * catalog table with timestamps can never acquire unreadable INT96
-  * files through any write path. */
+  * DECIMAL(<=18) (INT32/INT64 unscaled, Spark's parquet rendering) flow
+  * through the sink, the reader, the data-skipping index and the SQL
+  * catalog — the reference itself declares TIMESTAMP(3) metadata
+  * columns (CustomJob.java:162), and a DATE/DECIMAL-less analytics
+  * table format fails its first real user. Both writers pin
+  * outputTimestampType=TIMESTAMP_MICROS without touching the caller's
+  * session — the sink on its write's job conf, Layout staging on a
+  * clone of the session — so a catalog table with timestamps can never
+  * acquire statistics-less INT96 files through any write path. */
 class GraftTypedColumnsSpec extends SparkSpec {
   import spark.implicits._
 
