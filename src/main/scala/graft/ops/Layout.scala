@@ -475,11 +475,12 @@ object Layout {
   // DELETE SIDECAR instead of rewriting the file: a parquet under dv/
   // holding the masked KEYS (single column, named after the merge
   // key), referenced from the manifest by one meta line per affected
-  // data file — `dv:<dataFile>|<dvFile>|<nMaskedInThatFile>`. Readers
-  // apply a file's sidecars as an anti-join before rows surface; a
-  // masked key absent from a file is a no-op, so one sidecar (the
-  // delta's present keys) can serve every file of its merge. Multiple
-  // merges chain lines on the same file (readers apply the union);
+  // data file — `dv:<dataFile>|<dvFile>|<nMaskedInThatFile>`. The
+  // `graft-snapshot` reader drops a file's masked keys before rows
+  // surface; a masked key absent from a file is a no-op, so one
+  // sidecar (the delta's present keys) can serve every file of its
+  // merge. Multiple merges chain lines on the same file (the reader
+  // applies the union, per key column);
   // OPTIMIZE materializes them away (its rewrite reads the DV-applied
   // image and drops the files, taking their lines with them). This is
   // Delta's deletion vectors / Iceberg v2 deletes, reduced to the
@@ -891,14 +892,6 @@ object Layout {
     else parseManifest(fs, p).partCols
   }
 
-  // Manifest file lines are "name" or "name|lo|hi" when the commit
-  // recorded column stats (statsCol) — the data-skipping index.
-  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): (Long, Seq[String]) = {
-    val m = parseManifest(fs, p)
-    (m.rows, m.files)
-  }
-
   /** The schema recorded at commit time ([[snapshotWrite]] writes a
     * `schema:` metadata line on every commit) — what makes a ZERO-FILE
     * snapshot readable and what the streaming source infers its schema
@@ -910,17 +903,6 @@ object Layout {
       p: org.apache.hadoop.fs.Path)
       : Option[org.apache.spark.sql.types.StructType] =
     parseManifest(fs, p).schema
-
-  /** WHICH column the manifest's per-file [min, max] ranges describe
-    * (`statscol:` metadata) — what makes the data-skipping index safe
-    * to consult: pruning by ranges recorded for a DIFFERENT column
-    * would silently drop rows. None on manifests committed without
-    * stats (or from before the column was recorded): their ranges are
-    * only usable by a caller who knows what they indexed. */
-  private[graft] def manifestStatsCol(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[String] =
-    parseManifest(fs, p).statsCol
 
   /** The PRIMARY stats column recorded on the snapshot's manifest
     * (latest when `asOf` is -1). */
@@ -943,64 +925,37 @@ object Layout {
     else parseManifest(fs, p).statsCols
   }
 
-  /** ABSOLUTE data-file paths of snapshot `asOf` (-1 = head) WITH
-    * their recorded per-column stats ranges (in `statscols:` order) —
-    * the `graft-snapshot` source's batch planning core: a pushed-down
-    * range on column i keeps only files whose i-th range overlaps
-    * (None = no range recorded = always read). Driver-side manifest
-    * metadata only. */
+  /** `info`'s data files as (ABSOLUTE path, manifest-relative name,
+    * recorded per-column stats in `statscols:` order) — the
+    * `graft-snapshot` scans' planning core: a pushed-down range on
+    * column i keeps only files whose i-th range overlaps (None = no
+    * range recorded = always read). Driver-side manifest metadata
+    * only. */
   private[graft] def snapshotFileStats(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      asOf: Int = -1)
-      : Seq[(String, String, Seq[ColStat])] = {
+      info: ManifestInfo): Seq[(String, String, Seq[ColStat])] = {
     val (fs, root, _) = fsOf(spark, path)
-    val snapsDir = new org.apache.hadoop.fs.Path(root, "snapshots")
-    val id = if (asOf >= 0) asOf else headId(spark, path)
-    if (id == 0) return Seq.empty
     val dataDir = new org.apache.hadoop.fs.Path(root, "data")
-    parseManifest(fs, new org.apache.hadoop.fs.Path(snapsDir,
-        f"snapshot-$id%05d.txt"))
-      .statLines.map(statsOfFull)
+    info.statLines.map(statsOfFull)
       .map { case (n, r) => (fs.makeQualified(
         new org.apache.hadoop.fs.Path(dataDir, n)).toString, n, r) }
   }
 
-  /** Manifest-relative data file → ABSOLUTE deletion-sidecar paths of
-    * snapshot `asOf` (-1 = head) — what the `graft-snapshot` source
-    * hands each file's reader so masked rows never surface. Empty for
-    * tables without sidecars (the common case — one map lookup per
-    * planned file). */
-  private[graft] def snapshotDvPaths(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      asOf: Int = -1): Map[String, Seq[String]] = {
-    val (fs, root, _) = fsOf(spark, path)
-    snapshotInfo(spark, path, asOf) match {
-      case Some(info) if info.dv.nonEmpty =>
-        val dvDir = new org.apache.hadoop.fs.Path(root, "dv")
-        info.dv.groupBy(_.dataFile).view.mapValues(
-          _.map(e => fs.makeQualified(new org.apache.hadoop.fs.Path(
-            dvDir, e.dvFile)).toString).distinct.sorted).toMap
-      case _ => Map.empty
+  /** Manifest-relative data file → ABSOLUTE paths of the deletion
+    * sidecars `entries` (a manifest's keyed or its positional ones)
+    * attach to it — what the `graft-snapshot` reader hands each file
+    * so masked rows never surface. Empty for tables without sidecars
+    * (the common case — one map lookup per planned file). */
+  private[graft] def sidecarPaths(spark: org.apache.spark.sql.SparkSession,
+      path: String, entries: Seq[DvEntry]): Map[String, Seq[String]] =
+    if (entries.isEmpty) Map.empty
+    else {
+      val (fs, root, _) = fsOf(spark, path)
+      val dvDir = new org.apache.hadoop.fs.Path(root, "dv")
+      entries.groupBy(_.dataFile).view.mapValues(
+        _.map(e => fs.makeQualified(new org.apache.hadoop.fs.Path(
+          dvDir, e.dvFile)).toString).distinct.sorted).toMap
     }
-  }
-
-  /** Manifest-relative data file → ABSOLUTE positional-sidecar paths
-    * of snapshot `asOf` (-1 = head) — the `dvp:` twin of
-    * [[snapshotDvPaths]]: sidecars of (file basename, physical row
-    * ordinal) pairs the reader drops by position. */
-  private[graft] def snapshotDvpPaths(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      asOf: Int = -1): Map[String, Seq[String]] = {
-    val (fs, root, _) = fsOf(spark, path)
-    snapshotInfo(spark, path, asOf) match {
-      case Some(info) if info.dvp.nonEmpty =>
-        val dvDir = new org.apache.hadoop.fs.Path(root, "dv")
-        info.dvp.groupBy(_.dataFile).view.mapValues(
-          _.map(e => fs.makeQualified(new org.apache.hadoop.fs.Path(
-            dvDir, e.dvFile)).toString).distinct.sorted).toMap
-      case _ => Map.empty
-    }
-  }
 
   /** The FULLY parsed manifest of snapshot `asOf` (-1 = head) — one
     * open+read serving every planning question the `graft-snapshot`
@@ -1055,11 +1010,6 @@ object Layout {
     }
     (p.head, out.result())
   }
-
-  private def readManifestStats(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path)
-      : Seq[(String, Seq[Option[ColRange]])] =
-    parseManifest(fs, p).statLines.map(statsOf)
 
   // (qualified snapshots dir, tag) → committed id. Populated on every
   // tagged claim win and scan hit, so a streaming sink's per-epoch
@@ -1341,6 +1291,9 @@ object Layout {
   private def snapshotWrite(df: DataFrame, path: String, tag: String,
       carryPrevious: Boolean, statsCol: String = null,
       expectedBase: Int = -1): Int = {
+    // refuse, before anything is staged, a column type the table's
+    // reader cannot load
+    graft.sources.SnapshotFileReaderFactory.validate(df.schema)
     val spark = df.sparkSession
     val (fs, root, conf) = fsOf(spark, path)
     val snapsDir = new org.apache.hadoop.fs.Path(root, "snapshots")
@@ -1653,15 +1606,15 @@ object Layout {
   }
 
   /** Range read served by MANIFEST stats — scan planning from the
-    * data-skipping index ([[commitSnapshot]]'s statsCol): only files
-    * whose recorded [min, max] overlaps [lo, hi] are handed to the
-    * reader (files committed without stats are always read — skipping
-    * must never change results), and the exact row-level `between`
-    * filter is applied on top, so semantics equal readSnapshot +
-    * filter while I/O is proportional to the OVERLAPPING files. At
-    * 100 TB this is the difference between planning a scan from a
-    * |files|-bounded driver-side manifest and opening a million
-    * parquet footers. */
+    * data-skipping index ([[commitSnapshot]]'s statsCol): [[readSnapshot]]
+    * plus the exact row-level `between` filter, which the scan pushes
+    * down: only files whose recorded [min, max] for `colName` overlaps
+    * [lo, hi] are read (files committed without stats are always read
+    * — skipping must never change results), so semantics equal
+    * readSnapshot + filter while I/O is proportional to the
+    * OVERLAPPING files. At 100 TB this is the difference between
+    * planning a scan from a |files|-bounded driver-side manifest and
+    * opening a million parquet footers. */
   def readSnapshotPruned(spark: org.apache.spark.sql.SparkSession,
       path: String, colName: String, lo: Long, hi: Long,
       asOf: Int = -1): DataFrame = {
@@ -1688,36 +1641,12 @@ object Layout {
       spark: org.apache.spark.sql.SparkSession,
       path: String, colName: String, q: ColRange, asOf: Int)
       : DataFrame = {
-    val (fs, root, _) = fsOf(spark, path)
-    val snapsDir = new org.apache.hadoop.fs.Path(root, "snapshots")
-    val ids = fs.listStatus(snapsDir)
-      .flatMap(st => manifestId(st.getPath.getName))
-    require(ids.nonEmpty, s"readSnapshotPruned: no snapshots at $path")
-    val id = if (asOf < 0) ids.max else asOf
-    require(ids.contains(id),
-      s"readSnapshotPruned: snapshot $id not present at $path")
-    val manifest = new org.apache.hadoop.fs.Path(snapsDir,
-      f"snapshot-$id%05d.txt")
-    val info = parseManifest(fs, manifest)
-    val entries = info.statLines.map(statsOf)
-    // The ranges are only consulted when the manifest says it indexes
-    // THIS column (at whatever position) — pruning by ranges recorded
-    // for a different column would silently drop rows. A recorded
-    // mismatch degrades to read-everything (exact filter still
-    // applies); manifests from before the column identity was
-    // recorded keep the trust-the-caller behavior their writers
-    // relied on (position 0).
-    val statsCols = info.statsCols
-    val pos = if (statsCols.isEmpty) 0 else statsCols.indexOf(colName)
-    val keep = entries.filter { case (_, ranges) =>
-      pos < 0 || ranges.lift(pos).flatten.forall(r =>
-        ColRange.overlaps(r, q))
-    }
-    // the exact residual filter compares in the COLUMN's own domain:
-    // integral bounds are epoch days for DATE and epoch micros for
-    // TIMESTAMP (their parquet physical renderings — what the index
-    // stores), plain values otherwise
-    def exact(df: DataFrame) = q match {
+    val df = snapshotFrame(spark, path, asOf, "readSnapshotPruned")
+    // the exact filter compares in the COLUMN's own domain: integral
+    // bounds are epoch days for DATE and epoch micros for TIMESTAMP
+    // (their parquet physical renderings — what the index stores),
+    // plain values otherwise
+    df.filter(q match {
       case LongRange(lo, hi) =>
         df.schema(colName).dataType match {
           case org.apache.spark.sql.types.DateType =>
@@ -1733,178 +1662,57 @@ object Layout {
         col(colName).between(lo, hi.getOrElse(
           throw new IllegalArgumentException(
             "readSnapshotPruned: unbounded query range")))
-    }
-    if (keep.isEmpty)
-      readSnapshot(spark, path, id).filter(lit(false))
-    else {
-      // DV-aware: a kept file's deletion sidecars apply before rows
-      // surface, same as the unpruned read
-      val base = readFilesWithDv(spark, root, info, keep.map(_._1))
-      base.filter(exact(base))
-    }
+    })
   }
 
   /** Read the table at `path` — the latest snapshot, or AS OF
-    * `asOf` (time travel). Loud on a missing snapshot (vacuumed or
-    * never committed). */
+    * `asOf` (time travel) — as a frame over the `graft-snapshot` scan
+    * pinned to that snapshot and its recorded schema (a time-travel
+    * read across a rename sees the names of its own snapshot). The
+    * scan applies deletion sidecars, skips files on pushed predicates
+    * and `_file` selections, and exposes the `_file` and `_pos`
+    * metadata columns. Columns read as nullable (a file predating an
+    * evolved column null-fills it). A zero-file snapshot reads as an
+    * empty table of its recorded schema. Loud on a missing snapshot
+    * (vacuumed or never committed). */
   def readSnapshot(spark: org.apache.spark.sql.SparkSession,
-      path: String, asOf: Int = -1): DataFrame = {
-    val (fs, root, _) = fsOf(spark, path)
-    val snapsDir = new org.apache.hadoop.fs.Path(root, "snapshots")
-    val ids = fs.listStatus(snapsDir)
-      .flatMap(st => manifestId(st.getPath.getName))
-    require(ids.nonEmpty, s"readSnapshot: no snapshots at $path")
-    val id = if (asOf < 0) ids.max else asOf
-    require(ids.contains(id),
-      s"readSnapshot: snapshot $id not present at $path " +
-        s"(have ${ids.sorted.mkString(",")} — vacuumed or never committed)")
-    val manifest = new org.apache.hadoop.fs.Path(snapsDir,
-      f"snapshot-$id%05d.txt")
-    val info = parseManifest(fs, manifest)
-    if (info.files.isEmpty) {
-      // a zero-file commit (empty DataFrame) is still a snapshot: the
-      // manifest's recorded schema makes it readable as an empty table
-      val schema = info.schema.getOrElse(
-        throw new IllegalArgumentException(
-          s"readSnapshot: snapshot $id is empty and records no schema"))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
-    readFilesWithDv(spark, root, info, info.files)
+      path: String, asOf: Int = -1): DataFrame =
+    snapshotFrame(spark, path, asOf, "readSnapshot")
+
+  private def snapshotFrame(spark: org.apache.spark.sql.SparkSession,
+      path: String, asOf: Int, caller: String): DataFrame = {
+    val (id, info) = manifestAt(spark, path, asOf, caller)
+    val schema = info.schema.getOrElse(throw new IllegalArgumentException(
+      s"$caller: snapshot $id records no schema"))
+    GraftSessionShim.readTable(spark,
+      new graft.sources.GraftSnapshotTable(path, nullableStruct(schema), id))
   }
 
-  /** Read the given manifest-relative data files of `info`, applying
-    * any `dv:` sidecars recorded on them: files are GROUPED by their
-    * sidecar set (|distinct sets| is bounded by merges-since-optimize,
-    * small by maintenance), each group anti-joins its sidecars' keys
-    * once, and the groups union. A table with no sidecars is the
-    * single plain multi-file read it always was. Reads against the
-    * MANIFEST-recorded schema: after an append-time schema evolution
-    * the file set is heterogeneous, and schema-less parquet reading
-    * would adopt an arbitrary file's layout — the recorded union
-    * schema null-fills columns a file predates (asNullable matches
-    * file-source inference, so a never-evolved table reads byte- and
-    * schema-identically). `withFileName` adds `__gf_f` =
-    * input_file_name() (the merge's per-file accounting handle). */
-  private[graft] def readFilesWithDv(
-      spark: org.apache.spark.sql.SparkSession,
-      root: org.apache.hadoop.fs.Path, info: ManifestInfo,
-      files: Seq[String], withFileName: Boolean = false): DataFrame = {
-    val dataDir = new org.apache.hadoop.fs.Path(root, "data")
-    val dvDir = new org.apache.hadoop.fs.Path(root, "dv")
-    // files store PHYSICAL names: read with the physical rendering of
-    // the recorded logical schema, then alias columns back — a rename
-    // is thereby invisible to every reader
-    val logical = info.schema
-    val physOfLogical: Option[org.apache.spark.sql.types.StructType] =
-      logical.map(s => org.apache.spark.sql.types.StructType(
-        s.fields.map(f => f.copy(name = physName(info.colMap, f.name)))))
-    def read(fs: Seq[String]) = {
-      val paths = fs.map(f =>
-        new org.apache.hadoop.fs.Path(dataDir, f).toString)
-      val base = physOfLogical match {
-        case Some(s) =>
-          val raw = spark.read.schema(nullableStruct(s)).parquet(paths: _*)
-          if (info.colMap.isEmpty) raw
-          else raw.toDF(logical.get.fieldNames.toIndexedSeq: _*)
-        case None => spark.read.parquet(paths: _*)
-      }
-      // file identity is captured AT THE SCAN: once a mask anti-join
-      // enters the plan, input_file_name() has two sources and fails
-      // to resolve — downstream code uses this column instead
-      base.withColumn("__gf_f", input_file_name())
-    }
-    val physToLogical = info.colMap.map(_.swap)
-    // POSITIONAL sidecars (round 14, predicate DELETE merge-on-read):
-    // rows are masked by (file basename, physical row ordinal) pairs —
-    // applied up front on the raw multi-file read via the parquet
-    // `_metadata` columns, one anti-join regardless of sidecar count,
-    // composing with the keyed masks below
-    val dvpByFile = info.dvp.groupBy(_.dataFile)
-      .view.mapValues(_.map(_.dvFile).distinct.sorted).toMap
-    def posMask(raw: DataFrame, fs: Seq[String]): DataFrame = {
-      val withPos = fs.filter(dvpByFile.contains)
-      if (withPos.isEmpty) raw
-      else {
-        val posNames = withPos.flatMap(dvpByFile).distinct.sorted
-        val posDf = spark.read.parquet(posNames.map(d =>
-          new org.apache.hadoop.fs.Path(dvDir, d).toString): _*)
-        raw
-          .withColumn("__gf_pfb",
-            expr("substring_index(_metadata.file_path, '/', -1)"))
-          .withColumn("__gf_ppos", col("_metadata.row_index"))
-          .join(posDf.select(col("__gf_fb").as("__gf_pfb"),
-              col("__gf_pos").as("__gf_ppos")),
-            Seq("__gf_pfb", "__gf_ppos"), "left_anti")
-          .select(raw.columns.map(col).toIndexedSeq: _*)
-      }
-    }
-    def readM(fs: Seq[String]): DataFrame = posMask(read(fs), fs)
-    val dvByFile = info.dv.groupBy(_.dataFile)
-      .view.mapValues(_.map(_.dvFile).distinct.sorted).toMap
-    def publish(df: DataFrame): DataFrame =
-      if (withFileName) df else df.drop("__gf_f")
-    val withDv = files.filter(dvByFile.contains)
-    if (withDv.isEmpty) return publish(readM(files))
-    def basename(n: String): String = n.substring(n.lastIndexOf('/') + 1)
-    val dvNames = withDv.flatMap(dvByFile).distinct.sorted
-    val dvDf = spark.read.parquet(dvNames.map(d =>
-      new org.apache.hadoop.fs.Path(dvDir, d).toString): _*)
-    if (dvDf.columns.length == 1) {
-      // ONE scan + ONE anti-join regardless of how many distinct
-      // sidecar sets exist (a wide sparse delete before OPTIMIZE runs
-      // used to build one union branch per set — O(groups) driver
-      // plan bloat): rows join the mask on (key, OWNING FILE), where
-      // the (sidecar, data file) attachment — bounded driver metadata
-      // — is broadcast. File identity is the BASENAME (commit-token
-      // names are globally unique; input_file_name's URI form varies
-      // by filesystem while the basename doesn't). A null key never
-      // matches the equi-join, matching the DSv2 reader's
-      // null-is-never-masked rule.
-      val kcPhys = dvDf.columns.head
-      val kc = physToLogical.getOrElse(kcPhys, kcPhys)
-      import spark.implicits._
-      val attach = withDv.flatMap(f =>
-        dvByFile(f).map(d => (basename(d), basename(f))))
-        .toDF("__gf_dvb", "__gf_fb")
-      val mask = dvDf
-        .withColumn("__gf_dvb",
-          expr("substring_index(input_file_name(), '/', -1)"))
-        .withColumnRenamed(kcPhys, kc)
-        .join(broadcast(attach), "__gf_dvb")
-        .select(col(kc), col("__gf_fb"))
-      val base0 = readM(files)
-      val joined = base0
-        .withColumn("__gf_fb",
-          expr("substring_index(__gf_f, '/', -1)"))
-        .join(mask, Seq(kc, "__gf_fb"), "left_anti")
-      // restore the caller-visible column order (the using-columns
-      // join fronts the join keys)
-      val wanted =
-        if (withFileName) base0.columns.toSeq
-        else base0.columns.toSeq.filter(_ != "__gf_f")
-      joined.select(wanted.map(col): _*)
-    } else {
-      // mixed sidecar KEY COLUMNS (different merge keys over the
-      // table's history — rare): fall back to one branch per distinct
-      // sidecar set, each anti-joined on its own key
-      val groups = files.groupBy(f => dvByFile.getOrElse(f, Nil))
-      groups.toSeq.sortBy(_._1.mkString(",")).map { case (dvs, fs) =>
-        val base = publish(readM(fs))
-        if (dvs.isEmpty) base
-        else {
-          val gDf = spark.read.parquet(dvs.map(d =>
-            new org.apache.hadoop.fs.Path(dvDir, d).toString): _*)
-          // the sidecar's single column carries the merge key's
-          // PHYSICAL name — translate to the current logical
-          val kcPhys = gDf.columns.head
-          val kc = physToLogical.getOrElse(kcPhys, kcPhys)
-          base.join(gDf.withColumnRenamed(kcPhys, kc).select(kc)
-              .distinct(), Seq(kc), "left_anti")
-            .select(base.columns.map(col).toIndexedSeq: _*)
-        }
-      }.reduce(_.unionByName(_))
-    }
+  /** Snapshot `asOf` (-1 = the head) of the table at `path`: its id
+    * and parsed manifest. Loud, prefixed with `caller`, when the table
+    * has no snapshots or not that one. */
+  private def manifestAt(spark: org.apache.spark.sql.SparkSession,
+      path: String, asOf: Int, caller: String): (Int, ManifestInfo) = {
+    val ids = snapshotIds(spark, path)
+    require(ids.nonEmpty, s"$caller: no snapshots at $path")
+    val id = if (asOf < 0) ids.max else asOf
+    require(ids.contains(id),
+      s"$caller: snapshot $id not present at $path " +
+        s"(have ${ids.sorted.mkString(",")} — vacuumed or never committed)")
+    val (fs, root, _) = fsOf(spark, path)
+    (id, parseManifest(fs, new org.apache.hadoop.fs.Path(root,
+      f"snapshots/snapshot-$id%05d.txt")))
+  }
+
+  /** The committed snapshot ids of the table at `path` (none when it
+    * has no `snapshots/` dir): one driver-side directory listing. */
+  private def snapshotIds(spark: org.apache.spark.sql.SparkSession,
+      path: String): Seq[Int] = {
+    val (fs, root, _) = fsOf(spark, path)
+    val snapsDir = new org.apache.hadoop.fs.Path(root, "snapshots")
+    if (!fs.exists(snapsDir)) Nil
+    else fs.listStatus(snapsDir).toSeq
+      .flatMap(st => manifestId(st.getPath.getName))
   }
 
   /** The table's history as a (snapshot_id, n_files, n_rows,
@@ -1936,47 +1744,6 @@ object Layout {
     rows.toDF("snapshot_id", "n_files", "n_rows", "n_manifest_lines")
   }
 
-  /** MERGE INTO the snapshot table — the lakehouse upsert/delete write
-    * path (Delta/Iceberg MERGE reduced to the changelog-apply core):
-    * `source` carries whole replacement rows plus an op column; rows
-    * with op 'd' delete their key, everything else upserts (replaces
-    * or inserts whole-row). Produces a NEW snapshot — FILE-PRUNED
-    * copy-on-write: when the manifest's data-skipping index covers the
-    * merge key (`statscol:` == `keyCol`), only the data files whose
-    * recorded [min, max] overlaps an actual delta key are rewritten;
-    * every other file is carried forward by reference (the OPTIMIZE
-    * commit shape — dropFiles + carryPrevious). A 1,000-row CDC delta
-    * into a 100 TB table rewrites the few files holding those keys,
-    * not the table. Files without a recorded range, and tables whose
-    * index covers a different column, are rewritten conservatively
-    * (pruning must never change answers). Time travel to the pre-merge
-    * state keeps working and a crash mid-merge leaves the table at its
-    * previous snapshot (the [[commitSnapshot]] guarantee). Returns the
-    * new id.
-    *
-    * Scale shape: candidate files come from ONE broadcast join of the
-    * delta's distinct keys against the |files|-bounded manifest range
-    * index (pre-narrowed by the delta's global [min, max]); survivors
-    * are the TOUCHED files' rows anti-joined against the delta keys;
-    * the rewrite stages |touched| range-clustered files, so write
-    * volume is O(touched + delta), never O(table). Per-file dropped
-    * row counts come from parquet footers of the touched files only.
-    *
-    * CONFLICTS (the Delta MERGE rules): the merge is conditional on
-    * its base — `expectedBase` (-1 = the head at entry) names the
-    * snapshot the survivors were computed FROM. If the head moves
-    * before commit:
-    *  - with an EXPLICIT expectedBase the merge always aborts with
-    *    [[java.util.ConcurrentModificationException]] — the caller
-    *    pinned the base to coordinate with other writers;
-    *  - in the default self-resolving mode, an interleaved commit that
-    *    only ADDED files whose recorded key ranges PROVABLY contain no
-    *    delta key is re-based over (carried forward untouched — the
-    *    disjoint-append case a streaming ingest hits constantly);
-    *    anything else — a removed touched file, a rangeless new file,
-    *    a possibly-overlapping append, no key index — aborts loudly,
-    *    because re-basing could drop or duplicate the interleaved
-    *    commit's rows. Callers retry by re-invoking. */
   /** Which manifest entries hold at least one actual key from
     * `keys`? The merge's candidate-file matcher: rangeless entries
     * are always candidates; ranged ones are checked EXACTLY against
@@ -2152,6 +1919,50 @@ object Layout {
     }
   }
 
+  /** MERGE INTO the snapshot table — the lakehouse upsert/delete write
+    * path (Delta/Iceberg MERGE reduced to the changelog-apply core):
+    * `source` carries whole replacement rows plus an op column; rows
+    * with op 'd' delete their key, everything else upserts (replaces
+    * or inserts whole-row). Produces a NEW snapshot — FILE-PRUNED
+    * copy-on-write: when the manifest's data-skipping index covers the
+    * merge key (`statscol:` == `keyCol`), only the data files whose
+    * recorded [min, max] overlaps an actual delta key are rewritten;
+    * every other file is carried forward by reference (the OPTIMIZE
+    * commit shape — dropFiles + carryPrevious). A 1,000-row CDC delta
+    * into a 100 TB table rewrites the few files holding those keys,
+    * not the table. Files without a recorded range, and tables whose
+    * index covers a different column, are rewritten conservatively
+    * (pruning must never change answers). Time travel to the pre-merge
+    * state keeps working and a crash mid-merge leaves the table at its
+    * previous snapshot (the [[commitSnapshot]] guarantee). Returns the
+    * new id.
+    *
+    * Scale shape: candidate files come from ONE broadcast join of the
+    * delta's distinct keys against the |files|-bounded manifest range
+    * index (pre-narrowed by the delta's global [min, max]); survivors
+    * are the TOUCHED files' logical rows — [[readSnapshot]] with
+    * `_file IN` those files, so their existing sidecars apply in the
+    * reader and `_file` keys the per-file accounting — anti-joined
+    * against the delta keys; the rewrite stages |touched|
+    * range-clustered files, so write volume is O(touched + delta),
+    * never O(table). Per-file dropped row counts come from parquet
+    * footers of the touched files only.
+    *
+    * CONFLICTS (the Delta MERGE rules): the merge is conditional on
+    * its base — `expectedBase` (-1 = the head at entry) names the
+    * snapshot the survivors were computed FROM. If the head moves
+    * before commit:
+    *  - with an EXPLICIT expectedBase the merge always aborts with
+    *    [[java.util.ConcurrentModificationException]] — the caller
+    *    pinned the base to coordinate with other writers;
+    *  - in the default self-resolving mode, an interleaved commit that
+    *    only ADDED files whose recorded key ranges PROVABLY contain no
+    *    delta key is re-based over (carried forward untouched — the
+    *    disjoint-append case a streaming ingest hits constantly);
+    *    anything else — a removed touched file, a rangeless new file,
+    *    a possibly-overlapping append, no key index — aborts loudly,
+    *    because re-basing could drop or duplicate the interleaved
+    *    commit's rows. Callers retry by re-invoking. */
   def mergeSnapshot(spark: org.apache.spark.sql.SparkSession,
       path: String, source: DataFrame, keyCol: String,
       opCol: String, expectedBase: Int = -1,
@@ -2188,19 +1999,8 @@ object Layout {
     val (fs, root, conf) = fsOf(spark, path)
     val snapsDir = new org.apache.hadoop.fs.Path(root, "snapshots")
     val dataDir = new org.apache.hadoop.fs.Path(root, "data")
-    val baseId =
-      if (expectedBase >= 0) expectedBase
-      else {
-        val ids = fs.listStatus(snapsDir)
-          .flatMap(st => manifestId(st.getPath.getName))
-        require(ids.nonEmpty, s"mergeSnapshot: no snapshots at $path")
-        ids.max
-      }
-    val baseManifest = new org.apache.hadoop.fs.Path(snapsDir,
-      f"snapshot-$baseId%05d.txt")
-    require(fs.exists(baseManifest),
-      s"mergeSnapshot: snapshot $baseId not present at $path")
-    val info = parseManifest(fs, baseManifest)
+    val (baseId, info) =
+      manifestAt(spark, path, expectedBase, "mergeSnapshot")
     val cur = readSnapshot(spark, path, baseId)
     require(source.columns.contains(opCol),
       s"mergeSnapshot: source lacks op column '$opCol'")
@@ -2245,15 +2045,13 @@ object Layout {
       physRows(n) - priorMasked.getOrElse(n, 0L) -
         priorPosMasked.getOrElse(n, 0L)
     // the touched files' LOGICAL image (existing sidecars applied),
-    // with per-row file identity for the merge-on-read accounting
-    val touchedDfF =
-      if (touched.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          cur.schema).withColumn("__gf_f", lit(""))
-      else readFilesWithDv(spark, root, info, touched,
-        withFileName = true)
-    val touchedDf = touchedDfF.drop("__gf_f")
+    // with per-row file identity (`_file`, the file's absolute path)
+    // for the merge-on-read accounting
+    val uris = fileUris(spark, path, info)
+    val touchedDfF = cur
+      .select((cur.columns.map(col) :+ col("_file")).toIndexedSeq: _*)
+      .where(fileIn(uris, touched))
+    val touchedDf = touchedDfF.drop("_file")
     val upserts = source.filter(col(opCol) =!= "d").drop(opCol)
       .select(cur.columns.map(col).toIndexedSeq: _*)
     // the new LOGICAL image of the touched files — what the table
@@ -2264,18 +2062,11 @@ object Layout {
     // Merge-on-read planning: which touched files take a sidecar
     // instead of a rewrite? Decided from ONE semi-join of the touched
     // logical rows against the delta keys, counted per file
-    // (|touched|-bounded driver result). File identity is the
-    // BASENAME — commit-token names are globally unique, and
-    // input_file_name's URI form varies by filesystem while the
-    // basename doesn't.
-    def basename(n: String): String = n.substring(n.lastIndexOf('/') + 1)
-    val relByBase = touched.map(n => basename(n) -> n).toMap
-    val fileBase = expr("substring_index(__gf_f, '/', -1)")
+    // (|touched|-bounded driver result).
     val maskedPerFile: Map[String, Long] =
       if (dvThreshold == 0.0 || touched.isEmpty) Map.empty
-      else touchedDfF.join(keys, Seq(keyCol), "left_semi")
-        .groupBy(fileBase.as("__gf_b")).count().collect()
-        .map(r => relByBase(r.getString(0)) -> r.getLong(1)).toMap
+      else rowsPerFile(touchedDfF.join(keys, Seq(keyCol), "left_semi"),
+        uris)
     val dvFiles: Seq[String] =
       if (dvThreshold == 0.0) Nil
       else touched.filter { n =>
@@ -2292,9 +2083,7 @@ object Layout {
         maskedPerFile.getOrElse(n, 0L) > 0)
     val cowSet = cowFiles.toSet
     // the physical rewrite: survivors of the CoW files + all upserts
-    val rewrite = touchedDfF
-      .filter(udfFreeIsIn(fileBase, cowFiles.map(basename).toSet))
-      .drop("__gf_f")
+    val rewrite = touchedDfF.filter(fileIn(uris, cowFiles)).drop("_file")
       .join(keys, Seq(keyCol), "left_anti")
       .unionByName(upserts)
     // stage ~|rewritten| files, range-clustered on the index column so
@@ -2324,7 +2113,7 @@ object Layout {
       if (dvSet.isEmpty) Nil
       else {
         val dvKeys = touchedDfF.join(keys, Seq(keyCol), "left_semi")
-          .filter(udfFreeIsIn(fileBase, dvFiles.map(basename).toSet))
+          .filter(fileIn(uris, dvFiles))
           .select(col(keyCol).as(physName(info.colMap, keyCol)))
           .distinct()
         val dvName = stageDvFile(dvKeys, fs, root, tok)
@@ -2411,9 +2200,10 @@ object Layout {
     * Scale shape: the SCAN is O(table) — a predicate must be
     * evaluated everywhere (the inherent cost Delta/Iceberg pay too) —
     * but the WRITE is O(matched + rewritten), never O(table), which
-    * is the entire point at 100 TB. Ordinals come from the parquet
-    * `_metadata.row_index` column (physical position, stable under
-    * projection), which is also how both readers re-apply the mask.
+    * is the entire point at 100 TB. Ordinals are the scan's `_pos`
+    * metadata column (the parquet row index: physical position,
+    * stable under projection), which is also how the reader
+    * re-applies the mask.
     * `predicate` is a SQL boolean over the table's LOGICAL columns
     * and must be DETERMINISTIC (it is evaluated more than once);
     * NULL evaluates as not-matched, SQL DELETE semantics.
@@ -2440,82 +2230,20 @@ object Layout {
     require(dvThreshold >= 0.0 && dvThreshold <= 1.0,
       s"deleteWhere: dvThreshold must be in [0, 1], got $dvThreshold")
     val (fs, root, conf) = fsOf(spark, path)
-    val snapsDir = new org.apache.hadoop.fs.Path(root, "snapshots")
     val dataDir = new org.apache.hadoop.fs.Path(root, "data")
-    val dvDir = new org.apache.hadoop.fs.Path(root, "dv")
-    val baseId =
-      if (expectedBase >= 0) expectedBase
-      else {
-        val ids = fs.listStatus(snapsDir)
-          .flatMap(st => manifestId(st.getPath.getName))
-        require(ids.nonEmpty, s"deleteWhere: no snapshots at $path")
-        ids.max
-      }
-    val baseManifest = new org.apache.hadoop.fs.Path(snapsDir,
-      f"snapshot-$baseId%05d.txt")
-    require(fs.exists(baseManifest),
-      s"deleteWhere: snapshot $baseId not present at $path")
-    val info = parseManifest(fs, baseManifest)
+    val (baseId, info) = manifestAt(spark, path, expectedBase, "deleteWhere")
     if (info.files.isEmpty) return baseId
     val logical = info.schema.getOrElse(throw new IllegalStateException(
       s"deleteWhere at $path: no recorded schema"))
-    val physSchema = org.apache.spark.sql.types.StructType(
-      logical.fields.map(f =>
-        f.copy(name = physName(info.colMap, f.name))))
-    def abs(n: String) =
-      new org.apache.hadoop.fs.Path(dataDir, n).toString
-    def basename(n: String): String = n.substring(n.lastIndexOf('/') + 1)
-    val relByBase = info.files.map(n => basename(n) -> n).toMap
-    // the LOGICAL image with per-row (owning file basename, physical
-    // ordinal) identity: raw physical read aliased to logical names,
-    // existing positional then keyed masks applied
-    val raw0 = spark.read.schema(nullableStruct(physSchema))
-      .parquet(info.files.map(abs): _*)
-    val raw1 =
-      if (info.colMap.isEmpty) raw0
-      else raw0.toDF(logical.fieldNames.toIndexedSeq: _*)
-    val withId = raw1
-      .withColumn("__gf_fb",
-        expr("substring_index(_metadata.file_path, '/', -1)"))
-      .withColumn("__gf_pos", col("_metadata.row_index"))
-    val posApplied =
-      if (info.dvp.isEmpty) withId
-      else {
-        val posDf = spark.read.parquet(
-          info.dvp.map(_.dvFile).distinct.sorted.map(d =>
-            new org.apache.hadoop.fs.Path(dvDir, d).toString): _*)
-        withId.join(posDf.select(col("__gf_fb"), col("__gf_pos")),
-          Seq("__gf_fb", "__gf_pos"), "left_anti")
-      }
-    val img =
-      if (info.dv.isEmpty) posApplied
-      else {
-        val dvDf = spark.read.parquet(
-          info.dv.map(_.dvFile).distinct.sorted.map(d =>
-            new org.apache.hadoop.fs.Path(dvDir, d).toString): _*)
-        require(dvDf.columns.length == 1,
-          s"deleteWhere at $path: keyed deletion sidecars carry " +
-            "mixed key columns — run optimizeSnapshot to materialize " +
-            "them first")
-        val kcPhys = dvDf.columns.head
-        val kc = info.colMap.map(_.swap).getOrElse(kcPhys, kcPhys)
-        import spark.implicits._
-        val attach = info.dv
-          .map(e => (basename(e.dvFile), basename(e.dataFile)))
-          .distinct.toDF("__gf_dvb", "__gf_kfb")
-        val mask = dvDf
-          .withColumn("__gf_dvb",
-            expr("substring_index(input_file_name(), '/', -1)"))
-          .withColumnRenamed(kcPhys, kc)
-          .join(broadcast(attach), "__gf_dvb")
-          .select(col(kc), col("__gf_kfb").as("__gf_fb"))
-        posApplied.join(mask, Seq(kc, "__gf_fb"), "left_anti")
-      }
+    val uris = fileUris(spark, path, info)
+    // the LOGICAL image (existing sidecars applied) with per-row
+    // identity: the owning file's absolute path and physical ordinal
+    val base = readSnapshot(spark, path, baseId)
+    val img = base.select((base.columns.map(col) :+ col("_file") :+
+      col("_pos")).toIndexedSeq: _*)
     val cond = coalesce(expr(predicate), lit(false))
     val matched = img.filter(cond)
-    val matchedPerFile: Map[String, Long] =
-      matched.groupBy("__gf_fb").count().collect()
-        .map(r => relByBase(r.getString(0)) -> r.getLong(1)).toMap
+    val matchedPerFile = rowsPerFile(matched, uris)
     if (matchedPerFile.isEmpty) return baseId // no-op, no empty commit
     val touched = matchedPerFile.keys.toSeq.sorted
     val touchedSet = touched.toSet
@@ -2546,11 +2274,8 @@ object Layout {
     try {
       val statsColsStr =
         if (info.statsCols.isEmpty) null else info.statsCols.mkString(",")
-      val survivors = img
-        .filter(udfFreeIsIn(col("__gf_fb"),
-          cowFiles.map(basename).toSet))
-        .filter(not(cond))
-        .drop("__gf_fb", "__gf_pos")
+      val survivors = img.filter(fileIn(uris, cowFiles)).filter(not(cond))
+        .drop("_file", "_pos")
       val nOut = math.max(1, cowFiles.size)
       val packed = info.statsCol match {
         case Some(sc) if survivors.columns.contains(sc) =>
@@ -2566,10 +2291,9 @@ object Layout {
       val dvpEntries: Seq[DvEntry] =
         if (dvpFiles.isEmpty) Nil
         else {
-          val posKeys = matched
-            .filter(udfFreeIsIn(col("__gf_fb"),
-              dvpFiles.map(basename).toSet))
-            .select(col("__gf_fb"), col("__gf_pos"))
+          val posKeys = matched.filter(fileIn(uris, dvpFiles))
+            .select(substring_index(col("_file"), "/", -1).as("__gf_fb"),
+              col("_pos").as("__gf_pos"))
           val nm = stageDvpFile(posKeys, fs, root, tok)
           dvpFiles.map(n => DvEntry(n, nm, matchedPerFile(n)))
         }
@@ -2577,7 +2301,7 @@ object Layout {
         dvpFiles.map(matchedPerFile).sum
       val changeLines =
         if (changeFeed) stageChangeFiles(
-          matched.drop("__gf_fb", "__gf_pos")
+          matched.drop("_file", "_pos")
             .withColumn("_op", lit("removed")),
           fs, root, tok)
         else Nil
@@ -2612,6 +2336,27 @@ object Layout {
       new org.apache.hadoop.fs.Path(dvDir, nm))
     fs.delete(stage, true)
     nm
+  }
+
+  /** `info`'s data files as the snapshot scan's `_file` column names
+    * them: manifest-relative name → absolute path. */
+  private def fileUris(spark: org.apache.spark.sql.SparkSession,
+      path: String, info: ManifestInfo): Map[String, String] =
+    snapshotFileStats(spark, path, info).map(e => e._2 -> e._1).toMap
+
+  /** The rows of the data files `rels`, by their [[fileUris]] `uris`. */
+  private def fileIn(uris: Map[String, String],
+      rels: Seq[String]): org.apache.spark.sql.Column =
+    udfFreeIsIn(col("_file"), rels.map(uris).toSet)
+
+  /** `df`'s row count per data file it holds rows of (`df` carries
+    * `_file`), keyed by manifest-relative name — a |files|-bounded
+    * driver result. */
+  private def rowsPerFile(df: DataFrame,
+      uris: Map[String, String]): Map[String, Long] = {
+    val relOf = uris.map(_.swap)
+    df.groupBy("_file").count().collect()
+      .map(r => relOf(r.getString(0)) -> r.getLong(1)).toMap
   }
 
   /** Membership test as a broadcast-friendly column predicate. For the
@@ -2798,32 +2543,17 @@ object Layout {
   def readSnapshotChanges(spark: org.apache.spark.sql.SparkSession,
       path: String, fromId: Int, toId: Int = -1): DataFrame = {
     require(fromId >= 0, s"readSnapshotChanges: fromId must be >= 0")
-    val (fs, root, _) = fsOf(spark, path)
-    val snapsDir = new org.apache.hadoop.fs.Path(root, "snapshots")
-    val ids = fs.listStatus(snapsDir)
-      .flatMap(st => manifestId(st.getPath.getName))
-    require(ids.nonEmpty, s"readSnapshotChanges: no snapshots at $path")
-    val to = if (toId < 0) ids.max else toId
-    require(ids.contains(to),
-      s"readSnapshotChanges: snapshot $to not present at $path")
-    require(fromId == 0 || ids.contains(fromId),
+    val (to, _) = manifestAt(spark, path, toId, "readSnapshotChanges")
+    require(fromId == 0 || snapshotIds(spark, path).contains(fromId),
       s"readSnapshotChanges: snapshot $fromId not present at $path " +
         "(vacuumed history cannot anchor an incremental read)")
     require(fromId <= to,
       s"readSnapshotChanges: fromId $fromId > toId $to")
-    def files(id: Int): Set[String] =
-      if (id == 0) Set.empty
-      else readManifest(fs, new org.apache.hadoop.fs.Path(snapsDir,
-        f"snapshot-$id%05d.txt"))._2.toSet
-    val fresh = (files(to) -- files(fromId)).toSeq.sorted
-    if (fresh.isEmpty) readSnapshot(spark, path, to).filter(lit(false))
-    else
-      // the TO manifest governs: a change window spanning an
-      // append-time evolution still reads one stable column layout,
-      // and rows the TO snapshot's sidecars mask are already gone
-      readFilesWithDv(spark, root,
-        parseManifest(fs, new org.apache.hadoop.fs.Path(snapsDir,
-          f"snapshot-$to%05d.txt")), fresh)
+    // the TO snapshot governs: a change window spanning an append-time
+    // evolution still reads one stable column layout, and rows the TO
+    // snapshot's sidecars mask are already gone
+    readSnapshot(spark, path, to).where(udfFreeIsIn(col("_file"),
+      changedFilePaths(spark, path, fromId, to).map(_._1).toSet))
   }
 
   /** The newest snapshot id whose manifest was committed at or before
@@ -2845,16 +2575,8 @@ object Layout {
   /** Current head snapshot id (0 = no commits yet) — the streaming
     * source's offset probe: one driver-side directory listing. */
   private[graft] def headId(spark: org.apache.spark.sql.SparkSession,
-      path: String): Int = {
-    val (fs, root, _) = fsOf(spark, path)
-    val snapsDir = new org.apache.hadoop.fs.Path(root, "snapshots")
-    if (!fs.exists(snapsDir)) 0
-    else {
-      val ids = fs.listStatus(snapsDir)
-        .flatMap(st => manifestId(st.getPath.getName))
-      if (ids.isEmpty) 0 else ids.max
-    }
-  }
+      path: String): Int =
+    snapshotIds(spark, path).maxOption.getOrElse(0)
 
   /** Schema recorded on the snapshot's manifest (latest when `asOf` is
     * -1) — what `format("graft-snapshot")` infers its schema from. */
@@ -2884,8 +2606,8 @@ object Layout {
     val snapsDir = new org.apache.hadoop.fs.Path(root, "snapshots")
     def files(id: Int): Set[String] =
       if (id == 0) Set.empty
-      else readManifest(fs, new org.apache.hadoop.fs.Path(snapsDir,
-        f"snapshot-$id%05d.txt"))._2.toSet
+      else parseManifest(fs, new org.apache.hadoop.fs.Path(snapsDir,
+        f"snapshot-$id%05d.txt")).files.toSet
     val dataDir = new org.apache.hadoop.fs.Path(root, "data")
     (files(toId) -- files(fromId)).toSeq.sorted
       .map(f => (fs.makeQualified(

@@ -299,9 +299,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         require(!Layout.snapshotPartCols(spark, path).contains(nm),
           s"GraftCatalog: cannot drop partition column '$nm'")
         // live deletion sidecars key on a physical column: dropping it
-        // would break reader-side masking (readFilesWithDv joins on
-        // the sidecar's key) and leave the table unreadable through
-        // the Layout API — materialize the masks first
+        // would break reader-side masking (the snapshot reader matches
+        // each row's value of the sidecar's key column) and leave the
+        // table unreadable — materialize the masks first
         require(!Layout.dvKeyPhysCols(spark, path, info)
             .contains(physOf(nm)),
           s"GraftCatalog: cannot drop column '$nm' — live deletion " +
@@ -599,7 +599,7 @@ class GraftCatalogTable(path: String, tableSchema: StructType,
     catalogPartCols: Seq[String] = Nil)
     extends GraftSnapshotTable(path, tableSchema, asOf,
       catalogPartCols)
-    with SupportsRowLevelOperations with SupportsMetadataColumns {
+    with SupportsRowLevelOperations {
 
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -616,8 +616,6 @@ class GraftCatalogTable(path: String, tableSchema: StructType,
     () => new GraftRowLevelOperation(path, tableSchema, statsCol,
       info.command(), catalogPartCols)
 
-  override def metadataColumns(): Array[MetadataColumn] =
-    Array(FileMetadataColumn)
 }
 
 /** The `<table>.changes` relation: the snapshot table's CHANGE FEED

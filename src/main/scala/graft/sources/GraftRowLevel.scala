@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.MetadataColumn
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
@@ -32,7 +31,7 @@ import graft.ops.Layout
   *     with ConcurrentModificationException instead of losing rows.
   *
   * The `_file` metadata column (exposed via SupportsMetadataColumns on
-  * the catalog table and synthesized per-row by the file reader) is
+  * the snapshot table and synthesized per-row by the file reader) is
   * the group identity the whole protocol keys on. */
 final class GraftRowLevelOperation(path: String,
     tableSchema: StructType, statsCol: Option[String],
@@ -79,15 +78,18 @@ final class GraftRowLevelScanBuilder(op: GraftRowLevelOperation,
 
   override def build(): Scan = {
     // pin the snapshot NOW (plan time): the write's expectedBase and
-    // the scanned file set must describe the same immutable manifest
-    val asOf = Layout.headId(SparkSession.active, path)
+    // the scanned file set must describe the same immutable manifest,
+    // parsed once here
+    val spark = SparkSession.active
+    val asOf = Layout.headId(spark, path)
     op.pinnedSnapshot = asOf
-    new GraftRowLevelScan(op, path, required, asOf)
+    new GraftRowLevelScan(op, path, required, asOf,
+      Layout.snapshotInfo(spark, path, asOf))
   }
 }
 
 final class GraftRowLevelScan(op: GraftRowLevelOperation, path: String,
-    required: StructType, asOf: Int)
+    required: StructType, asOf: Int, info: Option[Layout.ManifestInfo])
     extends Scan with SupportsRuntimeFiltering {
   @volatile private var kept: Option[Set[String]] = None
 
@@ -109,30 +111,21 @@ final class GraftRowLevelScan(op: GraftRowLevelOperation, path: String,
 
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] = {
-      val spark = SparkSession.active
       // deletion sidecars apply here too: the replacement rows are
       // computed from the LOGICAL image, or the rewrite would
       // resurrect masked rows
-      val dvByRel = Layout.snapshotDvPaths(spark, path, asOf)
-      val dvpByRel = Layout.snapshotDvpPaths(spark, path, asOf)
-      val all = Layout.snapshotFileStats(spark, path, asOf)
-        .map(e => (e._1, e._2))
-      val planned = kept match {
-        case Some(k) => all.filter(e => k.contains(e._1))
-        case None => all
+      val planned = info.toSeq.flatMap { i =>
+        Layout.snapshotFileStats(SparkSession.active, path, i)
+          .map(e => (e._1, e._2))
+          .filter(e => kept.forall(_.contains(e._1)))
       }
       op.plannedFiles = planned.map(_._1)
-      planned.map { case (abs, rel) =>
-        SnapshotFilePartition(abs,
-          dvFiles = dvByRel.getOrElse(rel, Nil),
-          dvpFiles = dvpByRel.getOrElse(rel, Nil)): InputPartition
-      }.toArray
+      info.map(SnapshotFilePartition.of(path, _, planned))
+        .getOrElse(Array.empty)
     }
-    override def createReaderFactory(): PartitionReaderFactory = {
-      val info = Layout.snapshotInfo(SparkSession.active, path, asOf)
+    override def createReaderFactory(): PartitionReaderFactory =
       SnapshotFileReaderFactory(path, required,
         info.map(_.colMap).getOrElse(Map.empty), sidecars = info)
-    }
   }
 }
 
@@ -237,14 +230,4 @@ final class GraftReplaceDataWrite(op: GraftRowLevelOperation,
           true)
       } finally Layout.releaseTok(tok)
   }
-}
-
-/** `_file` — the group-identity metadata column: the absolute path of
-  * the data file a row came from, synthesized by the per-file reader. */
-object FileMetadataColumn extends MetadataColumn {
-  override def name(): String = "_file"
-  override def dataType(): DataType = StringType
-  override def isNullable: Boolean = false
-  override def comment(): String =
-    "absolute path of the snapshot data file holding this row"
 }

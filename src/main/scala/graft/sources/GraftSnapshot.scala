@@ -4,10 +4,10 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSessionShim, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.{streaming => rstreaming}
@@ -50,11 +50,19 @@ import graft.ops.Layout
   *
   * Batch reads (`spark.read.format("graft-snapshot")`) serve the
   * current head (or `asOfSnapshot`) through the same per-file readers.
-  * Every parquet byte is read and written by Spark's own
-  * `ParquetFileFormat`, the codec Layout's API uses, against the
-  * MANIFEST-recorded schema — atomic types only (the table's own
-  * writers record what they wrote, so a mismatch is a corrupt table,
-  * not a cast decision).
+  * This scan is the table's ONE reader: SQL, the catalog, `MERGE INTO`,
+  * the streaming tail and every [[Layout]] read (`readSnapshot`, its
+  * pruned forms, the touched-file reads of `mergeSnapshot` and
+  * `deleteWhere`, `readSnapshotChanges`) read through it, so deletion
+  * sidecars are applied in one place. Two metadata columns identify a
+  * row's origin: `_file`, the absolute path of its data file (an
+  * `_file = v` / `_file IN (...)` filter plans only those files), and
+  * `_pos`, its physical ordinal in that file. Each partition also sets
+  * Spark's input-file holder, so `input_file_name()` answers on every
+  * snapshot read. Every parquet byte is read and written by Spark's
+  * own `ParquetFileFormat` against the MANIFEST-recorded schema —
+  * atomic types only (the table's own writers refuse any other, so a
+  * mismatch is a corrupt table, not a cast decision).
   */
 class GraftSnapshotProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-snapshot"
@@ -89,13 +97,16 @@ class GraftSnapshotProvider extends TableProvider with DataSourceRegister {
 }
 
 /** `asOf` (-1 = head) pins every scan of this Table instance to one
-  * snapshot id — the catalog's `VERSION AS OF` handle; a per-scan
-  * `asOfSnapshot` option still overrides. `partCols`: Hive-style
-  * identity partition columns (from `partitionBy` / `PARTITIONED BY`)
-  * — the directory layout writes follow and reads prune on. */
+  * snapshot id — the catalog's `VERSION AS OF` handle and
+  * [[Layout.readSnapshot]]'s time travel; a per-scan `asOfSnapshot`
+  * option still overrides. `partCols`: Hive-style identity partition
+  * columns (from `partitionBy` / `PARTITIONED BY`) — the directory
+  * layout writes follow and reads prune on. Metadata columns: `_file`
+  * and `_pos`. */
 class GraftSnapshotTable(val path: String, tableSchema: StructType,
     val asOf: Int = -1, val partCols: Seq[String] = Nil)
-    extends Table with SupportsRead with SupportsWrite {
+    extends Table with SupportsRead with SupportsWrite
+    with SupportsMetadataColumns {
   require(path != null && path.nonEmpty,
     "graft-snapshot requires a table root: .load(<path>)")
   SnapshotFileReaderFactory.validate(tableSchema)
@@ -120,6 +131,31 @@ class GraftSnapshotTable(val path: String, tableSchema: StructType,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftSnapshotScanBuilder(path, tableSchema, options, asOf)
+
+  override def metadataColumns(): Array[MetadataColumn] =
+    Array(FileMetadataColumn, PosMetadataColumn)
+}
+
+/** `_file` — a row's data file: its absolute path, synthesized by the
+  * per-file reader. The row-level protocol's group identity, and the
+  * handle [[Layout]]'s touched-file reads select files by. */
+object FileMetadataColumn extends MetadataColumn {
+  override def name(): String = "_file"
+  override def dataType(): DataType = StringType
+  override def isNullable: Boolean = false
+  override def comment(): String =
+    "absolute path of the snapshot data file holding this row"
+}
+
+/** `_pos` — a row's physical ordinal in its data file, the parquet row
+  * index the reader already reads: what positional deletion sidecars
+  * record. */
+object PosMetadataColumn extends MetadataColumn {
+  override def name(): String = "_pos"
+  override def dataType(): DataType = LongType
+  override def isNullable: Boolean = false
+  override def comment(): String =
+    "physical row ordinal of this row in its snapshot data file"
 }
 
 object GraftSnapshotTable {
@@ -146,7 +182,9 @@ object GraftSnapshotTable {
   *    file skipping planned from |files|-bounded manifest text, zero
   *    footer opens. Every filter stays RESIDUAL (skipping is
   *    file-granular, i.e. inexact), so Spark re-applies it row-level
-  *    and correctness never depends on the index.
+  *    and correctness never depends on the index. `_file = v` /
+  *    `_file IN (...)` keep only the named files, the same cut the
+  *    row-level scan's runtime group filter makes.
   *  - `SupportsPushDownRequiredColumns`: the pruned schema reaches the
   *    per-file reader, which projects the parquet read to the required
   *    columns (I/O ∝ columns read — the wide-table win).
@@ -173,6 +211,10 @@ final class GraftSnapshotScanBuilder(path: String,
     Option(options.get("asOfSnapshot")).map(_.toInt)
       .orElse(Option(tableAsOf).filter(_ >= 0))
       .getOrElse(Layout.headId(SparkSession.active, path))
+  // the pinned manifest, parsed once: every pushdown and planning
+  // question below reads it (None = a table with no commits)
+  private lazy val info: Option[Layout.ManifestInfo] =
+    Layout.snapshotInfo(SparkSession.active, path, asOf)
   private var required: StructType = tableSchema
   private var accepted: Array[sources.Filter] = Array.empty
   // (position in the manifest's statscols list, query interval) per
@@ -294,11 +336,13 @@ final class GraftSnapshotScanBuilder(path: String,
   // partition-directory pruning: col -> allowed (URL-encoded) values,
   // from equality/IN predicates on the table's recorded partcols
   private var partEq: Seq[(String, Set[String])] = Nil
+  // file selection: the absolute paths `_file = v` / `_file IN (...)`
+  // predicates allow, one set per predicate
+  private var fileEq: Seq[Set[String]] = Nil
 
   override def pushFilters(filters: Array[sources.Filter])
       : Array[sources.Filter] = {
-    val statsCols =
-      Layout.snapshotStatsCols(SparkSession.active, path, asOf)
+    val statsCols = info.toSeq.flatMap(_.statsCols)
     val parsed = statsCols.zipWithIndex.flatMap { case (c, i) =>
       filters.toSeq.flatMap(f =>
         boundOf(c, f).map(q => (f, (i, q))))
@@ -312,8 +356,7 @@ final class GraftSnapshotScanBuilder(path: String,
       }
     }
     nullBounds = nullParsed.map(_._2)
-    val partCols =
-      Layout.snapshotPartCols(SparkSession.active, path, asOf)
+    val partCols = info.toSeq.flatMap(_.partCols)
     def enc(v: Any) =
       java.net.URLEncoder.encode(String.valueOf(v), "UTF-8")
     val pf = filters.toSeq.flatMap {
@@ -324,8 +367,14 @@ final class GraftSnapshotScanBuilder(path: String,
       case _ => None
     }
     partEq = pf.map(_._2)
+    val ff = filters.toSeq.collect {
+      case f @ sources.EqualTo("_file", v) => (f, Set(String.valueOf(v)))
+      case f @ sources.In("_file", vs) =>
+        (f, vs.map(String.valueOf).toSet)
+    }
+    fileEq = ff.map(_._2)
     accepted = (parsed.map(_._1) ++ nullParsed.map(_._1) ++
-      pf.map(_._1)).distinct.toArray
+      pf.map(_._1) ++ ff.map(_._1)).distinct.toArray
     bounds = parsed.map(_._2)
     filters // ALL residual: file-granular skipping is inexact
   }
@@ -357,11 +406,9 @@ final class GraftSnapshotScanBuilder(path: String,
     // a change-feed scan reads a COMMIT WINDOW, not the head image —
     // the manifest's totals answer the wrong question there
     if (agg.groupByExpressions.nonEmpty || bounds.nonEmpty ||
-      nullBounds.nonEmpty ||
+      nullBounds.nonEmpty || fileEq.nonEmpty ||
       options.getBoolean("readChangeFeed", false)) return None
-    val spark = SparkSession.active
-    val info = Layout.snapshotInfo(spark, path, asOf)
-      .getOrElse(return None) // one manifest read answers everything
+    val info = this.info.getOrElse(return None)
     // deletion sidecars (keyed or positional): count(*) stays exact
     // (the manifest's total is LOGICAL — commits subtract masked
     // rows), but per-file ranges and null counts describe PHYSICAL
@@ -500,11 +547,9 @@ final class GraftSnapshotScanBuilder(path: String,
       // synthesized data-file reads use the mapping
       override def createReaderFactory(): PartitionReaderFactory =
         SnapshotFileReaderFactory(path, required,
-          Layout.snapshotInfo(SparkSession.active, path, asOf)
-            .map(_.colMap).getOrElse(Map.empty), changeFeed = true)
+          info.map(_.colMap).getOrElse(Map.empty), changeFeed = true)
     } else new Batch {
       override def planInputPartitions(): Array[InputPartition] = {
-        val spark = SparkSession.active
         // a file with no `col=value` segment for a filtered column is
         // kept (an unpartitioned writer's file — conservative)
         def partKeep(rel: String): Boolean = {
@@ -515,11 +560,10 @@ final class GraftSnapshotScanBuilder(path: String,
           partEq.forall { case (c, allowed) =>
             segs.get(c).forall(allowed.contains) }
         }
-        val dvByRel = Layout.snapshotDvPaths(spark, path, asOf)
-        val dvpByRel = Layout.snapshotDvpPaths(spark, path, asOf)
-        Layout.snapshotFileStats(spark, path, asOf)
-          .filter { case (_, rel, stats) =>
-            partKeep(rel) &&
+        info.map(i => SnapshotFilePartition.of(path, i,
+          Layout.snapshotFileStats(SparkSession.active, path, i)
+          .filter { case (abs, rel, stats) =>
+            fileEq.forall(_.contains(abs)) && partKeep(rel) &&
             bounds.forall { case (i, q) =>
               stats.lift(i).flatMap(_.range).forall(r =>
                 Layout.ColRange.overlaps(r, q))
@@ -536,17 +580,12 @@ final class GraftSnapshotScanBuilder(path: String,
                 !s.exists(st => st.range.isEmpty &&
                   st.nulls.exists(_ > 0L))
             }
-          }
-          .map(e => SnapshotFilePartition(e._1,
-            dvFiles = dvByRel.getOrElse(e._2, Nil),
-            dvpFiles = dvpByRel.getOrElse(e._2, Nil))
-            : InputPartition).toArray
+          }.map(e => (e._1, e._2))))
+          .getOrElse(Array.empty)
       }
-      override def createReaderFactory(): PartitionReaderFactory = {
-        val info = Layout.snapshotInfo(SparkSession.active, path, asOf)
+      override def createReaderFactory(): PartitionReaderFactory =
         SnapshotFileReaderFactory(path, required,
           info.map(_.colMap).getOrElse(Map.empty), sidecars = info)
-      }
     }
     override def toMicroBatchStream(
         checkpointLocation: String): rstreaming.MicroBatchStream =
@@ -657,7 +696,7 @@ final class SnapshotMicroBatchStream(path: String, schema: StructType,
       val logicalNow = headInfo.flatMap(_.schema)
         .map(_.fieldNames.toSet).getOrElse(Set.empty[String])
       val missing = schema.fieldNames
-        .filterNot(n => n == "_op" || n == "_file")
+        .filterNot(n => n == "_op" || n == "_file" || n == "_pos")
         .filterNot(logicalNow.contains)
       if (missing.nonEmpty) throw new IllegalStateException(
         s"graft-snapshot stream at $path: column(s) " +
@@ -681,16 +720,12 @@ final class SnapshotMicroBatchStream(path: String, schema: StructType,
         // files (matching the batch twin readSnapshotChanges): a fresh
         // file that gained a delete sidecar inside the same window
         // must not stream rows the equivalent batch read masks
-        val dvByRel = Layout.snapshotDvPaths(spark, path, e)
-        val dvpByRel = Layout.snapshotDvpPaths(spark, path, e)
+        val endInfo = Layout.snapshotInfo(spark, path, e)
         factory = SnapshotFileReaderFactory(path, schema, physOf,
-          sidecars = Layout.snapshotInfo(spark, path, e))
-        Layout.changedFilePaths(spark, path, s, e)
-          .map { case (abs, rel) =>
-            SnapshotFilePartition(abs,
-              dvFiles = dvByRel.getOrElse(rel, Nil),
-              dvpFiles = dvpByRel.getOrElse(rel, Nil)): InputPartition
-          }.toArray
+          sidecars = endInfo)
+        endInfo.map(SnapshotFilePartition.of(path, _,
+          Layout.changedFilePaths(spark, path, s, e)))
+          .getOrElse(Array.empty)
       }
     }
   }
@@ -717,6 +752,22 @@ final class SnapshotMicroBatchStream(path: String, schema: StructType,
 final case class SnapshotFilePartition(file: String, op: String = null,
     dvFiles: Seq[String] = Nil, dvpFiles: Seq[String] = Nil)
     extends InputPartition
+
+object SnapshotFilePartition {
+  /** One partition per file of `files` — (ABSOLUTE path,
+    * manifest-relative name) pairs of the snapshot `info` — each
+    * carrying the keyed and positional sidecars `info` attaches to it. */
+  def of(path: String, info: Layout.ManifestInfo,
+      files: Seq[(String, String)]): Array[InputPartition] = {
+    val spark = SparkSession.active
+    val dv = Layout.sidecarPaths(spark, path, info.dv)
+    val dvp = Layout.sidecarPaths(spark, path, info.dvp)
+    files.map { case (abs, rel) =>
+      SnapshotFilePartition(abs, dvFiles = dv.getOrElse(rel, Nil),
+        dvpFiles = dvp.getOrElse(rel, Nil)): InputPartition
+    }.toArray
+  }
+}
 
 object SnapshotFileReaderFactory {
   /** Is `dt` a column type the snapshot reader/writer pair carries?
@@ -753,16 +804,21 @@ object SnapshotFileReaderFactory {
         required, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
         spark.sessionState.newHadoopConf())
 
-    /** `file` read whole as one split, so row indexes are ordinals. */
-    def rows(file: String,
-        conf: org.apache.hadoop.conf.Configuration)
-        : Iterator[InternalRow] = {
-      val p = new org.apache.hadoop.fs.Path(file)
-      val len = p.getFileSystem(conf).getFileStatus(p).getLen
+    /** `file`, `len` bytes long, read whole as one split, so row
+      * indexes are ordinals. */
+    def rows(file: String, len: Long): Iterator[InternalRow] =
       read(PartitionedFile(InternalRow.empty,
         SparkPath.fromPathString(file), 0L, len, fileSize = len))
-    }
   }
+
+  private[sources] def lengthOf(file: String,
+      conf: org.apache.hadoop.conf.Configuration): Long = {
+    val p = new org.apache.hadoop.fs.Path(file)
+    p.getFileSystem(conf).getFileStatus(p).getLen
+  }
+
+  /** The reader-synthesized metadata columns, never read from a file. */
+  private[sources] val MetaCols = Set("_file", "_pos")
 
   private val RowIndex = StructField(
     ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType)
@@ -784,7 +840,7 @@ object SnapshotFileReaderFactory {
     val spark = SparkSession.active
     val keys = sidecars.toSeq.flatMap(dvKeyFields(spark, path, _))
     def dataRead(name: String => String) = {
-      val cols = schema.fields.toSeq.filter(_.name != "_file")
+      val cols = schema.fields.toSeq.filterNot(f => MetaCols(f.name))
         .map(f => f.copy(name = name(f.name), nullable = true))
       new FileRead(spark, StructType((cols ++ keys.filterNot(k =>
         cols.exists(_.name == k.name))) :+ RowIndex))
@@ -822,7 +878,8 @@ object SnapshotFileReaderFactory {
   * physical columns plus the sidecar key columns and the row index;
   * each partition wraps its iterator — drop rows a keyed sidecar masks
   * (a null key is never masked), drop positionally masked ordinals,
-  * fill the `_file` and `_op` constants, project to the scan's schema.
+  * fill the `_file` and `_op` constants and the `_pos` ordinal, project
+  * to the scan's schema — and point the input-file holder at the file.
   * A zero-column read (the count(*) shape) still reads the row index,
   * so row counts survive full pruning. `data` reads a file under the
   * snapshot's physical names, `written` one without a synthesized `_op`
@@ -838,6 +895,7 @@ final class SnapshotFileReaderFactory private (schema: StructType,
     hadoopConf: org.apache.spark.broadcast
       .Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
+  import SnapshotFileReaderFactory.{lengthOf, MetaCols}
 
   /** The union of the sidecars' masked keys, one set per key column —
     * bounded by the masked-row count, loaded once per reader task. */
@@ -846,7 +904,7 @@ final class SnapshotFileReaderFactory private (schema: StructType,
       : Array[java.util.HashSet[Any]] = {
     val fields = keys.required.fields
     val sets = fields.map(_ => new java.util.HashSet[Any]())
-    paths.foreach(p => keys.rows(p, conf).foreach(r =>
+    paths.foreach(p => keys.rows(p, lengthOf(p, conf)).foreach(r =>
       fields.indices.filterNot(r.isNullAt).foreach(k =>
         sets(k).add(InternalRow.copyValue(r.get(k, fields(k).dataType))))))
     sets
@@ -860,7 +918,7 @@ final class SnapshotFileReaderFactory private (schema: StructType,
       : java.util.HashSet[Long] = {
     val set = new java.util.HashSet[Long]()
     val base = UTF8String.fromString(fileBase)
-    paths.foreach(p => positions.rows(p, conf).foreach { r =>
+    paths.foreach(p => positions.rows(p, lengthOf(p, conf)).foreach { r =>
       if (!r.isNullAt(0) && !r.isNullAt(1) && r.getUTF8String(0) == base)
         set.add(r.getLong(1))
     })
@@ -890,17 +948,20 @@ final class SnapshotFileReaderFactory private (schema: StructType,
         file.substring(file.lastIndexOf('/') + 1), conf)
     val rowIdx = read.required.length - 1
     // per output column: its ordinal in the read row, or -1 = the
-    // `_file` metadata column (the row-level-operation protocol's group
-    // identity), -2 = the change feed's synthesized `_op`
+    // `_file` metadata column, -2 = the change feed's synthesized
+    // `_op`, -3 = the `_pos` metadata column (the row index)
     val src = schema.fields.zipWithIndex.map { case (f, i) =>
       if (f.name == "_file") -1
+      else if (f.name == "_pos") -3
       else if (f.name == "_op" && part.op != null) -2
-      else i - schema.fields.take(i).count(_.name == "_file")
+      else i - schema.fields.take(i).count(g => MetaCols(g.name))
     }
     val types = schema.fields.map(_.dataType)
     val fileU = UTF8String.fromString(file)
     val opU = if (part.op == null) null else UTF8String.fromString(part.op)
-    val it = read.rows(file, conf)
+    val len = lengthOf(file, conf)
+    GraftSessionShim.setInputFile(file, len)
+    val it = read.rows(file, len)
     new PartitionReader[InternalRow] {
       private val cur = new GenericInternalRow(schema.length)
       private def masked(r: InternalRow): Boolean =
@@ -920,6 +981,7 @@ final class SnapshotFileReaderFactory private (schema: StructType,
             cur.update(i, src(i) match {
               case -1 => fileU
               case -2 => opU
+              case -3 => r.getLong(rowIdx)
               case o => if (r.isNullAt(o)) null else r.get(o, types(i))
             })
             i += 1
@@ -928,9 +990,12 @@ final class SnapshotFileReaderFactory private (schema: StructType,
         }
       }
       override def get(): InternalRow = cur
-      override def close(): Unit = it match {
-        case c: java.io.Closeable => c.close()
-        case _ => ()
+      override def close(): Unit = {
+        GraftSessionShim.unsetInputFile()
+        it match {
+          case c: java.io.Closeable => c.close()
+          case _ => ()
+        }
       }
     }
   }

@@ -3,16 +3,20 @@ package org.apache.spark.sql
 import java.util.concurrent.TimeoutException
 
 import org.apache.spark.SparkContext
+import org.apache.spark.rdd.InputFileBlockHolder
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.storage.RDDBlockId
 
-/** The session, plan, block-manager and listener-bus internals
-  * [[graft.queries.StreamRun]], [[graft.ops.Pin]], [[graft.QueryProfile]]
-  * and [[graft.tools.DumpPlans]] need, which Spark keeps
+/** The session, plan, block-manager, listener-bus and input-file
+  * internals [[graft.queries.StreamRun]], [[graft.ops.Pin]],
+  * [[graft.ops.Layout]], [[graft.QueryProfile]], [[graft.tools.DumpPlans]]
+  * and the `graft-snapshot` reader need, which Spark keeps
   * `private[sql]`/`private[spark]`: reachable only from inside this
   * package. */
 object GraftSessionShim {
@@ -33,6 +37,22 @@ object GraftSessionShim {
   def rehome(df: DataFrame, spark: SparkSession): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       df.queryExecution.analyzed)
+
+  /** A frame over `table`'s DSv2 scan, the relation the catalog builds
+    * for a loaded table: the table instance itself, with whatever
+    * snapshot pin it carries, is what every scan of the frame reads. */
+  def readTable(spark: SparkSession, table: Table): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      DataSourceV2Relation.create(table, None, None))
+
+  /** Points the executor thread's input-file holder, which
+    * `input_file_name()` reads, at `file` (one whole-file split of
+    * `length` bytes) — what Spark's own file scan does per file. */
+  def setInputFile(file: String, length: Long): Unit =
+    InputFileBlockHolder.set(file, 0L, length)
+
+  /** Clears what [[setInputFile]] set. */
+  def unsetInputFile(): Unit = InputFileBlockHolder.unset()
 
   /** `pinned` — a frame over one `LogicalRDD`, as a checkpoint returns —
     * over the same `RDD[InternalRow]`, output, partitioning, ordering and

@@ -118,14 +118,29 @@ class LayoutDecimalStatsSpec extends SparkSpec {
     assert(agg.getDecimal(1).compareTo(
       new java.math.BigDecimal("9.9")) == 0)
     assert(agg.getLong(2) == 100L)
-    // wide decimal (FLBA physical) via the Layout path: extremes fit
-    // a Long, so the footer lane still records a DecRange
+    // FLBA-physical decimal via the Layout path (the legacy parquet
+    // format stores every decimal as a fixed-length byte array; a
+    // DECIMAL wider than 18 digits, Spark's own FLBA rendering, is a
+    // type the table refuses): extremes fit a Long, so the footer lane
+    // still records a DecRange
     val t2 = tmpDir("graft-decwide")
     val wide = (0 until 10)
       .map(i => (i.toLong, new java.math.BigDecimal(i * 11)))
       .toDF("id", "w")
-      .select(col("id"), col("w").cast("decimal(24,2)").as("w"))
-    Layout.appendSnapshot(wide.coalesce(1), t2, statsCol = "w")
+      .select(col("id"), col("w").cast("decimal(18,2)").as("w"))
+    spark.conf.set("spark.sql.parquet.writeLegacyFormat", "true")
+    try Layout.appendSnapshot(wide.coalesce(1), t2, statsCol = "w")
+    finally spark.conf.unset("spark.sql.parquet.writeLegacyFormat")
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(t2, "data/" +
+          Layout.snapshotInfo(spark, t2).get.files.head),
+        spark.sessionState.newHadoopConf()))
+    try assert(footer.getFileMetaData.getSchema
+      .getColumnDescription(Array("w")).getPrimitiveType
+      .getPrimitiveTypeName == org.apache.parquet.schema
+      .PrimitiveType.PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY)
+    finally footer.close()
     val st = Layout.statsOfFull(
       Layout.snapshotInfo(spark, t2).get.statLines.head)._2.head
     assert(st.range.exists {

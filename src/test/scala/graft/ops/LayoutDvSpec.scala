@@ -231,11 +231,15 @@ class LayoutDvSpec extends SparkSpec {
         s"${info.dv.map(_.dataFile).distinct.size}")
     assert(info.dv.map(_.dvFile).distinct.size == 8)
     val img = Layout.readSnapshot(spark, t)
-    // plan width: one base scan + one sidecar scan (+ the broadcast
-    // attachment) — NOT one branch per sidecar set
-    val plan = img.queryExecution.executedPlan.toString
-    val scans = plan.split("\n").count(_.contains("Scan parquet"))
-    assert(scans <= 3, s"per-group union branches came back:\n$plan")
+    // plan width: ONE scan, which masks every file by its own sidecars
+    // — no per-sidecar-set branch, no join
+    val plan = img.queryExecution.executedPlan
+    val scans = plan.collect {
+      case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s
+    }
+    assert(scans.size == 1 && plan.collect {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+    }.isEmpty, s"per-group union branches came back:\n$plan")
     // image: exactly the 64 masked ids are gone
     val masked = (0 until 8).flatMap(m =>
       (0 until 8).map(f => ((m * 8 + f) * 10 + m).toLong)).toSet

@@ -71,7 +71,8 @@ class ManifestScaleSpec extends SparkSpec {
     // ceiling 3: PLANNING a pruned read over 10^4 indexed entries is
     // a driver-side filter of the parsed lines
     val t2 = System.nanoTime()
-    val stats = Layout.snapshotFileStats(spark, t)
+    val stats = Layout.snapshotFileStats(spark, t,
+      Layout.snapshotInfo(spark, t).get)
     val planMs = (System.nanoTime() - t2) / 1000000
     assert(stats.size == 10002)
     assert(planMs < 2000, s"file-stats plan took ${planMs}ms")
@@ -152,7 +153,8 @@ class ManifestScaleSpec extends SparkSpec {
 
     // planning from the cached segments is still a driver-side filter
     val t2 = System.nanoTime()
-    val stats = Layout.snapshotFileStats(spark, t)
+    val stats = Layout.snapshotFileStats(spark, t,
+      Layout.snapshotInfo(spark, t).get)
     val planMs = (System.nanoTime() - t2) / 1000000
     assert(stats.size == 100002)
     assert(planMs < 4000, s"file-stats plan took ${planMs}ms")
@@ -236,7 +238,8 @@ class ManifestScaleSpec extends SparkSpec {
     assert(Layout.snapshotInfo(spark, t).get.segRefs.size == 11)
     // planning: a driver-side filter over the parsed lines
     val t2 = System.nanoTime()
-    val stats = Layout.snapshotFileStats(spark, t)
+    val stats = Layout.snapshotFileStats(spark, t,
+      Layout.snapshotInfo(spark, t).get)
     val planMs = (System.nanoTime() - t2) / 1000000
     assert(stats.size == 1000002)
     assert(planMs < 30000, s"10^6-entry plan took ${planMs}ms")
@@ -276,7 +279,8 @@ class ManifestScaleSpec extends SparkSpec {
       s"1000 auto-merged commits took ${totalMs}ms")
     // stats survive the folds: the data-skipping index still plans
     // from every line
-    val stats = Layout.snapshotFileStats(spark, t)
+    val stats = Layout.snapshotFileStats(spark, t,
+      Layout.snapshotInfo(spark, t).get)
     assert(stats.size == 1001)
     assert(stats.count(_._3.headOption.exists(_.range.nonEmpty))
       >= 1000)

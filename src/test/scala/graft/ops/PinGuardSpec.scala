@@ -10,8 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * checkpoints, persists or caches a frame, or rebuilds one from its
   * `.rdd`), [[graft.queries.StreamRun]] the one owner of temp dirs
   * (no other file names `java.io.tmpdir` or makes a temp directory),
-  * and Spark's parquet format the one parquet codec (no file encodes
-  * or decodes rows through parquet-hadoop's Group API). */
+  * Spark's parquet format the one parquet codec (no file encodes
+  * or decodes rows through parquet-hadoop's Group API), and the
+  * `graft-snapshot` scan the one reader that applies deletion sidecars
+  * (no file masks rows by parquet's `_metadata` row index or file
+  * path). */
 class PinGuardSpec extends AnyFunSuite {
 
   private val materializing =
@@ -21,6 +24,9 @@ class PinGuardSpec extends AnyFunSuite {
 
   private val groupApi =
     """org\.apache\.parquet\.example|GroupReadSupport|ExampleParquetWriter""".r
+
+  private val sidecarMasks =
+    """_metadata\.row_index|_metadata\.file_path|readFilesWithDv""".r
 
   private lazy val sources: Seq[Path] = {
     val root = Paths.get("src/main")
@@ -52,6 +58,13 @@ class PinGuardSpec extends AnyFunSuite {
   test("no file in src/main uses parquet-hadoop's Group API") {
     val offenders = sources.filter(p =>
       groupApi.findFirstIn(Files.readString(p)).nonEmpty)
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("no file in src/main masks snapshot rows outside the snapshot " +
+      "reader") {
+    val offenders = sources.filter(p =>
+      sidecarMasks.findFirstIn(Files.readString(p)).nonEmpty)
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -92,10 +92,14 @@ class GraftSnapshotSpec extends SparkSpec {
 
   test("unsupported column type fails loudly at table construction") {
     val t = tmpDir("snap-src-bad")
-    Layout.commitSnapshot(
-      Seq((1L, Seq(1.0f, 2.0f))).toDF("id", "emb").coalesce(1), t)
+    // Layout's writers refuse the type before committing anything, so
+    // the table is constructed over a declared schema
+    val w = intercept[IllegalArgumentException](Layout.commitSnapshot(
+      Seq((1L, Seq(1.0f, 2.0f))).toDF("id", "emb").coalesce(1), t))
+    assert(w.getMessage.contains("unsupported column type"))
     val e = intercept[IllegalArgumentException](
-      spark.read.format("graft-snapshot").load(t).count())
+      spark.read.format("graft-snapshot")
+        .schema("id BIGINT, emb ARRAY<FLOAT>").load(t).count())
     assert(e.getMessage.contains("unsupported column type"))
     assert(e.getMessage.contains("emb"))
   }
